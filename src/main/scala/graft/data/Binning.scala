@@ -63,8 +63,9 @@ object Binning {
 
   /** Distributed weighted-quantile cut finding — the reference's
     * `SketchOnDMatrix` (`src/common/hist_util.cc:53-81`): per-partition
-    * sketches, merged tree-wise (Spark's `treeAggregate` partial+final merge
-    * IS the reference's sketch allreduce, `quantile.h:940`).
+    * sketches, merged by one [[graft.Agg]] job (its per-task partial and
+    * driver-side final merge IS the reference's sketch allreduce,
+    * `quantile.h:940`).
     *
     * `weights` defaults to 1; pass hessians for the approx method's
     * hessian-weighted re-sketch (`src/tree/updater_approx.cc:46-53`).

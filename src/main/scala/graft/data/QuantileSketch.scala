@@ -170,16 +170,24 @@ object WQSummary {
   * `push`): the buffer is a pair of primitive double arrays and the flush
   * sort is an in-place dual-array quicksort — no per-push tuple boxing,
   * no boxed comparator. Unweighted inputs (all weights 1) are the common
-  * case and cost the same as weighted ones. */
+  * case and cost the same as weighted ones.
+  *
+  * Shipped sketches carry only their summary: serialization flushes the
+  * buffer and drops it, and the next `push` allocates a new one. An empty
+  * buffer is 2 × 1024 doubles per feature, which every task result and
+  * every zero value in a task closure would otherwise carry. */
 final class QuantileSketch(val maxSize: Int, bufferCap: Int = 4096) extends Serializable {
   private var summary: WQSummary = WQSummary.empty
-  private var bufV = new Array[Double](math.min(bufferCap, 1024))
-  private var bufW = new Array[Double](bufV.length)
+  private var bufV: Array[Double] = null
+  private var bufW: Array[Double] = null
   private var bufLen = 0
 
   def push(value: Double, weight: Double): Unit = {
     if (!java.lang.Double.isNaN(value) && weight > 0) {
-      if (bufLen == bufV.length && bufLen < bufferCap) {
+      if (bufV == null) {
+        bufV = new Array[Double](math.min(bufferCap, 1024))
+        bufW = new Array[Double](bufV.length)
+      } else if (bufLen == bufV.length && bufLen < bufferCap) {
         val cap = math.min(bufferCap, bufV.length * 2)
         bufV = java.util.Arrays.copyOf(bufV, cap)
         bufW = java.util.Arrays.copyOf(bufW, cap)
@@ -223,6 +231,13 @@ final class QuantileSketch(val maxSize: Int, bufferCap: Int = 4096) extends Seri
   }
 
   def result: WQSummary = { flush(); summary }
+
+  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+    flush()
+    bufV = null
+    bufW = null
+    out.defaultWriteObject()
+  }
 
   def merge(other: QuantileSketch): QuantileSketch = {
     flush()

@@ -106,7 +106,7 @@ object MultiLinearModel {
   * `src/linear/updater_shotgun.cc:96`, `updater_coordinate.cc:100`).
   *
   * Per boosting round every statistic the reference's updaters need is a
-  * partial+final sum — one `treeAggregate` computes, for all features at
+  * partial+final sum — one `graft.Agg` job computes, for all features at
   * once: `Σ g·x_f`, `Σ h·x_f`, `Σ h·x_f²` (plus the bias sums `Σ g`,
   * `Σ h`). The margin is NEVER materialized as an RDD: a linear margin is
   * O(nnz) to recompute from the broadcast weight vector, so each pass
@@ -200,7 +200,7 @@ final class GBLinearTrainer(val params: LinearParams) {
     // round-trips for a 64-bucket 5-round fit, ~20 ms each, all to fold a
     // few thousand rows that already sit in a single task. For a
     // one-partition RDD the in-driver fold is BIT-IDENTICAL to the
-    // distributed answer: treeAggregate folds that partition with the
+    // distributed answer: graft.Agg folds that partition with the
     // same seqOp in the same row order, and the single partial IS the
     // result (no zero-merge), so the pinned t_hash_* digests cannot move.
     // Multi-partition data always takes the cluster path — the
@@ -216,7 +216,7 @@ final class GBLinearTrainer(val params: LinearParams) {
       } else graft.Agg.aggregate(cached)(zero)(seq,
         (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
 
-    // one treeAggregate: per-feature [Σg·x, Σh·x, Σh·x²] + bias [Σg, Σh]
+    // one aggregation: per-feature [Σg·x, Σh·x, Σh·x²] + bias [Σg, Σh]
     def fullSums(): (Array[Double], Double, Double) = {
       val snap = (weights.clone(), bias)
       val bw = if (localRows != null) null else sc.broadcast(snap)
@@ -346,7 +346,7 @@ final class GBLinearTrainer(val params: LinearParams) {
     * `updater_shotgun.cc:38-47` — the updaters loop groups with per-group
     * gradient pairs; our lanes ARE those groups). Softmax gradients match
     * the tree path's `SoftmaxObjective`: g_k = p_k − 1{y=k},
-    * h_k = max(2·p_k(1−p_k), ε). One `treeAggregate` per shotgun round
+    * h_k = max(2·p_k(1−p_k), ε). One aggregation per shotgun round
     * computes, for every (feature, class), `[Σg·x, Σh·x, Σh·x²]` plus the
     * per-class bias sums — driver state O(numFeatures·K). Selectors rank
     * features by the max |delta| across classes and apply ALL class lanes

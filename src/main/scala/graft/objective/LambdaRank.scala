@@ -132,7 +132,7 @@ object LambdaRankGradients {
     * enumerate identical pairs) and sums, per displayed position,
     * li = Σ cost/t⁻(low) and lj = Σ cost/t⁺(high) with
     * cost = ln(1/(1−σ(s_hi−s_lo)))·|Δmetric| — eq. 30/31 of Hu et al.,
-    * "Unbiased LambdaMART". One treeAggregate per boosted iteration; the
+    * "Unbiased LambdaMART". One aggregation per boosted iteration; the
     * driver receives 2·maxPositions doubles, independent of data size. */
   def positionBias(rows: RDD[(BInst, Array[Double])],
       obj: LambdaRankObjective, pending: Array[(graft.tree.TreeShape, Double, Int)],
@@ -145,7 +145,7 @@ object LambdaRankGradients {
     val norm = obj.normalization
     val scoreNorm = obj.scoreNormalization
     val k = tPlus.length
-    withPending(rows, pending).mapPartitions { it =>
+    graft.Agg.reducePartitions(withPending(rows, pending)) { it =>
       val base = it.buffered
       val li = new Array[Double](k)
       val lj = new Array[Double](k)
@@ -163,12 +163,12 @@ object LambdaRankGradients {
           variant, expGain, topK, pairMethod, numPair, q, tPlus, tMinus, li, lj,
           norm, scoreNorm, 1.0) // w_norm scales gpair only, never the t± numerators
       }
-      Iterator.single((li, lj))
-    }.treeReduce({ case ((a1, a2), (b1, b2)) =>
+      (li, lj)
+    } { case ((a1, a2), (b1, b2)) =>
       var i = 0
       while (i < a1.length) { a1(i) += b1(i); a2(i) += b2(i); i += 1 }
       (a1, a2)
-    }, depth = graft.Agg.depth(rows.getNumPartitions))
+    }
   }
 
   /** Seq-tuple adapter (unit-test surface; the trainer path uses the

@@ -171,10 +171,16 @@ private[tree] final case class SplitCandidate(
 /** Distributed gradient-boosted-tree trainer: the reference's learner loop
   * (`src/learner.cc:1114` UpdateOneIter) + hist updater
   * (`src/tree/updater_quantile_hist.cc:96-180`) re-expressed as a
-  * driver-coordinated loop of Spark `treeAggregate`s. Each histogram
-  * allreduce (`src/tree/hist/histogram.h:177-202`) becomes one
-  * partial+final aggregation; the collective/tracker/barrier machinery of
-  * the reference is replaced by Spark's shuffle (SURVEY §3.1).
+  * driver-coordinated loop of Spark aggregations. Each histogram allreduce
+  * (`src/tree/hist/histogram.h:177-202`) becomes one [[graft.Agg]] call —
+  * one `runJob` whose partials merge at the driver; the
+  * collective/tracker/barrier machinery of the reference is replaced by
+  * Spark's scheduler (SURVEY §3.1).
+  *
+  * The passes a round runs (gradients, totals, histograms, margin advance)
+  * are defined in [[RoundPasses]], not here: Spark's `ClosureCleaner` reads
+  * the whole bytecode of a closure's defining class on every job, and this
+  * class is large.
   *
   * Scale design: the quantized matrix (`Array[Int]` bins, the
   * `GHistIndexMatrix` analog `src/data/gradient_index.h`) is cached once;
@@ -690,38 +696,22 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // (weights never change across iterations).
     val rankWeightNorm: Double = obj match {
       case _: LambdaRankObjective =>
-        val (nGroups, sumGW) = cache.mapPartitions { it =>
+        val (nGroups, sumGW) = graft.Agg.reducePartitions(cache) { it =>
           var n = 0L; var s = 0.0; var last = 0L; var first = true
           it.foreach { case (r, _) =>
             if (first || r.qid != last) { n += 1; s += r.weight; last = r.qid; first = false }
           }
-          Iterator.single((n, s))
-        }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2),
-          depth = graft.Agg.depth(cache.getNumPartitions))
+          (n, s)
+        }((a, b) => (a._1 + b._1, a._2 + b._2))
         if (sumGW > 0) nGroups.toDouble / sumGW else 1.0
       case _ => 1.0
     }
     def flushPending(): Unit = if (pending.nonEmpty) {
-      val bP = sc.broadcast(pending.toArray)
-      val next = cache.map { case (r, m) =>
-        val out = m.clone()
-        val p = bP.value
-        var i = 0
-        while (i < p.length) {
-          val (sh, w, g) = p(i)
-          out(g) += w * sh.predictLeaf(r)(0)
-          i += 1
-        }
-        (r, out)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
       flushCount += 1
       // lineage grows one map per flush; truncate on the same cadence (in
       // iterations) as the non-deferred path's checkpointInterval
-      if (flushCount % math.max(1, params.checkpointInterval / params.marginFlushInterval) == 0)
-        next.localCheckpoint()
-      next.count()
-      cache.unpersist(blocking = false)
-      cache = next
+      cache = RoundPasses.advance(cache, sc.broadcast(pending.toArray),
+        flushCount % math.max(1, params.checkpointInterval / params.marginFlushInterval) == 0)
       pending.clear()
     }
 
@@ -768,7 +758,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
             case _ => CoxGradients.compute(cache, pendingArr)
           }
           val g = raw.persist(StorageLevel.MEMORY_AND_DISK)
-          g.count()
+          RoundPasses.materialize(g)
           // position-bias update (UpdatePositionBias, lambdarank_obj.cc:103):
           // accumulate this iteration's per-position numerators into the
           // running totals, then re-fit t±(i) = (l(i)/l(0))^regularizer
@@ -794,17 +784,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // rescaling
       if (gradBased) {
         require(!isMulti, "sampling_method=gradient_based supports single-output objectives")
-        val (uSum, n) = withGrads(cache, globalGrads).mapPartitions { it =>
-          val out = new Array[Double](2)
-          val scratch = new Array[Double](2 * numGroups)
-          var s = 0.0; var c = 0L
-          it.foreach { case (r, m, pre) =>
-            gradOf(r, m, pre, obj, softmax, 0, droppedShapes, out, scratch)
-            s += math.sqrt(out(0) * out(0) + params.lambda * out(1) * out(1))
-            c += 1
-          }
-          Iterator.single((s, c))
-        }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(cache.getNumPartitions))
+        val (uSum, n) = RoundPasses.magnitudeSum(cache, globalGrads,
+          rowGrad(obj, softmax, 0, iter, droppedShapes))
         gbMeanU = if (n > 0) uSum / n else 1.0
       }
 
@@ -854,33 +835,14 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         }
         if (pending.length >= params.marginFlushInterval) flushPending()
       } else {
-      // applied identically to the train AND eval margin caches
-      val bNew = sc.broadcast(newShapes.zip(newGroups))
-      val bAdjust = sc.broadcast(weightDeltas.map { case (i, d) => (shapes(i), treeGroupBuf(i), d) })
-      def advance(c: RDD[(BInst, Array[Double])]): RDD[(BInst, Array[Double])] = {
-        val next = c.map { case (r, m) =>
-          val out = m.clone()
-          var g = 0
-          while (g < bNew.value.length) {
-            val (sh, grp) = bNew.value(g)
-            out(grp) += newW * sh.predictLeaf(r)(0)
-            g += 1
-          }
-          var d = 0
-          while (d < bAdjust.value.length) {
-            val (sh, grp, delta) = bAdjust.value(d)
-            out(grp) += delta * sh.predictLeaf(r)(0)
-            d += 1
-          }
-          (r, out)
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        if ((iter + 1) % params.checkpointInterval == 0) next.localCheckpoint()
-        next.count()
-        c.unpersist(blocking = false)
-        next
-      }
-      cache = advance(cache)
-      watchCaches = watchCaches.map(advance)
+      // applied identically to the train AND eval margin caches: the new
+      // trees at newW, then the DART weight deltas of the dropped trees
+      val bTrees = sc.broadcast(
+        newShapes.indices.map(p => (newShapes(p), newW, newGroups(p))).toArray ++
+          weightDeltas.map { case (i, d) => (shapes(i), d, treeGroupBuf(i)) })
+      val checkpoint = (iter + 1) % params.checkpointInterval == 0
+      cache = RoundPasses.advance(cache, bTrees, checkpoint)
+      watchCaches = watchCaches.map(RoundPasses.advance(_, bTrees, checkpoint))
       } // end margin-update branch
       globalGrads.foreach(_.unpersist(blocking = false))
 
@@ -1019,14 +981,20 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
       numFeatures: Int, obj: Objective, softmax: SoftmaxObjective, grp: Int,
       iter: Int, colSampler: ColumnSampler,
-      droppedShapes: Array[(TreeShape, Double, Int)]): TreeShape = params.growPolicy match {
-    case "depthwise" => growTreeDepthwise(cache, globalGrads, cuts,
-      numFeatures, obj, softmax, grp, iter, colSampler, droppedShapes)
-    case "lossguide" => growTreeLossguide(cache, globalGrads, cuts,
-      numFeatures, obj, softmax, grp, iter, colSampler, droppedShapes)
-    case other => throw new IllegalArgumentException(
-      s"unknown grow_policy: $other (supported: depthwise, lossguide)")
+      droppedShapes: Array[(TreeShape, Double, Int)]): TreeShape = {
+    val rg = rowGrad(obj, softmax, grp, iter, droppedShapes)
+    params.growPolicy match {
+      case "depthwise" => growTreeDepthwise(cache, globalGrads, cuts, numFeatures, rg, iter, colSampler)
+      case "lossguide" => growTreeLossguide(cache, globalGrads, cuts, numFeatures, rg, iter, colSampler)
+      case other => throw new IllegalArgumentException(
+        s"unknown grow_policy: $other (supported: depthwise, lossguide)")
+    }
   }
+
+  /** The per-row gradient of one tree, shipped with its passes. */
+  private def rowGrad(obj: Objective, softmax: SoftmaxObjective, grp: Int, iter: Int,
+      dropped: Array[(TreeShape, Double, Int)]): RowGrad =
+    new RowGrad(params, obj, softmax, grp, iter, dropped, gbMeanU)
 
   /** Best-first (lossguide) growth: a driver-side priority queue expands
     * the highest-gain candidate anywhere in the tree until `maxLeaves`
@@ -1037,20 +1005,17 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   private def growTreeLossguide(
       cache: RDD[(BInst, Array[Double])],
       globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
-      numFeatures: Int, obj: Objective, softmax: SoftmaxObjective, grp: Int,
-      iter: Int, colSampler: ColumnSampler,
-      droppedShapes: Array[(TreeShape, Double, Int)]): TreeShape = {
+      numFeatures: Int, rg: RowGrad, iter: Int, colSampler: ColumnSampler): TreeShape = {
 
     val nodes = new ArrayBuffer[BuildNode]
     val treeCols = colSampler.sampleTree(iter, params.colsampleBytree)
-    val (rootG, rootH) = aggregateTotals(cache, globalGrads, obj, softmax, grp, iter, droppedShapes)
+    val (rootG, rootH) = RoundPasses.totals(cache, globalGrads, rg)
     nodes += new BuildNode(rootG, rootH, 0)
     if (params.interactionConstraints.nonEmpty)
       nodes(0).allowed = Some((0 until numFeatures).toSet)
 
     val hists = collection.mutable.Map[Int, Array[Double]]()
-    hists(0) = aggregateHistograms(cache, globalGrads, cuts, obj, softmax,
-      grp, iter, Array(0), nodesShape(nodes), droppedShapes)(0)
+    hists(0) = RoundPasses.histograms(cache, globalGrads, rg, cuts, Array(0), nodesShape(nodes))(0)
 
     // max-queue by (gain, then smaller nid) for deterministic tie-breaks
     val queue = collection.mutable.PriorityQueue.empty[(Double, Int, SplitCandidate)](
@@ -1081,8 +1046,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       leaves += 1
       val l = nodes(nid).left; val r = nodes(nid).right
       val (small, large) = if (nodes(l).h <= nodes(r).h) (l, r) else (r, l)
-      val built = aggregateHistograms(cache, globalGrads, cuts, obj,
-        softmax, grp, iter, Array(small), nodesShape(nodes), droppedShapes)(0)
+      val built = RoundPasses.histograms(cache, globalGrads, rg, cuts, Array(small), nodesShape(nodes))(0)
       hists(small) = built
       val ph = hists(nid)
       val sib = new Array[Double](ph.length)
@@ -1107,16 +1071,14 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   private def growTreeDepthwise(
       cache: RDD[(BInst, Array[Double])],
       globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
-      numFeatures: Int, obj: Objective, softmax: SoftmaxObjective, grp: Int,
-      iter: Int, colSampler: ColumnSampler,
-      droppedShapes: Array[(TreeShape, Double, Int)]): TreeShape = {
+      numFeatures: Int, rg: RowGrad, iter: Int, colSampler: ColumnSampler): TreeShape = {
 
     val sc = cache.sparkContext
     val nodes = new ArrayBuffer[BuildNode]
     val treeCols = colSampler.sampleTree(iter, params.colsampleBytree)
 
     // root totals
-    val (rootG, rootH) = aggregateTotals(cache, globalGrads, obj, softmax, grp, iter, droppedShapes)
+    val (rootG, rootH) = RoundPasses.totals(cache, globalGrads, rg)
     nodes += new BuildNode(rootG, rootH, 0)
     if (params.interactionConstraints.nonEmpty)
       nodes(0).allowed = Some((0 until numFeatures).toSet)
@@ -1131,8 +1093,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
 
       // subtraction trick (histogram.h:203-213,386-425): build smaller sibling
       val (buildSet, subtractSet) = planHistBuilds(frontier, parentHists, nodes)
-      val built = aggregateHistograms(cache, globalGrads, cuts, obj, softmax, grp,
-        iter, buildSet, nodesShape(nodes), droppedShapes)
+      val built = RoundPasses.histograms(cache, globalGrads, rg, cuts, buildSet, nodesShape(nodes))
       val hists = collection.mutable.Map[Int, Array[Double]](buildSet.zip(built).toSeq: _*)
       subtractSet.foreach { case (nid, parent, sibling) =>
         val ph = parentHists(parent)
@@ -1266,10 +1227,10 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   }
 
   // ---- watch metric evaluation (RDD form of graft.metric.Metrics for the
-  // training loop — one treeAggregate per evaluated iteration) -------------
+  // training loop — one aggregation per evaluated iteration) ---------------
 
   /** ONE metric-name registry for every facade (train/cv/estimators):
-    * elementwise names run as fused treeAggregates; ranking names
+    * elementwise names run as fused aggregations; ranking names
     * (ndcg@k/map@k/pre@k, ranking auc) walk the qid-co-partitioned groups
     * in place (no shuffle); global-sweep names (auc/aucpr, multiclass OvR
     * auc, cox-nloglik) delegate to the oracle-verified DataFrame kernels in
@@ -1397,7 +1358,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   /** mean NDCG@k over qid-contiguous groups (ranking fits only). */
   private def evalNdcg(c: RDD[(BInst, Array[Double])], k: Int): Double = {
     val expGain = params.ndcgExpGain
-    val (s, n) = c.mapPartitions { it =>
+    val (s, n) = graft.Agg.reducePartitions(c) { it =>
       val base = it.buffered
       var sum = 0.0; var cnt = 0L
       val buf = new ArrayBuffer[(Double, Double)] // (label, margin)
@@ -1416,8 +1377,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         sum += (if (idcg > 0) dcg / idcg else 0.0)
         cnt += 1
       }
-      Iterator.single((sum, cnt))
-    }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(c.getNumPartitions))
+      (sum, cnt)
+    }((a, b) => (a._1 + b._1, a._2 + b._2))
     if (n > 0) s / n else 0.0
   }
 
@@ -1428,7 +1389,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * handling, `auc.cc:206`). */
   private def groupMean(c: RDD[(BInst, Array[Double])])(
       f: ArrayBuffer[(Double, Double)] => Option[Double]): Double = {
-    val (s, n) = c.mapPartitions { it =>
+    val (s, n) = graft.Agg.reducePartitions(c) { it =>
       val base = it.buffered
       var sum = 0.0; var cnt = 0L
       val buf = new ArrayBuffer[(Double, Double)]
@@ -1440,8 +1401,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         }
         f(buf) match { case Some(v) => sum += v; cnt += 1; case None => }
       }
-      Iterator.single((sum, cnt))
-    }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(c.getNumPartitions))
+      (sum, cnt)
+    }((a, b) => (a._1 + b._1, a._2 + b._2))
     if (n > 0) s / n else 0.0
   }
 
@@ -1537,211 +1498,11 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 
-  // ---- distributed aggregations -------------------------------------------
+  // ---- gradient-based sampling state (the passes are in RoundPasses) -----
 
-  /** Deterministic per-(row, iteration) uniform in [0,1). */
-  @inline private def rand01(rowId: Long, iter: Int): Double = {
-    var z = rowId ^ (params.seed + 0x9E3779B97F4A7C15L * (iter + 1))
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z = z ^ (z >>> 31)
-    (z >>> 11).toDouble / (1L << 53).toDouble
-  }
-
-  /** Per-iteration deterministic row subsample predicate
-    * (ref `src/tree/hist/sampler.cc:204`; seeded per iteration). */
-  @inline private def sampled(rowId: Long, iter: Int): Boolean =
-    params.subsample >= 1.0 || rand01(rowId, iter) < params.subsample
-
-  /** Gradient-based sampling (ref `CalcSamplingInfo`/`GradientBasedSampling`,
-    * `src/tree/hist/sampler.cc:39-120`): keep probability
-    * `p = min(1, subsample · u / ū)` with `u = √(g² + λ·h²)` the
-    * regularized gradient magnitude, and kept gradients rescaled by `1/p`
-    * (unbiased). `ū` (gbMeanU) comes from one aggregation per iteration;
-    * the reference solves the exact threshold by search — the mean-scaled
-    * form is the standard one-shot approximation. Returns 0 (drop row) or
-    * the scale factor. */
-  @inline private def gradientSampleScale(rowId: Long, iter: Int,
-      g: Double, h: Double): Double = {
-    val u = math.sqrt(g * g + params.lambda * h * h)
-    val p = math.min(1.0, params.subsample * u / math.max(gbMeanU, 1e-300))
-    if (rand01(rowId, iter) < p) 1.0 / p else 0.0
-  }
-
-  private val gradBased =
-    params.samplingMethod == "gradient_based" && params.subsample < 1.0
+  private val gradBased = RowGrad.gradBased(params)
   /** mean regularized gradient magnitude of the current iteration. */
   private var gbMeanU: Double = 1.0
-
-  /** Adjusted margin for group g under DART dropout: cached full-ensemble
-    * margin minus dropped trees' contributions (ref DropTrees,
-    * `src/gbm/gbtree.h:369`). */
-  @inline private def adjustedMargin(
-      m: Array[Double], r: BInst, grp: Int,
-      dropped: Array[(TreeShape, Double, Int)]): Double = {
-    var out = m(grp)
-    var i = 0
-    while (i < dropped.length) {
-      val (sh, w, g) = dropped(i)
-      if (g == grp) out -= w * sh.predictLeaf(r)(0)
-      i += 1
-    }
-    out
-  }
-
-  /** Attach the (optional) precomputed per-row gradients to the packed
-    * (row, margin) cache. The gradients RDD is derived from `cache` by a
-    * mapPartitions-style transform in the SAME iteration (never persisted
-    * across margin generations), so the zip is positional, shuffle-free
-    * and alignment-safe. `pre == null` ⇒ compute from the objective
-    * kernel. */
-  private def withGrads(
-      cache: RDD[(BInst, Array[Double])],
-      grads: Option[RDD[Array[Double]]]): RDD[(BInst, Array[Double], Array[Double])] =
-    grads match {
-      case Some(g) => cache.zip(g).map { case ((r, m), gh) => (r, m, gh) }
-      case None => cache.map { case (r, m) => (r, m, null) }
-    }
-
-  private def gradOf(
-      r: BInst, m: Array[Double], pre: Array[Double], obj: Objective,
-      softmax: SoftmaxObjective,
-      grp: Int, dropped: Array[(TreeShape, Double, Int)], out: Array[Double],
-      scratch: Array[Double]): Unit = {
-    if (pre != null) { // risk-set objectives: already weighted
-      out(0) = pre(0); out(1) = pre(1)
-    } else if (isMulti) {
-      // softmax needs all group margins (dropout adjustment per group)
-      if (dropped.isEmpty) softmax.gradient(m, r.label, scratch)
-      else {
-        val adj = new Array[Double](numGroups)
-        var g = 0
-        while (g < numGroups) { adj(g) = adjustedMargin(m, r, g, dropped); g += 1 }
-        softmax.gradient(adj, r.label, scratch)
-      }
-      out(0) = scratch(2 * grp) * r.weight
-      out(1) = scratch(2 * grp + 1) * r.weight
-    } else {
-      val margin = if (dropped.isEmpty) m(0) else adjustedMargin(m, r, 0, dropped)
-      if (obj.usesIntervalLabels) obj.gradientInterval(margin, r.label, r.label2, out)
-      else obj.gradient(margin, r.label, out)
-      out(0) *= r.weight
-      out(1) *= r.weight
-    }
-  }
-
-  private def aggregateTotals(
-      cache: RDD[(BInst, Array[Double])],
-      globalGrads: Option[RDD[Array[Double]]], obj: Objective,
-      softmax: SoftmaxObjective, grp: Int, iter: Int,
-      dropped: Array[(TreeShape, Double, Int)]): (Double, Double) = {
-    withGrads(cache, globalGrads).mapPartitions { it =>
-      val out = new Array[Double](2)
-      val scratch = new Array[Double](2 * numGroups)
-      var g = 0.0; var h = 0.0
-      it.foreach { case (r, m, pre) =>
-        if (gradBased) {
-          gradOf(r, m, pre, obj, softmax, grp, dropped, out, scratch)
-          val s = gradientSampleScale(r.rowId, iter, out(0), out(1))
-          if (s > 0) { g += s * out(0); h += s * out(1) }
-        } else if (sampled(r.rowId, iter)) {
-          gradOf(r, m, pre, obj, softmax, grp, dropped, out, scratch)
-          g += out(0); h += out(1)
-        }
-      }
-      Iterator.single((g, h))
-    }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(cache.getNumPartitions))
-  }
-
-  /** ONE pass building histograms for every node in `buildSet` — the analog
-    * of `HistogramBuilder::BuildHist` + allreduce (`histogram.h:44-202`):
-    * per-partition dense accumulation (allocation-free inner loop), then a
-    * tree-wise partial+final merge — Spark's map-side combine IS the
-    * reference's histogram allreduce. Hist layout per node: g at 2·bin,
-    * h at 2·bin+1 in global bin space. */
-  private def aggregateHistograms(
-      cache: RDD[(BInst, Array[Double])],
-      globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
-      obj: Objective, softmax: SoftmaxObjective, grp: Int, iter: Int,
-      buildSet: Array[Int], shape: TreeShape,
-      dropped: Array[(TreeShape, Double, Int)]): Array[Array[Double]] = {
-
-    val sc = cache.sparkContext
-    val bShape = sc.broadcast(shape)
-    val histLen = 2 * cuts.totalBins
-    val nBuild = buildSet.length
-    val offsets = cuts.featureOffset
-    val numFeatures = cuts.numFeatures
-    // dense position→slot map (node ids are small ints)
-    val maxNid = if (buildSet.isEmpty) 0 else buildSet.max
-    val slotOf = Array.fill(maxNid + 1)(-1)
-    buildSet.zipWithIndex.foreach { case (nid, s) => slotOf(nid) = s }
-
-    val partials = withGrads(cache, globalGrads).mapPartitions { it =>
-      val hists = new Array[Array[Double]](nBuild)
-      val out = new Array[Double](2)
-      val scratch = new Array[Double](2 * numGroups)
-      val sh = bShape.value
-      it.foreach { case (r, m, pre) =>
-        if (gradBased || sampled(r.rowId, iter)) {
-          val pos = sh.position(r)
-          val slot = if (pos <= maxNid) slotOf(pos) else -1
-          if (slot >= 0) {
-            var hist = hists(slot)
-            if (hist == null) { hist = new Array[Double](histLen); hists(slot) = hist }
-            gradOf(r, m, pre, obj, softmax, grp, dropped, out, scratch)
-            val sampleScale =
-              if (gradBased) gradientSampleScale(r.rowId, iter, out(0), out(1)) else 1.0
-            val g = sampleScale * out(0); val h = sampleScale * out(1)
-            if (sampleScale > 0) {
-            if (r.idx == null) {
-              var f = 0
-              while (f < numFeatures) {
-                val b = r.bins(f)
-                if (b >= 0) {
-                  val gb = 2 * (offsets(f) + b)
-                  hist(gb) += g
-                  hist(gb + 1) += h
-                }
-                f += 1
-              }
-            } else {
-              // sparse row: O(nnz) accumulation over present features only;
-              // absent mass reaches the split search as (total − Σ bins),
-              // i.e. the same missing-direction machinery as NaN
-              var k = 0
-              while (k < r.idx.length) {
-                val b = r.bins(k)
-                if (b >= 0) {
-                  val gb = 2 * (offsets(r.idx(k)) + b)
-                  hist(gb) += g
-                  hist(gb + 1) += h
-                }
-                k += 1
-              }
-            }
-            }
-          }
-        }
-      }
-      Iterator.single(hists)
-    }
-    val result = graft.Agg.reduce(partials)((a, b) => {
-      var s = 0
-      while (s < nBuild) {
-        if (a(s) == null) a(s) = b(s)
-        else if (b(s) != null) {
-          val x = a(s); val y = b(s)
-          var i = 0
-          while (i < histLen) { x(i) += y(i); i += 1 }
-        }
-        s += 1
-      }
-      a
-    })
-    bShape.destroy()
-    result.map(h => if (h == null) new Array[Double](histLen) else h)
-  }
 }
 
 /** Nested per-tree/level/node Bernoulli feature sampling (ref

@@ -16,7 +16,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Distribution shape: ONE cached `RDD[((bins, labels, weight), margins)]`
   * (margins packed with the row — no cross-generation zip, one block per
-  * partition); each tree level runs ONE `treeAggregate` whose partial is
+  * partition); each tree level runs ONE `graft.Agg` job whose partial is
   * `frontier × totalBins × 2K` doubles (the per-target lanes of the
   * single-target layout), with the `2K` gradient vector recomputed inline
   * from the packed margin for frontier rows. Split gain sums the per-target gains over a

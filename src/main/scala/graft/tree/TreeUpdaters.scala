@@ -79,7 +79,7 @@ object TreeUpdaters {
     * sequentially per tree, each row walks its root→leaf path and
     * contributes its weighted (g, h) — at the margin of the trees
     * refreshed so far, the same prequential gradients boosting used — to
-    * every node on the path; ONE treeAggregate of `2·nNodes` doubles per
+    * every node on the path; ONE aggregation of `2·nNodes` doubles per
     * tree, then leaves become `calcWeight(G, H)` and `sumHess`/`gain` are
     * refreshed from the new sums. */
   def refresh(model: BoosterModel, data: RDD[(Array[Double], Double, Double)],

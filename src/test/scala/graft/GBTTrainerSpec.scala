@@ -59,6 +59,33 @@ class QuantileSketchSpec extends AnyFunSuite {
     val m = a.merge(b)
     assert(math.abs(m.totalWeight - 7.0) < 1e-12)
   }
+
+  test("a serialized sketch keeps its buffered values but not its buffer") {
+    def roundTrip(s: QuantileSketch): (QuantileSketch, Int) = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(s)
+      out.close()
+      val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      (in.readObject().asInstanceOf[QuantileSketch], bytes.size())
+    }
+    val rng = new scala.util.Random(3)
+    val values = Array.fill(5000)(rng.nextGaussian())
+    def sketch() = {
+      val s = new QuantileSketch(maxSize = 256, bufferCap = 4096)
+      values.foreach(s.push(_, 1.0)) // 904 values still buffered
+      s
+    }
+    val (shipped, _) = roundTrip(sketch())
+    val expected = sketch().result
+    val got = shipped.result
+    assert(got.values.toSeq == expected.values.toSeq)
+    assert(got.rmins.toSeq == expected.rmins.toSeq && got.rmaxs.toSeq == expected.rmaxs.toSeq)
+    shipped.push(1.0, 1.0) // a shipped sketch keeps accepting values
+    assert(shipped.result.totalWeight == 5001.0)
+    // an empty sketch ships without 2 × 1024 empty buffer doubles
+    assert(roundTrip(new QuantileSketch(maxSize = 256))._2 < 2048)
+  }
 }
 
 class GBTTrainerSpec extends AnyFunSuite {
@@ -216,6 +243,37 @@ class GBTTrainerSpec extends AnyFunSuite {
     val e = margins.map(math.exp)
     val probs = e.map(_ / e.sum)
     assert(math.abs(probs.sum - 1.0) < 1e-9)
+    data.unpersist()
+  }
+
+  test("a depthwise round submits exactly 1 + maxDepth jobs") {
+    // root totals plus one histogram pass per level; margins are deferred,
+    // so a third round adds exactly its own aggregations
+    val data = lineitemData().cache()
+    data.count()
+    val sc = spark.sparkContext
+    def jobsOf(numRounds: Int): (Int, BoosterModel) = {
+      val group = s"rounds-$numRounds-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      val model =
+        try new GBTTrainer(TrainParams(numRounds = numRounds, maxDepth = 4, eta = 0.3,
+          maxBin = 32)).fit(data)
+        finally sc.clearJobGroup()
+      // the status tracker learns of jobs from the listener bus; once a job
+      // submitted after the fit is visible, every job of the fit is too
+      val marker = group + "-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, "listener bus did not drain")
+      (sc.statusTracker.getJobIdsForGroup(group).length, model)
+    }
+    val (two, _) = jobsOf(2)
+    val (three, model) = jobsOf(3)
+    assert(model.trees.last.maxDepth == 4, "the third tree must reach maxDepth")
+    assert(three - two == 1 + 4, s"$two jobs for 2 rounds, $three for 3")
     data.unpersist()
   }
 }
