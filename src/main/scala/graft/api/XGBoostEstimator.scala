@@ -173,12 +173,12 @@ trait GraftXGBParams extends Params {
   def setQuantileAlpha(v: Double): this.type = set(quantileAlpha, v)
 
   /** Run the trainer on rows split by `validationIndicatorCol` (if set):
-    * false rows train, true rows form the eval watch. Decoded rows persist
-    * for the duration (sketch + bin + per-iteration eval passes). */
+    * false rows train, true rows form the eval watch. The decoded rows go
+    * straight in: the trainer decides what to persist. */
   protected def fitWithOptionalValidation(
       ds: Dataset[_], trainer: GBTTrainer): graft.model.BoosterModel = {
     if ($(validationIndicatorCol).isEmpty)
-      withPersisted(extractRdd(ds))(trainer.fit(_))
+      trainer.fit(extractRdd(ds))
     else {
       val flag = col($(validationIndicatorCol)).cast("boolean")
       val w = if ($(weightCol).nonEmpty) col($(weightCol)).cast("double") else lit(1.0)
@@ -188,10 +188,8 @@ trait GraftXGBParams extends Params {
           (GraftXGBParams.toDoubleArray(row.get(0), miss), row.getDouble(1),
             row.getDouble(2), row.getBoolean(3))
         }
-      withPersisted(tagged) { t =>
-        trainer.fit(t.filter(!_._4).map(r => (r._1, r._2, r._3)),
-          t.filter(_._4).map(r => (r._1, r._2, r._3)))
-      }
+      trainer.fit(tagged.filter(!_._4).map(r => (r._1, r._2, r._3)),
+        tagged.filter(_._4).map(r => (r._1, r._2, r._3)))
     }
   }
 
@@ -229,15 +227,6 @@ trait GraftXGBParams extends Params {
     * JSON/UBJSON export carries them (ref learner.cc:694-696). */
   protected def withFeatureMeta(b: graft.model.BoosterModel): graft.model.BoosterModel =
     if ($(featureTypes).isEmpty) b else b.copy(featureTypes = $(featureTypes))
-
-  /** Training consumes its input twice (quantile-sketch pass + binning
-    * pass) — persist the decoded rows for the duration of `fit` so the
-    * source scan and row decode don't run twice (the reference's DMatrix
-    * is likewise materialized once before training). */
-  protected def withPersisted[T, R](rdd: RDD[T])(f: RDD[T] => R): R = {
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try f(rdd) finally rdd.unpersist(blocking = false)
-  }
 
   /** (features, label, weight) rows; `missing` values become NaN. */
   protected def extractRdd(ds: Dataset[_]): RDD[(Array[Double], Double, Double)] = {
@@ -338,8 +327,8 @@ class XGBoostRegressor(override val uid: String)
       require($(objective) == "reg:quantileerror",
         "quantileAlphas requires objective=reg:quantileerror")
       require($(baseMarginCol).isEmpty, "quantileAlphas does not compose with baseMarginCol")
-      val booster = withPersisted(extractRdd(ds))(rdd =>
-        XGBoost.trainQuantiles(rdd, baseTrainParams($(objective)), $(quantileAlphas)))
+      val booster = XGBoost.trainQuantiles(extractRdd(ds), baseTrainParams($(objective)),
+        $(quantileAlphas))
       return copyValues(new XGBoostRegressionModel(uid, withFeatureMeta(booster))).setParent(this)
     }
     val trainer = new GBTTrainer(baseTrainParams($(objective)))
@@ -350,7 +339,7 @@ class XGBoostRegressor(override val uid: String)
       if ($(baseMarginCol).nonEmpty) {
         require($(validationIndicatorCol).isEmpty,
           "baseMarginCol does not compose with validationIndicatorCol")
-        withPersisted(extractRddWithMargin(ds))(trainer.fitWithBaseMargin)
+        trainer.fitWithBaseMargin(extractRddWithMargin(ds))
       } else fitWithOptionalValidation(ds, trainer)
     copyValues(new XGBoostRegressionModel(uid, withFeatureMeta(booster)))
       .setSummary(trainer).setParent(this)
@@ -553,7 +542,7 @@ class XGBoostRanker(override val uid: String)
       lambdarankNormalization = $(lambdarankNormalization),
       lambdarankScoreNormalization = $(lambdarankScoreNormalization),
       ndcgExpGain = $(ndcgExpGain)))
-    val booster = withPersisted(rdd)(trainer.fitRanking(_))
+    val booster = trainer.fitRanking(rdd)
     copyValues(new XGBoostRankerModel(uid, withFeatureMeta(booster)))
       .setSummary(trainer).setParent(this)
   }

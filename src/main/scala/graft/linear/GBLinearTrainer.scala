@@ -1,9 +1,9 @@
 package graft.linear
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 
 import graft.objective.Objective
+import graft.tree.TrainingInput
 
 import scala.util.Random
 
@@ -172,12 +172,17 @@ final class GBLinearTrainer(val params: LinearParams) {
       if (rows <= 1000000 && estBytes <= (256L << 20)) cached.collect() else null
     } else null
 
+  /** Every round reads the rows: they are read from a persisted copy this
+    * trainer owns, or from the caller's own cache. */
   def fit(data: RDD[(Array[Double], Double, Double)]): LinearModel = {
     val obj = Objective(params.objective)
     require(!obj.needsGlobalGradients && !obj.usesIntervalLabels,
       s"gblinear does not support ${params.objective}")
-    val cached = data.persist(StorageLevel.MEMORY_AND_DISK)
-    val sc = data.sparkContext
+    TrainingInput.withRereadable(data, everyRound = true)(fitCached(obj, _))
+  }
+
+  private def fitCached(obj: Objective, cached: RDD[(Array[Double], Double, Double)]): LinearModel = {
+    val sc = cached.sparkContext
 
     // numFeatures + Σ instance weight + weighted label mean, one pass
     // (ref LazySumWeights `gblinear.cc:133`, FitStump intercept)
@@ -337,7 +342,6 @@ final class GBLinearTrainer(val params: LinearParams) {
       }
       round += 1
     }
-    cached.unpersist(blocking = false)
     LinearModel(weights, bias, base, params.objective, nf)
   }
 
@@ -355,8 +359,12 @@ final class GBLinearTrainer(val params: LinearParams) {
     * path. */
   def fitMulti(data: RDD[(Array[Double], Double, Double)], numClass: Int): MultiLinearModel = {
     require(numClass >= 2, "fitMulti needs numClass >= 2")
-    val cached = data.persist(StorageLevel.MEMORY_AND_DISK)
-    val sc = data.sparkContext
+    TrainingInput.withRereadable(data, everyRound = true)(fitMultiCached(_, numClass))
+  }
+
+  private def fitMultiCached(cached: RDD[(Array[Double], Double, Double)],
+      numClass: Int): MultiLinearModel = {
+    val sc = cached.sparkContext
     val K = numClass
 
     val (nf, sumW, badLabels) = graft.Agg.aggregate(cached)((0, 0.0, 0L))(
@@ -558,7 +566,6 @@ final class GBLinearTrainer(val params: LinearParams) {
       }
       round += 1
     }
-    cached.unpersist(blocking = false)
     MultiLinearModel(weights, bias, new Array[Double](K),
       if (params.objective.startsWith("multi:")) params.objective else "multi:softprob", nf)
   }

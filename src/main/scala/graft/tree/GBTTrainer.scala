@@ -1,7 +1,6 @@
 package graft.tree
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 
 import graft.data.{Binning, HistogramCuts}
 import graft.model.{BoosterModel, Node, Tree}
@@ -182,6 +181,13 @@ private[tree] final case class SplitCandidate(
   * the whole bytecode of a closure's defining class on every job, and this
   * class is large.
   *
+  * Every entry point is a thin call into [[TrainingInput.prepare]]: it
+  * states its `require`s and its row → [[BInst]] mapping, and the prepare
+  * path lays the rows out, cuts and bins them into one persisted cache,
+  * runs [[fitBinned]] on it and releases what it persisted — also when the
+  * fit throws. Which input rows get persisted is decided there alone; the
+  * trainer never persists an RDD the caller passed in.
+  *
   * Scale design: the quantized matrix (`Array[Int]` bins, the
   * `GHistIndexMatrix` analog `src/data/gradient_index.h`) is cached once;
   * per level ONE pass builds histograms for ALL frontier nodes; the
@@ -209,54 +215,22 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   /** User eval metric for the watch/early-stopping loop. */
   def withCustomMetric(m: CustomEvalMetric): this.type = { customMetric = Some(m); this }
 
-  /** Defend against under-partitioned inputs (a single parquet file → 1-3
-    * partitions → 1-3 training tasks regardless of cluster size): lift to
-    * the parallelism floor before the multi-pass training loop. One shuffle,
-    * amortized over every boosting round via shuffle-file reuse. */
-  private def ensurePar[T: scala.reflect.ClassTag](data: RDD[T]): RDD[T] = {
-    val target = params.minTrainPartitions match {
-      case -1 => data.sparkContext.defaultParallelism
-      case 0 => 0
-      case n => n
-    }
-    if (target > data.getNumPartitions) data.repartition(target) else data
-  }
+  /** Dense rows (features with NaN = missing, label, weight) through
+    * [[TrainingInput.prepare]]; the cuts follow `params.treeMethod`. */
+  private def prepareDense[R](data: RDD[(Array[Double], Double, Double)])(
+      train: Prepared[(Array[Double], Double, Double), BInst] => R): R =
+    TrainingInput.prepare(params, data)(
+      rows => TrainingInput.denseCuts(params, rows.map(r => (r._1, r._3))),
+      (r, cuts, id) => BInst(cuts.binRow(r._1), r._2, r._3, id))(train)
 
   /** data: (dense features with NaN=missing, label, weight). */
-  def fit(dataIn: RDD[(Array[Double], Double, Double)]): BoosterModel = {
-    val data = ensurePar(dataIn)
+  def fit(data: RDD[(Array[Double], Double, Double)]): BoosterModel =
     params.treeMethod match {
-    case "hist" =>
-      // column count is unified inside the sketch pass (ref
-      // MetaInfo::SynchronizeNumberOfColumns, include/xgboost/data.h:191)
-      val cuts = findCuts(data)
-      val numFeatures = cuts.numFeatures
-      val binned = data.zipWithUniqueId().map { case ((f, y, w), id) =>
-        BInst(cuts.binRow(f), y, w, id)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      binned.count()
-
-      val model = fitBinned(binned, cuts, numFeatures)
-      binned.unpersist(blocking = false)
-      model
-    case "approx" => fitApprox(data)
-    case "exact" =>
-      // grow_colmaker semantics via distinct-value cuts: with every
-      // distinct value its own bin, bin-space enumeration IS the exact
-      // greedy scan over sorted columns (Binning.findCutsExact doc)
-      val cuts = Binning.findCutsExact(data.map(r => (r._1, r._3)), 0)
-      val numFeatures = cuts.numFeatures
-      val binned = data.zipWithUniqueId().map { case ((f, y, w), id) =>
-        BInst(cuts.binRow(f), y, w, id)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      binned.count()
-      val model = fitBinned(binned, cuts, numFeatures)
-      binned.unpersist(blocking = false)
-      model
-    case other => throw new IllegalArgumentException(
-      s"unknown tree_method: $other (supported: exact, hist, approx)")
+      case "hist" | "exact" => prepareDense(data)(p => fitBinned(p.binned, p.cuts, p.cuts.numFeatures))
+      case "approx" => fitApprox(data)
+      case other => throw new IllegalArgumentException(
+        s"unknown tree_method: $other (supported: exact, hist, approx)")
     }
-  }
 
   /** hist fit with an eval WATCH set (ref watches + EvalOneIter,
     * `src/learner.cc:1164`; early stopping `python-package/xgboost/
@@ -264,31 +238,20 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * margin cache advances with every committed tree, and
     * `earlyStoppingRounds` stops training when the watch metric stops
     * improving — the returned model is truncated to the best iteration. */
-  def fit(dataIn: RDD[(Array[Double], Double, Double)],
-      evalSetIn: RDD[(Array[Double], Double, Double)]): BoosterModel =
-    fitWatches(dataIn, Seq("eval" -> evalSetIn))
+  def fit(data: RDD[(Array[Double], Double, Double)],
+      evalSet: RDD[(Array[Double], Double, Double)]): BoosterModel =
+    fitWatches(data, Seq("eval" -> evalSet))
 
   /** Named watchlist fit (ref `xgb.train(evals=[(dtrain,'train'),...])`,
     * `learner.cc` EvalOneIter): every watch set is binned with the TRAIN
     * cuts and evaluated each round; the LAST entry drives early stopping.
     * Full per-watch log via [[evalHistoryFull]]. */
-  def fitWatches(dataIn: RDD[(Array[Double], Double, Double)],
-      watchesIn: Seq[(String, RDD[(Array[Double], Double, Double)])]): BoosterModel = {
-    val data = ensurePar(dataIn)
+  def fitWatches(data: RDD[(Array[Double], Double, Double)],
+      watches: Seq[(String, RDD[(Array[Double], Double, Double)])]): BoosterModel = {
     require(params.treeMethod == "hist", "eval watches support tree_method=hist only")
-    val cuts = findCuts(data)
-    val numFeatures = cuts.numFeatures
-    def toBinned(d: RDD[(Array[Double], Double, Double)]) =
-      d.zipWithUniqueId().map { case ((f, y, w), id) => BInst(cuts.binRow(f), y, w, id) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val binned = toBinned(data); binned.count()
-    val watches = watchesIn.map { case (n, d) =>
-      val b = toBinned(ensurePar(d)); b.count(); (n, b)
+    prepareDense(data) { p =>
+      fitBinned(p.binned, p.cuts, p.cuts.numFeatures, watches.map { case (n, d) => (n, p.bin(d)) })
     }
-    val model = fitBinned(binned, cuts, numFeatures, watches)
-    binned.unpersist(blocking = false)
-    watches.foreach(_._2.unpersist(blocking = false))
-    model
   }
 
   /** Per-row base-margin fit (ref `base_margin_` in MetaInfo,
@@ -297,21 +260,11 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * The returned model's baseScore is 0 — at predict time the caller adds
     * its own margins, exactly like the reference's inplace-predict with
     * base_margin. Single-output hist only. */
-  def fitWithBaseMargin(dataIn: RDD[(Array[Double], Double, Double, Double)]): BoosterModel = {
-    val data = ensurePar(dataIn)
+  def fitWithBaseMargin(data: RDD[(Array[Double], Double, Double, Double)]): BoosterModel = {
     require(params.treeMethod == "hist", "base margins support tree_method=hist only")
     require(!isMulti, "per-row base margins support single-output objectives only")
-    val cuts = findCuts(data.map(r => (r._1, r._2, r._3)))
-    val numFeatures = cuts.numFeatures
-    val binned = data.zipWithUniqueId().map { case ((f, y, w, _), id) =>
-      BInst(cuts.binRow(f), y, w, id)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val margins = data.map(r => Array(r._4))
-    val model = fitBinned(binned, cuts, numFeatures,
-      initMargins = Some(margins), baseOverride = Some(Array(0.0)))
-    binned.unpersist(blocking = false)
-    model
+    prepareWithMargins(data, Array(0.0), 0)(r => (r._1, r._3),
+      (r, cuts, id) => (BInst(cuts.binRow(r._1), r._2, r._3, id), Array(r._4)))
   }
 
   /** Continue boosting from an existing model (the reference's `xgb_model`
@@ -319,28 +272,32 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * `Learner::Configure` resuming BoostedRounds): numRounds NEW trees are
     * appended, with margins seeded from the previous model's predictions.
     * gbtree + hist only (dart dropout would have to rescale prior trees). */
-  def fitContinue(dataIn: RDD[(Array[Double], Double, Double)], prev: BoosterModel): BoosterModel = {
-    val data = ensurePar(dataIn)
+  def fitContinue(data: RDD[(Array[Double], Double, Double)], prev: BoosterModel): BoosterModel = {
     require(params.treeMethod == "hist", "continuation supports tree_method=hist only")
     require(params.booster != "dart", "continuation supports the gbtree booster only")
     require(prev.numGroups == numGroups,
       s"previous model has ${prev.numGroups} output groups, params give $numGroups")
-    val cuts = findCuts(data)
-    val numFeatures = math.max(cuts.numFeatures, prev.numFeatures)
-    val binned = data.zipWithUniqueId().map { case ((f, y, w), id) =>
-      BInst(cuts.binRow(f), y, w, id)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val bPrev = binned.sparkContext.broadcast(prev)
-    val margins = data.map(r => bPrev.value.margin(r._1))
-    val cont = fitBinned(binned, cuts, numFeatures,
-      initMargins = Some(margins), baseOverride = Some(prev.baseScore.clone()))
-    binned.unpersist(blocking = false)
-    bPrev.destroy()
+    val bPrev = data.sparkContext.broadcast(prev)
+    val cont =
+      try prepareWithMargins(data, prev.baseScore.clone(), prev.numFeatures)(r => (r._1, r._3),
+        (r, cuts, id) => (BInst(cuts.binRow(r._1), r._2, r._3, id), bPrev.value.margin(r._1)))
+      finally bPrev.destroy()
     BoosterModel(prev.trees ++ cont.trees, prev.treeWeights ++ cont.treeWeights,
       prev.treeGroup ++ cont.treeGroup, prev.baseScore, params.objective,
-      numGroups, numFeatures)
+      numGroups, cont.numFeatures)
   }
+
+  /** hist fit from per-row initial margins, built in the binning pass so
+    * that each margin pairs with its own row; `sketch` gives a row's
+    * (features, weight), and the trees start from `base`. */
+  private def prepareWithMargins[T: scala.reflect.ClassTag](data: RDD[T], base: Array[Double],
+      minFeatures: Int)(sketch: T => (Array[Double], Double),
+      binRow: (T, HistogramCuts, Long) => (BInst, Array[Double])): BoosterModel =
+    TrainingInput.prepare(params, data)(
+      rows => TrainingInput.denseCuts(params, rows.map(sketch)), binRow) { p =>
+      fitBinned(p.binned.map(_._1), p.cuts, math.max(p.cuts.numFeatures, minFeatures),
+        initMargins = Some(p.binned.map(_._2)), baseOverride = Some(base))
+    }
 
   /** (iteration, watch-metric value) per evaluated round of the last fit. */
   def evalHistory: Seq[(Int, Double)] = lastHistory.toSeq
@@ -378,170 +335,127 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     require(!obj.needsGlobalGradients && !obj.usesIntervalLabels,
       s"tree_method=approx does not support ${params.objective}")
     val sc = data.sparkContext
-    // derived copy so we never clash with a caller-chosen storage level
-    val cached = data.map(identity).persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
+    Owned { owned =>
+      // the laid-out rows are read twice: the fused validation pass (label
+      // and weight checks, base-score stats, unified column count), then
+      // the margin-packed cache below
+      val (cache0, base, numFeatures) =
+        TrainingInput.withRereadable(TrainingInput.atFloor(data, params)) { rows =>
+          val stats = TrainingInput.validate(rows, params.objective)(
+            r => obj.validLabel(r._2), _._2, _._3, _._1.length)
+          val labelMean = if (stats.sumW > 0) stats.sumWy / stats.sumW else 0.0
+          val base = Array(params.baseScore.map(obj.probToMargin).getOrElse(obj.baseScore(labelMean)))
+          // margins packed with the RAW rows (re-binned every iteration, so
+          // the persistent pair carries features, not bins); the
+          // per-iteration binned twin is derived 1:1 from this cache and
+          // written back through a same-iteration positional zip of parent
+          // and direct child — never a zip across persisted generations
+          val c = owned.persist(rows.map(r => (r, base.clone())))
+          c.count()
+          (c, base, stats.width)
+        }
+      var cacheRaw = cache0
 
-    val badLabels = graft.Agg.aggregate(cached)(0L)((c, r) => if (!obj.validLabel(r._2)) c + 1 else c, _ + _)
-    if (badLabels > 0) throw new IllegalArgumentException(
-      s"$badLabels label(s) violate the ${params.objective} label constraints")
-    val badWeights = graft.Agg.aggregate(cached)(0L)((c, r) => if (r._3 < 0 || r._3.isNaN) c + 1 else c, _ + _)
-    if (badWeights > 0) throw new IllegalArgumentException(
-      s"$badWeights instance weight(s) are negative or NaN")
+      val colSampler = new ColumnSampler(numFeatures, params.seed, params.featureWeights)
+      val treesBuf = new ArrayBuffer[Tree]
+      var iter = 0
+      while (iter < params.numRounds) {
+        if (obj.needsScale) {
+          val (s1, s2) = graft.Agg.aggregate(cacheRaw)((0.0, 0.0))(
+            { case ((a1, a2), (r, m)) =>
+              val res = math.abs(r._2 - m(0))
+              (a1 + r._3 * math.sqrt(res), a2 + r._3)
+            }, (a, b) => (a._1 + b._1, a._2 + b._2))
+          obj.setScale(s1, s2)
+        }
+        // hessian-weighted re-sketch (updater_approx.cc:46-53)
+        val cuts = Binning.findCuts(cacheRaw.map { case ((f, y, w), m) =>
+          val o = new Array[Double](2)
+          obj.gradient(m(0), y, o)
+          (f, math.max(o(1) * w, 1e-16))
+        }, numFeatures, params.maxBin)
+        val binned = owned.persist(cacheRaw.zipWithUniqueId().map { case (((f, y, w), m), id) =>
+          (BInst(cuts.binRow(f), y, w, id), m)
+        })
+        binned.count()
 
-    // base-score stats + unified column count, one pass (ref
-    // MetaInfo::SynchronizeNumberOfColumns, include/xgboost/data.h:191)
-    val (sumWy, sumW, numFeatures) = graft.Agg.aggregate(cached)((0.0, 0.0, 0))(
-      (a, r) => (a._1 + r._3 * r._2, a._2 + r._3, math.max(a._3, r._1.length)),
-      (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)))
-    val labelMean = if (sumW > 0) sumWy / sumW else 0.0
-    val base = Array(params.baseScore.map(obj.probToMargin).getOrElse(obj.baseScore(labelMean)))
+        val shape = growTree(binned, None, cuts, numFeatures, obj, null, 0,
+          iter, colSampler, Array.empty)
+        treesBuf += shapeToTree(shape, cuts)
 
-    // margins packed with the RAW rows (re-binned every iteration, so the
-    // persistent pair carries features, not bins); the per-iteration
-    // binned twin is derived 1:1 from this cache and written back through
-    // a same-iteration positional zip of parent and direct child — never
-    // a zip across persisted generations
-    var cacheRaw: RDD[((Array[Double], Double, Double), Array[Double])] =
-      cached.map(r => (r, base.clone())).persist(StorageLevel.MEMORY_AND_DISK)
-    cacheRaw.count()
-    cached.unpersist(blocking = false)
-
-    val colSampler = new ColumnSampler(numFeatures, params.seed, params.featureWeights)
-    val treesBuf = new ArrayBuffer[Tree]
-    var iter = 0
-    while (iter < params.numRounds) {
-      if (obj.needsScale) {
-        val (s1, s2) = graft.Agg.aggregate(cacheRaw)((0.0, 0.0))(
-          { case ((a1, a2), (r, m)) =>
-            val res = math.abs(r._2 - m(0))
-            (a1 + r._3 * math.sqrt(res), a2 + r._3)
-          }, (a, b) => (a._1 + b._1, a._2 + b._2))
-        obj.setScale(s1, s2)
+        val bShape = sc.broadcast(shape)
+        val old = cacheRaw
+        cacheRaw = owned.persist(binned.zip(old).map { case ((r, m), (row, _)) =>
+          val o = m.clone(); o(0) += params.eta * bShape.value.predictLeaf(r)(0); (row, o)
+        })
+        if ((iter + 1) % params.checkpointInterval == 0) cacheRaw.localCheckpoint()
+        cacheRaw.count()
+        owned.unpersist(old)
+        owned.unpersist(binned)
+        iter += 1
       }
-      // hessian-weighted re-sketch (updater_approx.cc:46-53)
-      val cuts = Binning.findCuts(cacheRaw.map { case ((f, y, w), m) =>
-        val o = new Array[Double](2)
-        obj.gradient(m(0), y, o)
-        (f, math.max(o(1) * w, 1e-16))
-      }, numFeatures, params.maxBin)
-      val binned = cacheRaw.zipWithUniqueId().map { case (((f, y, w), m), id) =>
-        (BInst(cuts.binRow(f), y, w, id), m)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      binned.count()
-
-      val shape = growTree(binned, None, cuts, numFeatures, obj, null, 0,
-        iter, colSampler, Array.empty)
-      treesBuf += shapeToTree(shape, cuts)
-
-      val bShape = sc.broadcast(shape)
-      val old = cacheRaw
-      cacheRaw = binned.zip(old).map { case ((r, m), (row, _)) =>
-        val o = m.clone(); o(0) += params.eta * bShape.value.predictLeaf(r)(0); (row, o)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      if ((iter + 1) % params.checkpointInterval == 0) cacheRaw.localCheckpoint()
-      cacheRaw.count()
-      old.unpersist(blocking = false)
-      binned.unpersist(blocking = false)
-      iter += 1
+      val n = treesBuf.length
+      BoosterModel(treesBuf.toArray, Array.fill(n)(params.eta), Array.fill(n)(0), base,
+        params.objective, 1, numFeatures)
     }
-    cacheRaw.unpersist(blocking = false)
-    val n = treesBuf.length
-    BoosterModel(treesBuf.toArray, Array.fill(n)(params.eta), Array.fill(n)(0), base,
-      params.objective, 1, numFeatures)
   }
 
   /** survival:aft entry: (features, lowerBound, upperBound, weight) with
     * upperBound = NaN or +Inf for right-censored rows (ref interval labels
     * `labels_lower_bound_`/`labels_upper_bound_`, `include/xgboost/
     * data.h:77`). */
-  def fitSurvival(dataIn: RDD[(Array[Double], Double, Double, Double)]): BoosterModel = {
-    val data = ensurePar(dataIn)
+  def fitSurvival(data: RDD[(Array[Double], Double, Double, Double)]): BoosterModel = {
     require(params.treeMethod == "hist", "survival objectives support tree_method=hist only")
-    val cuts = findCuts(data.map(r => (r._1, r._2, r._4)))
-    val numFeatures = cuts.numFeatures
-    val binned = data.zipWithUniqueId().map { case ((f, lo, hi, w), id) =>
-      BInst(cuts.binRow(f), lo, w, id, label2 = hi)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-
-    val model = fitBinned(binned, cuts, numFeatures)
-    binned.unpersist(blocking = false)
-    model
+    TrainingInput.prepare(params, data)(
+      rows => TrainingInput.denseCuts(params, rows.map(r => (r._1, r._4))),
+      (r, cuts, id) => BInst(cuts.binRow(r._1), r._2, r._4, id, label2 = r._3)) { p =>
+      fitBinned(p.binned, p.cuts, p.cuts.numFeatures)
+    }
   }
 
   /** Sparse entry (ref CSR adapter `src/data/adapter.h:216-308`): rows are
     * (sorted feature indices, parallel values, label, weight); absent
     * features are missing (same routing as NaN). Identical cuts, histograms
     * and trees as the equivalent NaN-dense encoding, at O(nnz) row cost. */
-  def fitSparse(dataIn: RDD[(Array[Int], Array[Double], Double, Double)],
+  def fitSparse(data: RDD[(Array[Int], Array[Double], Double, Double)],
       numFeatures: Int): BoosterModel = {
     require(params.treeMethod == "hist", "sparse input supports tree_method=hist only")
-    val data = ensurePar(dataIn)
-    val cuts = Binning.findCutsSparse(data.map(r => (r._1, r._2, r._4)), numFeatures, params.maxBin)
-    val binned = data.zipWithUniqueId().map { case ((idx, vs, y, w), id) =>
-      BInst(cuts.binRowSparse(idx, vs), y, w, id, idx = idx)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val model = fitBinned(binned, cuts, numFeatures)
-    binned.unpersist(blocking = false)
-    model
-  }
-
-  /** rank:* entry: (features, relevance label, weight, qid). Co-partitions
-    * by qid ONCE (hash partition + in-partition sort, the reference Spark
-    * layer's `sortPartitionIfNeeded`, `XGBoostEstimator.scala:142-144`) so
-    * every per-iteration λ-gradient pass is a shuffle-free partition walk
-    * over contiguous groups. */
-  def fitRanking(dataIn: RDD[(Array[Double], Double, Double, Long)]): BoosterModel = {
-    // no ensurePar here: the qid partitionBy below IS the spreading shuffle;
-    // only its partition COUNT needs the parallelism floor. The shuffle runs
-    // FIRST so every subsequent pass (sketch included — a single parquet
-    // file would otherwise sketch on 1-3 tasks) is spread across the cluster.
-    val data = dataIn
-    require(params.treeMethod == "hist", "rank objectives support tree_method=hist only")
-    val nParts = params.minTrainPartitions match {
-      case -1 => math.max(data.getNumPartitions, data.sparkContext.defaultParallelism)
-      case 0 => math.max(data.getNumPartitions, 1)
-      case n => math.max(n, 1)
+    TrainingInput.prepare(params, data)(
+      rows => Binning.findCutsSparse(rows.map(r => (r._1, r._2, r._4)), numFeatures, params.maxBin),
+      (r, cuts, id) => BInst(cuts.binRowSparse(r._1, r._2), r._3, r._4, id, idx = r._1)) { p =>
+      fitBinned(p.binned, p.cuts, numFeatures)
     }
-    // The qid co-partitioning shuffle runs once; BOTH passes below re-read
-    // its shuffle files (no intermediate persist — caching the pre-binned
-    // tuple rows was measured pure heap pressure). The sketch pass needs no
-    // qid order, so the in-partition sort happens once, fused into the
-    // binned-cache build.
-    val parts = data.map { case (f, y, w, q) => (q, (f, y, w)) }
-      .partitionBy(new org.apache.spark.HashPartitioner(nParts))
-    val cuts = findCuts(parts.map { case (_, (f, y, w)) => (f, y, w) })
-    val numFeatures = cuts.numFeatures
-    val binned = parts
-      .mapPartitions(it => it.toArray.sortBy(_._1).iterator, preservesPartitioning = true)
-      .zipWithUniqueId().map { case ((q, (f, y, w)), id) =>
-        BInst(cuts.binRow(f), y, w, id, qid = q)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val model = fitBinned(binned, cuts, numFeatures)
-    binned.unpersist(blocking = false)
-    model
   }
 
-  private def findCuts(data: RDD[(Array[Double], Double, Double)]): HistogramCuts = {
-    val base = Binning.findCuts(data.map(r => (r._1, r._3)), 0, params.maxBin)
-    if (params.catFeatures.isEmpty) base
-    else HistogramCuts(base.cuts.zipWithIndex.map { case (c, f) =>
-      if (!params.catFeatures.contains(f)) c
-      else {
-        // categorical: identity binning over integer codes 0..maxCode
-        val maxCode = math.max(0, c.last.toInt)
-        Array.tabulate(maxCode + 1)(_.toDouble)
-      }
-    })
+  /** rank:* entry: (features, relevance label, weight, qid). The rows are
+    * co-partitioned by qid ONCE, and sorted by qid within each partition
+    * (the reference Spark layer's `sortPartitionIfNeeded`,
+    * `XGBoostEstimator.scala:142-144`), so every per-iteration λ-gradient
+    * pass is a shuffle-free partition walk over contiguous groups. */
+  def fitRanking(data: RDD[(Array[Double], Double, Double, Long)]): BoosterModel = {
+    require(params.treeMethod == "hist", "rank objectives support tree_method=hist only")
+    TrainingInput.prepare(params, data)(
+      rows => TrainingInput.denseCuts(params, rows.map(r => (r._1, r._3))),
+      (r, cuts, id) => BInst(cuts.binRow(r._1), r._2, r._3, id, qid = r._4), qid = _._4) { p =>
+      fitBinned(p.binned, p.cuts, p.cuts.numFeatures)
+    }
   }
 
+  /** Boosts over already-binned rows: the loop every entry point runs once
+    * [[TrainingInput.prepare]] has built the binned cache. `binnedIn` is
+    * read, never persisted or released; the caches this fit persists
+    * (margins, watch sets, sorted rows) are released when it returns or
+    * throws. `initMargins` must pair 1:1 with `binnedIn` (two maps of one
+    * persisted RDD do). */
   def fitBinned(binnedIn: RDD[BInst], cuts: HistogramCuts, numFeatures: Int,
       watchSets: Seq[(String, RDD[BInst])] = Nil,
       initMargins: Option[RDD[Array[Double]]] = None,
-      baseOverride: Option[Array[Double]] = None): BoosterModel = {
+      baseOverride: Option[Array[Double]] = None): BoosterModel =
+    Owned(boost(binnedIn, cuts, numFeatures, watchSets, initMargins, baseOverride, _))
+
+  private def boost(binnedIn: RDD[BInst], cuts: HistogramCuts, numFeatures: Int,
+      watchSets: Seq[(String, RDD[BInst])], initMargins: Option[RDD[Array[Double]]],
+      baseOverride: Option[Array[Double]], owned: Owned): BoosterModel = {
     val sc = binnedIn.sparkContext
     val softmax = if (isMulti) new SoftmaxObjective(params.numClass, params.objective == "multi:softprob") else null
     val obj: Objective =
@@ -562,33 +476,16 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       throw new IllegalArgumentException(
         s"${params.objective} does not compose with dart dropout (risk-set gradients need the full-ensemble margin)")
 
-    // ---- fail-fast label/weight validation (ref CheckLabel per objective +
-    // MetaInfo::Validate, include/xgboost/data.h:127): one cheap pass, with
-    // the violation count in the error like the reference's CHECK messages ----
-    // one fused pass: row count, label violations, weight violations, and
-    // the weighted label stats the base score needs
+    // fail-fast label/weight validation fused with the base-score stats
     val kMulti = params.numClass
+    val multi = isMulti
     val intervalLabels = !isMulti && obj.usesIntervalLabels
-    val (numRows, badLabels, badWeights, sumWy, sumW) =
-      graft.Agg.aggregate(binnedIn)((0L, 0L, 0L, 0.0, 0.0))(
-        { case ((n, bl, bw, wy, w), r) =>
-          val labelOk =
-            if (isMulti) r.label >= 0 && r.label < kMulti && r.label == math.floor(r.label)
-            else if (intervalLabels) obj.validInterval(r.label, r.label2)
-            else obj.validLabel(r.label)
-          val weightOk = r.weight >= 0 && !r.weight.isNaN
-          (n + 1, if (labelOk) bl else bl + 1, if (weightOk) bw else bw + 1,
-            wy + r.weight * r.label, w + r.weight)
-        },
-        { case ((a0, a1, a2, a3, a4), (b0, b1, b2, b3, b4)) =>
-          (a0 + b0, a1 + b1, a2 + b2, a3 + b3, a4 + b4) })
-    if (numRows == 0)
-      throw new IllegalArgumentException("cannot train on an empty dataset (0 rows)")
-    if (badLabels > 0)
-      throw new IllegalArgumentException(
-        s"$badLabels label(s) violate the ${params.objective} label constraints")
-    if (badWeights > 0)
-      throw new IllegalArgumentException(s"$badWeights instance weight(s) are negative or NaN")
+    val stats = TrainingInput.validate(binnedIn, params.objective)(
+      r =>
+        if (multi) r.label >= 0 && r.label < kMulti && r.label == math.floor(r.label)
+        else if (intervalLabels) obj.validInterval(r.label, r.label2)
+        else obj.validLabel(r.label),
+      _.label, _.weight, _ => 0)
 
     // survival:cox needs |label|-sorted data for its risk-set scans; the
     // order is fixed across iterations, so sort ONCE per fit (range
@@ -598,8 +495,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     val needsCoxSort = needsGlobalGrads && !obj.isInstanceOf[LambdaRankObjective]
     val binned =
       if (needsCoxSort) {
-        val sorted = binnedIn.sortBy(r => math.abs(r.label))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val sorted = owned.persist(binnedIn.sortBy(r => math.abs(r.label)))
         sorted.count()
         sorted
       } else binnedIn
@@ -608,8 +504,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     require(initMargins.isEmpty || !needsCoxSort,
       "per-row initial margins do not compose with risk-set objectives (binned rows are re-sorted)")
     val base: Array[Double] = baseOverride.getOrElse {
-      // sumWy/sumW come from the fused validation pass above
-      val labelMean = if (sumW > 0) sumWy / sumW else 0.0
+      val labelMean = if (stats.sumW > 0) stats.sumWy / stats.sumW else 0.0
       if (isMulti) Array.fill(numGroups)(0.0)
       else Array(params.baseScore.map(obj.probToMargin).getOrElse(obj.baseScore(labelMean)))
     }
@@ -619,17 +514,17 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // cross-generation zip to mis-align, and one cached block per
     // partition instead of two. The one construction-time zip (caller-
     // supplied initMargins for continuation / base_margin) pairs two maps
-    // of the same parent `data` — positional by construction. The all-base
+    // of the same persisted binning pass — positional by construction. The all-base
     // initial cache is a constant-per-row map over the already-persisted
     // binned rows: leaving it lazy skips one persist+count job and its
     // storage; the first advance/flush persists its successor.
     var cache: RDD[(BInst, Array[Double])] = initMargins match {
       case Some(m) =>
-        val p = binned.zip(m).persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
+        val p = owned.persist(binned.zip(m)); p.count(); p
       case None => binned.map(r => (r, base.clone()))
     }
     var watchCaches: Array[RDD[(BInst, Array[Double])]] = watchSets.map { case (_, eb) =>
-      val em = eb.map(r => (r, base.clone())).persist(StorageLevel.MEMORY_AND_DISK)
+      val em = owned.persist(eb.map(r => (r, base.clone())))
       em.count(); em
     }.toArray
 
@@ -711,7 +606,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // lineage grows one map per flush; truncate on the same cadence (in
       // iterations) as the non-deferred path's checkpointInterval
       cache = RoundPasses.advance(cache, sc.broadcast(pending.toArray),
-        flushCount % math.max(1, params.checkpointInterval / params.marginFlushInterval) == 0)
+        flushCount % math.max(1, params.checkpointInterval / params.marginFlushInterval) == 0, owned)
       pending.clear()
     }
 
@@ -757,7 +652,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
                 rankWeightNorm)
             case _ => CoxGradients.compute(cache, pendingArr)
           }
-          val g = raw.persist(StorageLevel.MEMORY_AND_DISK)
+          val g = owned.persist(raw)
           RoundPasses.materialize(g)
           // position-bias update (UpdatePositionBias, lambdarank_obj.cc:103):
           // accumulate this iteration's per-position numerators into the
@@ -841,10 +736,10 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         newShapes.indices.map(p => (newShapes(p), newW, newGroups(p))).toArray ++
           weightDeltas.map { case (i, d) => (shapes(i), d, treeGroupBuf(i)) })
       val checkpoint = (iter + 1) % params.checkpointInterval == 0
-      cache = RoundPasses.advance(cache, bTrees, checkpoint)
-      watchCaches = watchCaches.map(RoundPasses.advance(_, bTrees, checkpoint))
+      cache = RoundPasses.advance(cache, bTrees, checkpoint, owned)
+      watchCaches = watchCaches.map(RoundPasses.advance(_, bTrees, checkpoint, owned))
       } // end margin-update branch
-      globalGrads.foreach(_.unpersist(blocking = false))
+      globalGrads.foreach(owned.unpersist)
 
       // ---- watch metrics + early stopping (learner.cc:1164 EvalOneIter,
       // callback.py:311) ---- every watch set is evaluated each round; the
@@ -917,9 +812,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     }
     callbacks.foreach(_.afterTraining(lastBestIteration))
     unbiasedLR.foreach(_ => lastPositionBias = Some((tPlus.clone(), tMinus.clone())))
-    if (needsCoxSort) binned.unpersist(blocking = false)
-    watchCaches.foreach(_.unpersist(blocking = false))
-    cache.unpersist(blocking = false) // final prediction cache — don't leak blocks
 
     // early stop ⇒ truncate to the best iteration
     // (numGroups × num_parallel_tree trees per round = one layer)

@@ -1,7 +1,6 @@
 package graft.tree
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 
 import graft.data.{Binning, HistogramCuts}
 import graft.model.{BoosterModel, Node, Tree}
@@ -56,28 +55,26 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
     s"objective ${mobj.name} has ${mobj.numTargets} lanes but numTargets is $numTargets")
 
   /** data: (features, labels — K targets or a class index, weight). */
-  def fit(dataIn: RDD[(Array[Double], Array[Double], Double)]): BoosterModel = {
-    // same under-partitioned-input defense as GBTTrainer.ensurePar
-    val parTarget = params.minTrainPartitions match {
-      case -1 => dataIn.sparkContext.defaultParallelism
-      case n => n
+  def fit(data: RDD[(Array[Double], Array[Double], Double)]): BoosterModel =
+    // the plain quantile sketch: categorical splits are single-target features
+    TrainingInput.prepare(params, data)(
+      rows => Binning.findCuts(rows.map(r => (r._1, r._3)), 0, params.maxBin),
+      (r, cuts, _) => (cuts.binRow(r._1), r._2, r._3)) { p =>
+      Owned(owned => boost(p.binned, p.cuts, owned))
     }
-    val data =
-      if (parTarget > dataIn.getNumPartitions) dataIn.repartition(parTarget) else dataIn
-    val sc = data.sparkContext
+
+  private def boost(binned: RDD[(Array[Int], Array[Double], Double)], cuts: HistogramCuts,
+      owned: Owned): BoosterModel = {
+    val sc = binned.sparkContext
     val K = numTargets
-    // column count unified inside the sketch pass (data.h:191 semantics)
-    val cuts = Binning.findCuts(data.map(r => (r._1, r._3)), 0, params.maxBin)
     val nf = cuts.numFeatures
-    val bCuts = sc.broadcast(cuts)
 
     // base score per target: per-lane weighted label means through the
     // objective's link (ref FitStump per target; scalar-label objectives
-    // share ys(0) across lanes). Runs on the raw rows — only (ys, w) are
-    // read, so it needs neither the binned layout nor the cache below.
+    // share ys(0) across lanes). Only (ys, w) are read.
     val base: Array[Double] = {
       val scalarLab = mobj.scalarLabel
-      val (sums, sw) = graft.Agg.aggregate(data)((new Array[Double](K), 0.0))(
+      val (sums, sw) = graft.Agg.aggregate(binned)((new Array[Double](K), 0.0))(
         { case ((s, c), (_, ys, w)) =>
           var k = 0
           while (k < K) { s(k) += w * ys(if (scalarLab) 0 else k); k += 1 }
@@ -97,11 +94,11 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
     // separately-persisted margin RDD re-`zip`ped every iteration. No
     // cross-generation zip to mis-align, one cached block per partition
     // instead of two, and gradients are computed inline in the histogram
-    // passes (frontier rows only) instead of a third persisted RDD.
+    // passes (frontier rows only) instead of a third persisted RDD. The
+    // all-base first generation is a lazy map over the persisted binned
+    // rows; the first flush persists its successor.
     var cache: RDD[((Array[Int], Array[Double], Double), Array[Double])] =
-      data.map { case (x, ys, w) => ((bCuts.value.binRow(x), ys, w), base.clone()) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    cache.count()
+      binned.map(r => (r, base.clone()))
 
     // Deferred margin flush — the same rework as GBTTrainer's packed
     // cache (§ marginFlushInterval): committed-but-unflushed trees ride
@@ -133,7 +130,7 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
       if (pending.length >= flushInterval && iter + 1 < params.numRounds) {
         val bP = sc.broadcast(pending.toArray)
         val eta = params.eta
-        val next = cache.map { case (r, m) =>
+        val next = owned.persist(cache.map { case (r, m) =>
           val out = m.clone()
           val ps = bP.value
           var p = 0
@@ -144,20 +141,19 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
             p += 1
           }
           (r, out)
-        }.persist(StorageLevel.MEMORY_AND_DISK)
+        })
         flushCount += 1
         // checkpoint cadence ≈ every checkpointInterval ITERATIONS, as
         // the per-round path had
         if (flushCount % math.max(1, params.checkpointInterval / flushInterval) == 0)
           next.localCheckpoint()
         next.count()
-        cache.unpersist(blocking = false)
+        owned.unpersist(cache)
         cache = next
         pending.clear()
       }
       iter += 1
     }
-    cache.unpersist(blocking = false)
     BoosterModel(trees.toArray, Array.fill(trees.length)(params.eta),
       new Array[Int](trees.length), base, params.objective, K, nf)
   }

@@ -2,7 +2,6 @@ package graft.tree
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 
 import graft.Agg
 import graft.data.HistogramCuts
@@ -246,11 +245,11 @@ private[tree] object RoundPasses {
   }
 
   /** The margin cache with `trees` = (shape, weight, group) added in order
-    * (`m(group) += weight · leaf`), persisted and computed; `c` is
-    * released. `checkpoint` truncates the lineage. */
+    * (`m(group) += weight · leaf`), persisted by `owned` and computed; `c`
+    * is released. `checkpoint` truncates the lineage. */
   def advance(c: Margins, trees: Broadcast[Array[(TreeShape, Double, Int)]],
-      checkpoint: Boolean): Margins = {
-    val next = c.map { case (r, m) =>
+      checkpoint: Boolean, owned: Owned): Margins = {
+    val next = owned.persist(c.map { case (r, m) =>
       val out = m.clone()
       val p = trees.value
       var i = 0
@@ -260,10 +259,10 @@ private[tree] object RoundPasses {
         i += 1
       }
       (r, out)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    })
     if (checkpoint) next.localCheckpoint()
     materialize(next)
-    c.unpersist(blocking = false)
+    owned.unpersist(c)
     next
   }
 
