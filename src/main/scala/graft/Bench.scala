@@ -207,8 +207,10 @@ object Bench {
     // prescribes: persist the full JSON to a file and print a SECOND,
     // compact summary line (total/n/errors fits any tail). The full line —
     // the original contract — is unchanged and still printed first.
+    // The isolated child reports through its stdout only: writing here
+    // would overwrite the parent's file while the parent is still running.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.writeString(
+    if (!isoChild) try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), fullJson + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[graft-bench] bench_out write failed: ${e.getMessage}")

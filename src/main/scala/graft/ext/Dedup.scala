@@ -247,48 +247,79 @@ object Dedup {
   def exactKeys(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs.select(md5(col(textCol)).as("_key"))
 
-  /** Stamp a key projection (any tier: [[exactKeys]] / [[nearDupKeys]])
-    * with the snapshot GENERATION it was accepted in — the retention
-    * axis of the crawl-gate loop. Each daily advance appends keys
-    * stamped with that day's generation; [[retainGenerations]] then
-    * derives the gate-ready projection for any re-admission policy.
-    * Map-only; the (key, gen) table still buckets by `_key`, so the
-    * daily join stays exchange-free. */
+  /** Stamp a snapshot projection with the GENERATION it was accepted in
+    * — the retention axis of the crawl-gate loop, one lifecycle for every
+    * snapshot form: key tiers ([[exactKeys]] / [[nearDupKeys]] /
+    * [[canonicalKeys]], keyed on `_key`), the banded tier's
+    * [[minhashSignatures]] and every semantic form
+    * ([[graft.ext.Similarity.semanticKeys]], raw or PQ codes — both
+    * keyed on `id`). Each daily advance appends rows stamped with that
+    * day's generation; [[retainGenerations]] then derives the gate-ready
+    * projection for any re-admission policy. Without it aged-out
+    * content re-admits through one tier but stays blocked by another
+    * tier's eternal table (which also grows forever). Map-only: a
+    * stamped table bucketed on its key (or on `cell`) keeps the daily
+    * join on the layout. */
+  def stampGeneration(snapshot: DataFrame, key: String, gen: Long): DataFrame = {
+    require(snapshot.columns.contains(key) && !snapshot.columns.contains("_gen"),
+      s"stampGeneration takes an unstamped snapshot projection keyed on " +
+        s"`$key`; got " + snapshot.columns.mkString(", "))
+    snapshot.withColumn("_gen", lit(gen))
+  }
+
+  /** Retention/TTL over a [[stampGeneration]]ed snapshot: per `key` keep
+    * the LATEST stamped row, drop keys last accepted before `minGen`, and
+    * return the unstamped gate projection. A crawl pipeline that wants
+    * "content unseen for N days becomes re-admittable" (source drift,
+    * deliberate re-crawls) gates each day against
+    * `retainGenerations(snapshot, key, today − N)` on every tier — one
+    * knob, every tier; the aged-out rows simply stop blocking, and no
+    * rewrite of the snapshot is needed until the next
+    * [[graft.sources.BucketedSnapshot.compact]] physically drops them.
+    * Content re-entering later is re-accepted and re-stamped, and the
+    * MAX stamp per key is what retention sees: `max(_gen)` when the
+    * snapshot carries only its key, else the lexicographic
+    * `max(struct(_gen, payload…))`, so a re-crawled id resolves
+    * deterministically to its newest payload (arrays are orderable, so
+    * the struct max is exact and engine-reproducible). One max-per-key
+    * groupBy: against a snapshot bucketed on the key it plans
+    * exchange-free (BucketedSnapshotSpec pins this). */
+  def retainGenerations(stamped: DataFrame, key: String, minGen: Long): DataFrame = {
+    val cols = stamped.columns.toSeq
+    require(cols.contains(key) && cols.lastOption.contains("_gen"),
+      s"retainGenerations takes a stampGeneration projection keyed on " +
+        s"`$key` (…, _gen); got " + cols.mkString(", "))
+    val payload = cols.filterNot(c => c == key || c == "_gen")
+    if (payload.isEmpty)
+      stamped.groupBy(key).agg(max(col("_gen")).as("_gen"))
+        .where(col("_gen") >= minGen)
+        .select(key)
+    else
+      stamped.groupBy(key)
+        .agg(max(struct(col("_gen") +: payload.map(col): _*)).as("_m"))
+        .where(col("_m._gen") >= minGen)
+        .select(col(key) +: payload.map(c => col(s"_m.$c").as(c)): _*)
+  }
+
+  /** [[stampGeneration]] of a single-`_key` key projection. */
   def stampGeneration(keys: DataFrame, gen: Long): DataFrame = {
     require(keys.columns.toSeq == Seq("_key"),
       "stampGeneration takes a single-`_key` projection; got " +
         keys.columns.mkString(", "))
-    keys.withColumn("_gen", lit(gen))
+    stampGeneration(keys, "_key", gen)
   }
 
-  /** Retention/TTL over a generation-stamped snapshot: keep only keys
-    * last seen at generation ≥ `minGen` and return the single-`_key`
-    * gate projection. A crawl pipeline that wants "content unseen for N
-    * days becomes re-admittable" (source drift, deliberate re-crawls)
-    * gates each day against `retainGenerations(snapshot, today − N)` —
-    * the aged-out keys simply stop blocking; no rewrite of the snapshot
-    * is needed until the next [[graft.sources.BucketedSnapshot.compact]]
-    * physically drops them. If the same content re-enters later it is
-    * re-accepted and re-stamped with the new generation (the MAX stamp
-    * per key is what retention should see — keep appends stamped with
-    * the accepting day and filter on the max, which the `groupBy` here
-    * guarantees even when a key carries several stamps). */
+  /** [[retainGenerations]] of a stamped key projection: the
+    * single-`_key` gate projection. */
   def retainGenerations(keysGen: DataFrame, minGen: Long): DataFrame = {
     require(keysGen.columns.toSeq == Seq("_key", "_gen"),
       "retainGenerations takes a stampGeneration projection (_key, _gen); " +
         "got " + keysGen.columns.mkString(", "))
-    keysGen.groupBy("_key").agg(max(col("_gen")).as("_gen"))
-      .where(col("_gen") >= minGen)
-      .select("_key")
+    retainGenerations(keysGen, "_key", minGen)
   }
 
-  /** [[stampGeneration]]'s sibling for the BANDED tier's snapshot
-    * artifact: stamp a [[minhashSignatures]] table (id, mh0..mh{k−1})
-    * with the generation it was accepted in, so the signature snapshot
-    * obeys the SAME re-admission policy as the key tiers — without this,
-    * aged-out content re-admits through the key tiers but stays blocked
-    * by an eternal signature table (and that table grows forever).
-    * Map-only; a (id, mh*, _gen) table bucketed on `id` keeps
+  /** [[stampGeneration]] of a [[minhashSignatures]] table
+    * (id, mh0..mh{k−1}); a (id, mh*, _gen) table bucketed on `id` keeps
     * [[retainSignatureGenerations]]'s groupBy exchange-free. */
   def stampSignatureGeneration(sigs: DataFrame, gen: Long,
       numHashes: Int): DataFrame = {
@@ -297,25 +328,17 @@ object Dedup {
       s"stampSignatureGeneration takes a minhashSignatures($numHashes) " +
         "projection (id, mh0..mh" + (numHashes - 1) + "); got " +
         sigs.columns.mkString(", "))
-    sigs.withColumn("_gen", lit(gen))
+    stampGeneration(sigs, "id", gen)
   }
 
-  /** Retention/TTL over a generation-stamped signature snapshot — the
-    * banded tier's [[retainGenerations]]: per document id keep the
-    * LATEST stamped signature (lexicographic max over (_gen, mh0..), so
-    * a re-crawled id deterministically resolves to its newest
-    * signature), drop ids last accepted before `minGen`, and return the
+  /** [[retainGenerations]] of a stamped signature snapshot: the
     * (id, mh0..mh{k−1}) projection [[incrementalBandedNearDedup]] /
-    * [[incrementalCrawlGate]] take as `priorSigs`. Gating each day
-    * against `retainSignatureGenerations(snapshot, today − N, k)` makes
-    * content unseen for N days re-admittable through the banded tier on
-    * the SAME policy the key tiers apply — one knob, three tiers.
-    * One max-per-id groupBy: against a snapshot bucketed on `id` it
-    * plans exchange-free (BucketedSnapshotSpec pins this). The banded
-    * gate reads its `priorSigs` twice (bucket side + verification
-    * side), so a caller composing this into [[incrementalCrawlGate]]
-    * may `localCheckpoint()` the retained projection to run the
-    * retention aggregation once — semantics unchanged either way. */
+    * [[incrementalCrawlGate]] take as `priorSigs`, each id at its newest
+    * signature. The banded gate reads its `priorSigs` twice (bucket side
+    * + verification side), so a caller composing this into
+    * [[incrementalCrawlGate]] may `localCheckpoint()` the retained
+    * projection to run the retention aggregation once — semantics
+    * unchanged either way. */
   def retainSignatureGenerations(sigsGen: DataFrame, minGen: Long,
       numHashes: Int): DataFrame = {
     val cols = ("id" +: (0 until numHashes).map(k => s"mh$k")) :+ "_gen"
@@ -323,12 +346,7 @@ object Dedup {
       "retainSignatureGenerations takes a stampSignatureGeneration " +
         s"projection (id, mh0..mh${numHashes - 1}, _gen); got " +
         sigsGen.columns.mkString(", "))
-    val latest = sigsGen.groupBy("id")
-      .agg(max(struct(col("_gen") +:
-        (0 until numHashes).map(k => col(s"mh$k")): _*)).as("_m"))
-    latest.where(col("_m._gen") >= minGen)
-      .select(col("id") +:
-        (0 until numHashes).map(k => col(s"_m.mh$k").as(s"mh$k")): _*)
+    retainGenerations(sigsGen, "id", minGen)
   }
 
   /** [[incrementalDedup]] against a PERSISTED [[exactKeys]] projection —

@@ -2,8 +2,8 @@ package graft.ext
 
 import java.util.concurrent.{Executors, ThreadFactory}
 
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
 
 import org.apache.spark.sql.DataFrame
 
@@ -26,16 +26,25 @@ import org.apache.spark.sql.DataFrame
   * check). Failures propagate: a failed job's exception is rethrown to
   * the caller by `await`.
   *
-  * Pool sizing: the guide's "2-3 jobs in flight is plenty"; 4 covers the
-  * widest independent group in the fixtures (prior + three day batches).
-  * FIFO scheduling (Spark's default) keeps the earliest job prioritized —
-  * exactly the back-fill behavior wanted. Daemon threads: the pool must
-  * never block JVM exit (Bench/Verify are short-lived mains).
+  * Pool: a cached pool of daemon threads, one per task in flight, so no
+  * fixture group (`p_incr_crawl` submits 5) queues behind its own
+  * workers and an `await` inside a thunk always finds its task running.
+  * FIFO scheduling (Spark's default) keeps
+  * the earliest job prioritized — exactly the back-fill behavior wanted.
+  * Daemon threads: the pool must never block JVM exit (Bench/Verify are
+  * short-lived mains).
+  *
+  * Bounded waits: `await` gives up after [[Timeout]] with an error that
+  * names what it was waiting for, so a stuck job fails its fixture
+  * loudly instead of hanging the run.
   */
 private[graft] object Par {
+  /** Far above any fixture's projection build (seconds at bench scale). */
+  val Timeout: FiniteDuration = 10.minutes
+
   private lazy val pool: ExecutionContext =
     ExecutionContext.fromExecutorService(
-      Executors.newFixedThreadPool(4, new ThreadFactory {
+      Executors.newCachedThreadPool(new ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger(0)
         def newThread(r: Runnable): Thread = {
           val t = new Thread(r, s"graft-par-${n.getAndIncrement()}")
@@ -46,16 +55,24 @@ private[graft] object Par {
 
   /** `localCheckpoint()` every frame with the jobs overlapped; returns
     * the checkpointed frames in input order. The frames must be
-    * INDEPENDENT (none reads another's result). */
-  def materializeAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
-    await(dfs.map(df => async(df.localCheckpoint())))
+    * INDEPENDENT (none reads another's result); `what` names them in a
+    * timeout error. */
+  def materializeAll(what: String, dfs: Seq[DataFrame]): Seq[DataFrame] =
+    dfs.map(df => async(df.localCheckpoint())).zipWithIndex
+      .map { case (f, i) => await(f, s"$what, frame $i") }
 
   /** Kick off an independent action now; `await` it when needed — lets a
     * fixture start a projection build before an unrelated gate's own
     * jobs run, so the two overlap. */
   def async[T](thunk: => T): Future[T] = Future(thunk)(pool)
 
-  def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
-
-  def await[T](fs: Seq[Future[T]]): Seq[T] = fs.map(await(_))
+  /** The result of `f`; a failed task rethrows its own exception. `what`
+    * names the awaited fixture or layer in the timeout error. */
+  def await[T](f: Future[T], what: String): T =
+    try Await.result(f, Timeout)
+    catch {
+      case _: TimeoutException =>
+        throw new TimeoutException(
+          s"graft.ext.Par: $what did not finish within $Timeout")
+    }
 }

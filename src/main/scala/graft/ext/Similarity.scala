@@ -253,8 +253,8 @@ object Similarity {
     * the flat path: coarse on the sample, fine on the sample's coarse
     * RESIDUALS (the faiss IVF-residual shape), so the fine level
     * spends its centroids on within-cell structure shared across
-    * cells. Returns (coarse, fine) for [[ivf2Cells]] /
-    * [[semanticKeys2]] / [[incrementalSemDedup2]]. */
+    * cells. Returns (coarse, fine) for [[ivf2Cells]] and
+    * [[CellQuantizer.TwoLevel]]. */
   def trainQuantizer2(corpus: DataFrame, k1: Int, k2: Int,
       sampleRows: Int = 2048, iters: Int = 8):
       (Array[Array[Double]], Array[Array[Double]]) = {
@@ -285,248 +285,109 @@ object Similarity {
     (coarse, lloydCluster(resid, k2, iters))
   }
 
-  /** [[trainQuantizer2]] off a persisted [[semanticKeys]] /
-    * [[semanticKeys2]] snapshot — the grown-quantizer training step of
-    * the re-key lifecycle when the corpus has outgrown flat driver
-    * Lloyd (the [[trainQuantizerFromSnapshot]] sibling; no corpus
-    * access, embeddings come from the artifact). */
-  def trainQuantizer2FromSnapshot(cells: DataFrame, k1: Int, k2: Int,
-      sampleRows: Int = 2048, iters: Int = 8):
-      (Array[Array[Double]], Array[Array[Double]]) = {
-    require(cells.columns.startsWith(Seq("id", "cell", "emb")),
-      "trainQuantizer2FromSnapshot takes a semanticKeys projection " +
-        "(id, cell, emb[, _gen]); got " + cells.columns.mkString(", "))
-    trainQuantizer2(
-      cells.select(col("id").as("vec_id"), col("emb").as("embedding")),
-      k1, k2, sampleRows, iters)
-  }
-
   /** IVF-bucketed ANN: corpus rows live in their single nearest cell;
     * queries probe their `nprobe` nearest cells. One equi-join shuffle on
     * the cell id; per-cell work is |cell|·|queries-in-cell| — the classic
-    * inverted-file scale path (vs [[lshTopK]]'s hyperplane buckets). */
+    * inverted-file scale path (vs [[lshTopK]]'s hyperplane buckets).
+    * [[semanticKeys]] under a [[CellQuantizer.Flat]] followed by the
+    * snapshot read. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       centroids: Array[Array[Double]], nprobe: Int, k: Int,
       roundDigits: Int = 5): DataFrame = {
-    val cb = corpus.select(col("vec_id"), col("embedding"),
-      ivfCells(col("embedding"), centroids, 1)(0).as("cell"),
-      l2Norm(col("embedding")).as("nc"))
-    val qb = queries.select(col("qid"), col("qe"),
-      explode(ivfCells(col("qe"), centroids, nprobe)).as("cell"),
-      l2Norm(col("qe")).as("nq"))
-    val scored = qb.join(cb, Seq("cell"))
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qe"), col("embedding")) / (col("nq") * col("nc")), roundDigits).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    val quantizer = CellQuantizer.Flat(centroids)
+    ivfTopKFromSnapshot(semanticKeys(corpus, quantizer), queries,
+      quantizer, nprobe, k, roundDigits = roundDigits)
   }
 
-  /** [[ivfTopK]] over a PERSISTED [[semanticKeys]] snapshot — the dedup
-    * tier's embedding artifact doubled as a retrieval index: the
-    * snapshot's (id, cell, emb) rows ARE an IVF inverted file (cell =
-    * the coarse-quantizer posting list), so the corpus a daily gate
-    * maintains is queryable for nearest-neighbor retrieval with NO
-    * extra index build or corpus re-read. Same plan shape as
-    * [[ivfTopK]]: queries fan ×nprobe map-side, ONE equi-join shuffle
-    * on the cell id (riding the snapshot's cell bucketing when
-    * persisted that way), rounded-cosine ranking with id tiebreak.
-    * With `nprobe = centroids.length` every posting list is probed and
-    * the result EQUALS brute-force top-k over the snapshot (the
-    * `p_ann_snapshot` oracle states exactly that equivalence); smaller
-    * nprobe trades recall for probe cost, tuned like any IVF index. */
+  /** Top-k over a PERSISTED [[semanticKeys]] snapshot — the dedup tier's
+    * artifact doubled as a retrieval index: its (id, cell, payload) rows
+    * ARE an IVF inverted file (cell = the posting list), so the corpus a
+    * daily gate maintains is queryable for nearest-neighbor retrieval
+    * with NO extra index build or corpus re-read. Queries fan out
+    * ×(nprobe × fineProbe) probe cells map-side, then ONE equi-join
+    * shuffle on the cell id (riding the snapshot's cell bucketing when
+    * persisted that way), ranked with id tiebreak by the quantizer's
+    * score: rounded cosine descending over stored embeddings (output
+    * `cos`), rounded ADC distance ascending over PQ codes (output `adc`;
+    * ADC ≡ |q − decode(codes)|², no decode materialized — the faiss
+    * IndexIVFPQ read). For the two-level form `fineProbe` widens each
+    * probed coarse branch, because a corpus vector sharing the query's
+    * coarse branch can sit in a neighboring fine cell. Probing every
+    * cell (nprobe = coarseCells, fineProbe = fineCells) makes the read
+    * EQUAL the brute-force scan of the snapshot — the `p_ann_snapshot`,
+    * `p_ann_snapshot2` and `p_ann_snapshot_pq` oracles state exactly
+    * that; smaller probes trade recall for probe cost, tuned from data
+    * with [[annRecallProbe]]. Returns (qid, vec_id, cos|adc, rk). */
   def ivfTopKFromSnapshot(cells: DataFrame, queries: DataFrame,
-      centroids: Array[Array[Double]], nprobe: Int, k: Int,
-      roundDigits: Int = 5): DataFrame = {
-    require(cells.columns.toSeq == Seq("id", "cell", "emb"),
-      "cells must be a semanticKeys projection (id, cell, emb); got " +
-        cells.columns.mkString(", "))
-    val cb = cells.select(col("id").as("vec_id"), col("cell"),
-      col("emb").as("embedding"), l2Norm(col("emb")).as("nc"))
-    val qb = queries.select(col("qid"), col("qe"),
-      explode(ivfCells(col("qe"), centroids, nprobe)).as("cell"),
-      l2Norm(col("qe")).as("nq"))
-    val scored = qb.join(cb, Seq("cell"))
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qe"), col("embedding")) / (col("nq") * col("nc")), roundDigits).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+      quantizer: CellQuantizer, nprobe: Int, k: Int, fineProbe: Int = 1,
+      roundDigits: Int = 5): DataFrame =
+    snapshotTopK(cells, queries, quantizer, Some((nprobe, fineProbe)), k,
+      roundDigits)
+
+  /** The snapshot read's one body. `probe` = Some((nprobe, fineProbe))
+    * pairs each query with the stored rows of its probe cells; None
+    * pairs it with EVERY stored row (queries broadcast, the [[bruteTopK]]
+    * shape) — the exact ground truth [[annRecallProbe]] measures
+    * against. */
+  private def snapshotTopK(cells: DataFrame, queries: DataFrame,
+      quantizer: CellQuantizer, probe: Option[(Int, Int)], k: Int,
+      roundDigits: Int): DataFrame = {
+    quantizer.requireSnapshot(cells, "ivfTopKFromSnapshot")
+    val stored = quantizer.stage(cells.select(col("id").as("vec_id"),
+      col("cell"), col(quantizer.payload)), quantizer.payload)
+    val query = quantizer.stage(queries.select(col("qid"), col("qe")), "qe")
+    val pairs = probe match {
+      case Some((np, fp)) =>
+        query.select(col("*"),
+            explode(quantizer.probeCells(col("qe"), np, fp)).as("cell"))
+          .join(stored, Seq("cell"))
+          .where(col("qid") =!= col("vec_id"))
+      case None =>
+        stored.join(broadcast(query), col("qid") =!= col("vec_id"))
+    }
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(quantizer.rankOrder, col("vec_id"))
+    pairs.select(col("qid"), col("vec_id"), quantizer.score(roundDigits))
+      .withColumn("rk", row_number().over(w)).where(col("rk") <= k)
   }
 
   /** Recall probe for [[ivfTopKFromSnapshot]] — the tuning read a
-    * production user picks `nprobe` FROM DATA with, instead of
-    * guessing: for each candidate probe width, recall@k of the
-    * IVF-bucketed read against brute-force ground truth over the SAME
-    * snapshot, on a caller-bounded query sample. Output one
-    * (nprobe, n_queries, n_truth, n_hit, recall) row per candidate —
-    * bounded by `nprobes.size`. Cost: one brute pass (the ground
-    * truth — sample the queries so it stays a scalar-side crossJoin,
-    * the bruteTopK contract) + one bucketed read per candidate; at
-    * corpus scale run it on a sampled query set exactly like any
-    * recall evaluation. Ground truth ties and ranking follow the
-    * shared rounded-cosine/id-tiebreak convention, so recall(max
-    * nprobe) ≡ 1 by the [[ivfTopKFromSnapshot]] equivalence. */
+    * production user picks the probe width FROM DATA with, instead of
+    * guessing: for each candidate (nprobe, fineProbe), recall@k of the
+    * bucketed read against the brute-force scan of the SAME snapshot
+    * under the same score, on a caller-bounded query sample. The ground
+    * truth is exact for every form — brute cosine over the stored
+    * embeddings, or the full ADC scan of PQ codes, which isolates the
+    * BUCKETING loss (the knob this read tunes) from the code budget's
+    * quantization loss (fixed at encode time; PqSnapshotSpec's parity
+    * read measures it against raw embeddings). Output one
+    * (nprobe, fine_probe, n_queries, n_truth, n_hit, recall) row per
+    * candidate — bounded by `probes.size`. Cost: one brute pass (sample
+    * the queries so it stays a broadcast-side crossJoin, the
+    * [[bruteTopK]] contract) plus one bucketed read per candidate; at
+    * corpus scale run it on a sampled query set like any recall
+    * evaluation. Ties and ranking follow the read's score/id-tiebreak
+    * convention, so recall at the full probe ≡ 1 by the
+    * [[ivfTopKFromSnapshot]] equivalence. */
   def annRecallProbe(cells: DataFrame, queries: DataFrame,
-      centroids: Array[Array[Double]], k: Int, nprobes: Seq[Int],
+      quantizer: CellQuantizer, k: Int, probes: Seq[(Int, Int)],
       roundDigits: Int = 5): DataFrame = {
-    require(nprobes.nonEmpty && nprobes.forall(p =>
-      p >= 1 && p <= centroids.length),
-      s"nprobes must be within [1, ${centroids.length}]; got $nprobes")
-    val truth = bruteTopK(
-        cells.select(col("id").as("vec_id"), col("emb").as("embedding")),
-        queries, k, roundDigits)
+    require(probes.nonEmpty, "probes must name at least one (nprobe, fineProbe)")
+    // every read is built (and its probe range-checked) before the
+    // ground-truth job runs
+    val reads = probes.map { case (np, fp) =>
+      (np, fp, ivfTopKFromSnapshot(cells, queries, quantizer, np, k, fp,
+        roundDigits).select(col("qid"), col("vec_id")))
+    }
+    val truth = snapshotTopK(cells, queries, quantizer, None, k, roundDigits)
       .select(col("qid"), col("vec_id")).localCheckpoint()
-    nprobes.map { np =>
-      val got = ivfTopKFromSnapshot(cells, queries, centroids, np, k,
-        roundDigits).select(col("qid"), col("vec_id"))
-      truth.join(got, Seq("qid", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_truth"),
-          countDistinct(col("qid")).as("n_queries")))
-        .select(lit(np).as("nprobe"), col("n_queries"), col("n_truth"),
-          col("n_hit"),
-          round(col("n_hit").cast("double") /
-            greatest(col("n_truth"), lit(1L)).cast("double"), roundDigits)
-            .as("recall"))
-    }.reduce(_ unionByName _)
-  }
-
-  /** [[ivfTopKFromSnapshot]] for the COMPOSED (two-level) snapshot —
-    * the read that restores the "gate artifact IS a retrieval index"
-    * property to the [[semanticKeys2]] form (exactly the artifact a
-    * 10¹⁰-doc corpus persists, where flat k ≈ √n outgrew driver
-    * Lloyd): queries fan ×(nprobe × fineProbe) composed cells
-    * map-side ([[ivf2Cells]] — per probed coarse branch, the
-    * fineProbe nearest residual fine cells, because a corpus vector
-    * in the query's coarse branch can sit in a NEIGHBORING fine
-    * cell), then the same ONE cell equi-join, rounded-cosine ranking,
-    * id tiebreak as the flat read. With nprobe = k1 and fineProbe =
-    * k2 every posting list is probed and the result EQUALS
-    * brute-force top-k over the snapshot (the `p_ann_snapshot2`
-    * oracle states exactly that); production points sit at small
-    * (nprobe, fineProbe), tuned from data via [[annRecallProbe2]]. */
-  def ivf2TopKFromSnapshot(cells: DataFrame, queries: DataFrame,
-      coarse: Array[Array[Double]], fine: Array[Array[Double]],
-      nprobe: Int, k: Int, fineProbe: Int = 1,
-      roundDigits: Int = 5): DataFrame = {
-    require(cells.columns.toSeq == Seq("id", "cell", "emb"),
-      "cells must be a semanticKeys2 projection (id, cell, emb); got " +
-        cells.columns.mkString(", "))
-    require(nprobe >= 1 && nprobe <= coarse.length &&
-        fineProbe >= 1 && fineProbe <= fine.length,
-      s"nprobe must be in [1, ${coarse.length}] and fineProbe in " +
-        s"[1, ${fine.length}]; got ($nprobe, $fineProbe)")
-    val cb = cells.select(col("id").as("vec_id"), col("cell"),
-      col("emb").as("embedding"), l2Norm(col("emb")).as("nc"))
-    val qb = queries.select(col("qid"), col("qe"),
-      explode(ivf2Cells(col("qe"), coarse, fine, nprobe, fineProbe))
-        .as("cell"),
-      l2Norm(col("qe")).as("nq"))
-    val scored = qb.join(cb, Seq("cell"))
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qe"), col("embedding")) / (col("nq") * col("nc")),
-          roundDigits).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-  }
-
-  /** [[ivfTopKFromSnapshot]] for the PQ-COMPRESSED snapshot — the
-    * read over the [[semanticKeysPq]] (id, cell, codes) artifact,
-    * which stores NO raw embeddings: queries probe their `nprobe`
-    * nearest flat cells (the PQ snapshot's cell is the flat coarse
-    * quantizer's) and score candidates with the ADC kernel against
-    * the stored codes — the faiss IndexIVFPQ read over the dedup
-    * tier's own artifact, no decode materialized. Ranking by ROUNDED
-    * ascending ADC distance with id tiebreak (ADC ≡ |q − decode(codes)|²,
-    * so the `p_ann_snapshot_pq` oracle replays encode→decode→squared
-    * distance). With nprobe = centroids.length the result EQUALS the
-    * brute ADC scan of the snapshot ([[pqTopK]] over decoded codes) —
-    * recall against EXACT cosine is bounded by the code budget, the
-    * documented PQ tradeoff ([[annRecallProbePq]] measures the
-    * bucketing loss alone, which is the knob this read tunes). */
-  def pqTopKFromSnapshot(cells: DataFrame, queries: DataFrame,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], nprobe: Int, k: Int,
-      roundDigits: Int = 5): DataFrame = {
-    require(cells.columns.toSeq == Seq("id", "cell", "codes"),
-      "cells must be a semanticKeysPq projection (id, cell, codes); " +
-        "got " + cells.columns.mkString(", "))
-    require(nprobe >= 1 && nprobe <= centroids.length,
-      s"nprobe must be in [1, ${centroids.length}], got $nprobe")
-    val cb = cells.select(col("id").as("vec_id"), col("cell"), col("codes"))
-    val qb = queries.select(col("qid"), col("qe"),
-      explode(ivfCells(col("qe"), centroids, nprobe)).as("cell"))
-    val scored = qb.join(cb, Seq("cell"))
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(pqAdc(col("qe"), col("codes"), codebooks), roundDigits)
-          .as("adc"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-  }
-
-  /** [[annRecallProbe]] for the COMPOSED snapshot read — one row per
-    * candidate (nprobe, fineProbe) pair, recall@k of
-    * [[ivf2TopKFromSnapshot]] at that operating point against
-    * brute-force ground truth over the same snapshot (the snapshot
-    * stores raw embeddings, so exact ground truth is computable from
-    * the artifact alone). recall(k1, k2) ≡ 1 by the full-probe
-    * equivalence. */
-  def annRecallProbe2(cells: DataFrame, queries: DataFrame,
-      coarse: Array[Array[Double]], fine: Array[Array[Double]], k: Int,
-      probes: Seq[(Int, Int)], roundDigits: Int = 5): DataFrame = {
-    require(probes.nonEmpty && probes.forall { case (np, fp) =>
-      np >= 1 && np <= coarse.length && fp >= 1 && fp <= fine.length },
-      s"probes must be within [1, ${coarse.length}] × [1, ${fine.length}]" +
-        s"; got $probes")
-    val truth = bruteTopK(
-        cells.select(col("id").as("vec_id"), col("emb").as("embedding")),
-        queries, k, roundDigits)
-      .select(col("qid"), col("vec_id")).localCheckpoint()
-    probes.map { case (np, fp) =>
-      val got = ivf2TopKFromSnapshot(cells, queries, coarse, fine, np, k,
-        fp, roundDigits).select(col("qid"), col("vec_id"))
+    reads.map { case (np, fp, got) =>
       truth.join(got, Seq("qid", "vec_id"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))
         .crossJoin(truth.agg(count(lit(1)).as("n_truth"),
           countDistinct(col("qid")).as("n_queries")))
         .select(lit(np).as("nprobe"), lit(fp).as("fine_probe"),
           col("n_queries"), col("n_truth"), col("n_hit"),
-          round(col("n_hit").cast("double") /
-            greatest(col("n_truth"), lit(1L)).cast("double"), roundDigits)
-            .as("recall"))
-    }.reduce(_ unionByName _)
-  }
-
-  /** [[annRecallProbe]] for the PQ snapshot read — recall@k of
-    * [[pqTopKFromSnapshot]] per candidate nprobe against the FULL ADC
-    * scan of the same codes (nprobe = all cells), which is the exact
-    * ground truth computable from a codes-only artifact: it isolates
-    * the BUCKETING loss — the knob this read tunes — from the code
-    * budget's quantization loss (fixed at encode time; measured
-    * separately by PqSnapshotSpec's parity read against raw
-    * embeddings). recall(centroids.length) ≡ 1 by construction. */
-  def annRecallProbePq(cells: DataFrame, queries: DataFrame,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], k: Int, nprobes: Seq[Int],
-      roundDigits: Int = 5): DataFrame = {
-    require(nprobes.nonEmpty && nprobes.forall(p =>
-      p >= 1 && p <= centroids.length),
-      s"nprobes must be within [1, ${centroids.length}]; got $nprobes")
-    val truth = pqTopKFromSnapshot(cells, queries, centroids, codebooks,
-        nprobe = centroids.length, k = k, roundDigits = roundDigits)
-      .select(col("qid"), col("vec_id")).localCheckpoint()
-    nprobes.map { np =>
-      val got = pqTopKFromSnapshot(cells, queries, centroids, codebooks,
-        np, k, roundDigits).select(col("qid"), col("vec_id"))
-      truth.join(got, Seq("qid", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_truth"),
-          countDistinct(col("qid")).as("n_queries")))
-        .select(lit(np).as("nprobe"), col("n_queries"), col("n_truth"),
-          col("n_hit"),
           round(col("n_hit").cast("double") /
             greatest(col("n_truth"), lit(1L)).cast("double"), roundDigits)
             .as("recall"))
@@ -586,73 +447,32 @@ object Similarity {
 
   /** The SEMANTIC tier's persistable snapshot projection — the
     * crawl-gate artifact no LEXICAL tier can substitute for: one
-    * (id, cell, emb) row per prior document, `cell` from the shared IVF
-    * coarse quantizer ([[kmeansCentroids]]). A PARAPHRASED replica of a
-    * prior-day document (reworded — different bytes, canonical form AND
-    * shingle set) defeats the exact/normalized/signature/banded tiers;
-    * gating on embeddings closes it. The projection is dim×4 bytes per
-    * doc plus the cell id — the prior corpus's TEXT is never read again,
-    * the same snapshot contract as the other tiers' key/signature
-    * tables. Persist bucketed by `cell` so the daily gate join's prior
-    * side rides the layout. */
-  def semanticKeys(corpus: DataFrame, centroids: Array[Array[Double]],
+    * (id, cell, payload) row per prior document, `cell` from the
+    * quantizer and the payload the raw embedding (`emb`, for
+    * [[CellQuantizer.Flat]] and [[CellQuantizer.TwoLevel]]) or its PQ
+    * `codes` ([[CellQuantizer.Pq]]: dim×4 bytes → numSub ints per doc).
+    * A PARAPHRASED replica of a prior-day document (reworded — different
+    * bytes, canonical form AND shingle set) defeats the
+    * exact/normalized/signature/banded tiers; gating on embeddings
+    * closes it. The prior corpus's TEXT is never read again — the same
+    * snapshot contract as the other tiers' key/signature tables.
+    * Everything downstream reads every form alike (a composed cell id is
+    * just a cell id): the generation lifecycle
+    * ([[Dedup.stampGeneration]] / [[Dedup.retainGenerations]] keyed on
+    * `id`), occupancy, cap reports, bucketing, the gate and the ANN
+    * read. Persist bucketed by `cell` so the daily gate join's prior
+    * side rides the layout. A codes snapshot cannot be re-keyed (it
+    * stores no embeddings): choose the code budget with headroom
+    * (PqSnapshotSpec's parity read), persist a [[pqSampleSidecar]]
+    * beside it, and migrate it with [[reencodePqSnapshot]]. */
+  def semanticKeys(corpus: DataFrame, quantizer: CellQuantizer,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
     // the id keeps its ORIGINAL type: a hidden cast("long") would turn a
     // UUID-string id into null and silently neuter the gate's anti-join
-    corpus.select(col(idCol).as("id"),
-      ivfCells(col(embCol), centroids, 1)(0).as("cell"),
-      col(embCol).as("emb"))
+    corpus.select(col(idCol).as("id"), quantizer.cell(col(embCol)).as("cell"),
+      quantizer.encode(col(embCol)).as(quantizer.payload))
 
-  /** [[semanticKeys]] under a TWO-LEVEL quantizer ([[trainQuantizer2]])
-    * — same (id, cell, emb) artifact contract, `cell` the composed
-    * c1·k2 + c2 id, so everything downstream of the projection
-    * (stamp/retain, occupancy, cap reports, bucketing, the snapshot
-    * ANN read) applies verbatim: a composed cell id is just a cell
-    * id. */
-  def semanticKeys2(corpus: DataFrame, coarse: Array[Array[Double]],
-      fine: Array[Array[Double]], idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol).as("id"),
-      ivf2Cells(col(embCol), coarse, fine, 1)(0).as("cell"),
-      col(embCol).as("emb"))
-
-  /** [[graft.ext.Dedup.stampGeneration]]'s sibling for the SEMANTIC
-    * tier's snapshot artifact: stamp a [[semanticKeys]] table with the
-    * generation it was accepted in, so the embedding snapshot obeys the
-    * SAME re-admission policy as the lexical tiers — without this,
-    * aged-out content re-admits through the key/signature tiers but
-    * stays blocked by an eternal embedding table (and that table grows
-    * forever). Map-only; a (id, cell, emb, _gen) table bucketed on
-    * `cell` keeps the gate join's prior side on the layout. */
-  def stampSemanticGeneration(cells: DataFrame, gen: Long): DataFrame = {
-    require(cells.columns.toSeq == Seq("id", "cell", "emb"),
-      "stampSemanticGeneration takes a semanticKeys projection " +
-        "(id, cell, emb); got " + cells.columns.mkString(", "))
-    cells.withColumn("_gen", lit(gen))
-  }
-
-  /** Retention/TTL over a generation-stamped semantic snapshot — the
-    * embedding tier's [[graft.ext.Dedup.retainSignatureGenerations]]:
-    * per document id keep the LATEST stamped row (lexicographic max
-    * over (_gen, cell, emb) — a re-crawled id deterministically
-    * resolves to its newest embedding), drop ids last accepted before
-    * `minGen`, and return the (id, cell, emb) projection
-    * [[incrementalSemDedup]] takes as `priorCells`. One max-per-id
-    * groupBy (arrays are orderable, so the struct max is exact and
-    * engine-reproducible); against a snapshot bucketed on `id` it
-    * plans exchange-free — same contract as the other tiers. */
-  def retainSemanticGenerations(cellsGen: DataFrame, minGen: Long): DataFrame = {
-    require(cellsGen.columns.toSeq == Seq("id", "cell", "emb", "_gen"),
-      "retainSemanticGenerations takes a stampSemanticGeneration " +
-        "projection (id, cell, emb, _gen); got " +
-        cellsGen.columns.mkString(", "))
-    cellsGen.groupBy("id")
-      .agg(max(struct(col("_gen"), col("cell"), col("emb"))).as("_m"))
-      .where(col("_m._gen") >= minGen)
-      .select(col("id"), col("_m.cell").as("cell"), col("_m.emb").as("emb"))
-  }
-
-  /** Re-key a persisted semantic snapshot under NEW centroids — the
+  /** Re-key a persisted semantic snapshot under a NEW quantizer — the
     * quantizer-GROWTH lifecycle step the fixed-k tier is incomplete
     * without: the snapshot's own sizing contract is k ≈ √n (per-cell
     * gate work is ≈ (n/k)², and k bounds the candidate join's
@@ -662,63 +482,56 @@ object Similarity {
     * silently degrading the paraphrase membrane toward a no-op. The
     * lifecycle: when a cell-occupancy read (see [[cellOccupancy]])
     * shows cells approaching the cap, train a BIGGER quantizer toward
-    * k ≈ √n ([[kmeansCentroids]] — a bounded driver-side sample, never
-    * the corpus) and re-key the snapshot under it with this operator.
+    * k ≈ √n ([[trainQuantizerFromSnapshot]] — flat, or two-level once k
+    * outgrows driver Lloyd) and re-key the snapshot under it with this
+    * operator.
     *
-    * ONE map-only pass: the embeddings are already IN the snapshot
-    * (the [[semanticKeys]] projection stores (id, cell, emb)), so
+    * ONE map-only pass: the embeddings are already IN the snapshot, so
     * re-keying never re-reads corpus text or re-embeds — `cell` is
     * recomputed from the stored `emb` and everything else is carried
-    * through, including the `_gen` stamp of a
-    * [[stampSemanticGeneration]]ed snapshot (re-keying is a LAYOUT
-    * change; it must not disturb retention ages). Re-keyed ≡
-    * fresh-built from the same embeddings bit-for-bit
-    * ([[semanticKeys]] on the (id, emb) projection — IvfSpec
-    * pins the parity), because cell assignment is a pure function of
-    * (emb, centroids). Rewrite the persisted snapshot bucketed by the
-    * NEW `cell` so the daily gate join rides the new layout. */
+    * through, including a `_gen` stamp (re-keying is a LAYOUT change;
+    * it must not disturb retention ages). Re-keyed ≡ fresh-built
+    * [[semanticKeys]] from the same embeddings bit-for-bit (IvfSpec and
+    * Ivf2Spec pin the parity), because cell assignment is a pure
+    * function of (emb, quantizer). A PQ quantizer or codes snapshot is
+    * rejected: codes carry no embedding to re-key — migrate them with
+    * [[reencodePqSnapshot]]. Rewrite the persisted snapshot bucketed by
+    * the NEW `cell` so the daily gate join rides the new layout. */
   def rekeySemanticSnapshot(cells: DataFrame,
-      newCentroids: Array[Array[Double]]): DataFrame = {
-    val cols = cells.columns.toSeq
-    require(cols == Seq("id", "cell", "emb") ||
-        cols == Seq("id", "cell", "emb", "_gen"),
-      "rekeySemanticSnapshot takes a semanticKeys projection (id, cell, " +
-        "emb) or its stamped form (id, cell, emb, _gen); got " +
-        cols.mkString(", "))
-    cells.withColumn("cell", ivfCells(col("emb"), newCentroids, 1)(0))
-  }
-
-  /** [[rekeySemanticSnapshot]] under a TWO-LEVEL quantizer — the
-    * re-key lifecycle's growth step once k ≈ √n outgrows flat driver
-    * Lloyd: same one map-only pass over the stored embeddings, `_gen`
-    * carried, re-keyed ≡ fresh [[semanticKeys2]] bit-for-bit (cell
-    * assignment is a pure function of (emb, coarse, fine)). */
-  def rekeySemanticSnapshot2(cells: DataFrame,
-      coarse: Array[Array[Double]], fine: Array[Array[Double]]): DataFrame = {
-    val cols = cells.columns.toSeq
-    require(cols == Seq("id", "cell", "emb") ||
-        cols == Seq("id", "cell", "emb", "_gen"),
-      "rekeySemanticSnapshot2 takes a semanticKeys projection (id, " +
-        "cell, emb) or its stamped form (id, cell, emb, _gen); got " +
-        cols.mkString(", "))
-    cells.withColumn("cell", ivf2Cells(col("emb"), coarse, fine, 1)(0))
+      quantizer: CellQuantizer): DataFrame = {
+    require(!quantizer.isInstanceOf[CellQuantizer.Pq] &&
+        !cells.columns.contains("codes"),
+      "rekeySemanticSnapshot recomputes cells from stored embeddings; a " +
+        "PQ codes snapshot stores none — migrate it with reencodePqSnapshot")
+    quantizer.requireSnapshot(cells, "rekeySemanticSnapshot", stamped = true)
+    cells.withColumn("cell", quantizer.cell(col("emb")))
   }
 
   /** Train a GROWN quantizer from the snapshot itself — the middle
-    * step of the re-key lifecycle (occupancy read → THIS → re-key),
-    * so the whole quantizer-growth cycle runs off the persisted
-    * artifact with no corpus access: [[kmeansCentroids]] over the
-    * snapshot's own (id, emb) projection (hash-ordered bounded
-    * driver-side sample, farthest-first init — the shared Lloyd
-    * core). Size `k` toward √n per the [[semDedup]] contract. */
-  def trainQuantizerFromSnapshot(cells: DataFrame, k: Int,
-      sampleRows: Int = 2048, iters: Int = 8): Array[Array[Double]] = {
+    * step of the re-key lifecycle (occupancy read → THIS → re-key), so
+    * the whole quantizer-growth cycle runs off the persisted artifact
+    * with no corpus access: the snapshot's own (id, emb) projection
+    * feeds the corpus trainers' hash-ordered bounded sample, so the
+    * result equals training on the source corpus. `fineK = 1` gives a
+    * [[CellQuantizer.Flat]] of `k` cells ([[kmeansCentroids]]; a
+    * one-centroid fine level would compose to the coarse cell anyway),
+    * `fineK > 1` a [[CellQuantizer.TwoLevel]] of k·fineK cells
+    * ([[trainQuantizer2]]) for once k ≈ √n outgrows flat driver Lloyd.
+    * Size toward √n per the [[semDedup]] contract. A PQ codes snapshot
+    * stores no embeddings: train on its [[pqSampleSidecar]]. */
+  def trainQuantizerFromSnapshot(cells: DataFrame, k: Int, fineK: Int = 1,
+      sampleRows: Int = 2048, iters: Int = 8): CellQuantizer = {
     require(cells.columns.startsWith(Seq("id", "cell", "emb")),
       "trainQuantizerFromSnapshot takes a semanticKeys projection " +
         "(id, cell, emb[, _gen]); got " + cells.columns.mkString(", "))
-    kmeansCentroids(
-      cells.select(col("id").as("vec_id"), col("emb").as("embedding")),
-      k, sampleRows, iters)
+    require(fineK >= 1, s"fineK must be >= 1, got $fineK")
+    val sample = cells.select(col("id").as("vec_id"), col("emb").as("embedding"))
+    if (fineK == 1)
+      CellQuantizer.Flat(kmeansCentroids(sample, k, sampleRows, iters))
+    else {
+      val (coarse, fine) = trainQuantizer2(sample, k, fineK, sampleRows, iters)
+      CellQuantizer.TwoLevel(coarse, fine)
+    }
   }
 
   /** Per-cell occupancy of a semantic snapshot vs the gate cap — the
@@ -744,50 +557,24 @@ object Similarity {
     * snapshot's cells (rows in dropped cells = prior docs the tier can
     * no longer see — recall decay of the membrane itself, the signal
     * that drives [[rekeySemanticSnapshot]]), side `batch` counts the
-    * query-probe rows after the ×nprobe fan-out (rows in dropped cells
-    * = probes that went ungated). One bounded aggregate per side;
-    * output two rows. Ship it next to the gate's output (the
-    * attritionReport discipline) — the hash rows stay reports-free. */
+    * query-probe rows after the ×nprobe fan-out, probed with the
+    * quantizer's cells exactly as the gate probes (rows in dropped
+    * cells = probes that went ungated). The prior side reads ONLY
+    * `cell`, so every snapshot form is accepted: raw, stamped, composed
+    * and PQ. One bounded aggregate per side; output two rows. Ship it
+    * next to the gate's output (the attritionReport discipline) — the
+    * hash rows stay reports-free. */
   def semanticCapReport(newDocs: DataFrame, priorCells: DataFrame,
-      centroids: Array[Array[Double]],
-      embCol: String = "embedding", nprobe: Int = 1,
-      maxCellSize: Int = 10000): DataFrame =
-    // accepts every snapshot form that carries (id, cell, …): raw
-    // (…emb), stamped (…emb, _gen), composed-cell (semanticKeys2), and
-    // PQ (…codes) — the prior side of the report reads ONLY `cell`.
-    // The batch side here probes with the flat quantizer; the
-    // TWO-LEVEL gate's first-class report is [[semanticCapReport2]].
-    semanticCapReportImpl(newDocs, priorCells,
-      ivfCells(col(embCol), centroids, nprobe), maxCellSize)
-
-  /** [[semanticCapReport]] for the TWO-LEVEL gate
-    * ([[incrementalSemDedup2]] over a [[semanticKeys2]] /
-    * [[rekeySemanticSnapshot2]] snapshot): identical report shape and
-    * semantics, the batch side probing with the COMPOSED cell ids the
-    * gate itself probes with ([[ivf2Cells]] ×nprobe coarse fan-out) —
-    * so the two-level tier's recall ledger reads exactly like the
-    * flat tier's. */
-  def semanticCapReport2(newDocs: DataFrame, priorCells: DataFrame,
-      coarse: Array[Array[Double]], fine: Array[Array[Double]],
-      embCol: String = "embedding", nprobe: Int = 1,
-      maxCellSize: Int = 10000): DataFrame =
-    semanticCapReportImpl(newDocs, priorCells,
-      ivf2Cells(col(embCol), coarse, fine, nprobe), maxCellSize)
-
-  /** Shared body of the two cap reports — the quantizer enters only
-    * through the probe-cell array expression (the
-    * [[incrementalSemDedupImpl]] discipline), so the flat and
-    * composed reports cannot drift on shape or cap semantics. */
-  private def semanticCapReportImpl(newDocs: DataFrame,
-      priorCells: DataFrame, probeCells: Column,
-      maxCellSize: Int): DataFrame = {
+      quantizer: CellQuantizer, embCol: String = "embedding",
+      nprobe: Int = 1, maxCellSize: Int = 10000): DataFrame = {
     require(priorCells.columns.startsWith(Seq("id", "cell")),
       "priorCells must be a semantic snapshot projection (id, cell, " +
         "…); got " + priorCells.columns.mkString(", "))
     val pr = Dedup.capReport(priorCells.select("cell"), Seq("cell"),
       maxCellSize)
     val bq = Dedup.capReport(
-      newDocs.select(explode(probeCells).as("cell")),
+      newDocs.select(explode(quantizer.probeCells(col(embCol), nprobe))
+        .as("cell")),
       Seq("cell"), maxCellSize)
     pr.select(lit("prior").as("side"), col("*"))
       .unionByName(bq.select(lit("batch").as("side"), col("*")))
@@ -824,133 +611,76 @@ object Similarity {
     * are far cheaper — run them first; this tier only needs to catch
     * the paraphrase class they cannot see).
     *
-    * Scale shape (the banded tier's, on embeddings): centroids ride the
-    * plan as literals (k×dim doubles, the IVF contract); batch cell
+    * Scale shape (the banded tier's, on embeddings): the quantizer rides
+    * the plan as literals (k×dim doubles, the IVF contract); batch cell
     * assignment is map-only with the QUERY side fanning out ×nprobe
-    * (the [[ivfTopK]] convention — probing restores the recall a hard
-    * cell boundary costs); ONE equi-join shuffle on the cell id — never
-    * a cross join; per-cell work |batch-cell|·|prior-cell| with both
-    * sides capped at `maxCellSize` ([[cappedCells]]); verification reads
-    * only the snapshot's (cell, emb) projection, never prior text.
-    * Decisions are deterministic given the projection (rounded cosine,
-    * exact in any engine — the DuckDB oracle replays it bit-for-bit).
-    * SIZE THE QUANTIZER WITH THE CORPUS (k ≈ √n, the [[semDedup]]
-    * contract): per-cell work is ≈ (n/k)² so a FIXED k turns the tier
-    * quadratic as the corpus grows, and k also bounds the candidate
-    * join's parallelism (cells are the partition unit) — ScaleProbe
-    * measured k=16 over 40k vectors 7× slower than √n cells on the
-    * same data. Within-batch semantic dedup is out of scope (compose
-    * [[semDedup]] / [[semDupPairs]] in front), mirroring the banded
-    * tier's cross-snapshot-only contract.
+    * (over the coarse cells for [[CellQuantizer.TwoLevel]] — probing
+    * restores the recall a hard cell boundary costs); ONE equi-join
+    * shuffle on the cell id — never a cross join; per-cell work
+    * |batch-cell|·|prior-cell| with both sides capped at `maxCellSize`
+    * ([[cappedCells]]); verification reads only the snapshot's
+    * (cell, payload) projection, never prior text. Decisions are
+    * deterministic given the projection (rounded cosine, exact in any
+    * engine — the DuckDB oracle replays it bit-for-bit). SIZE THE
+    * QUANTIZER WITH THE CORPUS (k ≈ √n, the [[semDedup]] contract):
+    * per-cell work is ≈ (n/k)² so a FIXED k turns the tier quadratic as
+    * the corpus grows, and k also bounds the candidate join's
+    * parallelism (cells are the partition unit) — ScaleProbe measured
+    * k=16 over 40k vectors 7× slower than √n cells on the same data.
+    * Within-batch semantic dedup is out of scope (compose [[semDedup]] /
+    * [[semDupPairs]] in front), mirroring the banded tier's
+    * cross-snapshot-only contract.
+    *
+    * Over a PQ codes snapshot ([[CellQuantizer.Pq]]) verification runs
+    * on DECODED vectors with the same rounded cosine/threshold
+    * semantics, BOTH sides in the quantized space (prior codes decoded;
+    * the batch vector encode∘decoded through the SAME codebooks): an
+    * exact replica of a prior doc maps to the prior's own codes, so its
+    * decoded cosine is EXACTLY 1.0 and blocks at any code budget —
+    * replica recall does not depend on reconstruction quality, only
+    * near-dup resolution does (size the budget with PqSnapshotSpec's
+    * parity check). Cell assignment stays on the RAW batch vector,
+    * matching how [[semanticKeys]] assigned the snapshot's cells.
     *
     * Returns the kept new-batch rows (original schema); `idCol` must be
     * unique within `newDocs` (it keys the flagged-id anti-join). */
   def incrementalSemDedup(newDocs: DataFrame, priorCells: DataFrame,
-      centroids: Array[Array[Double]], threshold: Double,
+      quantizer: CellQuantizer, threshold: Double,
       idCol: String = "vec_id", embCol: String = "embedding",
       nprobe: Int = 1, maxCellSize: Int = 10000,
       roundDigits: Int = 5): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.length,
-      s"nprobe must be in [1, ${centroids.length}], got $nprobe")
-    require(priorCells.columns.toSeq == Seq("id", "cell", "emb"),
-      "priorCells must be a semanticKeys projection (id, cell, emb); " +
-        "got " + priorCells.columns.mkString(", "))
-    incrementalSemDedupImpl(newDocs, priorCells,
-      v => ivfCells(v, centroids, nprobe), col(embCol), threshold, idCol,
-      embCol, maxCellSize, roundDigits)
+    val probeCells = quantizer.probeCells(col(embCol), nprobe)
+    quantizer.requireSnapshot(priorCells, "incrementalSemDedup")
+    // materialized once (r19 — the banded tier's batchSigs rationale):
+    // the batch subtree is consumed THREE times below (the cell cap's
+    // count side, its probe side, and the final kept anti-join), and
+    // this tier composes LAST in the membrane — its `newDocs` is the
+    // whole lexical gate DAG in `p_crawl_sem`/`p_daily_full`-shaped
+    // pipelines, so re-evaluating it per consumer tripled the
+    // dominant cost (the judge's r18 A/B localized ~2× of p_crawl_sem
+    // to exactly this). Standalone callers pay one extra pass-through
+    // write of the batch (scan-cost, measured flat); honors
+    // spark.graft.routeMaterialize like every routed site.
+    val src = Dedup.materializeOnce(newDocs)
+    val pr = cappedCells(
+      priorCells.select(col("cell"),
+          quantizer.decode(col(quantizer.payload)).as("emb"))
+        .select(col("cell"), col("emb"), l2Norm(col("emb")).as("_pn")),
+      maxCellSize)
+    // the flagged-id key keeps the caller's id type uncast — see
+    // semanticKeys' rationale (a silent cast-to-null would make the
+    // anti-join a no-op for non-numeric ids)
+    val batchEmb = quantizer.compareVec(col(embCol))
+    val bq = cappedCells(
+      src.select(col(idCol).as("_bid"), explode(probeCells).as("cell"),
+        batchEmb.as("_be"), l2Norm(batchEmb).as("_bn")),
+      maxCellSize)
+    val flagged = bq.join(pr, Seq("cell"))
+      .where(round(dot(col("_be"), col("emb")) / (col("_bn") * col("_pn")),
+        roundDigits) >= threshold)
+      .select(col("_bid")).distinct()
+    src.join(flagged.select(col("_bid").as(idCol)), Seq(idCol), "left_anti")
   }
-
-  /** [[incrementalSemDedup]] under a TWO-LEVEL quantizer — the gate at
-    * the corpus scale where k ≈ √n outgrows flat driver Lloyd
-    * ([[trainQuantizer2]]): identical semantics and plan shape (probe
-    * fan-out map-side, ONE cell equi-join, both sides capped), the
-    * composed cell id standing in for the flat one. `priorCells` is a
-    * [[semanticKeys2]] (or [[rekeySemanticSnapshot2]]-re-keyed)
-    * projection; `nprobe` fans over COARSE centroids. */
-  def incrementalSemDedup2(newDocs: DataFrame, priorCells: DataFrame,
-      coarse: Array[Array[Double]], fine: Array[Array[Double]],
-      threshold: Double, idCol: String = "vec_id",
-      embCol: String = "embedding", nprobe: Int = 1,
-      maxCellSize: Int = 10000, roundDigits: Int = 5): DataFrame = {
-    require(nprobe >= 1 && nprobe <= coarse.length,
-      s"nprobe must be in [1, ${coarse.length}] (coarse probes), got $nprobe")
-    require(priorCells.columns.toSeq == Seq("id", "cell", "emb"),
-      "priorCells must be a semanticKeys projection (id, cell, emb); " +
-        "got " + priorCells.columns.mkString(", "))
-    incrementalSemDedupImpl(newDocs, priorCells,
-      v => ivf2Cells(v, coarse, fine, nprobe), col(embCol), threshold,
-      idCol, embCol, maxCellSize, roundDigits)
-  }
-
-  /** [[incrementalSemDedup]] over a PQ-COMPRESSED snapshot — the
-    * 10¹⁰-doc storage point: the persisted artifact stores (id, cell,
-    * codes) with `codes` = `numSub` small ints ([[semanticKeysPq]];
-    * dim×4 bytes → numSub×4, e.g. 64-dim float → 4 codes = 16× less),
-    * and verification runs on DECODED vectors with the same rounded
-    * cosine/threshold semantics. BOTH sides are compared in the
-    * quantized space (prior codes decoded; the batch vector
-    * encode∘decoded through the SAME codebooks): an exact replica of
-    * a prior doc maps to the prior's own codes, so its decoded cosine
-    * is EXACTLY 1.0 and blocks at any code budget — replica recall
-    * does not depend on reconstruction quality, only near-dup
-    * resolution does (size the budget with PqSnapshotSpec's parity
-    * check; at an adequate budget gate decisions match the
-    * uncompressed tier). Cell assignment stays on the RAW batch
-    * vector, matching how [[semanticKeysPq]] assigned the snapshot's
-    * cells at build time. Same plan shape as the uncompressed gate:
-    * probe fan-out map-side, ONE cell equi-join, both sides capped —
-    * only the per-row payload shrinks. */
-  def incrementalSemDedupPq(newDocs: DataFrame, priorCodes: DataFrame,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], threshold: Double,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      nprobe: Int = 1, maxCellSize: Int = 10000,
-      roundDigits: Int = 5): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.length,
-      s"nprobe must be in [1, ${centroids.length}], got $nprobe")
-    require(priorCodes.columns.toSeq == Seq("id", "cell", "codes"),
-      "priorCodes must be a semanticKeysPq projection (id, cell, " +
-        "codes); got " + priorCodes.columns.mkString(", "))
-    incrementalSemDedupImpl(newDocs,
-      priorCodes.select(col("id"), col("cell"),
-        pqDecode(col("codes"), codebooks).as("emb")),
-      v => ivfCells(v, centroids, nprobe),
-      pqDecode(pqCodes(col(embCol), codebooks), codebooks), threshold,
-      idCol, embCol, maxCellSize, roundDigits)
-  }
-
-  /** The PQ-compressed form of [[semanticKeys]] — (id, cell, codes):
-    * `cell` from the shared coarse quantizer on the RAW embedding,
-    * `codes` the PQ encoding that replaces the stored vector. The
-    * snapshot's dominant storage term drops from dim×4 bytes to
-    * numSub ints per doc; decode back with [[pqDecode]] (the
-    * [[incrementalSemDedupPq]] read path). Not re-keyable to a FINER
-    * reconstruction without re-encoding from source embeddings —
-    * choose the code budget with headroom (PqSnapshotSpec's parity
-    * read); cell re-keying under a grown coarse quantizer would need
-    * the decoded vectors (cell = f(decoded) — document the decoded
-    * re-key as approximate) or the source embeddings.
-    *
-    * RE-ENCODING DISCIPLINE (r19 — the lifecycle the compressed
-    * artifact needs the day the code budget must grow on a corpus
-    * whose raw embeddings were discarded): persist a
-    * [[pqSampleSidecar]] NEXT TO the codes table (bounded — a few
-    * thousand raw rows, the same sample budget codebook training uses
-    * anyway). Grown codebooks then train on REAL vectors
-    * ([[pqTrainCodebooks]] over the sidecar), and the table migrates
-    * via [[reencodePqSnapshot]] — decode-under-the-OLD-books →
-    * encode-under-the-NEW, explicitly APPROXIMATE for organic docs
-    * (the new codes quantize the old reconstruction, not the source;
-    * information lost at the first encode never returns) while exact
-    * replicas keep blocking (a replica carries its source's CODES, and
-    * code equality survives any chain of deterministic re-encodes).
-    * PqSnapshotSpec pins both properties. */
-  def semanticKeysPq(corpus: DataFrame, centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol).as("id"),
-      ivfCells(col(embCol), centroids, 1)(0).as("cell"),
-      pqCodes(col(embCol), codebooks).as("codes"))
 
   /** The PQ snapshot's RAW-EMBEDDING SAMPLE SIDECAR — the bounded
     * artifact that keeps the compressed tier's codebooks GROWABLE
@@ -972,9 +702,9 @@ object Similarity {
     corpus.select(col(idCol).as("vec_id"), col(embCol).as("embedding"))
       .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(sampleRows)
 
-  /** Migrate a [[semanticKeysPq]] table to NEW codebooks WITHOUT the
-    * source embeddings — decode under the old books, encode under the
-    * new: one map-only pass over the codes table (cell carried; the
+  /** Migrate a PQ [[semanticKeys]] table (id, cell, codes) to NEW
+    * codebooks WITHOUT the source embeddings — decode under the old
+    * books, encode under the new: one map-only pass over the codes table (cell carried; the
     * coarse quantizer is unchanged — growing THAT needs decoded cells
     * and is the same approximation). EXPLICITLY APPROXIMATE for
     * organic rows: the new codes quantize the OLD RECONSTRUCTION, so
@@ -985,8 +715,8 @@ object Similarity {
     * wrong). What it DOES guarantee: exact replicas still block at
     * any budget chain (code equality is preserved by deterministic
     * re-encode, decoded cosine exactly 1.0), and the migrated table
-    * feeds [[incrementalSemDedupPq]] / [[pqTopKFromSnapshot]] under
-    * the new books with no other change. For full-fidelity growth,
+    * feeds [[incrementalSemDedup]] / [[ivfTopKFromSnapshot]] under a
+    * [[CellQuantizer.Pq]] with the new books and no other change. For full-fidelity growth,
     * train on the [[pqSampleSidecar]] AND re-encode from source
     * embeddings where they still exist; use this operator only for
     * the discarded-source case it exists for. */
@@ -994,50 +724,10 @@ object Similarity {
       oldBooks: Array[Array[Array[Double]]],
       newBooks: Array[Array[Array[Double]]]): DataFrame = {
     require(cells.columns.toSeq == Seq("id", "cell", "codes"),
-      "reencodePqSnapshot takes a semanticKeysPq projection (id, cell, " +
+      "reencodePqSnapshot takes a PQ semanticKeys projection (id, cell, " +
         "codes); got " + cells.columns.mkString(", "))
     cells.withColumn("codes",
       pqCodes(pqDecode(col("codes"), oldBooks), newBooks))
-  }
-
-  /** Shared body of [[incrementalSemDedup]] / [[incrementalSemDedup2]]
-    * / [[incrementalSemDedupPq]] — the quantizer enters ONLY through
-    * `probeCells` (the batch-side probe-cell array expression), the
-    * snapshot's vector form only through `priorProj` (a (cell, emb)
-    * projection — raw or PQ-decoded) and `batchEmb` (the batch-side
-    * comparison vector — raw or encode∘decode), so the gate variants
-    * cannot drift on cap, join, rounding, or anti-join semantics. */
-  private def incrementalSemDedupImpl(newDocs: DataFrame,
-      priorProj: DataFrame, probeCells: Column => Column,
-      batchEmb: Column, threshold: Double, idCol: String, embCol: String,
-      maxCellSize: Int, roundDigits: Int): DataFrame = {
-    // materialized once (r19 — the banded tier's batchSigs rationale):
-    // the batch subtree is consumed THREE times below (the cell cap's
-    // count side, its probe side, and the final kept anti-join), and
-    // this tier composes LAST in the membrane — its `newDocs` is the
-    // whole lexical gate DAG in `p_crawl_sem`/`p_daily_full`-shaped
-    // pipelines, so re-evaluating it per consumer tripled the
-    // dominant cost (the judge's r18 A/B localized ~2× of p_crawl_sem
-    // to exactly this). Standalone callers pay one extra pass-through
-    // write of the batch (scan-cost, measured flat); honors
-    // spark.graft.routeMaterialize like every routed site.
-    val src = Dedup.materializeOnce(newDocs)
-    val pr = cappedCells(
-      priorProj.select(col("cell"), col("emb"), l2Norm(col("emb")).as("_pn")),
-      maxCellSize)
-    // the flagged-id key keeps the caller's id type uncast — see
-    // semanticKeys' rationale (a silent cast-to-null would make the
-    // anti-join a no-op for non-numeric ids)
-    val bq = cappedCells(
-      src.select(col(idCol).as("_bid"),
-        explode(probeCells(col(embCol))).as("cell"),
-        batchEmb.as("_be"), l2Norm(batchEmb).as("_bn")),
-      maxCellSize)
-    val flagged = bq.join(pr, Seq("cell"))
-      .where(round(dot(col("_be"), col("emb")) / (col("_bn") * col("_pn")),
-        roundDigits) >= threshold)
-      .select(col("_bid")).distinct()
-    src.join(flagged.select(col("_bid").as(idCol)), Seq(idCol), "left_anti")
   }
 
   // ---- Product quantization (IVF-PQ): the 100 TB memory point ------------
@@ -1119,21 +809,15 @@ object Similarity {
     * from the IVF quantizer, `numSub` code bytes from PQ — and queries
     * probe their `nprobe` nearest cells, scoring candidates with the ADC
     * kernel. One equi-join shuffle on the cell id over the COMPRESSED
-    * table; the raw embeddings never move after encoding. */
+    * table; the raw embeddings never move after encoding.
+    * [[semanticKeys]] under a [[CellQuantizer.Pq]] followed by the
+    * snapshot read. */
   def pqIvfTopK(corpus: DataFrame, queries: DataFrame,
       centroids: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
       nprobe: Int, k: Int, roundDigits: Int = 5): DataFrame = {
-    val cb = corpus.select(col("vec_id"),
-      ivfCells(col("embedding"), centroids, 1)(0).as("cell"),
-      pqCodes(col("embedding"), codebooks).as("codes"))
-    val qb = queries.select(col("qid"), col("qe"),
-      explode(ivfCells(col("qe"), centroids, nprobe)).as("cell"))
-    val scored = qb.join(cb, Seq("cell"))
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        round(pqAdc(col("qe"), col("codes"), codebooks), roundDigits).as("adc"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    val quantizer = CellQuantizer.Pq(centroids, codebooks)
+    ivfTopKFromSnapshot(semanticKeys(corpus, quantizer), queries,
+      quantizer, nprobe, k, roundDigits = roundDigits)
   }
 
   /** The SQL text of `dot` in the DuckDB dialect over 1-indexed lists. */

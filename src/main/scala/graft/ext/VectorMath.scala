@@ -151,7 +151,7 @@ case class IvfCells(child: Expression, centroids: Array[Array[Double]],
   * repeated-min convention). The GATE keeps `fineProbe = 1` (recall
   * probing there is a coarse-boundary concern and per-coarse the fine
   * id is the deterministic argmin); the snapshot-ANN READ
-  * (`ivf2TopKFromSnapshot`) widens it because a corpus vector sharing
+  * (`ivfTopKFromSnapshot`) widens it because a corpus vector sharing
   * the query's coarse branch can live in a DIFFERENT fine cell — and
   * at (probe = k1, fineProbe = k2) every composed cell is probed, so
   * the read is exactly brute force (the `p_ann_snapshot2` oracle).

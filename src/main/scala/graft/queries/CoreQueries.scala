@@ -45,10 +45,15 @@ object CoreQueries {
     // planning + an RDD conversion of the scan; docTable/embTable route
     // ~110 call sites through here and the probe runs INSIDE the bench's
     // timed region, so each query build paid it per base-table read.
-    // The split count is deterministic per (dir, table, parallelism) for
-    // a fixed session config — cache it for the JVM's lifetime (r19
-    // advice; testdata is immutable for the run).
-    val n = splitCountCache.computeIfAbsent(s"$dir/$name@$target",
+    // The split count is a function of the files, the parallelism and
+    // the session's split-size confs, so all of those key the JVM-lifetime
+    // cache. ASSUMPTION: the table's files do not change while the JVM
+    // runs (the testdata is written once, before any query); a rewritten
+    // table would keep its old, stale split count.
+    val splitConfs = Seq("maxPartitionBytes", "openCostInBytes",
+      "minPartitionNum").map(k => s.conf.getOption(s"spark.sql.files.$k"))
+    val cacheKey = (Seq(s"$dir/$name", target) ++ splitConfs).mkString("@")
+    val n = splitCountCache.computeIfAbsent(cacheKey,
       _ => Integer.valueOf(df.rdd.getNumPartitions))
     if (n >= target) df
     else df.repartition(target, col(key))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.CellQuantizer.{Flat, Pq, TwoLevel}
 import graft.ext.{AudioDsp, Avi, Bpe, Cleaning, CorpusFilters, Curation, Dedup, Gif, ImageOps, Jpeg, MediaCodecs, Mp3, Multimodal, Par, Png, Similarity, TextOps}
 
 /** LLM-training-data pipeline queries over `documents.parquet` /
@@ -54,7 +55,7 @@ object PipelineQueries {
     // time, the reason 8 cores beat 32 on these rows at bench scale).
     // priorCanonKeys arrives UN-materialized and is checkpointed here so
     // its job joins the overlapped group.
-    val mats = Par.materializeAll(Seq(
+    val mats = Par.materializeAll("crawl gate signatures", Seq(
       Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
       Dedup.minhashSignatures(batch, "text", col("doc_id"), NumHashes)) ++
       priorCanonKeys.toSeq)
@@ -526,7 +527,7 @@ object PipelineQueries {
       // own input frame) — run the three jobs together instead of
       // serially; the driver's day-2 gate was previously idle-waiting on
       // jobs it never depended on
-      val Seq(sigs0, bsig1, bsig2) = Par.materializeAll(Seq(
+      val Seq(sigs0, bsig1, bsig2) = Par.materializeAll("p_crawl_loop snapshot and day signatures", Seq(
         Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes)))
@@ -628,7 +629,7 @@ object PipelineQueries {
       // retention plan); materialize so both days share them.
       // §2.6 overlap (r20): snapshot pass + both day-batch passes are
       // independent — three jobs together instead of serialized
-      val Seq(ps0, bsig1, bsig2) = Par.materializeAll(Seq(
+      val Seq(ps0, bsig1, bsig2) = Par.materializeAll("p_crawl_ttl snapshot and day signatures", Seq(
         Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes)))
@@ -692,7 +693,7 @@ object PipelineQueries {
       // §2.6 overlap (r20): snapshot signature pass, canonical-key
       // projection and both day-batch passes are independent — four jobs
       // together instead of serialized
-      val Seq(ps0, gc0, bsig1, bsig2) = Par.materializeAll(Seq(
+      val Seq(ps0, gc0, bsig1, bsig2) = Par.materializeAll("p_crawl_norm_ttl snapshot and day projections", Seq(
         Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
         Dedup.stampGeneration(Dedup.canonicalKeys(prior), 0L),
         Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
@@ -993,7 +994,7 @@ object PipelineQueries {
           .withColumn("doc_id", col("doc_id") + 60000))
       // §2.6 overlap (r20): snapshot pass + both day-batch passes are
       // independent — three jobs together instead of serialized
-      val Seq(sigs0, bsig1, bsig2) = Par.materializeAll(Seq(
+      val Seq(sigs0, bsig1, bsig2) = Par.materializeAll("p_daily_loop snapshot and day signatures", Seq(
         Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes)))
@@ -1048,7 +1049,8 @@ object PipelineQueries {
       val kept2 = Dedup.incrementalCrawlGate(day2, keys1, sigs1,
         numHashes = NumHashes, bands = Bands, threshold = 0.8,
         maxBucketSize = MaxBucket, batchSigs = Some(bsig2)).localCheckpoint()
-      Par.await(ship1).unionByName(ship(kept2, 2, "dloop2"))
+      Par.await(ship1, "p_daily_loop day-1 ship")
+        .unionByName(ship(kept2, 2, "dloop2"))
         .orderBy("day", "shard")
     }),
 
@@ -1091,7 +1093,7 @@ object PipelineQueries {
       // §2.6 overlap (r20): the snapshot signature pass and all THREE
       // day-batch passes are independent (each a pure function of its
       // own input) — four jobs together instead of serialized
-      val Seq(ps0, bsig1, bsig2, bsig3) = Par.materializeAll(Seq(
+      val Seq(ps0, bsig1, bsig2, bsig3) = Par.materializeAll("p_daily_loop3 snapshot and day signatures", Seq(
         Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
         Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes),
@@ -1119,7 +1121,7 @@ object PipelineQueries {
           kept: org.apache.spark.sql.DataFrame, gen: Long) = {
         val ks = Dedup.minhashSignatures(kept, "text", col("doc_id"), NumHashes)
           .localCheckpoint()
-        val Seq(gkA, gsA) = Par.materializeAll(Seq(
+        val Seq(gkA, gsA) = Par.materializeAll("p_daily_loop3 advance projections", Seq(
           gk.unionByName(Dedup.stampGeneration(
             Dedup.nearDupKeysFromSignatures(ks, kept, numHashes = NumHashes),
             gen)),
@@ -1166,7 +1168,8 @@ object PipelineQueries {
       val ship2 = Par.async(ship(kept2, 2, "dl3b"))
       val (gk2, gs2) = advance(gk1, gs1, kept2, 2L)
       val kept3 = gate(day3, gk2, gs2, minGen = 2L, bsig3)
-      Par.await(ship1).unionByName(Par.await(ship2))
+      Par.await(ship1, "p_daily_loop3 day-1 ship")
+        .unionByName(Par.await(ship2, "p_daily_loop3 day-2 ship"))
         .unionByName(ship(kept3, 3, "dl3c"))
         .orderBy("day", "shard")
     }),
@@ -1503,15 +1506,15 @@ object PipelineQueries {
     "p_ann_snapshot" -> ((s, dir) => {
       val e = embTable(s, dir).select("vec_id", "embedding")
       val snap = Similarity.semanticKeys(
-        e.where(col("vec_id") % 3 === 1), ivfCentroids)
+        e.where(col("vec_id") % 3 === 1), Flat(ivfCentroids))
       val q = e.where(col("vec_id") % 3 === 0 && col("vec_id") < 15)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      Similarity.ivfTopKFromSnapshot(snap, q, ivfCentroids,
+      Similarity.ivfTopKFromSnapshot(snap, q, Flat(ivfCentroids),
         nprobe = ivfCentroids.length, k = 5).orderBy("qid", "rk")
     }),
 
     // snapshot-as-index for the COMPOSED artifact (r19): the
-    // semanticKeys2 (id, cell, emb) table — exactly what a 10¹⁰-doc
+    // two-level (id, cell, emb) snapshot — exactly what a 10¹⁰-doc
     // corpus persists once k ≈ √n outgrows flat driver Lloyd — read
     // back as a retrieval index. Queries fan ×(nprobe × fineProbe)
     // composed cells (per probed coarse branch, the fineProbe nearest
@@ -1519,34 +1522,36 @@ object PipelineQueries {
     // can sit in a neighboring fine cell); probing ALL (k1 × k2)
     // cells makes the read exactly brute force, which is what the
     // oracle states (plain cross-join top-k, no cell replay) —
-    // production points tune (nprobe, fineProbe) via annRecallProbe2
+    // production points tune (nprobe, fineProbe) via annRecallProbe
     "p_ann_snapshot2" -> ((s, dir) => {
       val all = rekeyGolden(s)
-      val snap = Similarity.semanticKeys2(
-        all.where(col("vec_id") % 3 === 1), rekeyCoarse, rekeyFine)
+      val rekey2 = TwoLevel(rekeyCoarse, rekeyFine)
+      val snap = Similarity.semanticKeys(
+        all.where(col("vec_id") % 3 === 1), rekey2)
       val q = all.where(col("vec_id") % 3 === 0 && col("vec_id") < 60)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      Similarity.ivf2TopKFromSnapshot(snap, q, rekeyCoarse, rekeyFine,
+      Similarity.ivfTopKFromSnapshot(snap, q, rekey2,
         nprobe = rekeyCoarse.length, k = 5, fineProbe = rekeyFine.length)
         .orderBy("qid", "rk")
     }),
 
     // snapshot-as-index for the PQ-COMPRESSED artifact (r19): the
-    // semanticKeysPq (id, cell, codes) table — NO raw embeddings —
+    // PQ (id, cell, codes) snapshot — NO raw embeddings —
     // read with the IVF-PQ ADC kernel against the stored codes.
     // Probing ALL flat cells makes the read exactly the brute ADC
     // scan of the snapshot, which the oracle replays: codes recomputed
     // from the prior embeddings (the snapshot build), ADC distance
     // via the per-sub CASE chains, ascending rounded distance with id
-    // tiebreak (nprobe tuning via annRecallProbePq measures the
+    // tiebreak (nprobe tuning via annRecallProbe measures the
     // bucketing loss alone — code-budget loss is fixed at encode)
     "p_ann_snapshot_pq" -> ((s, dir) => {
       val all = rekeyGolden(s)
-      val snap = Similarity.semanticKeysPq(
-        all.where(col("vec_id") % 3 === 1), rekeyNewCents, pqBooks)
+      val pq = Pq(rekeyNewCents, pqBooks)
+      val snap = Similarity.semanticKeys(
+        all.where(col("vec_id") % 3 === 1), pq)
       val q = all.where(col("vec_id") % 3 === 0 && col("vec_id") < 60)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      Similarity.pqTopKFromSnapshot(snap, q, rekeyNewCents, pqBooks,
+      Similarity.ivfTopKFromSnapshot(snap, q, pq,
         nprobe = rekeyNewCents.length, k = 3).orderBy("qid", "rk")
     }),
 
@@ -1617,8 +1622,8 @@ object PipelineQueries {
         .unionByName(prior.where(col("vec_id") < 100)
           .withColumn("vec_id", col("vec_id") + 20000))
       Similarity.incrementalSemDedup(batch,
-          Similarity.semanticKeys(prior, ivfCentroids).localCheckpoint(),
-          ivfCentroids, threshold = 0.35, nprobe = 2, maxCellSize = 1000)
+          Similarity.semanticKeys(prior, Flat(ivfCentroids)).localCheckpoint(),
+          Flat(ivfCentroids), threshold = 0.35, nprobe = 2, maxCellSize = 1000)
         .select(col("vec_id"),
           Similarity.ivfCells(col("embedding"), ivfCentroids, 1)(0).as("cell"))
         .orderBy("vec_id")
@@ -1651,12 +1656,13 @@ object PipelineQueries {
         .unionByName(membraneReplicas(prior, prior, rewordedText))
       // §2.6: the semantic-key projection only needs `prior` — start its
       // job now so it overlaps the lexical gate's own jobs
-      val semKeys = Par.async(Similarity.semanticKeys(prior, ivfCentroids,
+      val semKeys = Par.async(Similarity.semanticKeys(prior, Flat(ivfCentroids),
         idCol = "doc_id").localCheckpoint())
       val kept4 = crawlGateSharedSnap(batch, prior,
         priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
-      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys),
-        ivfCentroids, threshold = 0.999, idCol = "doc_id", nprobe = 1,
+      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
+          "p_crawl_sem semantic keys"),
+        Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
         maxCellSize = 1000)
       kept5.groupBy(floor(col("doc_id") / 20000).cast("long").as("class"))
         .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
@@ -1668,7 +1674,7 @@ object PipelineQueries {
     // tier swapped to the composed (coarse × fine residual) artifact:
     // the membrane a 10¹⁰-doc corpus actually runs once flat k ≈ √n
     // outgrows driver Lloyd. Same four lexical tiers in front, then
-    // incrementalSemDedup2 over a semanticKeys2 snapshot — the oracle
+    // incrementalSemDedup over a two-level snapshot — the oracle
     // replays the composed cell assignment with the two-level CTE
     // chain (the p_semdedup_rekey2 machinery) inside the full crawl
     // gate replay, pinning that the composed tier COMPOSES: replica
@@ -1681,12 +1687,14 @@ object PipelineQueries {
       val prior = corpus.where(col("doc_id") % 3 === 1).localCheckpoint()
       val batch = corpus.where(col("doc_id") % 3 === 0)
         .unionByName(membraneReplicas(prior, prior, rewordedText))
-      val semKeys = Par.async(Similarity.semanticKeys2(prior, semCoarse4,
-        semFine4, idCol = "doc_id").localCheckpoint())
+      val sem2 = TwoLevel(semCoarse4, semFine4)
+      val semKeys = Par.async(Similarity.semanticKeys(prior, sem2,
+        idCol = "doc_id").localCheckpoint())
       val kept4 = crawlGateSharedSnap(batch, prior,
         priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
-      val kept5 = Similarity.incrementalSemDedup2(kept4, Par.await(semKeys),
-        semCoarse4, semFine4, threshold = 0.999, idCol = "doc_id",
+      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
+          "p_crawl_sem2 semantic keys"),
+        sem2, threshold = 0.999, idCol = "doc_id",
         nprobe = 1, maxCellSize = 1000)
       kept5.groupBy(floor(col("doc_id") / 20000).cast("long").as("class"))
         .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
@@ -1696,7 +1704,7 @@ object PipelineQueries {
     // the FIVE-tier membrane over the PQ-COMPRESSED semantic artifact
     // (r19) — p_crawl_sem's fixture with the semantic snapshot storing
     // (id, cell, codes) only, both sides compared through encode∘decode
-    // (incrementalSemDedupPq): the +80000 reworded class carries a
+    // (incrementalSemDedup under Pq): the +80000 reworded class carries a
     // PRIOR doc's embedding, so its decoded cosine is EXACTLY 1.0 and
     // it blocks at ANY code budget. What the UNTRAINED fixed 4×16×16
     // budget trades is organic resolution: the clustered embeddings
@@ -1714,12 +1722,14 @@ object PipelineQueries {
       val prior = corpus.where(col("doc_id") % 3 === 1).localCheckpoint()
       val batch = corpus.where(col("doc_id") % 3 === 0)
         .unionByName(membraneReplicas(prior, prior, rewordedText))
-      val semKeys = Par.async(Similarity.semanticKeysPq(prior, ivfCentroids,
-        pqBooks16, idCol = "doc_id").localCheckpoint())
+      val pq = Pq(ivfCentroids, pqBooks16)
+      val semKeys = Par.async(Similarity.semanticKeys(prior, pq,
+        idCol = "doc_id").localCheckpoint())
       val kept4 = crawlGateSharedSnap(batch, prior,
         priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
-      val kept5 = Similarity.incrementalSemDedupPq(kept4, Par.await(semKeys),
-        ivfCentroids, pqBooks16, threshold = 0.999, idCol = "doc_id",
+      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
+          "p_crawl_sem_pq semantic keys"),
+        pq, threshold = 0.999, idCol = "doc_id",
         nprobe = 1, maxCellSize = 1000)
       kept5.groupBy(floor(col("doc_id") / 20000).cast("long").as("class"))
         .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
@@ -1796,12 +1806,13 @@ object PipelineQueries {
           page(rewordedText, col("doc_id") + 80000)))
       // §2.6: the semantic-key projection only needs `prior` — start its
       // job now so it overlaps the lexical gate's own jobs
-      val semKeys = Par.async(Similarity.semanticKeys(prior, ivfCentroids,
+      val semKeys = Par.async(Similarity.semanticKeys(prior, Flat(ivfCentroids),
         idCol = "doc_id").localCheckpoint())
       val kept4 = crawlGateSharedSnap(batch, prior,
         priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
-      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys),
-        ivfCentroids, threshold = 0.999, idCol = "doc_id", nprobe = 1,
+      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
+          "p_daily_full semantic keys"),
+        Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
         maxCellSize = 1000).localCheckpoint()
       val shipIn = Dedup.stripSeenParagraphs(kept5, Dedup.paragraphKeys(prior))
         .select(col("doc_id"), col("clean_text").as("text"))
@@ -1884,7 +1895,7 @@ object PipelineQueries {
       // §2.6: the semantic-key and span-key projections only need
       // `prior` — start their jobs now so they overlap the url tier and
       // the lexical gate's own jobs
-      val semKeys = Par.async(Similarity.semanticKeys(prior, ivfCentroids,
+      val semKeys = Par.async(Similarity.semanticKeys(prior, Flat(ivfCentroids),
         idCol = "doc_id").localCheckpoint())
       val spanKeysF = Par.async(
         Dedup.spanKeys(prior, n = 3, minDocs = 3).localCheckpoint())
@@ -1893,14 +1904,15 @@ object PipelineQueries {
         .drop("url").localCheckpoint()
       val kept4 = crawlGateSharedSnap(kept0, prior,
         priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
-      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys),
-        ivfCentroids, threshold = 0.999, idCol = "doc_id", nprobe = 1,
+      val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
+          "p_daily_full7 semantic keys"),
+        Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
         maxCellSize = 1000).localCheckpoint()
       val paraStripped = Dedup.stripSeenParagraphs(kept5,
           Dedup.paragraphKeys(prior))
         .select(col("doc_id"), col("clean_text").as("text"))
       val shipIn = Dedup.stripSeenSpans(paraStripped,
-          Par.await(spanKeysF), n = 3)
+          Par.await(spanKeysF, "p_daily_full7 span keys"), n = 3)
         .select(col("doc_id"), col("clean_text").as("text"))
         .join(kept5.select("doc_id", "lang"), "doc_id")
         .localCheckpoint()
@@ -1940,30 +1952,31 @@ object PipelineQueries {
     // prior; the snapshot advances with day-1 acceptances (gen 1);
     // day-2 gates against retain(gen1, 1), so +40000 replicas of the
     // AGED-OUT gen-0 prior RE-ADMIT while +60000 replicas of day-1
-    // acceptances stay blocked. Without stampSemanticGeneration /
-    // retainSemanticGenerations the +40000 class would stay blocked by
+    // acceptances stay blocked. Without the generation stamp/retain on
+    // the embedding snapshot the +40000 class would stay blocked by
     // an eternal embedding table — the same eternal-artifact bug r13-15
     // closed for the key/signature/canonical tiers
     "p_incr_semdedup_ttl" -> ((s, dir) => {
       val e = embTable(s, dir).select("vec_id", "embedding")
       val prior = e.where(col("vec_id") % 3 === 1)
-      val gen0 = Similarity.stampSemanticGeneration(
-        Similarity.semanticKeys(prior, ivfCentroids), 0L).localCheckpoint()
+      val gen0 = Dedup.stampGeneration(
+        Similarity.semanticKeys(prior, Flat(ivfCentroids)), "id", 0L)
+        .localCheckpoint()
       val day1 = e.where(col("vec_id") % 3 === 2)
         .unionByName(prior.where(col("vec_id") < 100)
           .withColumn("vec_id", col("vec_id") + 20000))
       val kept1 = Similarity.incrementalSemDedup(day1,
-        Similarity.retainSemanticGenerations(gen0, 0L), ivfCentroids,
+        Dedup.retainGenerations(gen0, "id", 0L), Flat(ivfCentroids),
         threshold = 0.999, nprobe = 1, maxCellSize = 1000).localCheckpoint()
-      val gen1 = gen0.unionByName(Similarity.stampSemanticGeneration(
-        Similarity.semanticKeys(kept1, ivfCentroids), 1L))
+      val gen1 = gen0.unionByName(Dedup.stampGeneration(
+        Similarity.semanticKeys(kept1, Flat(ivfCentroids)), "id", 1L))
       val day2 = e.where(col("vec_id") % 3 === 0)
         .unionByName(prior.where(col("vec_id") >= 100 && col("vec_id") < 200)
           .withColumn("vec_id", col("vec_id") + 40000))
         .unionByName(e.where(col("vec_id") % 3 === 2 && col("vec_id") < 100)
           .withColumn("vec_id", col("vec_id") + 60000))
       val kept2 = Similarity.incrementalSemDedup(day2,
-        Similarity.retainSemanticGenerations(gen1, 1L), ivfCentroids,
+        Dedup.retainGenerations(gen1, "id", 1L), Flat(ivfCentroids),
         threshold = 0.999, nprobe = 1, maxCellSize = 1000)
       kept1.select(lit(1).as("day"), col("vec_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("vec_id")))
@@ -1985,7 +1998,7 @@ object PipelineQueries {
     "p_semdedup_rekey" -> ((s, dir) => {
       val all = rekeyGolden(s)
       val prior = all.where(col("vec_id") % 3 === 1)
-      val snapStale = Similarity.semanticKeys(prior, rekeyStaleCents)
+      val snapStale = Similarity.semanticKeys(prior, Flat(rekeyStaleCents))
         .localCheckpoint()
       val batch = all.where(col("vec_id") % 3 === 0)
         .unionByName(prior.where(col("vec_id") < 150)
@@ -1996,11 +2009,11 @@ object PipelineQueries {
           .select(lit(path).as("path"), col("class"), col("n_kept"),
             col("sum_ids"))
       classes(Similarity.incrementalSemDedup(batch, snapStale,
-          rekeyStaleCents, threshold = 0.999, nprobe = 1,
+          Flat(rekeyStaleCents), threshold = 0.999, nprobe = 1,
           maxCellSize = 200), "stale")
         .unionByName(classes(Similarity.incrementalSemDedup(batch,
-          Similarity.rekeySemanticSnapshot(snapStale, rekeyNewCents),
-          rekeyNewCents, threshold = 0.999, nprobe = 1,
+          Similarity.rekeySemanticSnapshot(snapStale, Flat(rekeyNewCents)),
+          Flat(rekeyNewCents), threshold = 0.999, nprobe = 1,
           maxCellSize = 200), "rekeyed"))
         .orderBy("path", "class")
     }),
@@ -2012,13 +2025,13 @@ object PipelineQueries {
     // trained centroids for 16 effective cells, the k ≈ √n contract's
     // shape at 10¹⁰ docs where flat k is driver-intractable). The
     // stale path passes the +20000 replicas ungated (cells over cap);
-    // the composed re-key (rekeySemanticSnapshot2, one map-only pass)
+    // the composed re-key (rekeySemanticSnapshot, one map-only pass)
     // blocks them — the oracle replays BOTH quantizers, the composed
     // one via the two-level cell CTE chain
     "p_semdedup_rekey2" -> ((s, dir) => {
       val all = rekeyGolden(s)
       val prior = all.where(col("vec_id") % 3 === 1)
-      val snapStale = Similarity.semanticKeys(prior, rekeyStaleCents)
+      val snapStale = Similarity.semanticKeys(prior, Flat(rekeyStaleCents))
         .localCheckpoint()
       val batch = all.where(col("vec_id") % 3 === 0)
         .unionByName(prior.where(col("vec_id") < 150)
@@ -2028,13 +2041,13 @@ object PipelineQueries {
           .agg(count(lit(1)).as("n_kept"), sum("vec_id").as("sum_ids"))
           .select(lit(path).as("path"), col("class"), col("n_kept"),
             col("sum_ids"))
+      val rekey2 = TwoLevel(rekeyCoarse, rekeyFine)
       classes(Similarity.incrementalSemDedup(batch, snapStale,
-          rekeyStaleCents, threshold = 0.999, nprobe = 1,
+          Flat(rekeyStaleCents), threshold = 0.999, nprobe = 1,
           maxCellSize = 200), "stale")
-        .unionByName(classes(Similarity.incrementalSemDedup2(batch,
-          Similarity.rekeySemanticSnapshot2(snapStale, rekeyCoarse,
-            rekeyFine), rekeyCoarse, rekeyFine, threshold = 0.999,
-          nprobe = 1, maxCellSize = 200), "rekeyed2"))
+        .unionByName(classes(Similarity.incrementalSemDedup(batch,
+          Similarity.rekeySemanticSnapshot(snapStale, rekey2), rekey2,
+          threshold = 0.999, nprobe = 1, maxCellSize = 200), "rekeyed2"))
         .orderBy("path", "class")
     }),
 
@@ -2051,13 +2064,13 @@ object PipelineQueries {
     "p_semdedup_pq" -> ((s, dir) => {
       val all = rekeyGolden(s)
       val prior = all.where(col("vec_id") % 3 === 1)
-      val snap = Similarity.semanticKeysPq(prior, rekeyNewCents, pqBooks)
-        .localCheckpoint()
+      val pq = Pq(rekeyNewCents, pqBooks)
+      val snap = Similarity.semanticKeys(prior, pq).localCheckpoint()
       val batch = all.where(col("vec_id") % 3 === 0)
         .unionByName(prior.where(col("vec_id") < 150)
           .withColumn("vec_id", col("vec_id") + 20000))
-      Similarity.incrementalSemDedupPq(batch, snap, rekeyNewCents,
-          pqBooks, threshold = 0.999, nprobe = 1, maxCellSize = 200)
+      Similarity.incrementalSemDedup(batch, snap, pq,
+          threshold = 0.999, nprobe = 1, maxCellSize = 200)
         .groupBy(floor(col("vec_id") / 20000).cast("long").as("class"))
         .agg(count(lit(1)).as("n_kept"), sum("vec_id").as("sum_ids"))
         .orderBy("class")
@@ -2077,27 +2090,28 @@ object PipelineQueries {
     "p_semdedup_rekey_loop" -> ((s, dir) => {
       val all = rekeyGolden(s)
       val prior = all.where(col("vec_id") % 3 === 1)
-      val gen0 = Similarity.stampSemanticGeneration(
-        Similarity.semanticKeys(prior, rekeyStaleCents), 0L).localCheckpoint()
+      val gen0 = Dedup.stampGeneration(
+        Similarity.semanticKeys(prior, Flat(rekeyStaleCents)), "id", 0L)
+        .localCheckpoint()
       val day1 = all.where(col("vec_id") % 3 === 0 && col("vec_id") < 1000)
         .unionByName(prior.where(col("vec_id") < 150)
           .withColumn("vec_id", col("vec_id") + 20000))
       val kept1 = Similarity.incrementalSemDedup(day1,
-        Similarity.retainSemanticGenerations(gen0, 0L), rekeyStaleCents,
+        Dedup.retainGenerations(gen0, "id", 0L), Flat(rekeyStaleCents),
         threshold = 0.999, nprobe = 1, maxCellSize = 200).localCheckpoint()
       // the lifecycle turn: re-key the WHOLE stamped table (map-only,
       // stamps carried), advance with day-1 acceptances under the
       // grown quantizer
-      val gen1 = Similarity.rekeySemanticSnapshot(gen0, rekeyNewCents)
-        .unionByName(Similarity.stampSemanticGeneration(
-          Similarity.semanticKeys(kept1, rekeyNewCents), 1L))
+      val gen1 = Similarity.rekeySemanticSnapshot(gen0, Flat(rekeyNewCents))
+        .unionByName(Dedup.stampGeneration(
+          Similarity.semanticKeys(kept1, Flat(rekeyNewCents)), "id", 1L))
       val day2 = all.where(col("vec_id") % 3 === 0 && col("vec_id") >= 1000)
         .unionByName(prior.where(col("vec_id") >= 150 && col("vec_id") < 300)
           .withColumn("vec_id", col("vec_id") + 40000))
         .unionByName(day1.where(col("vec_id") % 3 === 0 && col("vec_id") < 150)
           .withColumn("vec_id", col("vec_id") + 60000))
       val kept2 = Similarity.incrementalSemDedup(day2,
-        Similarity.retainSemanticGenerations(gen1, 0L), rekeyNewCents,
+        Dedup.retainGenerations(gen1, "id", 0L), Flat(rekeyNewCents),
         threshold = 0.999, nprobe = 1, maxCellSize = 200)
       kept1.select(lit(1).as("day"), col("vec_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("vec_id")))

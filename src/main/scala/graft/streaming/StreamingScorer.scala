@@ -763,7 +763,12 @@ object StreamingIngest {
     * with the SAME default cap as the batch twin (mismatched defaults
     * would silently break parity out of the box); parity holds whenever
     * no cell exceeds the cap on either side (the batch gate also caps
-    * ITS probe side — the banded-tier convention). Compose AFTER [[cleanDocuments]]: the
+    * ITS probe side — the banded-tier convention). Every quantizer form
+    * of the batch gate applies verbatim: `nprobe` fans over the coarse
+    * cells of a two-level quantizer, and a PQ snapshot's cell lists
+    * hold decoded vectors while the feed vector is encode∘decoded
+    * through the same codebooks (exact replicas of snapshot docs block
+    * at any code budget). Compose AFTER [[cleanDocuments]]: the
     * lexical tiers are cheaper and catch everything but the paraphrase
     * class this tier exists for.
     *
@@ -772,13 +777,13 @@ object StreamingIngest {
     * re-run the snapshot cell assignment every micro-batch).
     *
     * RE-KEY HANDOFF (the quantizer-growth lifecycle over a stream):
-    * `priorCells` and `centroids` are fixed for the life of the query
+    * `priorCells` and `quantizer` are fixed for the life of the query
     * by design — the tier is STATELESS against the static snapshot
     * (no dropDuplicates state, no watermark), so swapping in a grown
     * quantizer is a plain restart: stop the query, re-key the
     * persisted snapshot ([[graft.ext.Similarity.rekeySemanticSnapshot]]
     * — map-only, `_gen` carried), and start a new query on the
-    * re-keyed snapshot + new centroids. Nothing is lost at the seam:
+    * re-keyed snapshot + new quantizer. Nothing is lost at the seam:
     * there is no tier state to migrate, sink offsets live with the
     * SINK's checkpoint, and post-swap decisions equal the batch gate
     * under the new quantizer row-for-row (StreamingSpec pins the
@@ -786,83 +791,15 @@ object StreamingIngest {
     * closure capture — the cell lists are checkpointed at construction
     * precisely so the plan cannot silently half-read two quantizers. */
   def semanticGate(stream: DataFrame, priorCells: DataFrame,
-      centroids: Array[Array[Double]], threshold: Double,
+      quantizer: graft.ext.CellQuantizer, threshold: Double,
       embCol: String = "embedding", nprobe: Int = 1,
       maxCellSize: Int = 10000, roundDigits: Int = 5): DataFrame = {
-    import graft.ext.Similarity
-    require(priorCells.columns.toSeq == Seq("id", "cell", "emb"),
-      "priorCells must be a semanticKeys projection (id, cell, emb); " +
-        "got " + priorCells.columns.mkString(", "))
-    require(nprobe >= 1 && nprobe <= centroids.length,
-      s"nprobe must be in [1, ${centroids.length}], got $nprobe")
-    semanticGateImpl(stream, priorCells,
-      v => Similarity.ivfCells(v, centroids, nprobe), col(embCol),
-      threshold, embCol, nprobe, maxCellSize, roundDigits)
-  }
-
-  /** [[semanticGate]] under a TWO-LEVEL quantizer — the streaming twin
-    * of [[graft.ext.Similarity.incrementalSemDedup2]] (every gate
-    * form keeps its twin): same stateless stream-static shape, the
-    * composed cell id standing in for the flat one; `priorCells` is a
-    * `semanticKeys2` / `rekeySemanticSnapshot2` projection, `nprobe`
-    * fans over COARSE centroids. The re-key handoff note on
-    * [[semanticGate]] applies verbatim. */
-  def semanticGate2(stream: DataFrame, priorCells: DataFrame,
-      coarse: Array[Array[Double]], fine: Array[Array[Double]],
-      threshold: Double, embCol: String = "embedding", nprobe: Int = 1,
-      maxCellSize: Int = 10000, roundDigits: Int = 5): DataFrame = {
-    import graft.ext.Similarity
-    require(priorCells.columns.toSeq == Seq("id", "cell", "emb"),
-      "priorCells must be a semanticKeys projection (id, cell, emb); " +
-        "got " + priorCells.columns.mkString(", "))
-    require(nprobe >= 1 && nprobe <= coarse.length,
-      s"nprobe must be in [1, ${coarse.length}] (coarse probes), got $nprobe")
-    semanticGateImpl(stream, priorCells,
-      v => Similarity.ivf2Cells(v, coarse, fine, nprobe), col(embCol),
-      threshold, embCol, nprobe, maxCellSize, roundDigits)
-  }
-
-  /** [[semanticGate]] over a PQ-COMPRESSED snapshot — the streaming
-    * twin of [[graft.ext.Similarity.incrementalSemDedupPq]]: the
-    * static per-cell lists hold DECODED vectors (decoded once at
-    * construction — the long-stream discipline), the feed vector is
-    * encode∘decoded through the same codebooks, verification is the
-    * shared rounded decoded cosine. Exact replicas of snapshot docs
-    * block at any code budget (decoded cosine exactly 1.0). */
-  def semanticGatePq(stream: DataFrame, priorCodes: DataFrame,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], threshold: Double,
-      embCol: String = "embedding", nprobe: Int = 1,
-      maxCellSize: Int = 10000, roundDigits: Int = 5): DataFrame = {
-    import graft.ext.Similarity
-    require(priorCodes.columns.toSeq == Seq("id", "cell", "codes"),
-      "priorCodes must be a semanticKeysPq projection (id, cell, " +
-        "codes); got " + priorCodes.columns.mkString(", "))
-    require(nprobe >= 1 && nprobe <= centroids.length,
-      s"nprobe must be in [1, ${centroids.length}], got $nprobe")
-    semanticGateImpl(stream,
-      priorCodes.select(col("id"), col("cell"),
-        Similarity.pqDecode(col("codes"), codebooks).as("emb")),
-      v => Similarity.ivfCells(v, centroids, nprobe),
-      Similarity.pqDecode(Similarity.pqCodes(col(embCol), codebooks),
-        codebooks),
-      threshold, embCol, nprobe, maxCellSize, roundDigits)
-  }
-
-  /** Shared body of the semantic streaming twins — the quantizer
-    * enters ONLY through `probeCells`, the snapshot's vector form only
-    * through `priorProj` (a (cell, emb) projection) and `batchVec`
-    * (the feed-side comparison vector), mirroring the batch
-    * `incrementalSemDedupImpl` discipline so twins and batch gates
-    * cannot drift. */
-  private def semanticGateImpl(stream: DataFrame, priorProj: DataFrame,
-      probeCells: Column => Column, batchVec: Column, threshold: Double,
-      embCol: String, nprobe: Int, maxCellSize: Int,
-      roundDigits: Int): DataFrame = {
     import graft.ext.Similarity
     require(stream.isStreaming,
       "semanticGate is the streaming twin; batch frames use Similarity.incrementalSemDedup")
-    require(!priorProj.isStreaming, "priorCells must be a static snapshot")
+    require(!priorCells.isStreaming, "priorCells must be a static snapshot")
+    val probeCells = quantizer.probeCells(col(embCol), nprobe)
+    quantizer.requireSnapshot(priorCells, "semanticGate")
     val staged = Seq("_scells", "_sbv") ++ (0 until nprobe).flatMap(i =>
       Seq(s"_sc$i", s"_sps$i"))
     staged.foreach { c =>
@@ -870,17 +807,20 @@ object StreamingIngest {
         s"the feed already carries a column named $c — semanticGate " +
           "stages tier state there; rename the input column")
     }
+    // PQ codes are decoded once here, at construction (the long-stream
+    // discipline), not per micro-batch
     val cellLists = Similarity.cappedCells(
-        priorProj.select(col("cell"),
-          struct(col("emb").as("e"),
+        priorCells.select(col("cell"),
+            quantizer.decode(col(quantizer.payload)).as("emb"))
+          .select(col("cell"), struct(col("emb").as("e"),
             Similarity.l2Norm(col("emb")).as("n")).as("_p")),
         maxCellSize)
       .groupBy("cell").agg(collect_list(col("_p")).as("_sps"))
       .localCheckpoint()
     // the comparison vector is staged ONCE per row (_sbv): the PQ twin's
     // encode∘decode must not re-run per probe × per candidate
-    val withCells = stream.withColumn("_scells", probeCells(col(embCol)))
-      .withColumn("_sbv", batchVec)
+    val withCells = stream.withColumn("_scells", probeCells)
+      .withColumn("_sbv", quantizer.compareVec(col(embCol)))
     val joined = (0 until nprobe).foldLeft(withCells) { (df, i) =>
       df.withColumn(s"_sc$i", element_at(col("_scells"), i + 1))
         .join(cellLists.select(col("cell").as(s"_sc$i"),

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.ext.CellQuantizer
+
 /** Ad-hoc scale experiment (not part of the library surface): replicate
   * the documents corpus N× with distinct doc ids and re-run the heavy
   * pipeline operators, reporting the observed scaling exponent. A
@@ -285,8 +287,9 @@ object ScaleProbe {
       val cents = Similarity.kmeansCentroids(prior, k = kCells,
         sampleRows = math.max(2048, kCells))
       time("incremental_semdedup") {
+        val quantizer = CellQuantizer.Flat(cents)
         Similarity.incrementalSemDedup(batch,
-          Similarity.semanticKeys(prior, cents), cents,
+          Similarity.semanticKeys(prior, quantizer), quantizer,
           threshold = 0.95, nprobe = 2, maxCellSize = 20000).count()
       }
       println(s"[scale] semdedup vectors: $nEmb cells: $kCells")
@@ -322,18 +325,18 @@ object ScaleProbe {
       val prior = bigEmb.where(col("vec_id") % 3 =!= 0)
       val batch = bigEmb.where(col("vec_id") % 3 === 0)
       val cap = 1000
-      val staleCents = Similarity.kmeansCentroids(prior, k = 16)
-      val snapStale = Similarity.semanticKeys(prior, staleCents).localCheckpoint()
+      val stale = CellQuantizer.Flat(Similarity.kmeansCentroids(prior, k = 16))
+      val snapStale = Similarity.semanticKeys(prior, stale).localCheckpoint()
       val kNew = math.max(16, math.sqrt(nEmb.toDouble).toInt)
-      val newCents = Similarity.kmeansCentroids(prior, k = kNew,
-        sampleRows = math.max(2048, kNew))
+      val grown = CellQuantizer.Flat(Similarity.kmeansCentroids(prior,
+        k = kNew, sampleRows = math.max(2048, kNew)))
       time(s"semdedup_rekey_x$m") {
-        Similarity.rekeySemanticSnapshot(snapStale, newCents).count()
+        Similarity.rekeySemanticSnapshot(snapStale, grown).count()
       }
-      val rekeyed = Similarity.rekeySemanticSnapshot(snapStale, newCents)
+      val rekeyed = Similarity.rekeySemanticSnapshot(snapStale, grown)
         .localCheckpoint()
       time(s"semdedup_rekeyed_gate_x$m") {
-        Similarity.incrementalSemDedup(batch, rekeyed, newCents,
+        Similarity.incrementalSemDedup(batch, rekeyed, grown,
           threshold = 0.95, nprobe = 2, maxCellSize = cap).count()
       }
       // the decay the lifecycle exists to close, via the cap report:
@@ -351,13 +354,14 @@ object ScaleProbe {
         val k1 = math.max(4, math.sqrt(kNew.toDouble).toInt)
         val (c2, f2) = Similarity.trainQuantizer2(prior, k1, k1,
           sampleRows = math.max(2048, k1))
+        val grown2 = CellQuantizer.TwoLevel(c2, f2)
         time(s"semdedup_rekey2_x$m") {
-          Similarity.rekeySemanticSnapshot2(snapStale, c2, f2).count()
+          Similarity.rekeySemanticSnapshot(snapStale, grown2).count()
         }
-        val rekeyed2 = Similarity.rekeySemanticSnapshot2(snapStale, c2, f2)
+        val rekeyed2 = Similarity.rekeySemanticSnapshot(snapStale, grown2)
           .localCheckpoint()
         time(s"semdedup_rekeyed2_gate_x$m") {
-          Similarity.incrementalSemDedup2(batch, rekeyed2, c2, f2,
+          Similarity.incrementalSemDedup(batch, rekeyed2, grown2,
             threshold = 0.95, nprobe = 2, maxCellSize = cap).count()
         }
         println(s"[scale] rekey2 x$m: composed ${k1}x$k1 cells ungated " +
@@ -385,9 +389,9 @@ object ScaleProbe {
       time("pq_snapshot_bytes") {
         val raw = java.nio.file.Files.createTempDirectory("probe_snap_raw")
         val pq = java.nio.file.Files.createTempDirectory("probe_snap_pq")
-        Similarity.semanticKeys(emb, cents)
+        Similarity.semanticKeys(emb, CellQuantizer.Flat(cents))
           .write.mode("overwrite").parquet(raw.toString)
-        Similarity.semanticKeysPq(emb, cents, books)
+        Similarity.semanticKeys(emb, CellQuantizer.Pq(cents, books))
           .write.mode("overwrite").parquet(pq.toString)
         val (rb, pb) = (dirBytes(raw), dirBytes(pq))
         println(f"[scale]   raw snapshot $rb%10d B   pq snapshot $pb%10d B   ratio ${rb.toDouble / pb}%.1fx")
@@ -408,16 +412,16 @@ object ScaleProbe {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         .select("vec_id", "embedding")
       val k = math.max(8, math.sqrt(emb.count().toDouble).toInt / 2)
-      val cents = Similarity.kmeansCentroids(emb, k = k)
-      val snap = Similarity.semanticKeys(emb, cents).localCheckpoint()
+      val quantizer = CellQuantizer.Flat(Similarity.kmeansCentroids(emb, k = k))
+      val snap = Similarity.semanticKeys(emb, quantizer).localCheckpoint()
       val q = emb.where(col("vec_id") % 20 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         .localCheckpoint()
       time("ann_recall_table") {
-        val rows = Similarity.annRecallProbe(snap, q, cents, k = 10,
-          nprobes = Seq(1, 2, 4, 8, k)).orderBy("nprobe").collect()
+        val rows = Similarity.annRecallProbe(snap, q, quantizer, k = 10,
+          probes = Seq(1, 2, 4, 8, k).map((_, 1))).orderBy("nprobe").collect()
         rows.foreach(r => println(
-          f"[scale]   nprobe=${r.getInt(0)}%-4d recall@10=${r.getDouble(4)}%.4f"))
+          f"[scale]   nprobe=${r.getInt(0)}%-4d recall@10=${r.getDouble(5)}%.4f"))
         rows.length.toLong
       }
     }

@@ -276,22 +276,23 @@ class BucketedSnapshotSpec extends AnyFunSuite {
       .select("vec_id", "embedding")
     val cents = Similarity.kmeansCentroids(
       emb.where(col("vec_id") % 3 === 1), k = 4)
-    val stamped = Similarity.stampSemanticGeneration(
-      Similarity.semanticKeys(emb.where(col("vec_id") % 3 === 1), cents), 0L)
+    val flat = graft.ext.CellQuantizer.Flat(cents)
+    val stamped = graft.ext.Dedup.stampGeneration(
+      Similarity.semanticKeys(emb.where(col("vec_id") % 3 === 1), flat), "id", 0L)
     BucketedSnapshot.write(stamped, "bk_sem_cells", tmpDir("bk_sem"), "id", 8)
     try {
       // the semantic tier's retention pass (max-(gen, cell, emb) groupBy
       // on id) must ride the bucketing — same contract as the signature
       // table, the other wide snapshot artifact
-      val gate = Similarity.retainSemanticGenerations(
-        BucketedSnapshot.read(spark, "bk_sem_cells"), minGen = 0L)
+      val gate = graft.ext.Dedup.retainGenerations(
+        BucketedSnapshot.read(spark, "bk_sem_cells"), "id", minGen = 0L)
       val plan = gate.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), plan.take(800))
       assert(gate.count() > 0)
       // and the retained projection feeds the gate end-to-end
       assert(gate.columns.toSeq == Seq("id", "cell", "emb"))
       val kept = Similarity.incrementalSemDedup(
-        emb.where(col("vec_id") % 3 === 0), gate, cents, threshold = 0.999)
+        emb.where(col("vec_id") % 3 === 0), gate, flat, threshold = 0.999)
       assert(kept.count() > 0)
     } finally spark.sql("DROP TABLE IF EXISTS bk_sem_cells")
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{Dedup, Similarity}
+import graft.ext.{CellQuantizer, Dedup, Similarity}
 
 /** The skew-safe cap primitive (r18): `cappedCells` / `cappedBuckets`
   * are a count-aggregate + null-safe LEFT ANTI join-back, NOT a
@@ -163,8 +163,9 @@ class CapPrimitiveSpec extends AnyFunSuite {
       (i.toLong, Array.fill(8)((i % 4 + 1).toFloat).toSeq)).toDF("vec_id", "embedding")
     val cents = Array.tabulate(4)(c => Array.fill(8)(c + 1.0))
     val kept = Similarity.incrementalSemDedup(
-      emb.where($"vec_id" >= 20), Similarity.semanticKeys(emb.where($"vec_id" < 20), cents),
-      cents, threshold = 0.999, nprobe = 1, maxCellSize = 3)
+      emb.where($"vec_id" >= 20),
+      Similarity.semanticKeys(emb.where($"vec_id" < 20), CellQuantizer.Flat(cents)),
+      CellQuantizer.Flat(cents), threshold = 0.999, nprobe = 1, maxCellSize = 3)
     assert(!kept.queryExecution.executedPlan.toString.contains("WindowExec"))
     val docs = (0 until 12).map(i => (i.toLong,
       if (i < 8) "the same boilerplate sentence repeated everywhere always"

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ext.CellQuantizer.Flat
 import graft.ext.{Dedup, Similarity}
 import graft.queries.PipelineQueries
 
@@ -71,9 +72,9 @@ class CapstoneCapReportSpec extends AnyFunSuite {
     // share ONE cell by construction — the report proves even that
     // stays inside); accounting exact at nprobe = 1
     val sem = Similarity.semanticCapReport(batch,
-        Similarity.semanticKeys(prior, PipelineQueries.ivfCentroids,
+        Similarity.semanticKeys(prior, Flat(PipelineQueries.ivfCentroids),
           idCol = "doc_id"),
-        PipelineQueries.ivfCentroids, maxCellSize = 1000)
+        Flat(PipelineQueries.ivfCentroids), maxCellSize = 1000)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(sem("prior")._2 == 0L && sem("prior")._4 == 0L,

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Similarity
+import graft.ext.CellQuantizer.{Flat, TwoLevel}
+import graft.ext.{Dedup, Similarity}
 
 /** The TWO-LEVEL (coarse × fine residual) quantizer — the re-key
   * lifecycle's growth path once k ≈ √n outgrows flat driver Lloyd:
@@ -34,6 +35,7 @@ class Ivf2Spec extends AnyFunSuite {
     Array.tabulate(4)(b => Array.tabulate(64)(i => if (i % 16 / 4 == b) 2.0 else 0.0))
   private val fine4: Array[Array[Double]] =
     Array.tabulate(4)(j => Array.tabulate(64)(i => if (i % 4 == j) 8.0 else 0.0))
+  private val two4 = TwoLevel(coarse4, fine4)
 
   test("composed assignment separates the 16 clusters; ids in [0, k1*k2); probe fans over coarse") {
     import spark.implicits._
@@ -59,11 +61,11 @@ class Ivf2Spec extends AnyFunSuite {
       .unionByName(prior.where(col("vec_id") < 120)
         .withColumn("vec_id", col("vec_id") + 20000))
     val keptFlat = Similarity.incrementalSemDedup(batch,
-        Similarity.semanticKeys(prior, flat16), flat16,
+        Similarity.semanticKeys(prior, Flat(flat16)), Flat(flat16),
         threshold = 0.999, nprobe = 1, maxCellSize = 200)
       .select("vec_id").as[Long].collect().toSet
-    val kept2 = Similarity.incrementalSemDedup2(batch,
-        Similarity.semanticKeys2(prior, coarse4, fine4), coarse4, fine4,
+    val kept2 = Similarity.incrementalSemDedup(batch,
+        Similarity.semanticKeys(prior, two4), two4,
         threshold = 0.999, nprobe = 1, maxCellSize = 200)
       .select("vec_id").as[Long].collect().toSet
     assert(keptFlat == kept2,
@@ -75,8 +77,8 @@ class Ivf2Spec extends AnyFunSuite {
     assert(kept2.size * 10 >= batch.where(col("vec_id") < 20000).count() * 9)
     // nprobe bound is the COARSE count
     intercept[IllegalArgumentException] {
-      Similarity.incrementalSemDedup2(batch,
-        Similarity.semanticKeys2(prior, coarse4, fine4), coarse4, fine4,
+      Similarity.incrementalSemDedup(batch,
+        Similarity.semanticKeys(prior, two4), two4,
         threshold = 0.999, nprobe = 5)
     }
   }
@@ -84,26 +86,26 @@ class Ivf2Spec extends AnyFunSuite {
   test("rekeySemanticSnapshot2 == fresh semanticKeys2; _gen carried; composed re-key restores an over-cap stale gate") {
     import spark.implicits._
     val staleCents = Array(flat16(0), flat16(8)) // undersized flat k=2
-    val snapStale = Similarity.semanticKeys(corpus, staleCents).localCheckpoint()
-    val rekeyed = Similarity.rekeySemanticSnapshot2(snapStale, coarse4, fine4)
-    val fresh = Similarity.semanticKeys2(corpus, coarse4, fine4)
+    val snapStale = Similarity.semanticKeys(corpus, Flat(staleCents)).localCheckpoint()
+    val rekeyed = Similarity.rekeySemanticSnapshot(snapStale, two4)
+    val fresh = Similarity.semanticKeys(corpus, two4)
     assert(rekeyed.select("id", "cell").except(fresh.select("id", "cell")).isEmpty &&
       fresh.select("id", "cell").except(rekeyed.select("id", "cell")).isEmpty)
-    val rekeyedGen = Similarity.rekeySemanticSnapshot2(
-      Similarity.stampSemanticGeneration(snapStale, 5L), coarse4, fine4)
+    val rekeyedGen = Similarity.rekeySemanticSnapshot(
+      Dedup.stampGeneration(snapStale, "id", 5L), two4)
     assert(rekeyedGen.columns.toSeq == Seq("id", "cell", "emb", "_gen"))
     assert(rekeyedGen.select("_gen").distinct().as[Long].collect().toSeq == Seq(5L))
     intercept[IllegalArgumentException] {
-      Similarity.rekeySemanticSnapshot2(corpus, coarse4, fine4)
+      Similarity.rekeySemanticSnapshot(corpus, two4)
     }
     // lifecycle: stale k=2 cells (~400 each) blow a 200-cap — an exact
     // replica passes ungated; the composed re-key (cells ~50) blocks it
     val replica = corpus.where(col("vec_id") === 7L)
       .select((col("vec_id") + 5000).as("vec_id"), col("embedding"))
     val keptStale = Similarity.incrementalSemDedup(replica, snapStale,
-      staleCents, threshold = 0.999, nprobe = 1, maxCellSize = 200).count()
-    val keptRekey = Similarity.incrementalSemDedup2(replica, rekeyed,
-      coarse4, fine4, threshold = 0.999, nprobe = 1, maxCellSize = 200).count()
+      Flat(staleCents), threshold = 0.999, nprobe = 1, maxCellSize = 200).count()
+    val keptRekey = Similarity.incrementalSemDedup(replica, rekeyed,
+      two4, threshold = 0.999, nprobe = 1, maxCellSize = 200).count()
     assert(keptStale == 1L && keptRekey == 0L, s"$keptStale / $keptRekey")
     // occupancy reads the composed snapshot unchanged (a composed cell
     // id is just a cell id)
@@ -113,12 +115,12 @@ class Ivf2Spec extends AnyFunSuite {
 
   test("ivf2TopKFromSnapshot: full (k1 × k2) probe ≡ brute force; recall probe monotone to 1.0; cap report parity with the flat tier") {
     import spark.implicits._
-    val snap = Similarity.semanticKeys2(
-      corpus.where(col("vec_id") % 3 === 1), coarse4, fine4).localCheckpoint()
+    val snap = Similarity.semanticKeys(
+      corpus.where(col("vec_id") % 3 === 1), two4).localCheckpoint()
     val q = corpus.where(col("vec_id") % 3 === 0 && col("vec_id") < 45)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .localCheckpoint()
-    val full = Similarity.ivf2TopKFromSnapshot(snap, q, coarse4, fine4,
+    val full = Similarity.ivfTopKFromSnapshot(snap, q, two4,
       nprobe = 4, k = 4, fineProbe = 4)
       .select("qid", "vec_id", "cos", "rk")
     val brute = Similarity.bruteTopK(
@@ -126,12 +128,12 @@ class Ivf2Spec extends AnyFunSuite {
       q, k = 4).select("qid", "vec_id", "cos", "rk")
     assert(full.except(brute).isEmpty && brute.except(full).isEmpty)
     // a narrow probe returns a SUBSET of the full read's candidates
-    val narrow = Similarity.ivf2TopKFromSnapshot(snap, q, coarse4, fine4,
+    val narrow = Similarity.ivfTopKFromSnapshot(snap, q, two4,
       nprobe = 1, k = 4).select("qid", "vec_id")
     assert(narrow.join(snap.select(col("id").as("vec_id")), Seq("vec_id"),
       "left_anti").isEmpty)
     // recall probe: monotone in the probe pair, exactly 1.0 at full
-    val probe = Similarity.annRecallProbe2(snap, q, coarse4, fine4, k = 4,
+    val probe = Similarity.annRecallProbe(snap, q, two4, k = 4,
         probes = Seq((1, 1), (2, 2), (4, 4)))
       .orderBy("nprobe").select("recall").as[Double].collect()
     assert(probe.length == 3 && probe.sliding(2).forall(p => p(0) <= p(1)),
@@ -140,10 +142,10 @@ class Ivf2Spec extends AnyFunSuite {
     // composed cap report: same shape and sides as the flat tier's —
     // the two-level recall ledger reads identically
     val rFlat = Similarity.semanticCapReport(
-      corpus.where(col("vec_id") % 3 === 0), snap, flat16,
+      corpus.where(col("vec_id") % 3 === 0), snap, Flat(flat16),
       maxCellSize = 40)
-    val r2 = Similarity.semanticCapReport2(
-      corpus.where(col("vec_id") % 3 === 0), snap, coarse4, fine4,
+    val r2 = Similarity.semanticCapReport(
+      corpus.where(col("vec_id") % 3 === 0), snap, two4,
       maxCellSize = 40)
     assert(r2.columns.toSeq == rFlat.columns.toSeq)
     assert(r2.select("side").as[String].collect().sorted.toSeq ==
@@ -154,11 +156,11 @@ class Ivf2Spec extends AnyFunSuite {
       .select("n_rows").as[Long].head()
     assert(nBatch == corpus.where(col("vec_id") % 3 === 0).count())
     intercept[IllegalArgumentException] {
-      Similarity.ivf2TopKFromSnapshot(snap, q, coarse4, fine4,
+      Similarity.ivfTopKFromSnapshot(snap, q, two4,
         nprobe = 1, k = 4, fineProbe = 9)
     }
     intercept[IllegalArgumentException] {
-      Similarity.ivf2TopKFromSnapshot(corpus, q, coarse4, fine4, 1, 4)
+      Similarity.ivfTopKFromSnapshot(corpus, q, two4, 1, 4)
     }
   }
 
@@ -189,13 +191,13 @@ class Ivf2Spec extends AnyFunSuite {
       Similarity.trainQuantizer2(blobs, k1 = 50, k2 = 2, sampleRows = 40)
     }
     // snapshot-trained == corpus-trained (same sample ids, same core)
-    val snap = Similarity.semanticKeys(blobs, c3)
-    val (sc, sf) = Similarity.trainQuantizer2FromSnapshot(snap, 3, 3,
+    val snap = Similarity.semanticKeys(blobs, Flat(c3))
+    val TwoLevel(sc, sf) = Similarity.trainQuantizerFromSnapshot(snap, 3, 3,
       sampleRows = 900, iters = 12)
     assert(sc.zip(c3).forall { case (a, b) => a.sameElements(b) } &&
       sf.zip(f3).forall { case (a, b) => a.sameElements(b) })
     intercept[IllegalArgumentException] {
-      Similarity.trainQuantizer2FromSnapshot(blobs, 3, 3)
+      Similarity.trainQuantizerFromSnapshot(blobs, 3, 3)
     }
   }
 }

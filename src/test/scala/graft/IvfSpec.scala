@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Similarity
+import graft.ext.CellQuantizer.Flat
+import graft.ext.{Dedup, Similarity}
 
 class IvfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -103,9 +104,9 @@ class IvfSpec extends AnyFunSuite {
     val novel = base.filter(_._1 % 3 == 0)
     val batch = (novel ++ replicas).toSeq.toDF("vec_id", "embedding")
     val cents = Similarity.kmeansCentroids(prior, k = 3, sampleRows = 900, iters = 10)
-    val snap = Similarity.semanticKeys(prior, cents)
+    val snap = Similarity.semanticKeys(prior, Flat(cents))
     assert(snap.columns.toSeq == Seq("id", "cell", "emb"))
-    val kept = Similarity.incrementalSemDedup(batch, snap, cents,
+    val kept = Similarity.incrementalSemDedup(batch, snap, Flat(cents),
       threshold = 0.999, nprobe = 2)
     val keptIds = kept.select("vec_id").as[Long].collect().toSet
     // replicas: blocked whenever a probed cell holds their source (jitter
@@ -122,7 +123,7 @@ class IvfSpec extends AnyFunSuite {
       !plan.contains("BroadcastNestedLoopJoin"), plan.take(600))
     // non-projection snapshot rejects loudly
     intercept[IllegalArgumentException] {
-      Similarity.incrementalSemDedup(batch, prior, cents, 0.9)
+      Similarity.incrementalSemDedup(batch, prior, Flat(cents), 0.9)
     }
   }
 
@@ -143,7 +144,7 @@ class IvfSpec extends AnyFunSuite {
     val batch = batchRows.map { case (i, a) => (i, a.toSeq) }.toDF("vec_id", "embedding")
     val cents = Similarity.kmeansCentroids(prior, k = 4, sampleRows = 80)
     val kept = Similarity.incrementalSemDedup(batch,
-        Similarity.semanticKeys(prior, cents), cents,
+        Similarity.semanticKeys(prior, Flat(cents)), Flat(cents),
         threshold = 0.8, nprobe = 2)
       .select("vec_id").as[Long].collect().toSet
     // brute-force oracle of the rule, mirroring IvfCells' probe order
@@ -172,10 +173,10 @@ class IvfSpec extends AnyFunSuite {
         s"extra=${kept -- (batchRows.map(_._1).toSet -- wantDropped)}")
     // empty prior: everything kept; empty batch: empty out, schema intact
     assert(Similarity.incrementalSemDedup(batch,
-      Similarity.semanticKeys(prior.where($"vec_id" < 0), cents), cents,
+      Similarity.semanticKeys(prior.where($"vec_id" < 0), Flat(cents)), Flat(cents),
       threshold = 0.8).count() == batchRows.length)
     val eb = Similarity.incrementalSemDedup(batch.where($"vec_id" < 0),
-      Similarity.semanticKeys(prior, cents), cents, threshold = 0.8)
+      Similarity.semanticKeys(prior, Flat(cents)), Flat(cents), threshold = 0.8)
     assert(eb.columns.toSeq == Seq("vec_id", "embedding") && eb.count() == 0)
   }
 
@@ -184,8 +185,8 @@ class IvfSpec extends AnyFunSuite {
     val prior = (0 until 60).map(i => (i.toLong,
       Array.fill(8)((i % 3 + 1).toFloat).toSeq)).toDF("vec_id", "embedding")
     val cents = Array(Array.fill(8)(1.0), Array.fill(8)(2.0), Array.fill(8)(3.0))
-    val gen0 = Similarity.stampSemanticGeneration(
-      Similarity.semanticKeys(prior, cents), 0L)
+    val gen0 = Dedup.stampGeneration(
+      Similarity.semanticKeys(prior, Flat(cents)), "id", 0L)
     assert(gen0.columns.toSeq == Seq("id", "cell", "emb", "_gen"))
     // a replica batch is blocked under retain(0)...
     val batch = Seq((1000L, Array.fill(8)(1.0f).toSeq),
@@ -193,22 +194,22 @@ class IvfSpec extends AnyFunSuite {
     val cents2 = cents :+ Array.fill(8)(9.0)
     def kept(minGen: Long, g: org.apache.spark.sql.DataFrame) =
       Similarity.incrementalSemDedup(batch,
-        Similarity.retainSemanticGenerations(g, minGen), cents2,
+        Dedup.retainGenerations(g, "id", minGen), Flat(cents2),
         threshold = 0.999).select("vec_id").as[Long].collect().toSet
     assert(kept(0L, gen0) == Set(1001L))
     // ...and re-admits once the gen-0 stamps age out
     assert(kept(1L, gen0) == Set(1000L, 1001L))
     // a re-stamp takes the max generation: the same id re-accepted at
     // gen 2 keeps blocking at minGen = 2 (latest row wins per id)
-    val gen2 = gen0.unionByName(Similarity.stampSemanticGeneration(
-      Similarity.semanticKeys(prior.where($"vec_id" === 0L), cents), 2L))
+    val gen2 = gen0.unionByName(Dedup.stampGeneration(
+      Similarity.semanticKeys(prior.where($"vec_id" === 0L), Flat(cents)), "id", 2L))
     assert(kept(2L, gen2) == Set(1001L))
     // shape loud-rejects
     intercept[IllegalArgumentException] {
-      Similarity.stampSemanticGeneration(prior, 0L)
+      Dedup.stampGeneration(prior, "id", 0L)
     }
     intercept[IllegalArgumentException] {
-      Similarity.retainSemanticGenerations(gen0.drop("_gen"), 0L)
+      Dedup.retainGenerations(gen0.drop("_gen"), "id", 0L)
     }
   }
 
@@ -222,16 +223,16 @@ class IvfSpec extends AnyFunSuite {
       (900L, cold)).toDF("vec_id", "embedding")
     val batch = Seq((1000L, hot.head), (1001L, cold)).toDF("vec_id", "embedding")
     val cents = Array(Array.fill(8)(1.0), Array.fill(8)(-4.0))
-    val snap = Similarity.semanticKeys(prior, cents)
+    val snap = Similarity.semanticKeys(prior, Flat(cents))
     // cap below the hot cell's 50 members: the hot-cell batch replica
     // PASSES the tier (cell dropped on the prior side), the cold one is
     // still blocked through its small cell
-    val kept = Similarity.incrementalSemDedup(batch, snap, cents,
+    val kept = Similarity.incrementalSemDedup(batch, snap, Flat(cents),
         threshold = 0.999, nprobe = 1, maxCellSize = 10)
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(1000L), kept)
     // with the cap above the cell size both are blocked
-    val kept2 = Similarity.incrementalSemDedup(batch, snap, cents,
+    val kept2 = Similarity.incrementalSemDedup(batch, snap, Flat(cents),
         threshold = 0.999, nprobe = 1, maxCellSize = 100)
       .select("vec_id").as[Long].collect().toSet
     assert(kept2.isEmpty, kept2)
@@ -245,7 +246,7 @@ class IvfSpec extends AnyFunSuite {
       ("b-22", Array.tabulate(8)(i => if (i % 2 == 0) 4.0f else -4.0f).toSeq))
       .toDF("doc", "embedding")
     val sKept = Similarity.incrementalSemDedup(sBatch,
-        Similarity.semanticKeys(sPrior, cents, idCol = "doc"), cents,
+        Similarity.semanticKeys(sPrior, Flat(cents), idCol = "doc"), Flat(cents),
         threshold = 0.999, idCol = "doc", nprobe = 2)
       .select("doc").as[String].collect().toSet
     assert(sKept == Set("b-22"), sKept)
@@ -255,23 +256,23 @@ class IvfSpec extends AnyFunSuite {
     import spark.implicits._
     val cents3 = Similarity.kmeansCentroids(corpus, k = 3, sampleRows = 900, iters = 10)
     val cents1 = cents3.take(1) // the "stale" undersized quantizer
-    val snapStale = Similarity.semanticKeys(corpus, cents1).localCheckpoint()
+    val snapStale = Similarity.semanticKeys(corpus, Flat(cents1)).localCheckpoint()
     // parity: re-keyed ≡ fresh-built from the same embeddings (cell
     // assignment is a pure function of (emb, centroids))
-    val rekeyed = Similarity.rekeySemanticSnapshot(snapStale, cents3)
+    val rekeyed = Similarity.rekeySemanticSnapshot(snapStale, Flat(cents3))
     assert(rekeyed.columns.toSeq == Seq("id", "cell", "emb"))
-    val fresh = Similarity.semanticKeys(corpus, cents3)
+    val fresh = Similarity.semanticKeys(corpus, Flat(cents3))
     assert(rekeyed.select("id", "cell").except(fresh.select("id", "cell")).isEmpty &&
       fresh.select("id", "cell").except(rekeyed.select("id", "cell")).isEmpty)
     // the stamped form carries _gen through untouched (re-key is a
     // layout change — retention ages must not move)
     val rekeyedGen = Similarity.rekeySemanticSnapshot(
-      Similarity.stampSemanticGeneration(snapStale, 3L), cents3)
+      Dedup.stampGeneration(snapStale, "id", 3L), Flat(cents3))
     assert(rekeyedGen.columns.toSeq == Seq("id", "cell", "emb", "_gen"))
     assert(rekeyedGen.select("_gen").distinct().as[Long].collect().toSeq == Seq(3L))
     // shape guard
     intercept[IllegalArgumentException] {
-      Similarity.rekeySemanticSnapshot(corpus, cents3)
+      Similarity.rekeySemanticSnapshot(corpus, Flat(cents3))
     }
     // lifecycle end-to-end: under the stale k=1 quantizer EVERY doc is
     // in one cell; a cap below the corpus size caps it out and an exact
@@ -280,9 +281,9 @@ class IvfSpec extends AnyFunSuite {
     val replica = corpus.where(col("vec_id") === 7L)
       .select((col("vec_id") + 5000).as("vec_id"), col("embedding"))
     val cap = 400 // blob cells are 200-400; the k=1 cell is 900
-    val keptStale = Similarity.incrementalSemDedup(replica, snapStale, cents1,
+    val keptStale = Similarity.incrementalSemDedup(replica, snapStale, Flat(cents1),
       threshold = 0.999, nprobe = 1, maxCellSize = cap).count()
-    val keptRekey = Similarity.incrementalSemDedup(replica, rekeyed, cents3,
+    val keptRekey = Similarity.incrementalSemDedup(replica, rekeyed, Flat(cents3),
       threshold = 0.999, nprobe = 1, maxCellSize = cap).count()
     assert(keptStale == 1L && keptRekey == 0L, s"$keptStale / $keptRekey")
     // ...and cellOccupancy is the read that drives the re-key decision
@@ -295,7 +296,7 @@ class IvfSpec extends AnyFunSuite {
     // the grown quantizer trains off the SNAPSHOT itself (no corpus
     // access anywhere in the lifecycle): same sample ids + same Lloyd
     // core ⇒ identical centroids to training on the raw corpus
-    val fromSnap = Similarity.trainQuantizerFromSnapshot(snapStale, k = 3,
+    val Flat(fromSnap) = Similarity.trainQuantizerFromSnapshot(snapStale, k = 3,
       sampleRows = 900, iters = 10)
     assert(fromSnap.length == 3 &&
       fromSnap.zip(cents3).forall { case (a, b) => a.sameElements(b) })
@@ -307,7 +308,7 @@ class IvfSpec extends AnyFunSuite {
   test("ivfTopKFromSnapshot: the dedup snapshot doubles as the IVF index") {
     import spark.implicits._
     val cents = Similarity.kmeansCentroids(corpus, k = 3, sampleRows = 900, iters = 10)
-    val snap = Similarity.semanticKeys(corpus, cents)
+    val snap = Similarity.semanticKeys(corpus, Flat(cents))
     val q = corpus.where(col("vec_id") < 6)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -316,34 +317,34 @@ class IvfSpec extends AnyFunSuite {
     // identical to ivfTopK over the raw corpus at every nprobe (the
     // snapshot is a pure projection; no information is lost)
     for (np <- Seq(1, 3)) {
-      assert(rows(Similarity.ivfTopKFromSnapshot(snap, q, cents, np, k = 4)) ==
+      assert(rows(Similarity.ivfTopKFromSnapshot(snap, q, Flat(cents), np, k = 4)) ==
         rows(Similarity.ivfTopK(corpus, q, cents, np, k = 4)), s"nprobe=$np")
     }
     // probing all cells == brute force (the p_ann_snapshot oracle claim)
-    assert(rows(Similarity.ivfTopKFromSnapshot(snap, q, cents, 3, k = 4)) ==
+    assert(rows(Similarity.ivfTopKFromSnapshot(snap, q, Flat(cents), 3, k = 4)) ==
       rows(Similarity.bruteTopK(corpus, q, k = 4)))
     // single-probe recall stays high on separable blobs (same contract
     // as the raw-corpus IVF path)
     val brute = rows(Similarity.bruteTopK(corpus, q, k = 4)).map(t => (t._1, t._2)).toSet
-    val p1 = rows(Similarity.ivfTopKFromSnapshot(snap, q, cents, 1, k = 4)).map(t => (t._1, t._2)).toSet
+    val p1 = rows(Similarity.ivfTopKFromSnapshot(snap, q, Flat(cents), 1, k = 4)).map(t => (t._1, t._2)).toSet
     assert(p1.intersect(brute).size >= (brute.size * 0.7).toInt, s"${p1.intersect(brute).size}/${brute.size}")
     intercept[IllegalArgumentException] {
-      Similarity.ivfTopKFromSnapshot(corpus, q, cents, 1, k = 4)
+      Similarity.ivfTopKFromSnapshot(corpus, q, Flat(cents), 1, k = 4)
     }
   }
 
   test("annRecallProbe: recall monotone in nprobe, 1.0 at full probe, accounting exact") {
     import spark.implicits._
     val cents = Similarity.kmeansCentroids(corpus, k = 3, sampleRows = 900, iters = 10)
-    val snap = Similarity.semanticKeys(corpus, cents)
+    val snap = Similarity.semanticKeys(corpus, Flat(cents))
     val q = corpus.where(col("vec_id") % 30 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val nq = q.count()
-    val rows = Similarity.annRecallProbe(snap, q, cents, k = 4,
-        nprobes = Seq(1, 2, 3))
+    val rows = Similarity.annRecallProbe(snap, q, Flat(cents), k = 4,
+        probes = Seq((1, 1), (2, 1), (3, 1)))
       .orderBy("nprobe")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getDouble(4)))
+      .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getDouble(5)))
     assert(rows.map(_._1).toSeq == Seq(1, 2, 3))
     // accounting: every row reports the same sampled-query ground truth
     assert(rows.forall(r => r._2 == nq && r._3 == nq * 4))
@@ -353,7 +354,7 @@ class IvfSpec extends AnyFunSuite {
     assert(rows.last._5 == 1.0, rows.last.toString)
     assert(rows.head._5 > 0.5 && rows.head._4 == (rows.head._5 * nq * 4).round)
     intercept[IllegalArgumentException] {
-      Similarity.annRecallProbe(snap, q, cents, 4, Seq(0, 1))
+      Similarity.annRecallProbe(snap, q, Flat(cents), 4, Seq((0, 1), (1, 1)))
     }
   }
 
@@ -380,7 +381,7 @@ class IvfSpec extends AnyFunSuite {
     val batch = Seq((1000L, hot.head), (1001L, cold)).toDF("vec_id", "embedding")
     val cents = Array(Array.fill(8)(1.0), Array.fill(8)(-4.0))
     val sem = Similarity.semanticCapReport(batch,
-        Similarity.semanticKeys(prior, cents), cents, maxCellSize = 10)
+        Similarity.semanticKeys(prior, Flat(cents)), Flat(cents), maxCellSize = 10)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(sem("prior") == ((2L, 1L, 51L, 50L)), sem.toString)

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Similarity
+import graft.ext.CellQuantizer.{Flat, Pq}
+import graft.ext.{Dedup, Similarity}
 
 /** The PQ-COMPRESSED semantic snapshot (r18 stretch): store (id, cell,
   * codes) instead of (id, cell, emb) — numSub ints replacing dim
@@ -41,7 +42,7 @@ class PqSnapshotSpec extends AnyFunSuite {
     for (s <- 0 until 4)
       assert(row._2.slice(s * 2, s * 2 + 2) == books(s)(row._1(s)).toSeq)
     // the storage claim: snapshot row carries 4 ints instead of 8 floats
-    val snap = Similarity.semanticKeysPq(corpus, cents, books)
+    val snap = Similarity.semanticKeys(corpus, Pq(cents, books))
     assert(snap.columns.toSeq == Seq("id", "cell", "codes"))
     assert(snap.schema("codes").dataType.simpleString == "array<int>")
   }
@@ -69,8 +70,8 @@ class PqSnapshotSpec extends AnyFunSuite {
     // budget-independent by construction
     val tiny = Similarity.pqTrainCodebooks(corpus, numSub = 2, k = 2,
       sampleRows = 600)
-    val keptTiny = Similarity.incrementalSemDedupPq(batch,
-        Similarity.semanticKeysPq(prior, cents, tiny), cents, tiny,
+    val keptTiny = Similarity.incrementalSemDedup(batch,
+        Similarity.semanticKeys(prior, Pq(cents, tiny)), Pq(cents, tiny),
         threshold = 0.999, nprobe = 1)
       .select("vec_id").as[Long].collect().toSet
     assert(replicas.select("vec_id").as[Long].collect()
@@ -85,12 +86,12 @@ class PqSnapshotSpec extends AnyFunSuite {
     // the quantizer like you deploy it
     val books = Similarity.pqTrainCodebooks(corpus.unionByName(batch),
       numSub = 4, k = 64, sampleRows = 700)
-    val keptPq = Similarity.incrementalSemDedupPq(batch,
-        Similarity.semanticKeysPq(prior, cents, books), cents, books,
+    val keptPq = Similarity.incrementalSemDedup(batch,
+        Similarity.semanticKeys(prior, Pq(cents, books)), Pq(cents, books),
         threshold = 0.99, nprobe = 1)
       .select("vec_id").as[Long].collect().toSet
     val keptRaw = Similarity.incrementalSemDedup(batch,
-        Similarity.semanticKeys(prior, cents), cents,
+        Similarity.semanticKeys(prior, Flat(cents)), Flat(cents),
         threshold = 0.99, nprobe = 1)
       .select("vec_id").as[Long].collect().toSet
     assert(keptPq == keptRaw,
@@ -100,8 +101,8 @@ class PqSnapshotSpec extends AnyFunSuite {
       jittered.select("vec_id").as[Long].collect().exists(id => !keptRaw(id)))
     // shape guard
     intercept[IllegalArgumentException] {
-      Similarity.incrementalSemDedupPq(batch,
-        Similarity.semanticKeys(prior, cents), cents, books, 0.99)
+      Similarity.incrementalSemDedup(batch,
+        Similarity.semanticKeys(prior, Flat(cents)), Pq(cents, books), 0.99)
     }
   }
 
@@ -131,7 +132,7 @@ class PqSnapshotSpec extends AnyFunSuite {
     val oldBooks = Similarity.pqTrainCodebooks(prior, numSub = 4, k = 2,
       sampleRows = 300)
     val extended = oldBooks.zip(fromSidecar).map { case (o, n) => o ++ n }
-    val snapOld = Similarity.semanticKeysPq(prior, cents, oldBooks)
+    val snapOld = Similarity.semanticKeys(prior, Pq(cents, oldBooks))
       .localCheckpoint()
     val migrated = Similarity.reencodePqSnapshot(snapOld, oldBooks, extended)
     assert(migrated.columns.toSeq == Seq("id", "cell", "codes"))
@@ -156,13 +157,13 @@ class PqSnapshotSpec extends AnyFunSuite {
     // decoded migration is for the discarded-source case only.
     val replicas = prior.where($"vec_id" < 90)
       .select(($"vec_id" + 5000).as("vec_id"), $"embedding")
-    val keptFresh = Similarity.incrementalSemDedupPq(replicas,
-        Similarity.semanticKeysPq(prior, cents, extended), cents, extended,
+    val keptFresh = Similarity.incrementalSemDedup(replicas,
+        Similarity.semanticKeys(prior, Pq(cents, extended)), Pq(cents, extended),
         threshold = 0.999, nprobe = 1)
       .count()
     assert(keptFresh == 0L, s"source re-encode leaked $keptFresh replicas")
-    val keptMigrated = Similarity.incrementalSemDedupPq(replicas,
-        migrated, cents, extended, threshold = 0.999, nprobe = 1)
+    val keptMigrated = Similarity.incrementalSemDedup(replicas,
+        migrated, Pq(cents, extended), threshold = 0.999, nprobe = 1)
       .count()
     assert(keptMigrated > 0L,
       "expected the decoded migration to leak replicas on this fixture " +
@@ -176,13 +177,13 @@ class PqSnapshotSpec extends AnyFunSuite {
     val prior = corpus.where($"vec_id" % 3 =!= 2)
     val books = Similarity.pqTrainCodebooks(corpus, numSub = 4, k = 8,
       sampleRows = 600)
-    val snap = Similarity.semanticKeysPq(prior, cents, books)
+    val snap = Similarity.semanticKeys(prior, Pq(cents, books))
       .localCheckpoint()
     val q = corpus.where($"vec_id" % 3 === 2 && $"vec_id" < 50)
       .select($"vec_id".as("qid"), $"embedding".as("qe")).localCheckpoint()
     // full probe over the snapshot ≡ pqTopK's brute ADC scan of the
     // SAME corpus (codes are a pure function of (embedding, books))
-    val full = Similarity.pqTopKFromSnapshot(snap, q, cents, books,
+    val full = Similarity.ivfTopKFromSnapshot(snap, q, Pq(cents, books),
       nprobe = cents.length, k = 3).select("qid", "vec_id", "adc", "rk")
     val brute = Similarity.pqTopK(
       prior.select($"vec_id", $"embedding"), q, books, k = 3)
@@ -191,16 +192,53 @@ class PqSnapshotSpec extends AnyFunSuite {
     // recall probe against the full ADC scan: monotone, exactly 1.0
     // at full probe (isolates the BUCKETING loss — the code budget's
     // quantization loss is fixed at encode time)
-    val probe = Similarity.annRecallProbePq(snap, q, cents, books, k = 3,
-        nprobes = Seq(1, 2, 3))
+    val probe = Similarity.annRecallProbe(snap, q, Pq(cents, books), k = 3,
+        probes = Seq((1, 1), (2, 1), (3, 1)))
       .orderBy("nprobe").select("recall").as[Double].collect()
     assert(probe.length == 3 && probe.sliding(2).forall(p => p(0) <= p(1)),
       probe.toSeq.toString)
     assert(probe.last == 1.0, probe.toSeq.toString)
     // shape guard: a raw (emb) snapshot is not a codes snapshot
     intercept[IllegalArgumentException] {
-      Similarity.pqTopKFromSnapshot(
-        Similarity.semanticKeys(prior, cents), q, cents, books, 1, 3)
+      Similarity.ivfTopKFromSnapshot(
+        Similarity.semanticKeys(prior, Flat(cents)), q, Pq(cents, books), 1, 3)
     }
+  }
+
+  test("generation lifecycle on a PQ codes snapshot: aged-out codes re-admit; a re-stamped id takes its newest generation") {
+    import spark.implicits._
+    val books = Similarity.pqTrainCodebooks(corpus, numSub = 4, k = 8,
+      sampleRows = 600)
+    val pq = Pq(cents, books)
+    // one doc per blob (blob = vec_id % 3): three distinct cells and codes
+    val prior = corpus.where($"vec_id" < 3)
+    val gen0 = Dedup.stampGeneration(Similarity.semanticKeys(prior, pq),
+      "id", 0L)
+    assert(gen0.columns.toSeq == Seq("id", "cell", "codes", "_gen"))
+    assert(Dedup.retainGenerations(gen0, "id", 0L).columns.toSeq ==
+      Seq("id", "cell", "codes"))
+    // exact replicas under fresh ids: decoded cosine exactly 1.0
+    val batch = prior.select(($"vec_id" + 5000).as("vec_id"), $"embedding")
+    def kept(g: org.apache.spark.sql.DataFrame, minGen: Long) =
+      Similarity.incrementalSemDedup(batch,
+          Dedup.retainGenerations(g, "id", minGen), pq, threshold = 0.999)
+        .select("vec_id").as[Long].collect().toSet
+    assert(kept(gen0, 0L).isEmpty)
+    // the gen-0 codes age out at minGen = 1: every replica re-admits
+    assert(kept(gen0, 1L) == Set(5000L, 5001L, 5002L))
+    // id 1 re-accepted at gen 2 with doc 0's vector: retention resolves
+    // id 1 to that newest row, so doc 1's replica is no longer blocked
+    // while doc 0's and doc 2's still are
+    val gen2 = gen0.unionByName(Dedup.stampGeneration(
+      Similarity.semanticKeys(corpus.where($"vec_id" === 0L)
+        .select(lit(1L).as("vec_id"), $"embedding"), pq), "id", 2L))
+    assert(kept(gen2, 0L) == Set(5001L))
+    // at minGen = 2 only the re-stamped id survives
+    assert(kept(gen2, 2L) == Set(5001L, 5002L))
+    // a codes snapshot is not re-keyable: the error names the migration
+    val e = intercept[IllegalArgumentException] {
+      Similarity.rekeySemanticSnapshot(gen0, pq)
+    }
+    assert(e.getMessage.contains("reencodePqSnapshot"), e.getMessage)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ext.CellQuantizer.{Flat, Pq, TwoLevel}
 import graft.streaming.StreamingScorer
 import graft.tree.{GBTTrainer, TrainParams}
 
@@ -570,7 +571,7 @@ class StreamingSpec extends AnyFunSuite {
     def vec(c: Int) = centers(c).map(x => (x + rng.nextGaussian() * 0.4).toFloat).toSeq
     val prior = (0 until 120).map(i => (i.toLong, vec(i % 3))).toDF("vec_id", "embedding")
     val cents = Similarity.kmeansCentroids(prior, k = 3, sampleRows = 200, iters = 10)
-    val snap = Similarity.semanticKeys(prior, cents).localCheckpoint()
+    val snap = Similarity.semanticKeys(prior, Flat(cents)).localCheckpoint()
     // feed: jittered paraphrase replicas of prior docs + genuinely far
     // vectors (a fourth region no prior doc occupies)
     val priorRows = prior.as[(Long, Seq[Float])].collect()
@@ -580,12 +581,12 @@ class StreamingSpec extends AnyFunSuite {
     } ++ (0 until 20).map(i =>
       (5000L + i, far.map(x => (x + rng.nextGaussian()).toFloat).toSeq))
     val batchKept = Similarity.incrementalSemDedup(
-        feed.toSeq.toDF("vec_id", "embedding"), snap, cents,
+        feed.toSeq.toDF("vec_id", "embedding"), snap, Flat(cents),
         threshold = 0.999, nprobe = 2, maxCellSize = 100000)
       .select("vec_id").as[Long].collect().toSet
     val stream = MemoryStream[(Long, Seq[Float])]
     val gated = graft.streaming.StreamingIngest.semanticGate(
-      stream.toDF().toDF("vec_id", "embedding"), snap, cents,
+      stream.toDF().toDF("vec_id", "embedding"), snap, Flat(cents),
       threshold = 0.999, nprobe = 2, maxCellSize = 100000)
     val q = gated.writeStream.format("memory").queryName("sem_gate_sink")
       .outputMode("append").start()
@@ -604,11 +605,11 @@ class StreamingSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.streaming.StreamingIngest.semanticGate(
         stream.toDF().toDF("vec_id", "embedding").withColumn("_sc0", lit(1)),
-        snap, cents, 0.9)
+        snap, Flat(cents), 0.9)
     }
     intercept[IllegalArgumentException] {
       graft.streaming.StreamingIngest.semanticGate(
-        stream.toDF().toDF("vec_id", "embedding"), prior, cents, 0.9)
+        stream.toDF().toDF("vec_id", "embedding"), prior, Flat(cents), 0.9)
     }
   }
 
@@ -630,7 +631,7 @@ class StreamingSpec extends AnyFunSuite {
       Array.tabulate(64)(i => if (i % 16 == c) 8.0 else 0.0))
     val centsStale = Array(cents16(0), cents16(8))
     val prior = all.where($"vec_id" % 3 === 1)
-    val snapStale = Similarity.semanticKeys(prior, centsStale).localCheckpoint()
+    val snapStale = Similarity.semanticKeys(prior, Flat(centsStale)).localCheckpoint()
     val replicas = prior.where($"vec_id" < 90)
       .select(($"vec_id" + 20000).as("vec_id"), $"embedding")
       .as[(Long, Seq[Float])].collect().toSeq
@@ -638,7 +639,7 @@ class StreamingSpec extends AnyFunSuite {
         cents: Array[Array[Double]], name: String): Set[Long] = {
       val st = MemoryStream[(Long, Seq[Float])]
       val q = graft.streaming.StreamingIngest.semanticGate(
-          st.toDF().toDF("vec_id", "embedding"), snap, cents,
+          st.toDF().toDF("vec_id", "embedding"), snap, Flat(cents),
           threshold = 0.999, nprobe = 1, maxCellSize = 60)
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
@@ -653,13 +654,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(day1.size == replicas.size, s"stale gate should no-op: ${day1.size}")
     // stop → re-key the SAME snapshot (map-only) → restart on the
     // grown quantizer: the membrane is restored mid-stream
-    val rekeyed = Similarity.rekeySemanticSnapshot(snapStale, cents16)
+    val rekeyed = Similarity.rekeySemanticSnapshot(snapStale, Flat(cents16))
       .localCheckpoint()
     val day2 = runGate(rekeyed, cents16, "rekey_handoff_d2")
     assert(day2.isEmpty, s"re-keyed gate must block the replicas: $day2")
     // the post-swap stream equals the batch gate under the new quantizer
     val batchKept = Similarity.incrementalSemDedup(
-        replicas.toDF("vec_id", "embedding"), rekeyed, cents16,
+        replicas.toDF("vec_id", "embedding"), rekeyed, Flat(cents16),
         threshold = 0.999, nprobe = 1, maxCellSize = 60)
       .select("vec_id").as[Long].collect().toSet
     assert(day2 == batchKept)
@@ -671,19 +672,19 @@ class StreamingSpec extends AnyFunSuite {
       Array.tabulate(64)(i => if (i % 16 / 4 == b) 2.0 else 0.0))
     val fine4 = Array.tabulate(4)(j =>
       Array.tabulate(64)(i => if (i % 4 == j) 8.0 else 0.0))
-    val rekeyed2 = Similarity.rekeySemanticSnapshot2(snapStale, coarse4,
-      fine4).localCheckpoint()
+    val rekeyed2 = Similarity.rekeySemanticSnapshot(snapStale,
+      TwoLevel(coarse4, fine4)).localCheckpoint()
     val st2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = graft.streaming.StreamingIngest.semanticGate2(
-        st2.toDF().toDF("vec_id", "embedding"), rekeyed2, coarse4, fine4,
+    val q2 = graft.streaming.StreamingIngest.semanticGate(
+        st2.toDF().toDF("vec_id", "embedding"), rekeyed2, TwoLevel(coarse4, fine4),
         threshold = 0.999, nprobe = 1, maxCellSize = 60)
       .writeStream.format("memory").queryName("rekey_handoff_d3")
       .outputMode("append").start()
     try { st2.addData(replicas); q2.processAllAvailable() } finally q2.stop()
     val day3 = spark.table("rekey_handoff_d3")
       .select("vec_id").as[Long].collect().toSet
-    val batchKept2 = Similarity.incrementalSemDedup2(
-        replicas.toDF("vec_id", "embedding"), rekeyed2, coarse4, fine4,
+    val batchKept2 = Similarity.incrementalSemDedup(
+        replicas.toDF("vec_id", "embedding"), rekeyed2, TwoLevel(coarse4, fine4),
         threshold = 0.999, nprobe = 1, maxCellSize = 60)
       .select("vec_id").as[Long].collect().toSet
     assert(day3 == batchKept2 && day3.isEmpty, s"$day3")
@@ -721,24 +722,26 @@ class StreamingSpec extends AnyFunSuite {
       spark.table(name).select("vec_id").as[Long].collect().toSet
     }
     // composed twin == composed batch gate
-    val snap2 = Similarity.semanticKeys2(prior, coarse4, fine4).localCheckpoint()
-    val got2 = run(s => graft.streaming.StreamingIngest.semanticGate2(
-      s, snap2, coarse4, fine4, threshold = 0.999, nprobe = 1,
+    val two4 = TwoLevel(coarse4, fine4)
+    val snap2 = Similarity.semanticKeys(prior, two4).localCheckpoint()
+    val got2 = run(s => graft.streaming.StreamingIngest.semanticGate(
+      s, snap2, two4, threshold = 0.999, nprobe = 1,
       maxCellSize = 200), "sem2_twin")
-    val want2 = Similarity.incrementalSemDedup2(
-        feed.toDF("vec_id", "embedding"), snap2, coarse4, fine4,
+    val want2 = Similarity.incrementalSemDedup(
+        feed.toDF("vec_id", "embedding"), snap2, two4,
         threshold = 0.999, nprobe = 1, maxCellSize = 200)
       .select("vec_id").as[Long].collect().toSet
     assert(got2 == want2,
       s"stream-only=${got2 -- want2} batch-only=${want2 -- got2}")
     assert(got2.forall(_ < 20000), "a replica leaked through the composed twin")
     // PQ twin == PQ batch gate (exact replicas block at this tiny budget)
-    val snapPq = Similarity.semanticKeysPq(prior, cents16, books).localCheckpoint()
-    val gotPq = run(s => graft.streaming.StreamingIngest.semanticGatePq(
-      s, snapPq, cents16, books, threshold = 0.999, nprobe = 1,
+    val pq = Pq(cents16, books)
+    val snapPq = Similarity.semanticKeys(prior, pq).localCheckpoint()
+    val gotPq = run(s => graft.streaming.StreamingIngest.semanticGate(
+      s, snapPq, pq, threshold = 0.999, nprobe = 1,
       maxCellSize = 200), "sempq_twin")
-    val wantPq = Similarity.incrementalSemDedupPq(
-        feed.toDF("vec_id", "embedding"), snapPq, cents16, books,
+    val wantPq = Similarity.incrementalSemDedup(
+        feed.toDF("vec_id", "embedding"), snapPq, pq,
         threshold = 0.999, nprobe = 1, maxCellSize = 200)
       .select("vec_id").as[Long].collect().toSet
     assert(gotPq == wantPq,
@@ -747,12 +750,12 @@ class StreamingSpec extends AnyFunSuite {
     // shape loud-rejects route through the shared fronts
     val st = MemoryStream[(Long, Seq[Float])]
     intercept[IllegalArgumentException] {
-      graft.streaming.StreamingIngest.semanticGate2(
-        st.toDF().toDF("vec_id", "embedding"), snapPq, coarse4, fine4, 0.9)
+      graft.streaming.StreamingIngest.semanticGate(
+        st.toDF().toDF("vec_id", "embedding"), snapPq, two4, 0.9)
     }
     intercept[IllegalArgumentException] {
-      graft.streaming.StreamingIngest.semanticGatePq(
-        st.toDF().toDF("vec_id", "embedding"), snap2, cents16, books, 0.9)
+      graft.streaming.StreamingIngest.semanticGate(
+        st.toDF().toDF("vec_id", "embedding"), snap2, pq, 0.9)
     }
   }
 
@@ -814,14 +817,14 @@ class StreamingSpec extends AnyFunSuite {
     val prior = (0 until 40).map(i =>
       (i.toLong, Array.fill(8)((i % 2 + 1).toFloat).toSeq)).toDF("vec_id", "embedding")
     val cents = Array(Array.fill(8)(1.0), Array.fill(8)(2.0))
-    val gen0 = Similarity.stampSemanticGeneration(
-      Similarity.semanticKeys(prior, cents), 0L).localCheckpoint()
+    val gen0 = graft.ext.Dedup.stampGeneration(
+      Similarity.semanticKeys(prior, Flat(cents)), "id", 0L).localCheckpoint()
     val feed = Seq((100L, Array.fill(8)(1.0f).toSeq)) // exact prior replica
     def run(minGen: Long): Long = {
       val st = MemoryStream[(Long, Seq[Float])]
       val gated = graft.streaming.StreamingIngest.semanticGate(
         st.toDF().toDF("vec_id", "embedding"),
-        Similarity.retainSemanticGenerations(gen0, minGen), cents,
+        graft.ext.Dedup.retainGenerations(gen0, "id", minGen), Flat(cents),
         threshold = 0.999)
       val name = s"sem_ttl_sink_$minGen"
       val q = gated.writeStream.format("memory").queryName(name)
