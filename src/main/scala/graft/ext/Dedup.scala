@@ -335,10 +335,9 @@ object Dedup {
     * (id, mh0..mh{k−1}) projection [[incrementalBandedNearDedup]] /
     * [[incrementalCrawlGate]] take as `priorSigs`, each id at its newest
     * signature. The banded gate reads its `priorSigs` twice (bucket side
-    * + verification side), so a caller composing this into
-    * [[incrementalCrawlGate]] may `localCheckpoint()` the retained
-    * projection to run the retention aggregation once — semantics
-    * unchanged either way. */
+    * + verification side), so [[CrawlSnapshot.gate]] materializes the
+    * retained projection to run the retention aggregation once —
+    * semantics unchanged either way. */
   def retainSignatureGenerations(sigsGen: DataFrame, minGen: Long,
       numHashes: Int): DataFrame = {
     val cols = ("id" +: (0 until numHashes).map(k => s"mh$k")) :+ "_gen"
@@ -364,7 +363,7 @@ object Dedup {
     * shingle-less fallback IS an md5). Wiring a signature-key snapshot
     * into the exact gate (or vice versa) therefore passes validation but
     * gates nothing: name snapshot tables by tier and keep the pairing in
-    * one place (as `incrementalCrawlGate` does). */
+    * one place ([[CrawlSnapshot]] holds it for the crawl gate). */
   def incrementalDedupKeys(newDocs: DataFrame, priorKeys: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       bloomExpectedItems: Long = -1L, bloomFpp: Double = 0.01): DataFrame = {
@@ -866,7 +865,13 @@ object Dedup {
     * neither surrounding tier can see it — is dropped, and within-batch
     * canonical twins collapse to the smallest id. One map-side key, no
     * extra pass over text beyond the expression; the projection obeys
-    * the SAME stamp/retain/bucket lifecycle as the other key tiers. */
+    * the SAME stamp/retain/bucket lifecycle as the other key tiers.
+    *
+    * [[CrawlSnapshot]] is the daily cadence around this gate: it holds
+    * the three projections stamped, pairs them with the right tiers,
+    * retains them at the gate's `minGen`, builds the batch signatures
+    * with the snapshot's jobs overlapped and advances the snapshot from
+    * them. Call this operator directly only to wire the tiers by hand. */
   def incrementalCrawlGate(newDocs: DataFrame, priorKeys: DataFrame,
       priorSigs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", numHashes: Int = 128, bands: Int = 32,

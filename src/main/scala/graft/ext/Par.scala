@@ -9,16 +9,16 @@ import org.apache.spark.sql.DataFrame
 
 /** Overlap INDEPENDENT eager driver-side jobs (optimization guide §2.6
   * "overlap independent jobs"): Spark's scheduler happily runs several
-  * jobs at once inside one application — the membrane fixtures' per-tier
-  * snapshot projections were sequential only because the driver invoked
-  * their `localCheckpoint()` actions one after another. Submitting the
-  * independent materializations from a small pool lets one job's task
-  * tail back-fill with the next job's tasks, and collapses the fixed
-  * per-job cost (scheduling, broadcast, barrier) that dominates the
-  * crawl/daily family at bench scale (the r19 verdict's #1 residual:
-  * 8 cores beat 32 on these rows — fixed cost, not compute). At
-  * production scale the same overlap applies to the real per-day
-  * projection builds; nothing here is tuned to local mode.
+  * jobs at once inside one application, so independent materializations
+  * submitted from a small pool let one job's task tail back-fill with
+  * the next job's tasks, and collapse the fixed per-job cost
+  * (scheduling, broadcast, barrier) that dominates short jobs. Callers:
+  * [[CrawlSnapshot.build]] materializes the snapshot's signature pass,
+  * each day batch's signature pass and the canonical keys together, and
+  * the membrane fixtures overlap a day's ship stage or a semantic
+  * projection with the next gate. Nothing here is tuned to local mode:
+  * at production scale the same overlap applies to the real per-day
+  * projection builds.
   *
   * Determinism: `localCheckpoint()` only MATERIALIZES a frame — its
   * content is a pure function of the plan — so completion order cannot
@@ -27,10 +27,11 @@ import org.apache.spark.sql.DataFrame
   * the caller by `await`.
   *
   * Pool: a cached pool of daemon threads, one per task in flight, so no
-  * fixture group (`p_incr_crawl` submits 5) queues behind its own
-  * workers and an `await` inside a thunk always finds its task running.
-  * FIFO scheduling (Spark's default) keeps
-  * the earliest job prioritized — exactly the back-fill behavior wanted.
+  * group (`CrawlSnapshot.build` submits one job per day batch plus up to
+  * two) queues behind its own workers and an `await` inside a thunk
+  * always finds its task running. FIFO scheduling (Spark's default)
+  * keeps the earliest job prioritized — exactly the back-fill behavior
+  * wanted.
   * Daemon threads: the pool must never block JVM exit (Bench/Verify are
   * short-lived mains).
   *

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.CellQuantizer.{Flat, Pq, TwoLevel}
-import graft.ext.{AudioDsp, Avi, Bpe, Cleaning, CorpusFilters, Curation, Dedup, Gif, ImageOps, Jpeg, MediaCodecs, Mp3, Multimodal, Par, Png, Similarity, TextOps}
+import graft.ext.{AudioDsp, Avi, Bpe, Cleaning, CorpusFilters, CrawlSnapshot, Curation, Dedup, Gif, ImageOps, Jpeg, MediaCodecs, Mp3, Multimodal, Par, Png, Similarity, TextOps}
 
 /** LLM-training-data pipeline queries over `documents.parquet` /
   * `embeddings.parquet` — dedup (exact, MinHash-LSH, SimHash, n-gram
@@ -35,38 +35,52 @@ object PipelineQueries {
   private def embTable(s: SparkSession, dir: String): DataFrame =
     CoreQueries.spreadTable(s, dir, "embeddings", "vec_id")
 
-  /** [[Dedup.incrementalCrawlGate]] over a snapshot whose TWO near-dup
-    * projections (key tier + signature tier) are built from ONE
-    * materialized signature pass: the signature table is checkpointed
-    * first and the key tier derives from it map-only
-    * ([[Dedup.nearDupKeysFromSignatures]] — bit-identical to
-    * nearDupKeys(prior)), instead of each projection running its own
-    * shingle+hash pass over the snapshot. One expensive pass saved per
-    * gate fixture; the projections stay materialized (they are persisted
-    * tables in production). */
-  private def crawlGateSharedSnap(batch: DataFrame, prior: DataFrame,
-      priorCanonKeys: Option[DataFrame] = None): DataFrame = {
-    // §2.6 overlap (r20): the snapshot signature pass, the BATCH
-    // signature pass (the gate's other dominant linear cost, previously
-    // run serially inside incrementalCrawlGate) and the optional
-    // canonical-key projection are INDEPENDENT jobs — materialize them
-    // together instead of one after another; the serialized per-tier
-    // checkpoints were the r19 verdict's #1 residual cost (fixed per-job
-    // time, the reason 8 cores beat 32 on these rows at bench scale).
-    // priorCanonKeys arrives UN-materialized and is checkpointed here so
-    // its job joins the overlapped group.
-    val mats = Par.materializeAll("crawl gate signatures", Seq(
-      Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
-      Dedup.minhashSignatures(batch, "text", col("doc_id"), NumHashes)) ++
-      priorCanonKeys.toSeq)
-    val sigs = mats(0)
-    Dedup.incrementalCrawlGate(batch,
-      Dedup.nearDupKeysFromSignatures(sigs, prior, numHashes = NumHashes)
-        .localCheckpoint(),
-      sigs, numHashes = NumHashes, bands = Bands, threshold = 0.8,
-      maxBucketSize = MaxBucket,
-      priorCanonKeys = priorCanonKeys.map(_ => mats(2)),
-      batchSigs = Some(mats(1)))
+  /** Run `body` on a fresh temp directory and delete the directory
+    * afterwards, also when `body` throws. `body` must materialize what it
+    * reads from the directory before it returns. */
+  private def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    }
+  }
+
+  /** One day's OUTPUT stage: per-language token budget → ~16 KiB
+    * byte-packed shards → real tar shard files → readback, as
+    * (day, shard, n_members, sum_bytes, sum_h) ordered by shard. DuckDB
+    * replays every step from the source table. `kept` (doc_id, text,
+    * lang) is read three times, so pass it materialized. */
+  private def ship(s: SparkSession, kept: DataFrame, day: Int,
+      salt: String): DataFrame = {
+    val chosen = Curation.takeTokenBudget(kept, "lang",
+      Map("en" -> 20000L), defaultBudget = 8000L).select("doc_id")
+    val packed = Curation.packShardsBySize(
+      chosen.join(kept.select(col("doc_id"),
+        octet_length(col("text")).as("n_bytes")), "doc_id"),
+      "doc_id", "n_bytes", targetBytes = 16384L, salt = salt)
+    val docsOut = packed.select("doc_id", "shard")
+      .join(kept.select("doc_id", "text"), "doc_id")
+      .select(col("shard"),
+        format_string("%06d.txt", col("doc_id")).as("name"),
+        col("text").cast("binary").as("payload"))
+    withTempDir(s"graft_ship_$salt") { out =>
+      graft.sources.TarShards.writeShards(docsOut, out.toString, "shard",
+        "name", "payload")
+      graft.sources.TarShards.readShards(s, out.toString)
+        .groupBy("shard")
+        .agg(count(lit(1)).as("n_members"),
+          sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
+          sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
+            .cast("long")).as("sum_h"))
+        .select(lit(day).as("day"), col("shard"), col("n_members"),
+          col("sum_bytes"), col("sum_h"))
+        .orderBy("shard")
+        .localCheckpoint() // materialize BEFORE the files are deleted
+    }
   }
 
   // ---- shared SQL fragments (DuckDB dialect) -------------------------------
@@ -402,11 +416,10 @@ object PipelineQueries {
       // the FUSED gate: one batch signature pass shared by both tiers —
       // row-identical to incrementalNearDedup then
       // incrementalBandedNearDedup (the oracle states the sequential
-      // form; CurationSpec pins the equivalence, the 20x probe the win).
-      // The two snapshot projections are PERSISTED tables in production
-      // (built once per snapshot) — materialize them so the row measures
-      // the gate, not a per-query rebuild of the snapshot artifacts
-      crawlGateSharedSnap(batch, prior)
+      // form; CurationSpec pins the equivalence, the 20x probe the win)
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
+        numHashes = NumHashes)
+      snap.gate(batch, bs, 0L, bands = Bands, maxBucketSize = MaxBucket)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_new"), sum("doc_id").as("sum_ids"))
         .orderBy("lang")
@@ -519,36 +532,15 @@ object PipelineQueries {
             concat(col("text"),
               lit(" sur1 sur2 sur3 sur4 sur5 sur6 sur7 sur8")).as("text"),
             col("lang")))
-      // the day-0 projections are PERSISTED tables in production —
-      // materialize them once here so day 1 and day 2 share them instead
-      // of re-running the snapshot signature pass inside both plans.
-      // §2.6 overlap (r20): the snapshot pass and BOTH day-batch passes
-      // are independent of each other (each is a pure function of its
-      // own input frame) — run the three jobs together instead of
-      // serially; the driver's day-2 gate was previously idle-waiting on
-      // jobs it never depended on
-      val Seq(sigs0, bsig1, bsig2) = Par.materializeAll("p_crawl_loop snapshot and day signatures", Seq(
-        Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes)))
-      val keys0 = Dedup.nearDupKeysFromSignatures(sigs0, prior,
-          numHashes = NumHashes)
-        .localCheckpoint() // the key tier derives from the sigs map-only
+      val (snap0, Seq(bs1, bs2)) = CrawlSnapshot.build(prior, 0L,
+        Seq(day1, day2), numHashes = NumHashes)
       // materialize the day-1 acceptances ONCE: kept1 is consumed by the
-      // key advance, the signature advance (sigs1 — itself read twice
-      // inside the banded tier), and the final union; without this the
-      // whole day-1 gate re-executes in each of those subtrees
-      val kept1 = Dedup.incrementalCrawlGate(day1, keys0, sigs0,
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket, batchSigs = Some(bsig1)).localCheckpoint()
-      val keptSigs1 = Dedup.minhashSignatures(kept1, "text", col("doc_id"),
-        NumHashes).localCheckpoint() // one pass over the acceptances, too
-      val keys1 = keys0.unionByName(
-        Dedup.nearDupKeysFromSignatures(keptSigs1, kept1, numHashes = NumHashes))
-      val sigs1 = sigs0.unionByName(keptSigs1)
-      val kept2 = Dedup.incrementalCrawlGate(day2, keys1, sigs1,
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket, batchSigs = Some(bsig2))
+      // advance and the final union; without this the whole day-1 gate
+      // re-executes in each of those subtrees
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
+        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept2 = snap0.advance(kept1, bs1, 1L)
+        .gate(day2, bs2, 0L, bands = Bands, maxBucketSize = MaxBucket)
       kept1.select(lit(1).as("day"), col("lang"), col("doc_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("lang"), col("doc_id")))
         .groupBy("day", "lang")
@@ -624,34 +616,12 @@ object PipelineQueries {
             concat(col("text"),
               lit(" sur1 sur2 sur3 sur4 sur5 sur6 sur7 sur8")).as("text"),
             col("lang")))
-      // the stamped projections are PERSISTED bucketed tables in
-      // production (BucketedSnapshotSpec pins the exchange-free
-      // retention plan); materialize so both days share them.
-      // §2.6 overlap (r20): snapshot pass + both day-batch passes are
-      // independent — three jobs together instead of serialized
-      val Seq(ps0, bsig1, bsig2) = Par.materializeAll("p_crawl_ttl snapshot and day signatures", Seq(
-        Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes)))
-      val gk0 = Dedup.stampGeneration(
-        Dedup.nearDupKeysFromSignatures(ps0, prior, numHashes = NumHashes), 0L)
-        .localCheckpoint()
-      val gs0 = Dedup.stampSignatureGeneration(ps0, 0L, NumHashes)
-      val kept1 = Dedup.incrementalCrawlGate(day1,
-        Dedup.retainGenerations(gk0, minGen = 0L),
-        Dedup.retainSignatureGenerations(gs0, minGen = 0L, NumHashes),
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket, batchSigs = Some(bsig1)).localCheckpoint()
-      val ks1 = Dedup.minhashSignatures(kept1, "text", col("doc_id"), NumHashes)
-        .localCheckpoint() // one pass over the acceptances for both tiers
-      val gk1 = gk0.unionByName(Dedup.stampGeneration(
-        Dedup.nearDupKeysFromSignatures(ks1, kept1, numHashes = NumHashes), 1L))
-      val gs1 = gs0.unionByName(Dedup.stampSignatureGeneration(ks1, 1L, NumHashes))
-      val kept2 = Dedup.incrementalCrawlGate(day2,
-        Dedup.retainGenerations(gk1, minGen = 1L),
-        Dedup.retainSignatureGenerations(gs1, minGen = 1L, NumHashes),
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket, batchSigs = Some(bsig2))
+      val (snap0, Seq(bs1, bs2)) = CrawlSnapshot.build(prior, 0L,
+        Seq(day1, day2), numHashes = NumHashes)
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
+        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept2 = snap0.advance(kept1, bs1, 1L)
+        .gate(day2, bs2, 1L, bands = Bands, maxBucketSize = MaxBucket)
       kept1.select(lit(1).as("day"), col("lang"), col("doc_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("lang"), col("doc_id")))
         .groupBy("day", "lang")
@@ -690,40 +660,12 @@ object PipelineQueries {
           .select((col("doc_id") + 70000).as("doc_id"),
             concat(lit("  "), upper(col("text")), lit("  !! ")).as("text"),
             col("lang")))
-      // §2.6 overlap (r20): snapshot signature pass, canonical-key
-      // projection and both day-batch passes are independent — four jobs
-      // together instead of serialized
-      val Seq(ps0, gc0, bsig1, bsig2) = Par.materializeAll("p_crawl_norm_ttl snapshot and day projections", Seq(
-        Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
-        Dedup.stampGeneration(Dedup.canonicalKeys(prior), 0L),
-        Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes)))
-      val gk0 = Dedup.stampGeneration(
-        Dedup.nearDupKeysFromSignatures(ps0, prior, numHashes = NumHashes), 0L)
-        .localCheckpoint()
-      val gs0 = Dedup.stampSignatureGeneration(ps0, 0L, NumHashes)
-      val kept1 = Dedup.incrementalCrawlGate(day1,
-        Dedup.retainGenerations(gk0, minGen = 0L),
-        Dedup.retainSignatureGenerations(gs0, minGen = 0L, NumHashes),
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket,
-        priorCanonKeys = Some(Dedup.retainGenerations(gc0, minGen = 0L)),
-        batchSigs = Some(bsig1))
-        .localCheckpoint()
-      val ks1 = Dedup.minhashSignatures(kept1, "text", col("doc_id"), NumHashes)
-        .localCheckpoint() // one pass over the acceptances for both tiers
-      val gk1 = gk0.unionByName(Dedup.stampGeneration(
-        Dedup.nearDupKeysFromSignatures(ks1, kept1, numHashes = NumHashes), 1L))
-      val gs1 = gs0.unionByName(Dedup.stampSignatureGeneration(ks1, 1L, NumHashes))
-      val gc1 = gc0.unionByName(Dedup.stampGeneration(
-        Dedup.canonicalKeys(kept1), 1L))
-      val kept2 = Dedup.incrementalCrawlGate(day2,
-        Dedup.retainGenerations(gk1, minGen = 1L),
-        Dedup.retainSignatureGenerations(gs1, minGen = 1L, NumHashes),
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket,
-        priorCanonKeys = Some(Dedup.retainGenerations(gc1, minGen = 1L)),
-        batchSigs = Some(bsig2))
+      val (snap0, Seq(bs1, bs2)) = CrawlSnapshot.build(prior, 0L,
+        Seq(day1, day2), canonical = true, numHashes = NumHashes)
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
+        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept2 = snap0.advance(kept1, bs1, 1L)
+        .gate(day2, bs2, 1L, bands = Bands, maxBucketSize = MaxBucket)
       kept1.select(lit(1).as("day"), col("lang"), col("doc_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("lang"), col("doc_id")))
         .groupBy("day", "lang")
@@ -759,8 +701,9 @@ object PipelineQueries {
           .select((col("doc_id") + 80000).as("doc_id"),
             concat(lit("  "), upper(col("text")), lit("  !! ")).as("text"),
             col("lang")))
-      crawlGateSharedSnap(batch, prior,
-        priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
+        canonical = true, numHashes = NumHashes)
+      snap.gate(batch, bs, 0L, bands = Bands, maxBucketSize = MaxBucket)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_new"), sum("doc_id").as("sum_ids"))
         .orderBy("lang")
@@ -807,24 +750,21 @@ object PipelineQueries {
         .withColumn("name", format_string("%06d.txt", col("doc_id")))
         .withColumn("payload", col("text").cast("binary"))
       // fresh directory per run — the writeShards commit contract
-      val out = java.nio.file.Files.createTempDirectory("graft_tar_files")
-      graft.sources.TarShards.writeShards(docs, out.toString, "shard",
-        "name", "payload")
-      val res = graft.sources.TarShards.readShards(s, out.toString)
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_members"),
-          sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
-          // 48-bit per-member content hash summed — order-independent,
-          // overflow-free at these member counts
-          sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
-            .cast("long")).as("sum_h"))
-        .orderBy("shard")
-        // materialize BEFORE deleting the files the scan reads
-        .localCheckpoint()
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      res
+      withTempDir("graft_tar_files") { out =>
+        graft.sources.TarShards.writeShards(docs, out.toString, "shard",
+          "name", "payload")
+        graft.sources.TarShards.readShards(s, out.toString)
+          .groupBy("shard")
+          .agg(count(lit(1)).as("n_members"),
+            sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
+            // 48-bit per-member content hash summed — order-independent,
+            // overflow-free at these member counts
+            sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
+              .cast("long")).as("sum_h"))
+          .orderBy("shard")
+          // materialize BEFORE deleting the files the scan reads
+          .localCheckpoint()
+      }
     }),
 
     // the STREAMED shard read at file scale: same store shape as
@@ -839,23 +779,20 @@ object PipelineQueries {
         .withColumn("shard", pmod(col("doc_id"), lit(8)))
         .withColumn("name", format_string("%06d.txt", col("doc_id")))
         .withColumn("payload", col("text").cast("binary"))
-      val out = java.nio.file.Files.createTempDirectory("graft_tar_stream")
-      graft.sources.TarShards.writeShards(docs.where(col("shard") < 4),
-        out.toString, "shard", "name", "payload")
-      graft.sources.TarShards.writeShards(docs.where(col("shard") >= 4),
-        out.toString, "shard", "name", "payload", gzip = true)
-      val res = graft.sources.TarShards.readShardsStreamed(s, out.toString)
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_members"),
-          sum(octet_length(col("body")).cast("long")).as("sum_bytes"),
-          sum(conv(substring(md5(col("body")), 1, 12), 16, 10)
-            .cast("long")).as("sum_h"))
-        .orderBy("shard")
-        .localCheckpoint() // materialize BEFORE deleting the files
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      res
+      withTempDir("graft_tar_stream") { out =>
+        graft.sources.TarShards.writeShards(docs.where(col("shard") < 4),
+          out.toString, "shard", "name", "payload")
+        graft.sources.TarShards.writeShards(docs.where(col("shard") >= 4),
+          out.toString, "shard", "name", "payload", gzip = true)
+        graft.sources.TarShards.readShardsStreamed(s, out.toString)
+          .groupBy("shard")
+          .agg(count(lit(1)).as("n_members"),
+            sum(octet_length(col("body")).cast("long")).as("sum_bytes"),
+            sum(conv(substring(md5(col("body")), 1, 12), 16, 10)
+              .cast("long")).as("sum_h"))
+          .orderBy("shard")
+          .localCheckpoint() // materialize BEFORE deleting the files
+      }
     }),
 
     // the WebDataset SAMPLE model at file scale: every document becomes
@@ -872,21 +809,18 @@ object PipelineQueries {
         .withColumn("json",
           concat(lit("{\"id\":"), col("doc_id").cast("string"),
             lit(",\"lang\":\""), col("lang"), lit("\"}")).cast("binary"))
-      val out = java.nio.file.Files.createTempDirectory("graft_tar_samples")
-      graft.sources.TarShards.writeSampleShards(docs, out.toString, "shard",
-        "key", Seq("json" -> "json", "txt" -> "txt"))
-      val res = graft.sources.TarShards.readSampleShards(s, out.toString)
-        .select(col("shard"), explode(col("parts")).as(Seq("ext", "body")))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_members"),
-          sum(conv(substring(md5(col("body")), 1, 12), 16, 10)
-            .cast("long")).as("sum_h"))
-        .orderBy("shard")
-        .localCheckpoint()
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      res
+      withTempDir("graft_tar_samples") { out =>
+        graft.sources.TarShards.writeSampleShards(docs, out.toString, "shard",
+          "key", Seq("json" -> "json", "txt" -> "txt"))
+        graft.sources.TarShards.readSampleShards(s, out.toString)
+          .select(col("shard"), explode(col("parts")).as(Seq("ext", "body")))
+          .groupBy("shard")
+          .agg(count(lit(1)).as("n_members"),
+            sum(conv(substring(md5(col("body")), 1, 12), 16, 10)
+              .cast("long")).as("sum_h"))
+          .orderBy("shard")
+          .localCheckpoint()
+      }
     }),
 
     // RANGED sample fetch through the .idx sidecars at file scale: write
@@ -903,23 +837,20 @@ object PipelineQueries {
         .withColumn("json",
           concat(lit("{\"id\":"), col("doc_id").cast("string"),
             lit(",\"lang\":\""), col("lang"), lit("\"}")).cast("binary"))
-      val out = java.nio.file.Files.createTempDirectory("graft_tar_fetch")
-      graft.sources.TarShards.writeSampleShards(docs, out.toString, "shard",
-        "key", Seq("json" -> "json", "txt" -> "txt"), index = true)
-      val wantedKeys = docs.where(col("doc_id") % 7 === 0).select("key")
-      val res = graft.sources.TarShards
-        .fetchSamples(s, out.toString, wantedKeys)
-        .select(col("shard"), col("key"), explode(col("parts")).as(Seq("ext", "body")))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_members"),
-          sum(conv(substring(md5(col("body")), 1, 12), 16, 10)
-            .cast("long")).as("sum_h"))
-        .orderBy("shard")
-        .localCheckpoint() // materialize BEFORE deleting the files
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      res
+      withTempDir("graft_tar_fetch") { out =>
+        graft.sources.TarShards.writeSampleShards(docs, out.toString, "shard",
+          "key", Seq("json" -> "json", "txt" -> "txt"), index = true)
+        val wantedKeys = docs.where(col("doc_id") % 7 === 0).select("key")
+        graft.sources.TarShards
+          .fetchSamples(s, out.toString, wantedKeys)
+          .select(col("shard"), col("key"), explode(col("parts")).as(Seq("ext", "body")))
+          .groupBy("shard")
+          .agg(count(lit(1)).as("n_members"),
+            sum(conv(substring(md5(col("body")), 1, 12), 16, 10)
+              .cast("long")).as("sum_h"))
+          .orderBy("shard")
+          .localCheckpoint() // materialize BEFORE deleting the files
+      }
     }),
 
     // THE DAILY RUN in one row: a crawl batch gated against the prior
@@ -941,34 +872,11 @@ object PipelineQueries {
             concat(col("text"),
               lit(" sur1 sur2 sur3 sur4 sur5 sur6 sur7 sur8")).as("text"),
             col("lang")))
-      val kept = crawlGateSharedSnap(batch, prior)
-        .localCheckpoint() // consumed by the budget, the pack and the payload join
-      val chosen = Curation.takeTokenBudget(kept, "lang",
-        Map("en" -> 20000L), defaultBudget = 8000L).select("doc_id")
-      val packed = Curation.packShardsBySize(
-        chosen.join(kept.select(col("doc_id"),
-          octet_length(col("text")).as("n_bytes")), "doc_id"),
-        "doc_id", "n_bytes", targetBytes = 16384L, salt = "daily0")
-      val docsOut = packed.select("doc_id", "shard")
-        .join(kept.select("doc_id", "text"), "doc_id")
-        .select(col("shard"),
-          format_string("%06d.txt", col("doc_id")).as("name"),
-          col("text").cast("binary").as("payload"))
-      val out = java.nio.file.Files.createTempDirectory("graft_daily")
-      graft.sources.TarShards.writeShards(docsOut, out.toString, "shard",
-        "name", "payload")
-      val res = graft.sources.TarShards.readShards(s, out.toString)
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_members"),
-          sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
-          sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
-            .cast("long")).as("sum_h"))
-        .orderBy("shard")
-        .localCheckpoint()
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      res
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
+        numHashes = NumHashes)
+      val kept = snap.gate(batch, bs, 0L, bands = Bands,
+        maxBucketSize = MaxBucket).localCheckpoint()
+      ship(s, kept, 1, "daily0").drop("day")
     }),
 
     // TWO DAYS of the daily run — advance-then-archive certified as one
@@ -992,65 +900,20 @@ object PipelineQueries {
           .withColumn("doc_id", col("doc_id") + 40000))
         .unionByName(prior.where(col("doc_id") >= 150 && col("doc_id") < 250)
           .withColumn("doc_id", col("doc_id") + 60000))
-      // §2.6 overlap (r20): snapshot pass + both day-batch passes are
-      // independent — three jobs together instead of serialized
-      val Seq(sigs0, bsig1, bsig2) = Par.materializeAll("p_daily_loop snapshot and day signatures", Seq(
-        Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes)))
-      val keys0 = Dedup.nearDupKeysFromSignatures(sigs0, prior,
-          numHashes = NumHashes)
-        .localCheckpoint() // the key tier derives from the sigs map-only
-      // one day's OUTPUT stage: budget → byte-pack → tar files → readback
-      def ship(kept: org.apache.spark.sql.DataFrame, day: Int,
-          salt: String): org.apache.spark.sql.DataFrame = {
-        val chosen = Curation.takeTokenBudget(kept, "lang",
-          Map("en" -> 20000L), defaultBudget = 8000L).select("doc_id")
-        val packed = Curation.packShardsBySize(
-          chosen.join(kept.select(col("doc_id"),
-            octet_length(col("text")).as("n_bytes")), "doc_id"),
-          "doc_id", "n_bytes", targetBytes = 16384L, salt = salt)
-        val docsOut = packed.select("doc_id", "shard")
-          .join(kept.select("doc_id", "text"), "doc_id")
-          .select(col("shard"),
-            format_string("%06d.txt", col("doc_id")).as("name"),
-            col("text").cast("binary").as("payload"))
-        val out = java.nio.file.Files.createTempDirectory(s"graft_dloop$day")
-        graft.sources.TarShards.writeShards(docsOut, out.toString, "shard",
-          "name", "payload")
-        val res = graft.sources.TarShards.readShards(s, out.toString)
-          .groupBy("shard")
-          .agg(count(lit(1)).as("n_members"),
-            sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
-            sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
-              .cast("long")).as("sum_h"))
-          .select(lit(day).as("day"), col("shard"), col("n_members"),
-            col("sum_bytes"), col("sum_h"))
-          .localCheckpoint() // materialize BEFORE deleting the files
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        res
-      }
-      // kept1 feeds the shipping chain, both advances and nothing else —
+      val (snap0, Seq(bs1, bs2)) = CrawlSnapshot.build(prior, 0L,
+        Seq(day1, day2), numHashes = NumHashes)
+      // kept1 feeds the shipping chain, the advance and nothing else —
       // materialize once so the day-1 gate never re-executes
-      val kept1 = Dedup.incrementalCrawlGate(day1, keys0, sigs0,
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket, batchSigs = Some(bsig1)).localCheckpoint()
-      // §2.6: day-1's ship (budget → pack → tar → readback, its own temp
-      // dir) only needs kept1 — run it overlapped with the day-2 chain
-      val ship1 = Par.async(ship(kept1, 1, "dloop1"))
-      val keptSigs1 = Dedup.minhashSignatures(kept1, "text", col("doc_id"),
-        NumHashes).localCheckpoint() // one pass over the acceptances; the
-      // banded tier's double read of sigs1 now re-scans two cached frames
-      val keys1 = keys0.unionByName(
-        Dedup.nearDupKeysFromSignatures(keptSigs1, kept1, numHashes = NumHashes))
-      val sigs1 = sigs0.unionByName(keptSigs1)
-      val kept2 = Dedup.incrementalCrawlGate(day2, keys1, sigs1,
-        numHashes = NumHashes, bands = Bands, threshold = 0.8,
-        maxBucketSize = MaxBucket, batchSigs = Some(bsig2)).localCheckpoint()
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
+        maxBucketSize = MaxBucket).localCheckpoint()
+      // §2.6: day-1's ship (its own temp dir) only needs kept1 — run it
+      // overlapped with the day-2 chain
+      val ship1 = Par.async(ship(s, kept1, 1, "dloop1"))
+      val kept2 = snap0.advance(kept1, bs1, 1L)
+        .gate(day2, bs2, 0L, bands = Bands, maxBucketSize = MaxBucket)
+        .localCheckpoint()
       Par.await(ship1, "p_daily_loop day-1 ship")
-        .unionByName(ship(kept2, 2, "dloop2"))
+        .unionByName(ship(s, kept2, 2, "dloop2"))
         .orderBy("day", "shard")
     }),
 
@@ -1090,87 +953,23 @@ object PipelineQueries {
             concat(col("text"),
               lit(" sur1 sur2 sur3 sur4 sur5 sur6 sur7 sur8")).as("text"),
             col("lang")))
-      // §2.6 overlap (r20): the snapshot signature pass and all THREE
-      // day-batch passes are independent (each a pure function of its
-      // own input) — four jobs together instead of serialized
-      val Seq(ps0, bsig1, bsig2, bsig3) = Par.materializeAll("p_daily_loop3 snapshot and day signatures", Seq(
-        Dedup.minhashSignatures(prior, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day1, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day2, "text", col("doc_id"), NumHashes),
-        Dedup.minhashSignatures(day3, "text", col("doc_id"), NumHashes)))
-      val gk0 = Dedup.stampGeneration(
-        Dedup.nearDupKeysFromSignatures(ps0, prior, numHashes = NumHashes), 0L)
-        .localCheckpoint()
-      val gs0 = Dedup.stampSignatureGeneration(ps0, 0L, NumHashes)
-      def gate(day: org.apache.spark.sql.DataFrame,
-          gk: org.apache.spark.sql.DataFrame,
-          gs: org.apache.spark.sql.DataFrame, minGen: Long,
-          bsig: org.apache.spark.sql.DataFrame) =
-        Dedup.incrementalCrawlGate(day,
-          Dedup.retainGenerations(gk, minGen),
-          Dedup.retainSignatureGenerations(gs, minGen, NumHashes),
-          numHashes = NumHashes, bands = Bands, threshold = 0.8,
-          maxBucketSize = MaxBucket, batchSigs = Some(bsig)).localCheckpoint()
-      // BOTH stamped tiers advance off ONE signature pass over the
-      // acceptances (nearDupKeysFromSignatures derives the key tier
-      // map-only) — was two independent passes per day; the two advanced
-      // projections are independent of each other, so their
-      // materializations overlap too (§2.6)
-      def advance(gk: org.apache.spark.sql.DataFrame,
-          gs: org.apache.spark.sql.DataFrame,
-          kept: org.apache.spark.sql.DataFrame, gen: Long) = {
-        val ks = Dedup.minhashSignatures(kept, "text", col("doc_id"), NumHashes)
-          .localCheckpoint()
-        val Seq(gkA, gsA) = Par.materializeAll("p_daily_loop3 advance projections", Seq(
-          gk.unionByName(Dedup.stampGeneration(
-            Dedup.nearDupKeysFromSignatures(ks, kept, numHashes = NumHashes),
-            gen)),
-          gs.unionByName(Dedup.stampSignatureGeneration(ks, gen, NumHashes))))
-        (gkA, gsA)
-      }
-      def ship(kept: org.apache.spark.sql.DataFrame, day: Int,
-          salt: String): org.apache.spark.sql.DataFrame = {
-        val chosen = Curation.takeTokenBudget(kept, "lang",
-          Map("en" -> 20000L), defaultBudget = 8000L).select("doc_id")
-        val packed = Curation.packShardsBySize(
-          chosen.join(kept.select(col("doc_id"),
-            octet_length(col("text")).as("n_bytes")), "doc_id"),
-          "doc_id", "n_bytes", targetBytes = 16384L, salt = salt)
-        val docsOut = packed.select("doc_id", "shard")
-          .join(kept.select("doc_id", "text"), "doc_id")
-          .select(col("shard"),
-            format_string("%06d.txt", col("doc_id")).as("name"),
-            col("text").cast("binary").as("payload"))
-        val out = java.nio.file.Files.createTempDirectory(s"graft_dl3_$day")
-        graft.sources.TarShards.writeShards(docsOut, out.toString, "shard",
-          "name", "payload")
-        val res = graft.sources.TarShards.readShards(s, out.toString)
-          .groupBy("shard")
-          .agg(count(lit(1)).as("n_members"),
-            sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
-            sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
-              .cast("long")).as("sum_h"))
-          .select(lit(day).as("day"), col("shard"), col("n_members"),
-            col("sum_bytes"), col("sum_h"))
-          .localCheckpoint() // materialize BEFORE deleting the files
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        res
-      }
-      val kept1 = gate(day1, gk0, gs0, minGen = 0L, bsig1)
+      val (snap0, Seq(bs1, bs2, bs3)) = CrawlSnapshot.build(prior, 0L,
+        Seq(day1, day2, day3), numHashes = NumHashes)
       // §2.6: each day's ship (its own temp dir, consumes only that
       // day's acceptances) runs overlapped with the NEXT day's
       // gate/advance chain instead of serialized after day 3
-      val ship1 = Par.async(ship(kept1, 1, "dl3a"))
-      val (gk1, gs1) = advance(gk0, gs0, kept1, 1L)
-      val kept2 = gate(day2, gk1, gs1, minGen = 1L, bsig2)
-      val ship2 = Par.async(ship(kept2, 2, "dl3b"))
-      val (gk2, gs2) = advance(gk1, gs1, kept2, 2L)
-      val kept3 = gate(day3, gk2, gs2, minGen = 2L, bsig3)
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
+        maxBucketSize = MaxBucket).localCheckpoint()
+      val ship1 = Par.async(ship(s, kept1, 1, "dl3a"))
+      val snap1 = snap0.advance(kept1, bs1, 1L)
+      val kept2 = snap1.gate(day2, bs2, 1L, bands = Bands,
+        maxBucketSize = MaxBucket).localCheckpoint()
+      val ship2 = Par.async(ship(s, kept2, 2, "dl3b"))
+      val kept3 = snap1.advance(kept2, bs2, 2L).gate(day3, bs3, 2L,
+        bands = Bands, maxBucketSize = MaxBucket).localCheckpoint()
       Par.await(ship1, "p_daily_loop3 day-1 ship")
         .unionByName(Par.await(ship2, "p_daily_loop3 day-2 ship"))
-        .unionByName(ship(kept3, 3, "dl3c"))
+        .unionByName(ship(s, kept3, 3, "dl3c"))
         .orderBy("day", "shard")
     }),
 
@@ -1658,8 +1457,10 @@ object PipelineQueries {
       // job now so it overlaps the lexical gate's own jobs
       val semKeys = Par.async(Similarity.semanticKeys(prior, Flat(ivfCentroids),
         idCol = "doc_id").localCheckpoint())
-      val kept4 = crawlGateSharedSnap(batch, prior,
-        priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
+        canonical = true, numHashes = NumHashes)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
+        maxBucketSize = MaxBucket)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_crawl_sem semantic keys"),
         Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
@@ -1690,8 +1491,10 @@ object PipelineQueries {
       val sem2 = TwoLevel(semCoarse4, semFine4)
       val semKeys = Par.async(Similarity.semanticKeys(prior, sem2,
         idCol = "doc_id").localCheckpoint())
-      val kept4 = crawlGateSharedSnap(batch, prior,
-        priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
+        canonical = true, numHashes = NumHashes)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
+        maxBucketSize = MaxBucket)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_crawl_sem2 semantic keys"),
         sem2, threshold = 0.999, idCol = "doc_id",
@@ -1725,8 +1528,10 @@ object PipelineQueries {
       val pq = Pq(ivfCentroids, pqBooks16)
       val semKeys = Par.async(Similarity.semanticKeys(prior, pq,
         idCol = "doc_id").localCheckpoint())
-      val kept4 = crawlGateSharedSnap(batch, prior,
-        priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
+        canonical = true, numHashes = NumHashes)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
+        maxBucketSize = MaxBucket)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_crawl_sem_pq semantic keys"),
         pq, threshold = 0.999, idCol = "doc_id",
@@ -1808,8 +1613,10 @@ object PipelineQueries {
       // job now so it overlaps the lexical gate's own jobs
       val semKeys = Par.async(Similarity.semanticKeys(prior, Flat(ivfCentroids),
         idCol = "doc_id").localCheckpoint())
-      val kept4 = crawlGateSharedSnap(batch, prior,
-        priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
+        canonical = true, numHashes = NumHashes)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
+        maxBucketSize = MaxBucket)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_daily_full semantic keys"),
         Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
@@ -1818,34 +1625,7 @@ object PipelineQueries {
         .select(col("doc_id"), col("clean_text").as("text"))
         .join(kept5.select("doc_id", "lang"), "doc_id")
         .localCheckpoint()
-      val chosen = Curation.takeTokenBudget(shipIn, "lang",
-        Map("en" -> 20000L), defaultBudget = 8000L).select("doc_id")
-      val packed = Curation.packShardsBySize(
-        chosen.join(shipIn.select(col("doc_id"),
-          octet_length(col("text")).as("n_bytes")), "doc_id"),
-        "doc_id", "n_bytes", targetBytes = 16384L, salt = "dfull")
-      val docsOut = packed.select("doc_id", "shard")
-        .join(shipIn.select("doc_id", "text"), "doc_id")
-        .select(col("shard"),
-          format_string("%06d.txt", col("doc_id")).as("name"),
-          col("text").cast("binary").as("payload"))
-      val out = java.nio.file.Files.createTempDirectory("graft_dfull")
-      graft.sources.TarShards.writeShards(docsOut, out.toString, "shard",
-        "name", "payload")
-      val res = graft.sources.TarShards.readShards(s, out.toString)
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_members"),
-          sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
-          sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
-            .cast("long")).as("sum_h"))
-        .select(lit(1).as("day"), col("shard"), col("n_members"),
-          col("sum_bytes"), col("sum_h"))
-        .orderBy("day", "shard")
-        .localCheckpoint() // materialize BEFORE deleting the files
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      res
+      ship(s, shipIn, 1, "dfull")
     }),
 
     // the COMPLETE production gate ORDER — all SEVEN membranes + the
@@ -1902,8 +1682,10 @@ object PipelineQueries {
       val kept0 = Dedup.incrementalUrlDedup(batch,
           Dedup.urlKeys(prior), idCol = "doc_id")
         .drop("url").localCheckpoint()
-      val kept4 = crawlGateSharedSnap(kept0, prior,
-        priorCanonKeys = Some(Dedup.canonicalKeys(prior)))
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(kept0),
+        canonical = true, numHashes = NumHashes)
+      val kept4 = snap.gate(kept0, bs, 0L, bands = Bands,
+        maxBucketSize = MaxBucket)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_daily_full7 semantic keys"),
         Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
@@ -1916,34 +1698,7 @@ object PipelineQueries {
         .select(col("doc_id"), col("clean_text").as("text"))
         .join(kept5.select("doc_id", "lang"), "doc_id")
         .localCheckpoint()
-      val chosen = Curation.takeTokenBudget(shipIn, "lang",
-        Map("en" -> 20000L), defaultBudget = 8000L).select("doc_id")
-      val packed = Curation.packShardsBySize(
-        chosen.join(shipIn.select(col("doc_id"),
-          octet_length(col("text")).as("n_bytes")), "doc_id"),
-        "doc_id", "n_bytes", targetBytes = 16384L, salt = "dfull7")
-      val docsOut = packed.select("doc_id", "shard")
-        .join(shipIn.select("doc_id", "text"), "doc_id")
-        .select(col("shard"),
-          format_string("%06d.txt", col("doc_id")).as("name"),
-          col("text").cast("binary").as("payload"))
-      val out = java.nio.file.Files.createTempDirectory("graft_dfull7")
-      graft.sources.TarShards.writeShards(docsOut, out.toString, "shard",
-        "name", "payload")
-      val res = graft.sources.TarShards.readShards(s, out.toString)
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_members"),
-          sum(octet_length(col("body_text")).cast("long")).as("sum_bytes"),
-          sum(conv(substring(md5(col("body_text")), 1, 12), 16, 10)
-            .cast("long")).as("sum_h"))
-        .select(lit(1).as("day"), col("shard"), col("n_members"),
-          col("sum_bytes"), col("sum_h"))
-        .orderBy("day", "shard")
-        .localCheckpoint() // materialize BEFORE deleting the files
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      res
+      ship(s, shipIn, 1, "dfull7")
     }),
 
     // SEMANTIC-tier retention — the embedding snapshot under the same

@@ -751,6 +751,15 @@ class CurationSpec extends AnyFunSuite {
         numHashes = 16, bands = 4, threshold = 0.8)
       .select("doc_id").as[Long].collect().toSet
     assert(viaAdvance == viaUnion, s"$viaAdvance vs $viaUnion")
+    // the library form of the same loop: CrawlSnapshot stamps, retains
+    // and advances from the day's batch signatures
+    val (snap0, Seq(bs1, bs2)) = graft.ext.CrawlSnapshot.build(prior, 0L,
+      Seq(day1, day2), numHashes = 16)
+    val viaSnapshot = snap0
+      .advance(snap0.gate(day1, bs1, 0L, bands = 4).localCheckpoint(), bs1, 1L)
+      .gate(day2, bs2, 0L, bands = 4)
+      .select("doc_id").as[Long].collect().toSet
+    assert(viaSnapshot == viaUnion, s"$viaSnapshot vs $viaUnion")
     // sanity: the random split actually exercised the gate both ways
     assert(viaAdvance.nonEmpty && viaAdvance.size < 30,
       s"fixture must mix kept and dropped docs: $viaAdvance")
