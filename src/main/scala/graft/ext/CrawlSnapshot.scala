@@ -24,8 +24,10 @@ import org.apache.spark.sql.functions._
   *
   * Shapes are checked when the value is built, so the constructor can
   * wrap tables read back from storage as well as ones just built.
-  * `numHashes`, `shingleN`, `textCol` and `idCol` are the signature
-  * settings every projection and every batch frame must share.
+  * `numHashes`, `textCol` and `idCol` are the signature settings every
+  * projection and every batch frame must share; shingles, the banded
+  * tier's threshold and its bucket cap are [[Dedup.incrementalCrawlGate]]'s
+  * defaults.
   *
   * The snapshot is a mergeable summary: [[advance]] is a union of
   * per-document pure functions of text, so a snapshot advanced day by
@@ -33,8 +35,7 @@ import org.apache.spark.sql.functions._
   * acceptance (CurationSpec's snapshot-loop advance law). */
 final class CrawlSnapshot(val sigKeys: DataFrame, val sigs: DataFrame,
     val canonKeys: Option[DataFrame] = None, val numHashes: Int = 128,
-    val shingleN: Int = 3, val textCol: String = "text",
-    val idCol: String = "doc_id") {
+    val textCol: String = "text", val idCol: String = "doc_id") {
   import CrawlSnapshot.requireShape
 
   requireShape("sigKeys", sigKeys, Seq("_key", "_gen"))
@@ -42,25 +43,27 @@ final class CrawlSnapshot(val sigKeys: DataFrame, val sigs: DataFrame,
   canonKeys.foreach(requireShape("canonKeys", _, Seq("_key", "_gen")))
 
   /** The kept rows of `batch` (original schema): every projection is
-    * retained at `minGen` ([[Dedup.retainGenerations]]), then the
-    * batch runs through [[Dedup.incrementalCrawlGate]]. `batchSigs` is
-    * the batch's materialized signature table (from
-    * [[CrawlSnapshot.build]]'s `batches`); pass the same frame to
-    * [[advance]]. The retained signatures are materialized once here,
-    * because the banded tier reads them twice. `minGen = 0` with
-    * non-negative generations retains every row, and the result equals
-    * a gate against the unstamped projections: the keyed tiers
-    * anti-join against distinct keys, and each id keeps its newest
-    * signature. */
+    * retained at `minGen`, then the batch runs through
+    * [[Dedup.incrementalCrawlGate]]. `batchSigs` is the batch's
+    * materialized signature table (from [[CrawlSnapshot.build]]'s
+    * `batches`); pass the same frame to [[advance]].
+    *
+    * The key tiers keep every key with a row at `_gen >= minGen`, map
+    * only: that is the key set [[Dedup.retainGenerations]] keeps (some
+    * row reaches `minGen` exactly when the newest one does), and the
+    * tiers anti-join against the keys, so duplicates change nothing.
+    * The signatures keep each id's newest row
+    * ([[Dedup.retainSignatureGenerations]]), materialized once because
+    * the banded tier reads them twice. */
   def gate(batch: DataFrame, batchSigs: DataFrame, minGen: Long,
-      bands: Int = 32, threshold: Double = 0.8,
-      maxBucketSize: Int = 1000): DataFrame =
-    Dedup.incrementalCrawlGate(batch, Dedup.retainGenerations(sigKeys, minGen),
+      bands: Int = 32): DataFrame = {
+    def live(keys: DataFrame) = keys.where(col("_gen") >= minGen).select("_key")
+    Dedup.incrementalCrawlGate(batch, live(sigKeys),
       Dedup.materializeOnce(
         Dedup.retainSignatureGenerations(sigs, minGen, numHashes)),
-      textCol, idCol, numHashes, bands, shingleN, threshold, maxBucketSize,
-      priorCanonKeys = canonKeys.map(Dedup.retainGenerations(_, minGen)),
-      batchSigs = Some(batchSigs))
+      textCol, idCol, numHashes, bands,
+      priorCanonKeys = canonKeys.map(live), batchSigs = Some(batchSigs))
+  }
 
   /** This snapshot with `kept` accepted at generation `gen`. `kept`
     * must be rows of the batch `batchSigs` was built from (a [[gate]]
@@ -75,11 +78,11 @@ final class CrawlSnapshot(val sigKeys: DataFrame, val sigs: DataFrame,
       "left_semi")
     new CrawlSnapshot(
       sigKeys.unionByName(Dedup.stampGeneration(Dedup.nearDupKeysFromSignatures(
-        keptSigs, kept, textCol, numHashes, shingleN), gen)),
+        keptSigs, kept, textCol, numHashes), gen)),
       sigs.unionByName(Dedup.stampSignatureGeneration(keptSigs, gen, numHashes)),
       canonKeys.map(_.unionByName(
         Dedup.stampGeneration(Dedup.canonicalKeys(kept, textCol), gen))),
-      numHashes, shingleN, textCol, idCol)
+      numHashes, textCol, idCol)
   }
 }
 
@@ -98,26 +101,28 @@ object CrawlSnapshot {
     * One signature pass over `docs`; the key tier derives from it
     * map-only. The snapshot signatures, every batch's signatures and
     * the optional (`canonical`) canonical keys are independent jobs, so
-    * they are materialized together on [[Par]]; the key tier follows.
+    * they are materialized together on [[Par]] (on the session's
+    * materialize route, see [[Dedup.materializeOnce]]); the key tier
+    * follows.
     * Returns the snapshot and the batch signature tables in `batches`
     * order, ready for [[CrawlSnapshot.gate]] and
     * [[CrawlSnapshot.advance]]. */
   def build(docs: DataFrame, gen: Long, batches: Seq[DataFrame] = Nil,
-      canonical: Boolean = false, numHashes: Int = 128, shingleN: Int = 3,
+      canonical: Boolean = false, numHashes: Int = 128,
       textCol: String = "text",
       idCol: String = "doc_id"): (CrawlSnapshot, Seq[DataFrame]) = {
     def signatures(df: DataFrame) =
-      Dedup.minhashSignatures(df, textCol, col(idCol), numHashes, shingleN)
-    val mats = Par.materializeAll("CrawlSnapshot.build",
+      Dedup.minhashSignatures(df, textCol, col(idCol), numHashes)
+    val mats = Par.materializeAll(
       (Dedup.stampSignatureGeneration(signatures(docs), gen, numHashes) +:
         batches.map(signatures)) ++
         Option.when(canonical)(
           Dedup.stampGeneration(Dedup.canonicalKeys(docs, textCol), gen)))
     val sigs = mats.head
     val sigKeys = Dedup.stampGeneration(Dedup.nearDupKeysFromSignatures(
-      sigs.drop("_gen"), docs, textCol, numHashes, shingleN), gen)
-      .localCheckpoint()
-    (new CrawlSnapshot(sigKeys, sigs, Option.when(canonical)(mats.last),
-      numHashes, shingleN, textCol, idCol), mats.slice(1, 1 + batches.size))
+      sigs.drop("_gen"), docs, textCol, numHashes), gen)
+    (new CrawlSnapshot(Dedup.materializeNow(sigKeys), sigs,
+      Option.when(canonical)(mats.last), numHashes, textCol, idCol),
+      mats.slice(1, 1 + batches.size))
   }
 }

@@ -532,17 +532,27 @@ object Dedup {
     * (the daily-crawl cadence makes day boundaries the natural point);
     * the default localCheckpoint route has no such growth — its blocks
     * are dropped when the checkpointed frame is GC'd. */
-  private[graft] def materializeOnce(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val route = materializeRoute(
-      sess.conf.getOption("spark.graft.routeMaterialize"),
-      sess.sparkContext.getConf
-        .getBoolean("spark.dynamicAllocation.enabled", defaultValue = false))
-    route match {
+  private[graft] def materializeOnce(df: DataFrame): DataFrame =
+    sessionRoute(df) match {
       case "persist" =>
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       case _ => df.localCheckpoint()
     }
+
+  /** [[materializeOnce]] with the job run NOW on either route: the
+    * persist route's cache is filled here instead of by the first
+    * reader. For eager builds whose jobs overlap on [[Par]]. */
+  private[graft] def materializeNow(df: DataFrame): DataFrame = {
+    val m = materializeOnce(df)
+    if (sessionRoute(df) == "persist") m.count()
+    m
+  }
+
+  private def sessionRoute(df: DataFrame): String = {
+    val sess = df.sparkSession
+    materializeRoute(sess.conf.getOption("spark.graft.routeMaterialize"),
+      sess.sparkContext.getConf
+        .getBoolean("spark.dynamicAllocation.enabled", defaultValue = false))
   }
 
   /** Cluster-profile route default (r20, verdict #8): under dynamic

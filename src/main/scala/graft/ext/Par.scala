@@ -20,11 +20,10 @@ import org.apache.spark.sql.DataFrame
   * at production scale the same overlap applies to the real per-day
   * projection builds.
   *
-  * Determinism: `localCheckpoint()` only MATERIALIZES a frame — its
-  * content is a pure function of the plan — so completion order cannot
-  * change any result (the three-scale oracle run is the empirical
-  * check). Failures propagate: a failed job's exception is rethrown to
-  * the caller by `await`.
+  * Determinism: materializing a frame does not change its content — a
+  * pure function of the plan — so completion order cannot change any
+  * result (the three-scale oracle run is the empirical check). Failures
+  * propagate: a failed job's exception is rethrown to the caller.
   *
   * Pool: a cached pool of daemon threads, one per task in flight, so no
   * group (`CrawlSnapshot.build` submits one job per day batch plus up to
@@ -35,9 +34,12 @@ import org.apache.spark.sql.DataFrame
   * Daemon threads: the pool must never block JVM exit (Bench/Verify are
   * short-lived mains).
   *
-  * Bounded waits: `await` gives up after [[Timeout]] with an error that
-  * names what it was waiting for, so a stuck job fails its fixture
-  * loudly instead of hanging the run.
+  * Waits: `await` gives up after [[Timeout]] with an error that names
+  * what it was waiting for, so a stuck job fails its fixture loudly
+  * instead of hanging the run. [[materializeAll]] waits without a
+  * deadline: it is the library's path, where a projection build takes
+  * as long as the corpus needs, and its thunks await nothing, so they
+  * cannot deadlock.
   */
 private[graft] object Par {
   /** Far above any fixture's projection build (seconds at bench scale). */
@@ -54,13 +56,15 @@ private[graft] object Par {
         }
       }))
 
-  /** `localCheckpoint()` every frame with the jobs overlapped; returns
-    * the checkpointed frames in input order. The frames must be
-    * INDEPENDENT (none reads another's result); `what` names them in a
-    * timeout error. */
-  def materializeAll(what: String, dfs: Seq[DataFrame]): Seq[DataFrame] =
-    dfs.map(df => async(df.localCheckpoint())).zipWithIndex
-      .map { case (f, i) => await(f, s"$what, frame $i") }
+  /** Materialize every frame with the jobs overlapped, on the session's
+    * materialize route ([[Dedup.materializeNow]]: localCheckpoint, or
+    * the lineage-keeping persist under dynamic allocation or
+    * `spark.graft.routeMaterialize=persist`); returns the materialized
+    * frames in input order. The frames must be INDEPENDENT (none reads
+    * another's result). */
+  def materializeAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
+    dfs.map(df => async(Dedup.materializeNow(df)))
+      .map(Await.result(_, Duration.Inf))
 
   /** Kick off an independent action now; `await` it when needed — lets a
     * fixture start a projection build before an unrelated gate's own

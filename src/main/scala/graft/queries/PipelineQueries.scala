@@ -419,7 +419,7 @@ object PipelineQueries {
       // form; CurationSpec pins the equivalence, the 20x probe the win)
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
         numHashes = NumHashes)
-      snap.gate(batch, bs, 0L, bands = Bands, maxBucketSize = MaxBucket)
+      snap.gate(batch, bs, 0L, bands = Bands)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_new"), sum("doc_id").as("sum_ids"))
         .orderBy("lang")
@@ -537,10 +537,9 @@ object PipelineQueries {
       // materialize the day-1 acceptances ONCE: kept1 is consumed by the
       // advance and the final union; without this the whole day-1 gate
       // re-executes in each of those subtrees
-      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
-        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands).localCheckpoint()
       val kept2 = snap0.advance(kept1, bs1, 1L)
-        .gate(day2, bs2, 0L, bands = Bands, maxBucketSize = MaxBucket)
+        .gate(day2, bs2, 0L, bands = Bands)
       kept1.select(lit(1).as("day"), col("lang"), col("doc_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("lang"), col("doc_id")))
         .groupBy("day", "lang")
@@ -618,10 +617,9 @@ object PipelineQueries {
             col("lang")))
       val (snap0, Seq(bs1, bs2)) = CrawlSnapshot.build(prior, 0L,
         Seq(day1, day2), numHashes = NumHashes)
-      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
-        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands).localCheckpoint()
       val kept2 = snap0.advance(kept1, bs1, 1L)
-        .gate(day2, bs2, 1L, bands = Bands, maxBucketSize = MaxBucket)
+        .gate(day2, bs2, 1L, bands = Bands)
       kept1.select(lit(1).as("day"), col("lang"), col("doc_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("lang"), col("doc_id")))
         .groupBy("day", "lang")
@@ -662,10 +660,9 @@ object PipelineQueries {
             col("lang")))
       val (snap0, Seq(bs1, bs2)) = CrawlSnapshot.build(prior, 0L,
         Seq(day1, day2), canonical = true, numHashes = NumHashes)
-      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
-        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands).localCheckpoint()
       val kept2 = snap0.advance(kept1, bs1, 1L)
-        .gate(day2, bs2, 1L, bands = Bands, maxBucketSize = MaxBucket)
+        .gate(day2, bs2, 1L, bands = Bands)
       kept1.select(lit(1).as("day"), col("lang"), col("doc_id"))
         .unionByName(kept2.select(lit(2).as("day"), col("lang"), col("doc_id")))
         .groupBy("day", "lang")
@@ -703,7 +700,7 @@ object PipelineQueries {
             col("lang")))
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
         canonical = true, numHashes = NumHashes)
-      snap.gate(batch, bs, 0L, bands = Bands, maxBucketSize = MaxBucket)
+      snap.gate(batch, bs, 0L, bands = Bands)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_new"), sum("doc_id").as("sum_ids"))
         .orderBy("lang")
@@ -874,8 +871,7 @@ object PipelineQueries {
             col("lang")))
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
         numHashes = NumHashes)
-      val kept = snap.gate(batch, bs, 0L, bands = Bands,
-        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept = snap.gate(batch, bs, 0L, bands = Bands).localCheckpoint()
       ship(s, kept, 1, "daily0").drop("day")
     }),
 
@@ -904,13 +900,12 @@ object PipelineQueries {
         Seq(day1, day2), numHashes = NumHashes)
       // kept1 feeds the shipping chain, the advance and nothing else —
       // materialize once so the day-1 gate never re-executes
-      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
-        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands).localCheckpoint()
       // §2.6: day-1's ship (its own temp dir) only needs kept1 — run it
       // overlapped with the day-2 chain
       val ship1 = Par.async(ship(s, kept1, 1, "dloop1"))
       val kept2 = snap0.advance(kept1, bs1, 1L)
-        .gate(day2, bs2, 0L, bands = Bands, maxBucketSize = MaxBucket)
+        .gate(day2, bs2, 0L, bands = Bands)
         .localCheckpoint()
       Par.await(ship1, "p_daily_loop day-1 ship")
         .unionByName(ship(s, kept2, 2, "dloop2"))
@@ -958,15 +953,13 @@ object PipelineQueries {
       // §2.6: each day's ship (its own temp dir, consumes only that
       // day's acceptances) runs overlapped with the NEXT day's
       // gate/advance chain instead of serialized after day 3
-      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands,
-        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept1 = snap0.gate(day1, bs1, 0L, bands = Bands).localCheckpoint()
       val ship1 = Par.async(ship(s, kept1, 1, "dl3a"))
       val snap1 = snap0.advance(kept1, bs1, 1L)
-      val kept2 = snap1.gate(day2, bs2, 1L, bands = Bands,
-        maxBucketSize = MaxBucket).localCheckpoint()
+      val kept2 = snap1.gate(day2, bs2, 1L, bands = Bands).localCheckpoint()
       val ship2 = Par.async(ship(s, kept2, 2, "dl3b"))
-      val kept3 = snap1.advance(kept2, bs2, 2L).gate(day3, bs3, 2L,
-        bands = Bands, maxBucketSize = MaxBucket).localCheckpoint()
+      val kept3 = snap1.advance(kept2, bs2, 2L)
+        .gate(day3, bs3, 2L, bands = Bands).localCheckpoint()
       Par.await(ship1, "p_daily_loop3 day-1 ship")
         .unionByName(Par.await(ship2, "p_daily_loop3 day-2 ship"))
         .unionByName(ship(s, kept3, 3, "dl3c"))
@@ -1459,8 +1452,7 @@ object PipelineQueries {
         idCol = "doc_id").localCheckpoint())
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
         canonical = true, numHashes = NumHashes)
-      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
-        maxBucketSize = MaxBucket)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_crawl_sem semantic keys"),
         Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
@@ -1493,8 +1485,7 @@ object PipelineQueries {
         idCol = "doc_id").localCheckpoint())
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
         canonical = true, numHashes = NumHashes)
-      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
-        maxBucketSize = MaxBucket)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_crawl_sem2 semantic keys"),
         sem2, threshold = 0.999, idCol = "doc_id",
@@ -1530,8 +1521,7 @@ object PipelineQueries {
         idCol = "doc_id").localCheckpoint())
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
         canonical = true, numHashes = NumHashes)
-      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
-        maxBucketSize = MaxBucket)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_crawl_sem_pq semantic keys"),
         pq, threshold = 0.999, idCol = "doc_id",
@@ -1615,8 +1605,7 @@ object PipelineQueries {
         idCol = "doc_id").localCheckpoint())
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(batch),
         canonical = true, numHashes = NumHashes)
-      val kept4 = snap.gate(batch, bs, 0L, bands = Bands,
-        maxBucketSize = MaxBucket)
+      val kept4 = snap.gate(batch, bs, 0L, bands = Bands)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_daily_full semantic keys"),
         Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,
@@ -1684,8 +1673,7 @@ object PipelineQueries {
         .drop("url").localCheckpoint()
       val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(kept0),
         canonical = true, numHashes = NumHashes)
-      val kept4 = snap.gate(kept0, bs, 0L, bands = Bands,
-        maxBucketSize = MaxBucket)
+      val kept4 = snap.gate(kept0, bs, 0L, bands = Bands)
       val kept5 = Similarity.incrementalSemDedup(kept4, Par.await(semKeys,
           "p_daily_full7 semantic keys"),
         Flat(ivfCentroids), threshold = 0.999, idCol = "doc_id", nprobe = 1,

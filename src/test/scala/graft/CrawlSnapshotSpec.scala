@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.{CrawlSnapshot, Dedup}
@@ -102,6 +103,51 @@ class CrawlSnapshotSpec extends AnyFunSuite {
     val gen0Replicas = (1L to 10L).map(i => replica(i)._1).toSet
     assert(gen0Replicas.map(_ / 100) == Set(1L, 2L, 3L))
     assert(ids(snap2.gate(day3, bs3, 1L, bands = 16)) == gen0Replicas)
+  }
+
+  test("build on the persist materialize route: every projection cached with its lineage, filled at build; same gate result") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(37)
+    val corpus = (1L to 60L).map { i =>
+      (i, Seq.fill(3 + rnd.nextInt(6))(s"w${rnd.nextInt(8)}").mkString(" "))
+    }
+    val prior = corpus.filter(_._1 <= 40).toDF("doc_id", "text")
+    val day1 = corpus.filter(_._1 > 20).toDF("doc_id", "text")
+    def kept(): Set[Long] = {
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(day1),
+        canonical = true, numHashes = 16)
+      snap.gate(day1, bs, 0L, bands = 4).select("doc_id").as[Long]
+        .collect().toSet
+    }
+    val viaCheckpoint = kept()
+    val key = "spark.graft.routeMaterialize"
+    val saved = spark.conf.getOption(key)
+    def cachedRdds() = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    try {
+      spark.conf.set(key, "persist")
+      val before = cachedRdds()
+      val (snap, Seq(bs)) = CrawlSnapshot.build(prior, 0L, Seq(day1),
+        canonical = true, numHashes = 16)
+      val built = Seq(snap.sigKeys, snap.sigs, snap.canonKeys.get, bs)
+      // MEMORY_AND_DISK is the persist route's entry; localCheckpoint
+      // leaves the frame NONE with its plan cut to a LogicalRDD
+      built.foreach { df =>
+        assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+        assert(!df.queryExecution.logical.toString.contains("LogicalRDD"))
+      }
+      // … and each cache was filled by build itself, before any reader
+      assert((cachedRdds() -- before).size >= built.size)
+      assert(snap.gate(day1, bs, 0L, bands = 4).select("doc_id").as[Long]
+        .collect().toSet == viaCheckpoint)
+      assert(viaCheckpoint.nonEmpty && viaCheckpoint.size < 40, viaCheckpoint)
+    } finally {
+      spark.catalog.clearCache()
+      saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
   }
 
   test("a mis-shaped projection is rejected when the value is built, naming the table") {

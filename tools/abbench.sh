@@ -4,6 +4,8 @@
 # across two or three jars on the same host — wobble moves all sides
 # together, the RATIO is the signal.
 # Usage: tools/abbench.sh <row> <reps> <label=jar> [label=jar ...]
+# Reads the FIRST stdout line with "queries" (Bench's full line, at full
+# precision); the compact last line rounds its times to the millisecond.
 set -u
 ROW="$1"; REPS="$2"; shift 2
 SF="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
@@ -20,7 +22,7 @@ for rep in $(seq 1 "$REPS"); do
       java $OPENS -Xmx${SPARK_DRIVER_MEM:-32g} \
         -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
         -cp "/opt/spark/jars/*:$jar" graft.Bench 2>/dev/null |
-      python3 -c "import json,sys; print(json.loads([l for l in sys.stdin if '\"queries\"' in l][-1])['queries']['$ROW'])")
+      python3 -c "import json,sys; print(json.loads([l for l in sys.stdin if '\"queries\"' in l][0])['queries']['$ROW'])")
     echo "$ROW rep$rep $label $sec"
   done
 done
