@@ -131,11 +131,8 @@ object XGBoost {
     }
     folded.unpersist(blocking = false)
     pinned.foreach(_.unpersist(blocking = false))
-    val maximize = customMetric.map(_.maximize).getOrElse(
-      metricName.startsWith("auc") || metricName.startsWith("ndcg") ||
-        metricName.startsWith("map") || metricName.startsWith("precision") ||
-        metricName.startsWith("pre@") || metricName.startsWith("ams@") ||
-        metricName == "interval-regression-accuracy")
+    val maximize = customMetric.map(_.maximize)
+      .getOrElse(graft.metric.Metrics.higherIsBetter(metricName))
     CvResult(histories, maximize)
   }
 }

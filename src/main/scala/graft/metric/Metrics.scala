@@ -50,17 +50,37 @@ object Metrics {
   def errorAt(pred: Column, label: Column, w: Column, t: Double = 0.5): Column =
     sum(w * when((pred > t) =!= (label > lit(0.5)), 1.0).otherwise(0.0)) / sum(w)
 
-  /** Stirling-series log-gamma (same closed form is emitted in the oracle
-    * SQL — Spark and DuckDB lack a shared lgamma builtin). Accurate to
-    * ~1e-8 for x ≥ 1, which count labels satisfy after the +1 shift. */
-  def lgammaStirling(x: Column): Column =
-    (x - lit(0.5)) * log(x) - x + lit(0.5 * math.log(2 * math.Pi)) +
-      lit(1.0) / (lit(12.0) * x) - lit(1.0) / (lit(360.0) * pow(x, 3))
+  /** Log-gamma by the Stirling series, evaluated at x + 6 and shifted back
+    * by the recurrence `lgamma(x) = lgamma(x + 6) − ln(x(x+1)…(x+5))`:
+    * within 5e-8 of the exact value for x ≥ 1, which count labels satisfy
+    * after the +1 shift (the series at x itself is off by 5e-4 at x = 1).
+    * The same closed form is emitted in the oracle SQL — Spark and DuckDB
+    * lack a shared lgamma builtin. */
+  def lgammaStirling(x: Column): Column = {
+    val z = x + lit(6.0)
+    (z - lit(0.5)) * log(z) - z + lit(0.5 * math.log(2 * math.Pi)) +
+      lit(1.0) / (lit(12.0) * z) - lit(1.0) / (lit(360.0) * pow(z, 3)) -
+      log(x * (x + lit(1.0)) * (x + lit(2.0)) * (x + lit(3.0)) * (x + lit(4.0)) * (x + lit(5.0)))
+  }
+
+  /** [[lgammaStirling]] of one value. */
+  def lgammaStirling(x: Double): Double = {
+    val z = x + 6.0
+    (z - 0.5) * math.log(z) - z + 0.5 * math.log(2 * math.Pi) +
+      1.0 / (12.0 * z) - 1.0 / (360.0 * math.pow(z, 3)) -
+      math.log(x * (x + 1.0) * (x + 2.0) * (x + 3.0) * (x + 4.0) * (x + 5.0))
+  }
 
   /** poisson negative log-likelihood (`elementwise_metric.cu:244`). */
   def poissonNloglik(pred: Column, label: Column, w: Column): Column = {
     val p = greatest(pred, lit(1e-16))
     sum(w * (p - label * log(p) + lgammaStirling(label + lit(1.0)))) / sum(w)
+  }
+
+  /** One row's [[poissonNloglik]] term (the trainer's watch loop). */
+  def poissonNloglik(pred: Double, label: Double): Double = {
+    val p = math.max(pred, 1e-16)
+    p - label * math.log(p) + lgammaStirling(label + 1.0)
   }
 
   /** gamma deviance (`elementwise_metric.cu:263`). */
@@ -95,6 +115,13 @@ object Metrics {
     val r = pred - label
     sum(w * when(r > 0, lit(1.0 - tau)).otherwise(lit(tau)) * r * r) / sum(w)
   }
+
+  /** Whether a larger value of metric `name` is better (early stopping,
+    * cv): the AUCs, the ranking gains, AMS and interval accuracy. */
+  def higherIsBetter(name: String): Boolean =
+    name.startsWith("auc") || name.startsWith("ndcg") || name.startsWith("map") ||
+      name == "pre" || name.startsWith("pre@") || name.startsWith("ams@") ||
+      name == "interval-regression-accuracy"
 
   // ---- multiclass (multiclass_metric.cu) ----------------------------------
 

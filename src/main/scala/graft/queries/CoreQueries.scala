@@ -301,8 +301,10 @@ object CoreQueries {
     "m_mphe" -> mSql("sum(w * (sqrt(1.0 + (pred - yreg) * (pred - yreg)) - 1.0)) / sum(w)", "mphe"),
     "m_poisson_nloglik" -> mSql(
       "sum(w * (greatest(pred, 1e-16) - ycnt * ln(greatest(pred, 1e-16)) + " +
-        "((ycnt + 1.0) - 0.5) * ln(ycnt + 1.0) - (ycnt + 1.0) + 0.5 * ln(2 * pi()) + " +
-        "1.0 / (12.0 * (ycnt + 1.0)) - 1.0 / (360.0 * pow(ycnt + 1.0, 3)))) / sum(w)",
+        "(((ycnt + 1.0) + 6.0) - 0.5) * ln((ycnt + 1.0) + 6.0) - ((ycnt + 1.0) + 6.0) + " +
+        "0.5 * ln(2 * pi()) + 1.0 / (12.0 * ((ycnt + 1.0) + 6.0)) - " +
+        "1.0 / (360.0 * pow((ycnt + 1.0) + 6.0, 3)) - ln((ycnt + 1.0) * ((ycnt + 1.0) + 1.0) * " +
+        "((ycnt + 1.0) + 2.0) * ((ycnt + 1.0) + 3.0) * ((ycnt + 1.0) + 4.0) * ((ycnt + 1.0) + 5.0)))) / sum(w)",
       "poisson_nloglik"),
     "m_gamma_deviance" -> mSql(
       "sum(w * 2.0 * (ln((pred + 1e-16) / (yreg + 1e-16)) + yreg / (pred + 1e-16) - 1.0)) / sum(w)",

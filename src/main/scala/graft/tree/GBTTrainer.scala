@@ -753,11 +753,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           if (watchSets.nonEmpty)
             watchSets.map(_._1).zip(watchCaches)
           else Seq(("", cache))
-        def maximizeOf(n: String): Boolean =
-          n.startsWith("auc") || n.startsWith("ndcg") ||
-            n.startsWith("map") || n.startsWith("precision") ||
-            n.startsWith("pre@") || n.startsWith("ams@") ||
-            n == "interval-regression-accuracy"
         // every metric in the list is evaluated per watch; the LAST one of
         // the LAST watch drives early stopping (reference semantics for a
         // repeated eval_metric param)
@@ -776,7 +771,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
                 (a, b) => (a._1 + b._1, a._2 + b._2))
               Seq((cm.name, cm.finish(num, den), cm.maximize))
             case None =>
-              metricNames.map(n => (n, evalMetricValue(n, c, obj), maximizeOf(n)))
+              metricNames.map(n => (n, evalMetricValue(n, c, obj), graft.metric.Metrics.higherIsBetter(n)))
           }
         val evals = watchList.flatMap { case (wName, c) =>
           evalAll(c).map { case (mName, v, maximize) =>
@@ -865,170 +860,102 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     else (finalDropped, eta / (k + eta), k.toDouble / (k + eta))
   }
 
-  /** Grow one tree for output group `grp`, dispatching on the expand
-    * policy (ref `src/tree/driver.h:1-126`: depthwise BFS vs lossguide
-    * best-first queue; `grow_policy` `src/tree/param.h:38,99-106`). */
+  /** Grow one tree for output group `grp` (ref `src/tree/driver.h:1-126`,
+    * `grow_policy` `src/tree/param.h:38,99-106`). One driver serves both
+    * expand policies. It keeps a queue of the nodes whose best split
+    * gains; each pass expands either the single best of them (lossguide,
+    * by `(gain, -nid)`) or every queued node — all at the current depth —
+    * in nid order, up to `maxLeaves` (depthwise, ref UpdateTree
+    * `updater_quantile_hist.cc:96-180`). The pass then builds the smaller
+    * child of every expanded node in ONE histogram aggregation and derives
+    * each sibling by subtraction from its parent (ref BuildHistLeftRight,
+    * `histogram.h:203-213,386-425`); it is skipped when the children sit
+    * at the depth cap or no leaf is left to spend. A depthwise tree costs
+    * one aggregation per level, a lossguide tree one per split — the price
+    * of unbalanced trees. `maxDepth = 0` means no split for depthwise and
+    * no depth cap for lossguide. */
   private def growTree(
       cache: RDD[(BInst, Array[Double])],
       globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
       numFeatures: Int, obj: Objective, softmax: SoftmaxObjective, grp: Int,
       iter: Int, colSampler: ColumnSampler,
       droppedShapes: Array[(TreeShape, Double, Int)]): TreeShape = {
-    val rg = rowGrad(obj, softmax, grp, iter, droppedShapes)
-    params.growPolicy match {
-      case "depthwise" => growTreeDepthwise(cache, globalGrads, cuts, numFeatures, rg, iter, colSampler)
-      case "lossguide" => growTreeLossguide(cache, globalGrads, cuts, numFeatures, rg, iter, colSampler)
+    val lossguide = params.growPolicy match {
+      case "depthwise" => false
+      case "lossguide" => true
       case other => throw new IllegalArgumentException(
         s"unknown grow_policy: $other (supported: depthwise, lossguide)")
     }
-  }
-
-  /** The per-row gradient of one tree, shipped with its passes. */
-  private def rowGrad(obj: Objective, softmax: SoftmaxObjective, grp: Int, iter: Int,
-      dropped: Array[(TreeShape, Double, Int)]): RowGrad =
-    new RowGrad(params, obj, softmax, grp, iter, dropped, gbMeanU)
-
-  /** Best-first (lossguide) growth: a driver-side priority queue expands
-    * the highest-gain candidate anywhere in the tree until `maxLeaves`
-    * (ref `src/tree/driver.h` lossguide ordering). Each split costs ONE
-    * histogram aggregation (smaller child built, sibling by subtraction),
-    * so a tree with L leaves costs L−1 aggregation rounds — the price of
-    * unbalanced trees; depthwise batches a whole level per round. */
-  private def growTreeLossguide(
-      cache: RDD[(BInst, Array[Double])],
-      globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
-      numFeatures: Int, rg: RowGrad, iter: Int, colSampler: ColumnSampler): TreeShape = {
-
-    val nodes = new ArrayBuffer[BuildNode]
+    val depthCap = if (lossguide && params.maxDepth == 0) Int.MaxValue else params.maxDepth
+    val maxLeaves = if (params.maxLeaves > 0) params.maxLeaves else Int.MaxValue
+    val rg = rowGrad(obj, softmax, grp, iter, droppedShapes)
     val treeCols = colSampler.sampleTree(iter, params.colsampleBytree)
     val (rootG, rootH) = RoundPasses.totals(cache, globalGrads, rg)
-    nodes += new BuildNode(rootG, rootH, 0)
+    val nodes = ArrayBuffer(new BuildNode(rootG, rootH, 0))
     if (params.interactionConstraints.nonEmpty)
       nodes(0).allowed = Some((0 until numFeatures).toSet)
 
+    // a node's histogram is kept while the node waits in the queue
     val hists = collection.mutable.Map[Int, Array[Double]]()
-    hists(0) = RoundPasses.histograms(cache, globalGrads, rg, cuts, Array(0), nodesShape(nodes))(0)
-
-    // max-queue by (gain, then smaller nid) for deterministic tie-breaks
-    val queue = collection.mutable.PriorityQueue.empty[(Double, Int, SplitCandidate)](
-      Ordering.by { case (gain, nid, _) => (gain, -nid) })
-    def tryEnqueue(nid: Int): Unit = {
+    val queue = new ArrayBuffer[(Int, SplitCandidate)]
+    def evaluate(nid: Int): Unit = {
       val n = nodes(nid)
-      if (params.maxDepth > 0 && n.depth >= params.maxDepth) return
-      val nodeCols0 = colSampler.sampleNode(
+      val sampled = colSampler.sampleNode(
         colSampler.sampleLevel(treeCols, iter, n.depth, params.colsampleBylevel),
         iter, n.depth, nid, params.colsampleBynode)
-      val nodeCols = n.allowed match {
-        case Some(a) => nodeCols0.filter(a.contains)
-        case None => nodeCols0
-      }
-      SplitEnumerator.bestSplit(hists(nid), cuts, nodeCols, n.g, n.h, params,
+      val cols = n.allowed.fold(sampled)(a => sampled.filter(a.contains))
+      SplitEnumerator.bestSplit(hists(nid), cuts, cols, n.g, n.h, params,
         n.lowerBound, n.upperBound) match {
-        case Some(c) if c.gain > 0 => queue.enqueue((c.gain, nid, c))
-        case _ => ()
+        case Some(c) if c.gain > 0 => queue += ((nid, c))
+        case _ => hists.remove(nid)
       }
     }
-    tryEnqueue(0)
+    def build(nids: Array[Int]): Array[Array[Double]] =
+      RoundPasses.histograms(cache, globalGrads, rg, cuts, nids, nodesShape(nodes))
 
     var leaves = 1
-    val maxLeaves = if (params.maxLeaves > 0) params.maxLeaves else Int.MaxValue
+    if (depthCap > 0 && leaves < maxLeaves) { hists(0) = build(Array(0))(0); evaluate(0) }
     while (queue.nonEmpty && leaves < maxLeaves) {
-      val (_, nid, c) = queue.dequeue()
-      applySplit(nodes, nid, c)
-      leaves += 1
-      val l = nodes(nid).left; val r = nodes(nid).right
-      val (small, large) = if (nodes(l).h <= nodes(r).h) (l, r) else (r, l)
-      val built = RoundPasses.histograms(cache, globalGrads, rg, cuts, Array(small), nodesShape(nodes))(0)
-      hists(small) = built
-      val ph = hists(nid)
-      val sib = new Array[Double](ph.length)
-      var i = 0
-      while (i < ph.length) { sib(i) = ph(i) - built(i); i += 1 }
-      hists(large) = sib
-      hists.remove(nid) // expanded nodes never need their histogram again
-      tryEnqueue(l)
-      tryEnqueue(r)
-    }
-    nodes.foreach { n =>
-      // every node (internal too) gets its would-be leaf weight so the
-      // prune updater can collapse splits exactly (ref CollapseToLeaf)
-      n.weight = SplitEnumerator.calcWeight(n.g, n.h, params, n.lowerBound, n.upperBound)
-    }
-    finalizeShape(nodes)
-  }
-
-  /** Grow one tree level-synchronously (ref UpdateTree,
-    * `updater_quantile_hist.cc:96-180`): ONE histogram aggregation per
-    * level covers every frontier node. */
-  private def growTreeDepthwise(
-      cache: RDD[(BInst, Array[Double])],
-      globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
-      numFeatures: Int, rg: RowGrad, iter: Int, colSampler: ColumnSampler): TreeShape = {
-
-    val sc = cache.sparkContext
-    val nodes = new ArrayBuffer[BuildNode]
-    val treeCols = colSampler.sampleTree(iter, params.colsampleBytree)
-
-    // root totals
-    val (rootG, rootH) = RoundPasses.totals(cache, globalGrads, rg)
-    nodes += new BuildNode(rootG, rootH, 0)
-    if (params.interactionConstraints.nonEmpty)
-      nodes(0).allowed = Some((0 until numFeatures).toSet)
-
-    var frontier = Array(0)
-    var parentHists = Map.empty[Int, Array[Double]] // node id → hist of that node
-    var depth = 0
-    var leaves = 1
-
-    while (frontier.nonEmpty && depth < params.maxDepth &&
-        (params.maxLeaves == 0 || leaves < params.maxLeaves)) {
-
-      // subtraction trick (histogram.h:203-213,386-425): build smaller sibling
-      val (buildSet, subtractSet) = planHistBuilds(frontier, parentHists, nodes)
-      val built = RoundPasses.histograms(cache, globalGrads, rg, cuts, buildSet, nodesShape(nodes))
-      val hists = collection.mutable.Map[Int, Array[Double]](buildSet.zip(built).toSeq: _*)
-      subtractSet.foreach { case (nid, parent, sibling) =>
-        val ph = parentHists(parent)
-        val sh = hists(sibling)
-        val out = new Array[Double](ph.length)
-        var i = 0
-        while (i < ph.length) { out(i) = ph(i) - sh(i); i += 1 }
-        hists(nid) = out
-      }
-
-      val levelCols = colSampler.sampleLevel(treeCols, iter, depth, params.colsampleBylevel)
-      val nextFrontier = new ArrayBuffer[Int]
-      frontier.foreach { nid =>
-        val n = nodes(nid)
-        val nodeCols0 = colSampler.sampleNode(levelCols, iter, depth, nid, params.colsampleBynode)
-        val nodeCols = n.allowed match {
-          case Some(a) => nodeCols0.filter(a.contains)
-          case None => nodeCols0
+      val expand =
+        if (lossguide) {
+          val best = queue.maxBy { case (nid, c) => (c.gain, -nid) }
+          queue -= best
+          Seq(best)
+        } else {
+          val level = queue.take(maxLeaves - leaves).toSeq
+          queue.clear()
+          level
         }
-        val cand = SplitEnumerator.bestSplit(hists(nid), cuts, nodeCols, n.g, n.h,
-          params, n.lowerBound, n.upperBound)
-        cand match {
-          case Some(c) if c.gain > 0 &&
-              (params.maxLeaves == 0 || leaves + 1 <= math.max(params.maxLeaves, 2)) =>
-            applySplit(nodes, nid, c)
-            leaves += 1
-            nextFrontier += nodes(nid).left
-            nextFrontier += nodes(nid).right
-          case _ =>
-            n.weight = SplitEnumerator.calcWeight(n.g, n.h, params, n.lowerBound, n.upperBound)
+      expand.foreach { case (nid, c) => applySplit(nodes, nid, c); leaves += 1 }
+      // the children of one pass share a depth
+      val parents = expand.map { case (nid, _) => (nodes(nid), hists.remove(nid).get) }
+      if (parents.head._1.depth + 1 < depthCap && leaves < maxLeaves) {
+        val small = parents.map { case (p, _) =>
+          if (nodes(p.left).h <= nodes(p.right).h) p.left else p.right }.toArray
+        val built = build(small)
+        parents.indices.foreach { i =>
+          val (p, ph) = parents(i)
+          val sib = new Array[Double](ph.length)
+          var j = 0
+          while (j < ph.length) { sib(j) = ph(j) - built(i)(j); j += 1 }
+          hists(small(i)) = built(i)
+          hists(if (small(i) == p.left) p.right else p.left) = sib
         }
+        parents.foreach { case (p, _) => evaluate(p.left); evaluate(p.right) }
       }
-      parentHists = hists.toMap
-      frontier = nextFrontier.toArray
-      depth += 1
     }
     // every node (internal too) gets its would-be leaf weight so the
     // prune updater can collapse splits exactly (ref CollapseToLeaf)
     nodes.foreach { n =>
       n.weight = SplitEnumerator.calcWeight(n.g, n.h, params, n.lowerBound, n.upperBound)
     }
-    finalizeShape(nodes)
+    nodesShape(nodes)
   }
+
+  /** The per-row gradient of one tree, shipped with its passes. */
+  private def rowGrad(obj: Objective, softmax: SoftmaxObjective, grp: Int, iter: Int,
+      dropped: Array[(TreeShape, Double, Int)]): RowGrad =
+    new RowGrad(params, obj, softmax, grp, iter, dropped, gbMeanU)
 
   private def applySplit(nodes: ArrayBuffer[BuildNode], nid: Int, c: SplitCandidate): Unit = {
     val n = nodes(nid)
@@ -1056,33 +983,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     n.right = nodes.length - 1
   }
 
-  /** Decide which child of each split pair gets a fresh histogram build
-    * (smaller sumHess) vs parent-subtraction (ref BuildHistLeftRight,
-    * histogram.h:386-425). Root or nodes whose parent hist is unavailable
-    * are built directly. Returns (buildSet, subtract = (nid, parent, sibling)). */
-  private def planHistBuilds(
-      frontier: Array[Int], parentHists: Map[Int, Array[Double]],
-      nodes: ArrayBuffer[BuildNode]): (Array[Int], Array[(Int, Int, Int)]) = {
-    if (frontier.sameElements(Array(0))) return (Array(0), Array.empty)
-    val build = new ArrayBuffer[Int]
-    val subtract = new ArrayBuffer[(Int, Int, Int)]
-    // frontier children come in (left, right) consecutive pairs per parent
-    val byParent = frontier.groupBy { nid =>
-      nodes.indexWhere(p => p.left == nid || p.right == nid)
-    }
-    byParent.foreach { case (parent, kids) =>
-      if (parent < 0 || !parentHists.contains(parent) || kids.length != 2) {
-        kids.foreach(build += _)
-      } else {
-        val Array(a, b) = kids
-        val (small, large) = if (nodes(a).h <= nodes(b).h) (a, b) else (b, a)
-        build += small
-        subtract += ((large, parent, small))
-      }
-    }
-    (build.toArray, subtract.toArray)
-  }
-
   private def nodesShape(nodes: ArrayBuffer[BuildNode]): TreeShape = {
     val n = nodes.length
     TreeShape(
@@ -1096,8 +996,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       Array.tabulate(n)(i => nodes(i).h),
       Array.tabulate(n)(i => nodes(i).gain))
   }
-
-  private def finalizeShape(nodes: ArrayBuffer[BuildNode]): TreeShape = nodesShape(nodes)
 
   private def shapeToTree(s: TreeShape, cuts: HistogramCuts): Tree = {
     val n = s.feature.length
@@ -1206,13 +1104,13 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           -(y * math.log(c) + (1 - y) * math.log(1 - c))
         }, pt)
         case "error" => ratio((p, y, _) => if ((p > 0.5) != (y > 0.5)) 1.0 else 0.0, pt)
-        case "poisson-nloglik" => ratio((p, y, _) => {
-          val c = math.max(p, 1e-16); c - y * math.log(c)
-        }, pt)
+        case "poisson-nloglik" => ratio((p, y, _) => graft.metric.Metrics.poissonNloglik(p, y), pt)
         case "gamma-nloglik" => ratio((p, y, _) => {
           val c = math.max(p, 1e-16); y / c + math.log(c)
         }, pt)
-        case "mphe" => ratio((p, y, _) => math.sqrt(1 + (p - y) * (p - y)) - 1, pt)
+        case "mphe" =>
+          val slope = params.pseudoHuberSlope
+          ratio((p, y, _) => { val r = (p - y) / slope; slope * slope * (math.sqrt(1 + r * r) - 1) }, pt)
         case "gamma-deviance" => ratio((p, y, _) =>
           2.0 * (math.log((p + 1e-16) / (y + 1e-16)) + y / (p + 1e-16) - 1.0), pt)
         case q if q.startsWith("error@") =>

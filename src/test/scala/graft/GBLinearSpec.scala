@@ -238,4 +238,37 @@ class GBLinearSpec extends AnyFunSuite {
     val multi = sc.parallelize(linearData(7, n = 500), 4)
     assert(t.localFold(multi) == null)
   }
+
+  /** md5 of a model's exact doubles (`Double.toString` round-trips bits). */
+  private def md5Of(ds: Seq[Double]): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(ds.mkString(",").getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  test("shotgun pins: fit and fitMulti under cyclic, greedy, thrifty and random") {
+    // two partitions take the cluster path and still fold deterministically:
+    // the driver merges two partials into a zero, and a + b == b + a
+    val rng = new scala.util.Random(23)
+    val rows = (0 until 1500).map { _ =>
+      val x = Array.fill(5)(if (rng.nextInt(6) == 0) Double.NaN else rng.nextGaussian())
+      val s = Array(x(0) - 0.5 * x(1), x(2) + 0.3 * x(3), -x(0) + x(4))
+        .map(v => if (v.isNaN) 0.0 else v)
+      (x, s.indexOf(s.max).toDouble, 0.5 + rng.nextDouble())
+    }
+    val data = sc.parallelize(rows, 2)
+    val reg = sc.parallelize(rows.map { case (x, y, w) => (x, y + x.filterNot(_.isNaN).sum, w) }, 2)
+    val want = Map(
+      "cyclic" -> ("a2748e2a1f5e0c6f953d5128a22e3a37", "2eebf8298b8ea41243c6dd68850dbc00"),
+      "greedy" -> ("81eb7edf1fe466cbb90a6d09f312aba9", "ace81045c2d0af097bd4f6e25330759c"),
+      "thrifty" -> ("81eb7edf1fe466cbb90a6d09f312aba9", "ace81045c2d0af097bd4f6e25330759c"),
+      "random" -> ("1a97eb732dd16159f80fad8a166c9105", "f6be2f3455f8610a9d0fd43c1b4307c6"))
+    val got = want.keys.toSeq.sorted.map { sel =>
+      val p = LinearParams(numRounds = 4, eta = 0.5, lambda = 0.1, alpha = 0.01,
+        featureSelector = sel, topK = if (sel == "cyclic") 0 else 3, seed = 11)
+      val lm = new GBLinearTrainer(p).fit(reg)
+      val mm = new GBLinearTrainer(p.copy(objective = "multi:softprob")).fitMulti(data, numClass = 3)
+      sel -> (md5Of(lm.weights.toSeq :+ lm.bias :+ lm.baseScore),
+        md5Of(mm.weights.flatten.toSeq ++ mm.bias))
+    }.toMap
+    assert(got == want, s"shotgun digests: $got")
+  }
 }

@@ -276,4 +276,35 @@ class GBTTrainerSpec extends AnyFunSuite {
     assert(three - two == 1 + 4, s"$two jobs for 2 rounds, $three for 3")
     data.unpersist()
   }
+
+  test("a lossguide round builds no histograms for children at maxDepth") {
+    // maxLeaves 8 under maxDepth 3 grows a full depth-3 tree: root totals,
+    // the root histogram, then one pass per split whose children sit
+    // above the depth cap (the root's and the two depth-1 splits)
+    val data = lineitemData().cache()
+    data.count()
+    val sc = spark.sparkContext
+    def jobsOf(numRounds: Int): (Int, BoosterModel) = {
+      val group = s"lossguide-$numRounds-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      val model =
+        try new GBTTrainer(TrainParams(numRounds = numRounds, growPolicy = "lossguide",
+          maxLeaves = 8, maxDepth = 3, eta = 0.3, maxBin = 32)).fit(data)
+        finally sc.clearJobGroup()
+      val marker = group + "-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, "listener bus did not drain")
+      (sc.statusTracker.getJobIdsForGroup(group).length, model)
+    }
+    val (two, _) = jobsOf(2)
+    val (three, model) = jobsOf(3)
+    assert(model.trees.last.numLeaves == 8 && model.trees.last.maxDepth == 3,
+      "the third tree must be a full depth-3 tree")
+    assert(three - two == 1 + 1 + 3, s"$two jobs for 2 rounds, $three for 3")
+    data.unpersist()
+  }
 }

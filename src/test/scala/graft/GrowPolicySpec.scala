@@ -82,4 +82,32 @@ class GrowPolicySpec extends AnyFunSuite {
       new GBTTrainer(TrainParams(treeMethod = "bogus", numRounds = 1)).fit(data)
     }
   }
+  test("single-partition lossguide under a depth cap: model JSON digest pinned") {
+    // one partition with minTrainPartitions = 0 pins every fold order, so
+    // the model is bit-stable; maxLeaves 12 under maxDepth 4 makes both
+    // caps bind
+    val data = sc.parallelize(regressionData(61, 2000), 1)
+    val model = new GBTTrainer(TrainParams(growPolicy = "lossguide", maxLeaves = 12,
+      maxDepth = 4, numRounds = 3, maxBin = 32, eta = 0.3, seed = 5,
+      minTrainPartitions = 0)).fit(data)
+    assert(model.trees.exists(_.maxDepth == 4), "the depth cap must bind")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(model.toJson.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(md5 == "b93da48ec44f5fb52de246aba2352d15", s"lossguide digest $md5")
+  }
+
+  test("on one partition, lossguide at maxLeaves = 2^d, maxDepth = d predicts as depthwise at d") {
+    val rows = regressionData(63, 2000)
+    val data = sc.parallelize(rows, 1)
+    val d = 3
+    def fit(policy: String, maxLeaves: Int) = new GBTTrainer(TrainParams(
+      growPolicy = policy, maxLeaves = maxLeaves, maxDepth = d, numRounds = 3,
+      maxBin = 32, eta = 0.3, seed = 5, minTrainPartitions = 0)).fit(data)
+    val lg = fit("lossguide", 1 << d)
+    val dw = fit("depthwise", 0)
+    assert(dw.trees.exists(_.maxDepth == d))
+    rows.foreach { case (x, _, _) =>
+      assert(lg.margin(x)(0) == dw.margin(x)(0), s"margins differ at ${x.toSeq}")
+    }
+  }
 }

@@ -196,6 +196,67 @@ class MetricRegistrySpec extends AnyFunSuite {
       s"watch ams ${h.last._2} vs direct $direct")
   }
 
+  test("watch value equals the standalone metric for every elementwise name") {
+    val rng = new scala.util.Random(43)
+    def poisson(mean: Double): Double = { // Knuth: product of uniforms
+      val l = math.exp(-mean); var k = 0; var p = rng.nextDouble()
+      while (p > l) { k += 1; p *= rng.nextDouble() }
+      k.toDouble
+    }
+    val xs = (0 until 600).map(_ => Array(rng.nextGaussian(), rng.nextGaussian()))
+    def label(kind: String, x: Array[Double]): Double = kind match {
+      case "binary" => if (x(0) + 0.5 * rng.nextGaussian() > 0) 1.0 else 0.0
+      case "count" => poisson(math.exp(0.6 * x(0) + 0.5))
+      case _ => math.exp(0.4 * x(0) + 0.2 * rng.nextGaussian())
+    }
+    // (objective, label kind, pseudoHuberSlope, watch names)
+    val cases = Seq(
+      ("reg:squarederror", "positive", 1.0,
+        Seq("rmse", "rmsle", "mae", "mape", "mphe", "quantile@0.7")),
+      ("binary:logistic", "binary", 1.0, Seq("logloss", "error", "error@0.3")),
+      ("count:poisson", "count", 1.0, Seq("poisson-nloglik")),
+      ("reg:gamma", "positive", 1.0, Seq("gamma-nloglik", "gamma-deviance")),
+      ("reg:tweedie", "count", 1.0, Seq("tweedie-nloglik@1.3")),
+      ("reg:pseudohubererror", "positive", 2.5, Seq("mphe")))
+    cases.foreach { case (objective, kind, slope, names) =>
+      val rows = xs.map(x => (x, label(kind, x), 0.5 + rng.nextDouble()))
+      val tr = new GBTTrainer(TrainParams(objective = objective, numRounds = 2,
+        maxDepth = 2, pseudoHuberSlope = slope, evalMetrics = names, seed = 8))
+      val model = tr.fit(sc.parallelize(rows, 2))
+      val obj = graft.objective.Objective(objective)
+      val scored = rows.map { case (x, y, w) =>
+        (obj.predTransform(model.margin(x)(0)), y, w) }.toDF("p", "y", "w")
+      val watched = tr.evalHistoryFull.last._2
+      names.foreach { n =>
+        val direct =
+          if (n == "mphe") scored.agg(Metrics.mphe(col("p"), col("y"), col("w"), slope))
+            .head().getDouble(0)
+          else Metrics.evaluate(n, scored, col("p"), col("y"), col("w"))
+        assert(math.abs(watched(n) - direct) <= 1e-9 * math.max(1.0, math.abs(direct)),
+          s"$objective watch $n ${watched(n)} vs standalone $direct")
+      }
+    }
+  }
+
+  test("lgammaStirling is within 5e-8 of exact log-gamma, in both forms") {
+    val exact = Seq(1.0 -> 0.0, 2.0 -> 0.0, 3.0 -> math.log(2.0), 4.0 -> math.log(6.0),
+      11.0 -> math.log(3628800.0))
+    val cols = exact.toDF("x", "want")
+      .select(Metrics.lgammaStirling(col("x"))).as[Double].collect()
+    exact.zip(cols).foreach { case ((x, want), c) =>
+      val d = Metrics.lgammaStirling(x)
+      assert(math.abs(d - want) < 5e-8, s"lgamma($x) = $d, want $want")
+      assert(c == d, s"Column form $c vs Double form $d at $x")
+    }
+  }
+
+  test("higherIsBetter: gains and accuracies maximize, losses minimize") {
+    Seq("auc", "aucpr", "ndcg", "ndcg@5", "map", "map@3", "pre", "pre@5", "ams@0.15",
+      "interval-regression-accuracy").foreach(n => assert(Metrics.higherIsBetter(n), n))
+    Seq("rmse", "logloss", "error", "mlogloss", "poisson-nloglik", "cox-nloglik",
+      "aft-nloglik", "mphe").foreach(n => assert(!Metrics.higherIsBetter(n), n))
+  }
+
   test("evalMetrics list: every metric logged, LAST drives early stopping") {
     val rng = new scala.util.Random(37)
     val rows = (0 until 2000).map { _ =>
