@@ -77,12 +77,6 @@ object Metrics {
     sum(w * (p - label * log(p) + lgammaStirling(label + lit(1.0)))) / sum(w)
   }
 
-  /** One row's [[poissonNloglik]] term (the trainer's watch loop). */
-  def poissonNloglik(pred: Double, label: Double): Double = {
-    val p = math.max(pred, 1e-16)
-    p - label * math.log(p) + lgammaStirling(label + 1.0)
-  }
-
   /** gamma deviance (`elementwise_metric.cu:263`). */
   def gammaDeviance(pred: Column, label: Column, w: Column): Column = {
     val e = lit(1e-16)
@@ -421,58 +415,84 @@ object Metrics {
         (col("hi").isNull || col("p") <= log(col("hi"))), 1.0).otherwise(0.0))
         .as("interval_accuracy"))
 
-  // ---- driver helper --------------------------------------------------------
+  // ---- the registry --------------------------------------------------------
 
-  /** Evaluate any registered metric name to a Double (driver helper; the
-    * training watch loop has its own binned-RDD fast paths in GBTTrainer
-    * that dispatch to the same kernels). Ranking names need `qid` (+
-    * optionally `tie` for deterministic order); multiclass OvR auc needs
-    * `probs`. Unknown combinations raise with the supported list. */
+  /** The one table from metric name to kernel (the reference's
+    * `Metric::Create`, `src/metric/metric.cc`): standalone evaluation and
+    * the boosting watch both evaluate through it. What each name reads:
+    *  - elementwise names read `pred`, the prediction after the
+    *    objective's transform;
+    *  - sweep (auc, aucpr, ams@r), ranking (ndcg, map, pre, bare or @k)
+    *    and survival names read `margin`, the raw margin, when given, else
+    *    `pred`;
+    *  - with `probs` (a multiclass model's class probabilities) only
+    *    merror, mlogloss and the one-vs-rest auc are defined.
+    * Ranking names group rows by `qid` (one group when absent) and break
+    * score ties by `tie` (default: the score); `auc` is the per-group
+    * ranking AUC only when `qid` is given. `upper` is the survival
+    * interval's upper bound (null = right-censored; default `label`). The
+    * remaining parameters are the reference's metric parameters at its
+    * defaults: `huber_slope` (mphe), `quantile_alpha` (bare quantile),
+    * `tweedie_variance_power` (bare tweedie-nloglik), the AFT distribution
+    * and scale, and `ndcg_exp_gain`. Unknown names raise. */
   def evaluate(name: String, df: DataFrame, pred: Column, label: Column,
       w: Column, qid: Option[Column] = None, probs: Option[Column] = None,
-      tie: Option[Column] = None): Double = {
-    def one(out: DataFrame): Double = {
-      val r = out.head()
-      if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+      tie: Option[Column] = None, margin: Option[Column] = None,
+      upper: Option[Column] = None, pseudoHuberSlope: Double = 1.0,
+      quantileAlpha: Double = 0.5, tweedieVariancePower: Double = 1.5,
+      aftDistribution: String = "normal", aftScale: Double = 1.0,
+      ndcgExpGain: Boolean = true): Double = {
+    require(probs.isEmpty || Set("merror", "mlogloss", "auc")(name),
+      s"$name is not defined for multiclass predictions (supported: merror, mlogloss, auc)")
+    val raw = margin.getOrElse(pred)
+    val q = qid.getOrElse(lit(0L))
+    val t = tie.getOrElse(raw)
+    // "<family>" or "<family>@<arg>"; the bare name takes `default`
+    def in(family: String): Boolean = name == family || name.startsWith(family + "@")
+    def arg(family: String, default: Double): Double =
+      if (name == family) default else name.stripPrefix(family + "@").toDouble
+    def topK(family: String): Int =
+      if (name == family) Int.MaxValue else name.stripPrefix(family + "@").toInt
+    def agg(c: Column): DataFrame = df.agg(c.cast("double"))
+    val out = name match {
+      case "auc" if probs.isDefined => aucMulticlass(df, probs.get, label, w)
+      case "auc" if qid.isDefined => aucRanking(df, q, raw, label)
+      case "auc" => aucBinary(df, raw, label, w)
+      case "aucpr" => aucPR(df, raw, label, w)
+      case n if n.startsWith("ams@") => amsAt(df, raw, label, w, arg("ams", 0.0))
+      case _ if in("ndcg") => ndcgAt(df, q, raw, label, t, topK("ndcg"), ndcgExpGain)
+      case _ if in("map") => mapAt(df, q, raw, label, t, topK("map"))
+      case _ if in("pre") => precisionAt(df, q, raw, label, t, topK("pre"))
+      case "cox-nloglik" => coxNloglik(df, raw, label)
+      case "aft-nloglik" =>
+        aftNloglik(df, raw, label, upper.getOrElse(label), aftScale, aftDistribution)
+      case "interval-regression-accuracy" =>
+        intervalAccuracy(df, raw, label, upper.getOrElse(label))
+      case "merror" => agg(merror(probs.fold(pred)(p => array_position(p, array_max(p)) - 1), label, w))
+      case "mlogloss" =>
+        require(probs.isDefined, "mlogloss needs the class probabilities (probs)")
+        agg(mlogloss(probs.get, label, w))
+      case "rmse" => agg(rmse(pred, label, w))
+      case "rmsle" => agg(rmsle(pred, label, w))
+      case "mae" => agg(mae(pred, label, w))
+      case "mape" => agg(mape(pred, label, w))
+      case "logloss" => agg(logloss(pred, label, w))
+      case "mphe" => agg(mphe(pred, label, w, pseudoHuberSlope))
+      case _ if in("error") => agg(errorAt(pred, label, w, arg("error", 0.5)))
+      case n if n.startsWith("expectile@") => agg(expectileLoss(pred, label, w, arg("expectile", 0.0)))
+      case "poisson-nloglik" => agg(poissonNloglik(pred, label, w))
+      case "gamma-deviance" => agg(gammaDeviance(pred, label, w))
+      case "gamma-nloglik" => agg(gammaNloglik(pred, label, w))
+      case _ if in("quantile") => agg(pinball(pred, label, w, arg("quantile", quantileAlpha)))
+      case _ if in("tweedie-nloglik") =>
+        agg(tweedieNloglik(pred, label, w, arg("tweedie-nloglik", tweedieVariancePower)))
+      case other => throw new IllegalArgumentException(s"unknown metric: $other (supported: " +
+        "rmse, rmsle, mae, mape, logloss, mphe, error[@t], expectile@tau, poisson-nloglik, " +
+        "gamma-nloglik, gamma-deviance, tweedie-nloglik[@rho], quantile[@alpha], merror, " +
+        "mlogloss, auc, aucpr, ams@r, ndcg[@k], map[@k], pre[@k], cox-nloglik, aft-nloglik, " +
+        "interval-regression-accuracy)")
     }
-    val tieCol = tie.getOrElse(pred)
-    name match {
-      case "auc" if probs.isDefined => return one(aucMulticlass(df, probs.get, label, w))
-      case "auc" if qid.isDefined => return one(aucRanking(df, qid.get, pred, label))
-      case "auc" => return one(aucBinary(df, pred, label, w))
-      case "aucpr" => return one(aucPR(df, pred, label, w))
-      case n if n.startsWith("ams@") =>
-        return one(amsAt(df, pred, label, w, n.stripPrefix("ams@").toDouble))
-      case "cox-nloglik" => return one(coxNloglik(df, pred, label))
-      case "ndcg" =>
-        return one(ndcgAt(df, qid.get, pred, label, tieCol, Int.MaxValue))
-      case "pre" =>
-        return one(precisionAt(df, qid.get, pred, label, tieCol, Int.MaxValue))
-      case n if n.startsWith("ndcg@") =>
-        return one(ndcgAt(df, qid.get, pred, label, tieCol, n.stripPrefix("ndcg@").toInt))
-      case n if n.startsWith("map@") =>
-        return one(mapAt(df, qid.get, pred, label, tieCol, n.stripPrefix("map@").toInt))
-      case n if n.startsWith("pre@") =>
-        return one(precisionAt(df, qid.get, pred, label, tieCol, n.stripPrefix("pre@").toInt))
-      case _ =>
-    }
-    val c = name match {
-      case "rmse" => rmse(pred, label, w)
-      case "rmsle" => rmsle(pred, label, w)
-      case "mae" => mae(pred, label, w)
-      case "mape" => mape(pred, label, w)
-      case "logloss" => logloss(pred, label, w)
-      case "mphe" => mphe(pred, label, w)
-      case "error" => errorAt(pred, label, w)
-      case e if e.startsWith("error@") => errorAt(pred, label, w, e.stripPrefix("error@").toDouble)
-      case e if e.startsWith("expectile@") => expectileLoss(pred, label, w, e.stripPrefix("expectile@").toDouble)
-      case "poisson-nloglik" => poissonNloglik(pred, label, w)
-      case "gamma-deviance" => gammaDeviance(pred, label, w)
-      case "gamma-nloglik" => gammaNloglik(pred, label, w)
-      case q if q.startsWith("quantile@") => pinball(pred, label, w, q.stripPrefix("quantile@").toDouble)
-      case q if q.startsWith("tweedie-nloglik@") => tweedieNloglik(pred, label, w, q.stripPrefix("tweedie-nloglik@").toDouble)
-      case other => throw new IllegalArgumentException(s"unknown metric: $other")
-    }
-    df.agg(c.cast("double").as("m")).head().getDouble(0)
+    val r = out.head()
+    if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 }

@@ -4,8 +4,10 @@ package graft.tree
   * `python-package/xgboost/callback.py:51-120`): driver-side hooks around
   * each boosting round. `afterIteration` returning true stops training
   * (the protocol `EarlyStopping`/`EvaluationMonitor` use, `callback.py:311,
-  * 511`). `evalLog` carries the watch metric of this round when one is
-  * being evaluated. */
+  * 511`). `evalLog` carries this round's watch metrics when the fit
+  * watches — it is given watch sets, or asked for a metric, early stopping
+  * or a user metric — and is empty otherwise: a callback alone adds no
+  * evaluation to a fit. */
 trait TrainingCallback {
   def beforeIteration(iter: Int): Unit = {}
   def afterIteration(iter: Int, evalLog: Map[String, Double]): Boolean = false

@@ -198,6 +198,7 @@ private[tree] final case class SplitCandidate(
   * nodes × features × bins.
   */
 final class GBTTrainer(params: TrainParams) extends Serializable {
+  TrainingInput.requireTreeLimits(params)
 
   private val isMulti = params.numClass > 1
   private val numGroups = math.max(params.numClass, 1)
@@ -534,10 +535,11 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     val rng = new java.util.Random(params.seed)
     val colSampler = new ColumnSampler(numFeatures, params.seed, params.featureWeights)
 
-    // watch / early-stopping state (ref EvalOneIter + EarlyStopping)
-    val watching = params.earlyStoppingRounds > 0 || params.evalMetric.isDefined ||
-      params.evalMetrics.nonEmpty ||
-      customMetric.isDefined || callbacks.nonEmpty
+    // watch / early-stopping state (ref EvalOneIter + EarlyStopping): a fit
+    // watches when it is given watch sets, or asked for a metric, early
+    // stopping or a user metric; callbacks alone see an empty evalLog
+    val watching = watchSets.nonEmpty || params.earlyStoppingRounds > 0 ||
+      params.evalMetric.isDefined || params.evalMetrics.nonEmpty || customMetric.isDefined
     lastHistory.clear()
     lastFullHistory.clear()
     lastBestIteration = -1
@@ -546,24 +548,21 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     var stop = false
     var stopFromCallback = false // callback stop keeps all trees (no truncation)
 
-    // ---- deferred prediction-cache updates ----
-    // A freshly-committed tree does not need to be baked into the margin RDD
-    // before the next iteration: `gradOf` already adjusts cached margins by
-    // a tree list (DART dropout subtracts w·leaf — a pending tree with
-    // weight −w ADDS its contribution). So plain fits keep new trees in a
-    // pending list and only materialize a new margin RDD every
-    // `marginFlushInterval` trees: one cache-advance job per flush instead
-    // of one per iteration, at the cost of ≤interval extra depth-d tree
-    // walks per row inside the gradient passes. Addition order of tree
-    // contributions is unchanged, so the trained model is bit-identical.
-    // Gated off whenever something reads `margins` directly mid-loop
-    // without pending-aware adjustment: DART (owns the dropped list),
-    // watch/early-stop metrics, eval caches, per-iteration scale stats.
-    // Risk-set/ranking global-gradient objectives participate: their
-    // computers take the pending list and adjust margins on the fly.
-    val deferMargins = params.marginFlushInterval > 1 &&
-      params.booster == "gbtree" && !watching && watchSets.isEmpty &&
-      (isMulti || !obj.needsScale)
+    // ---- prediction cache (gbtree.cc:631-660) ----
+    // New trees and DART weight deltas go on `pending`, and the margin
+    // caches are rewritten — one Spark job each — only when it flushes.
+    // Until then `gradOf` adds the pending trees to the cached margins on
+    // the fly (DART dropout subtracts w·leaf, so a pending tree rides the
+    // same list at weight −w); the risk-set and ranking gradient passes
+    // take the list too. The list flushes every round when something reads
+    // the cached margins mid-loop: DART (its dropout owns the list), the
+    // watch, the per-round scale stats; else every `marginFlushInterval`
+    // trees. Tree contributions are added in the same order either way,
+    // so the model is bit-identical; the caches are never read after the
+    // loop, so the last partial batch is never flushed.
+    val flushTrees =
+      if (params.booster == "dart" || watching || (!isMulti && obj.needsScale)) 1
+      else math.max(1, params.marginFlushInterval)
     val pending = new ArrayBuffer[(TreeShape, Double, Int)]
     var flushCount = 0
 
@@ -601,12 +600,13 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         if (sumGW > 0) nGroups.toDouble / sumGW else 1.0
       case _ => 1.0
     }
-    def flushPending(): Unit = if (pending.nonEmpty) {
+    def flushPending(): Unit = {
       flushCount += 1
-      // lineage grows one map per flush; truncate on the same cadence (in
-      // iterations) as the non-deferred path's checkpointInterval
-      cache = RoundPasses.advance(cache, sc.broadcast(pending.toArray),
-        flushCount % math.max(1, params.checkpointInterval / params.marginFlushInterval) == 0, owned)
+      // lineage grows one map per flush; truncate about every checkpointInterval rounds
+      val checkpoint = flushCount % math.max(1, params.checkpointInterval / flushTrees) == 0
+      val trees = sc.broadcast(pending.toArray)
+      cache = RoundPasses.advance(cache, trees, checkpoint, owned)
+      watchCaches = watchCaches.map(RoundPasses.advance(_, trees, checkpoint, owned))
       pending.clear()
     }
 
@@ -718,27 +718,10 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         shapes += s; treeGroupBuf += newGroups(i); treeWeightsBuf += newW
       }
 
-      // ---- margin update (prediction cache, gbtree.cc:631-660) ----
-      // deferred path: queue the new layer and only materialize every
-      // `marginFlushInterval` trees (margins is never read after the loop,
-      // so the final partial batch needs no flush at all)
-      if (deferMargins) {
-        var p = 0
-        while (p < newShapes.length) {
-          pending += ((newShapes(p), newW, newGroups(p)))
-          p += 1
-        }
-        if (pending.length >= params.marginFlushInterval) flushPending()
-      } else {
-      // applied identically to the train AND eval margin caches: the new
-      // trees at newW, then the DART weight deltas of the dropped trees
-      val bTrees = sc.broadcast(
-        newShapes.indices.map(p => (newShapes(p), newW, newGroups(p))).toArray ++
-          weightDeltas.map { case (i, d) => (shapes(i), d, treeGroupBuf(i)) })
-      val checkpoint = (iter + 1) % params.checkpointInterval == 0
-      cache = RoundPasses.advance(cache, bTrees, checkpoint, owned)
-      watchCaches = watchCaches.map(RoundPasses.advance(_, bTrees, checkpoint, owned))
-      } // end margin-update branch
+      // the new trees at newW, then the DART weight deltas of the dropped trees
+      pending ++= newShapes.indices.map(p => (newShapes(p), newW, newGroups(p)))
+      pending ++= weightDeltas.map { case (i, d) => (shapes(i), d, treeGroupBuf(i)) }
+      if (pending.length >= flushTrees) flushPending()
       globalGrads.foreach(owned.unpersist)
 
       // ---- watch metrics + early stopping (learner.cc:1164 EvalOneIter,
@@ -748,11 +731,9 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // no explicit watches the training set itself is the implicit watch
       // and log keys stay the bare metric name; named watches log as
       // "<name>-<metric>" like the reference's printed eval lines.
-      if (watching) {
-        val watchList: Seq[(String, RDD[(BInst, Array[Double])])] =
-          if (watchSets.nonEmpty)
-            watchSets.map(_._1).zip(watchCaches)
-          else Seq(("", cache))
+      val evalLog: Map[String, Double] = if (!watching) Map.empty else {
+        val watchList =
+          if (watchSets.nonEmpty) watchSets.map(_._1).zip(watchCaches) else Seq(("", cache))
         // every metric in the list is evaluated per watch; the LAST one of
         // the LAST watch drives early stopping (reference semantics for a
         // repeated eval_metric param)
@@ -760,27 +741,13 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           if (params.evalMetrics.nonEmpty) params.evalMetrics
           else Seq(params.evalMetric.getOrElse(
             if (isMulti) "mlogloss" else obj.defaultMetric))
-        def evalAll(c: RDD[(BInst, Array[Double])]): Seq[(String, Double, Boolean)] =
-          customMetric match {
-            case Some(cm) => // user feval: distributed (num, den) sums
-              val (num, den) = graft.Agg.aggregate(c)((0.0, 0.0))(
-                { case ((a, b), (r, m)) =>
-                  val (n2, d2) = cm.contribution(m(0), r.label, r.weight)
-                  (a + n2, b + d2)
-                },
-                (a, b) => (a._1 + b._1, a._2 + b._2))
-              Seq((cm.name, cm.finish(num, den), cm.maximize))
-            case None =>
-              metricNames.map(n => (n, evalMetricValue(n, c, obj), graft.metric.Metrics.higherIsBetter(n)))
-          }
         val evals = watchList.flatMap { case (wName, c) =>
-          evalAll(c).map { case (mName, v, maximize) =>
+          Watch.evaluate(c, obj, params, metricNames, customMetric).map { case (mName, v, maximize) =>
             (if (wName.isEmpty) mName else s"$wName-$mName", v, maximize)
           }
         }
         val (_, v, maximize) = evals.last
         lastHistory += ((iter, v))
-        lastFullHistory += ((iter, evals.map { case (k, value, _) => (k, value) }.toMap))
         val improved = bestValue.isNaN || (if (maximize) v > bestValue else v < bestValue)
         if (improved) { bestValue = v; lastBestIteration = iter; roundsSinceBest = 0 }
         else {
@@ -788,11 +755,11 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           if (params.earlyStoppingRounds > 0 && roundsSinceBest >= params.earlyStoppingRounds)
             stop = true
         }
-        if (callbacks.exists(_.afterIteration(iter,
-            evals.map { case (k, value, _) => (k, value) }.toMap))) {
-          stop = true; stopFromCallback = true
-        }
-      } else if (callbacks.exists(_.afterIteration(iter, Map.empty))) {
+        val log = evals.map { case (k, value, _) => (k, value) }.toMap
+        lastFullHistory += ((iter, log))
+        log
+      }
+      if (callbacks.exists(_.afterIteration(iter, evalLog))) {
         stop = true; stopFromCallback = true
       }
       if (callbacks.nonEmpty) {
@@ -1014,278 +981,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           if (s.catRight(i) != null) s.catRight(i) else Array.empty)
       }
     })
-  }
-
-  // ---- watch metric evaluation (RDD form of graft.metric.Metrics for the
-  // training loop — one aggregation per evaluated iteration) ---------------
-
-  /** ONE metric-name registry for every facade (train/cv/estimators):
-    * elementwise names run as fused aggregations; ranking names
-    * (ndcg@k/map@k/pre@k, ranking auc) walk the qid-co-partitioned groups
-    * in place (no shuffle); global-sweep names (auc/aucpr, multiclass OvR
-    * auc, cox-nloglik) delegate to the oracle-verified DataFrame kernels in
-    * [[graft.metric.Metrics]]. Mirrors the reference's metric registry
-    * dispatch (`src/metric/metric.cc` Metric::Create). */
-  private def evalMetricValue(name: String, c: RDD[(BInst, Array[Double])],
-      obj: Objective): Double = {
-    // bare "ndcg"/"map"/"pre" = whole-list k (the reference's default when
-    // no @k suffix is given, rank_metric.cc topn=max)
-    if (name.startsWith("ndcg@"))
-      return evalNdcg(c, name.stripPrefix("ndcg@").toInt)
-    if (name == "ndcg")
-      return evalNdcg(c, Int.MaxValue)
-    if (name.startsWith("map@"))
-      return evalMapAt(c, name.stripPrefix("map@").toInt)
-    if (name == "map")
-      return evalMapAt(c, Int.MaxValue)
-    if (name.startsWith("pre@"))
-      return evalPrecAt(c, name.stripPrefix("pre@").toInt)
-    if (name == "pre")
-      return evalPrecAt(c, Int.MaxValue)
-    if (name == "auc" && params.objective.startsWith("rank:"))
-      return evalGroupAuc(c)
-    if (name == "auc" || name == "aucpr" || name.startsWith("ams@"))
-      return evalAucGlobal(name, c)
-    if (name == "cox-nloglik")
-      return evalCoxNloglik(c)
-    if (name == "aft-nloglik" || name == "interval-regression-accuracy") {
-      val aft = obj match {
-        case a: graft.objective.AFT => a
-        case _ => new graft.objective.AFT(params.aftDistribution, params.aftScale)
-      }
-      val (s, n) = graft.Agg.aggregate(c)((0.0, 0.0))(
-        { case ((a, b), (r, m)) =>
-          val v =
-            if (name == "aft-nloglik") aft.nloglik(m(0), r.label, r.label2)
-            else if (m(0) >= math.log(r.label) &&
-              (r.label2.isNaN || r.label2.isInfinite || m(0) <= math.log(r.label2))) 1.0
-            else 0.0
-          (a + v, b + 1.0)
-        },
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-      return if (n > 0) s / n else 0.0
-    }
-    def ratio(f: (Double, Double, Double) => Double, pt: Double => Double = identity): Double = {
-      val (s, w) = graft.Agg.aggregate(c)((0.0, 0.0))(
-        { case ((a, b), (r, m)) => (a + r.weight * f(pt(m(0)), r.label, r.weight), b + r.weight) },
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-      if (w > 0) s / w else 0.0
-    }
-    def ratioMulti(f: (Array[Double], Double) => Double): Double = {
-      val (s, w) = graft.Agg.aggregate(c)((0.0, 0.0))(
-        { case ((a, b), (r, m)) => (a + r.weight * f(m, r.label), b + r.weight) },
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-      if (w > 0) s / w else 0.0
-    }
-    if (isMulti) {
-      name match {
-        case "merror" => ratioMulti((m, y) => if (argmaxOf(m) != y.toInt) 1.0 else 0.0)
-        case "mlogloss" => ratioMulti((m, y) => {
-          var mx = m(0); var k = 1
-          while (k < numGroups) { if (m(k) > mx) mx = m(k); k += 1 }
-          var se = 0.0; k = 0
-          while (k < numGroups) { se += math.exp(m(k) - mx); k += 1 }
-          -(m(y.toInt) - mx - math.log(se))
-        })
-        case other => throw new IllegalArgumentException(
-          s"unsupported multiclass watch metric: $other (supported: merror, mlogloss)")
-      }
-    } else {
-      val pt: Double => Double = obj.predTransform
-      name match {
-        case "rmse" => math.sqrt(ratio((p, y, _) => (p - y) * (p - y), pt))
-        case "rmsle" => math.sqrt(ratio((p, y, _) => {
-          val d = math.log1p(p) - math.log1p(y); d * d
-        }, pt))
-        case "mae" => ratio((p, y, _) => math.abs(p - y), pt)
-        case "mape" => ratio((p, y, _) => math.abs((y - p) / y), pt)
-        case "logloss" => ratio((p, y, _) => {
-          val c = math.max(math.min(p, 1 - 1e-16), 1e-16)
-          -(y * math.log(c) + (1 - y) * math.log(1 - c))
-        }, pt)
-        case "error" => ratio((p, y, _) => if ((p > 0.5) != (y > 0.5)) 1.0 else 0.0, pt)
-        case "poisson-nloglik" => ratio((p, y, _) => graft.metric.Metrics.poissonNloglik(p, y), pt)
-        case "gamma-nloglik" => ratio((p, y, _) => {
-          val c = math.max(p, 1e-16); y / c + math.log(c)
-        }, pt)
-        case "mphe" =>
-          val slope = params.pseudoHuberSlope
-          ratio((p, y, _) => { val r = (p - y) / slope; slope * slope * (math.sqrt(1 + r * r) - 1) }, pt)
-        case "gamma-deviance" => ratio((p, y, _) =>
-          2.0 * (math.log((p + 1e-16) / (y + 1e-16)) + y / (p + 1e-16) - 1.0), pt)
-        case q if q.startsWith("error@") =>
-          val t = q.stripPrefix("error@").toDouble
-          ratio((p, y, _) => if ((p > t) != (y > 0.5)) 1.0 else 0.0, pt)
-        case q if q == "tweedie-nloglik" || q.startsWith("tweedie-nloglik@") =>
-          val rho = if (q.contains('@')) q.stripPrefix("tweedie-nloglik@").toDouble
-            else params.tweedieVariancePower
-          ratio((p, y, _) => {
-            val c = math.max(p, 1e-16)
-            -(y * math.pow(c, 1.0 - rho) / (1.0 - rho) - math.pow(c, 2.0 - rho) / (2.0 - rho))
-          }, pt)
-        case q if q == "quantile" || q.startsWith("quantile@") =>
-          val alpha = if (q.contains('@')) q.stripPrefix("quantile@").toDouble
-            else params.quantileAlpha
-          ratio((p, y, _) => {
-            val d = y - p
-            if (d >= 0) alpha * d else (alpha - 1.0) * d
-          }, pt)
-        case other => throw new IllegalArgumentException(
-          s"unsupported watch metric: $other (supported: rmse, rmsle, mae, mape, " +
-            "logloss, error[@t], poisson-nloglik, gamma-nloglik, gamma-deviance, " +
-            "tweedie-nloglik[@rho], quantile[@alpha], mphe, auc, aucpr, cox-nloglik, " +
-            "aft-nloglik, interval-regression-accuracy, ndcg@k, map[@k], pre@k)")
-      }
-    }
-  }
-
-  @inline private def argmaxOf(m: Array[Double]): Int = {
-    var best = 0; var k = 1
-    while (k < m.length) { if (m(k) > m(best)) best = k; k += 1 }
-    best
-  }
-
-  /** mean NDCG@k over qid-contiguous groups (ranking fits only). */
-  private def evalNdcg(c: RDD[(BInst, Array[Double])], k: Int): Double = {
-    val expGain = params.ndcgExpGain
-    val (s, n) = graft.Agg.reducePartitions(c) { it =>
-      val base = it.buffered
-      var sum = 0.0; var cnt = 0L
-      val buf = new ArrayBuffer[(Double, Double)] // (label, margin)
-      while (base.hasNext) {
-        buf.clear()
-        val q = base.head._1.qid
-        while (base.hasNext && base.head._1.qid == q) {
-          val (r, m) = base.next(); buf += ((r.label, m(0)))
-        }
-        def gain(l: Double) = if (expGain) math.pow(2.0, l) - 1.0 else l
-        def disc(r: Int) = 1.0 / (math.log(r + 1.0) / math.log(2.0))
-        val ranked = buf.indices.sortBy(i => (-buf(i)._2, i)).take(k)
-        val dcg = ranked.zipWithIndex.map { case (i, r) => gain(buf(i)._1) * disc(r + 1) }.sum
-        val idcg = buf.map(x => gain(x._1)).sortBy(-_).take(k).zipWithIndex
-          .map { case (g, r) => g * disc(r + 1) }.sum
-        sum += (if (idcg > 0) dcg / idcg else 0.0)
-        cnt += 1
-      }
-      (sum, cnt)
-    }((a, b) => (a._1 + b._1, a._2 + b._2))
-    if (n > 0) s / n else 0.0
-  }
-
-  /** Mean of a per-group statistic over qid-contiguous groups (ranking
-    * fits co-partition+sort by qid, so each group is walked in memory with
-    * no shuffle). `f` sees (margin, label) pairs in row order; None
-    * excludes the group from the mean (the reference's invalid-group
-    * handling, `auc.cc:206`). */
-  private def groupMean(c: RDD[(BInst, Array[Double])])(
-      f: ArrayBuffer[(Double, Double)] => Option[Double]): Double = {
-    val (s, n) = graft.Agg.reducePartitions(c) { it =>
-      val base = it.buffered
-      var sum = 0.0; var cnt = 0L
-      val buf = new ArrayBuffer[(Double, Double)]
-      while (base.hasNext) {
-        buf.clear()
-        val q = base.head._1.qid
-        while (base.hasNext && base.head._1.qid == q) {
-          val (r, m) = base.next(); buf += ((m(0), r.label))
-        }
-        f(buf) match { case Some(v) => sum += v; cnt += 1; case None => }
-      }
-      (sum, cnt)
-    }((a, b) => (a._1 + b._1, a._2 + b._2))
-    if (n > 0) s / n else 0.0
-  }
-
-  /** map@k (`rank_metric.cc:465`): binary relevance label>0.5. */
-  private def evalMapAt(c: RDD[(BInst, Array[Double])], k: Int): Double =
-    groupMean(c) { buf =>
-      val order = buf.indices.sortBy(i => (-buf(i)._1, i)).take(k)
-      var nrel = 0.0; var ap = 0.0; var rk = 0; var cum = 0.0
-      order.foreach { i =>
-        rk += 1
-        if (buf(i)._2 > 0.5) { cum += 1; nrel += 1; ap += cum / rk }
-      }
-      Some(if (nrel > 0) ap / nrel else 0.0)
-    }
-
-  /** pre@k (`rank_metric.cc:461`). */
-  private def evalPrecAt(c: RDD[(BInst, Array[Double])], k: Int): Double =
-    groupMean(c) { buf =>
-      // hits / min(k, |group|) — rank_metric.cc:315
-      val n = math.min(k, buf.length)
-      val top = buf.indices.sortBy(i => (-buf(i)._1, i)).take(n)
-      Some(top.count(i => buf(i)._2 > 0.5).toDouble / n)
-    }
-
-  /** Per-group ranking ROC-AUC (`auc.cc:165` RankingAUC): tie-correct
-    * trapezoid per group, groups lacking both classes excluded. */
-  private def evalGroupAuc(c: RDD[(BInst, Array[Double])]): Double =
-    groupMean(c) { buf =>
-      val byScore = buf.groupBy(_._1).toSeq.sortBy(-_._1)
-      var ctp = 0.0; var cfp = 0.0; var area = 0.0
-      byScore.foreach { case (_, xs) =>
-        var tp = 0.0; var fp = 0.0
-        xs.foreach { case (_, y) => if (y > 0.5) tp += 1 else fp += 1 }
-        area += fp * (ctp + (ctp + tp)) / 2.0
-        ctp += tp; cfp += fp
-      }
-      if (ctp > 0 && cfp > 0) Some(area / (ctp * cfp)) else None
-    }
-
-  @inline private def softprobOf(m: Array[Double]): Array[Double] = {
-    var mx = m(0); var k = 1
-    while (k < m.length) { if (m(k) > mx) mx = m(k); k += 1 }
-    val e = new Array[Double](m.length); var s = 0.0
-    k = 0
-    while (k < m.length) { e(k) = math.exp(m(k) - mx); s += e(k); k += 1 }
-    k = 0
-    while (k < m.length) { e(k) /= s; k += 1 }
-    e
-  }
-
-  /** Global-sweep AUCs through the oracle-verified DataFrame kernels:
-    * binary ROC/PR ([[graft.metric.Metrics.aucBinary]]/[[
-    * graft.metric.Metrics.aucPR]] — AUC is invariant under the monotone
-    * predTransform, so raw margins feed the sweep) and multiclass
-    * one-vs-rest ROC ([[graft.metric.Metrics.aucMulticlass]] over
-    * softprob). All ride DistributedCumsum — no single-task window. */
-  private def evalAucGlobal(name: String,
-      c: RDD[(BInst, Array[Double])]): Double = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val out =
-      if (isMulti) {
-        require(name == "auc", s"$name is not defined for multiclass models")
-        val df = c
-          .map { case (r, m) => (r.label, r.weight, softprobOf(m).toSeq) }
-          .toDF("label", "weight", "probs")
-        graft.metric.Metrics.aucMulticlass(df, col("probs"), col("label"), col("weight"))
-      } else {
-        val df = c
-          .map { case (r, m) => (r.label, r.weight, m(0)) }
-          .toDF("label", "weight", "pred")
-        if (name == "auc")
-          graft.metric.Metrics.aucBinary(df, col("pred"), col("label"), col("weight"))
-        else if (name.startsWith("ams@"))
-          graft.metric.Metrics.amsAt(df, col("pred"), col("label"), col("weight"),
-            name.stripPrefix("ams@").toDouble)
-        else
-          graft.metric.Metrics.aucPR(df, col("pred"), col("label"), col("weight"))
-      }
-    val r = out.head()
-    if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
-  }
-
-  /** cox-nloglik (`rank_metric.cc:204` EvalCox) through the
-    * DistributedCumsum risk-set kernel. */
-  private def evalCoxNloglik(c: RDD[(BInst, Array[Double])]): Double = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val df = c.map { case (r, m) => (r.label, m(0)) }.toDF("y", "p")
-    val r = graft.metric.Metrics.coxNloglik(df, col("p"), col("y")).head()
-    if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 
   // ---- gradient-based sampling state (the passes are in RoundPasses) -----

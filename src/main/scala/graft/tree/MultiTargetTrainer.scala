@@ -36,6 +36,7 @@ import scala.collection.mutable.ArrayBuffer
 final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
     customObj: Option[graft.objective.MultiObjective] = None) extends Serializable {
   require(numTargets >= 2, "use GBTTrainer for single-target models")
+  TrainingInput.requireTreeLimits(params)
 
   import graft.objective.{ElementwiseMultiObjective, MultiObjective, MultiQuantileObjective, Objective, SoftmaxMultiObjective}
 

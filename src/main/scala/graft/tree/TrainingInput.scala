@@ -169,6 +169,14 @@ private[graft] object TrainingInput {
       })
     }
 
+  /** The tree-size limits, bounded below by 0 as in the reference
+    * (`max_depth`, `max_leaves`, `src/tree/param.h`); both tree trainers
+    * check them before any work. */
+  def requireTreeLimits(params: TrainParams): Unit = {
+    require(params.maxDepth >= 0, s"maxDepth must be >= 0, got ${params.maxDepth}")
+    require(params.maxLeaves >= 0, s"maxLeaves must be >= 0, got ${params.maxLeaves}")
+  }
+
   /** The weighted label sums the base score needs, and the widest row. */
   final case class InputStats(sumWy: Double, sumW: Double, width: Int)
 

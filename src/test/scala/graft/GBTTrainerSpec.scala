@@ -307,4 +307,46 @@ class GBTTrainerSpec extends AnyFunSuite {
     assert(three - two == 1 + 1 + 3, s"$two jobs for 2 rounds, $three for 3")
     data.unpersist()
   }
+
+  test("a callback alone adds no job to a fit and sees an empty evalLog") {
+    val data = lineitemData().cache()
+    data.count()
+    val sc = spark.sparkContext
+    val logs = collection.mutable.ArrayBuffer[Map[String, Double]]()
+    val cb = new graft.tree.TrainingCallback {
+      override def afterIteration(iter: Int, evalLog: Map[String, Double]): Boolean = {
+        logs += evalLog; false
+      }
+    }
+    val params = TrainParams(numRounds = 3, maxDepth = 4, eta = 0.3, maxBin = 32)
+    def jobsOf(name: String)(fit: => BoosterModel): (Int, BoosterModel) = {
+      val group = s"$name-${System.nanoTime()}"
+      sc.setJobGroup(group, group)
+      val model = try fit finally sc.clearJobGroup()
+      val marker = group + "-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, "listener bus did not drain")
+      (sc.statusTracker.getJobIdsForGroup(group).length, model)
+    }
+    val (plain, plainModel) = jobsOf("plain")(new GBTTrainer(params).fit(data))
+    val (called, calledModel) = jobsOf("callback")(
+      new GBTTrainer(params).withCallbacks(Seq(cb)).fit(data))
+    assert(called == plain, s"$called jobs with a callback, $plain without")
+    assert(logs.size == 3 && logs.forall(_.isEmpty), s"evalLog: $logs")
+    assert(calledModel.trees.length == plainModel.trees.length)
+    data.unpersist()
+  }
+
+  test("negative maxDepth or maxLeaves is rejected before the fit, naming the field") {
+    val rows = spark.sparkContext.parallelize(Seq((Array(1.0), 1.0, 1.0), (Array(2.0), 2.0, 1.0)), 1)
+    Seq(TrainParams(maxDepth = -1) -> "maxDepth", TrainParams(maxLeaves = -2) -> "maxLeaves")
+      .foreach { case (p, field) =>
+        val e = intercept[IllegalArgumentException](new GBTTrainer(p).fit(rows))
+        assert(e.getMessage.contains(field), e.getMessage)
+      }
+  }
 }

@@ -329,4 +329,152 @@ class MetricRegistrySpec extends AnyFunSuite {
       qid = Some(col("q")))
     assert(mapv >= 0.0 && mapv <= 1.0)
   }
+
+  // ---- the watch evaluates through Metrics.evaluate --------------------------
+
+  /** `watched` equals `direct` to 1e-9 relative. */
+  private def sameValue(what: String, watched: Double, direct: Double): Unit =
+    assert(math.abs(watched - direct) <= 1e-9 * math.abs(direct),
+      s"$what: watch $watched vs evaluate $direct")
+
+  private def softmax(m: Array[Double]): Seq[Double] = {
+    val e = m.map(v => math.exp(v - m.max))
+    e.map(_ / e.sum).toSeq
+  }
+
+  test("watch equals evaluate: multiclass merror, mlogloss and one-vs-rest auc") {
+    val rng = new scala.util.Random(47)
+    val rows = (0 until 1500).map { _ =>
+      val c = rng.nextInt(3)
+      (Array(c * 1.5 + rng.nextGaussian(), rng.nextGaussian()), c.toDouble, 0.5 + rng.nextDouble())
+    }
+    val names = Seq("merror", "mlogloss", "auc")
+    val tr = new GBTTrainer(TrainParams(objective = "multi:softprob", numClass = 3,
+      numRounds = 3, maxDepth = 3, evalMetrics = names, seed = 12))
+    val model = tr.fit(sc.parallelize(rows, 3))
+    val scored = rows.map { case (x, y, w) => (softmax(model.margin(x)), y, w) }
+      .toDF("probs", "y", "w")
+    val watched = tr.evalHistoryFull.last._2
+    names.foreach { n =>
+      sameValue(n, watched(n), Metrics.evaluate(n, scored, lit(0.0), col("y"), col("w"),
+        probs = Some(col("probs"))))
+    }
+    // the argmax class column is the same merror without the probabilities
+    val argmax = rows.map { case (x, y, w) =>
+      val m = model.margin(x); (m.indexOf(m.max).toDouble, y, w) }.toDF("c", "y", "w")
+    sameValue("merror by class", watched("merror"),
+      Metrics.evaluate("merror", argmax, col("c"), col("y"), col("w")))
+  }
+
+  test("watch equals evaluate: ranking names, ties broken by row id") {
+    // one partition in query order: each row's id is its index, and the
+    // qid layout keeps that order
+    val rng = new scala.util.Random(53)
+    val rows = (0 until 40).flatMap { q =>
+      (0 until 15).map { _ =>
+        val x = Array(math.rint(rng.nextGaussian() * 4) / 4, rng.nextGaussian())
+        (x, math.min(3.0, math.max(0.0, math.rint(x(0) + rng.nextGaussian()))), 1.0, q.toLong)
+      }
+    }
+    val names = Seq("ndcg@5", "map@5", "pre@5", "map", "ndcg", "pre", "auc")
+    val tr = new GBTTrainer(TrainParams(objective = "rank:ndcg", numRounds = 3, maxDepth = 2,
+      evalMetrics = names, seed = 14, minTrainPartitions = 0))
+    val model = tr.fitRanking(sc.parallelize(rows, 1))
+    val scored = rows.zipWithIndex.map { case ((x, y, _, q), i) =>
+      (q, model.margin(x)(0), y, i.toLong) }.toDF("q", "p", "y", "t")
+    val watched = tr.evalHistoryFull.last._2
+    names.foreach { n =>
+      sameValue(n, watched(n), Metrics.evaluate(n, scored, col("p"), col("y"), lit(1.0),
+        qid = Some(col("q")), tie = Some(col("t"))))
+    }
+  }
+
+  test("watch equals evaluate: aft-nloglik, interval accuracy and cox-nloglik") {
+    val rng = new scala.util.Random(59)
+    val aft = (0 until 900).map { i =>
+      val x = Array(rng.nextGaussian())
+      val t = math.exp(0.5 * x(0) + 0.3 * rng.nextGaussian()) + 0.1
+      // uncensored, interval-censored and right-censored (NaN) rows
+      val (lo, hi) = i % 3 match {
+        case 0 => (t, t)
+        case 1 => (t * 0.7, t * 1.4)
+        case _ => (t, Double.NaN)
+      }
+      (x, lo, hi, 0.5 + rng.nextDouble())
+    }
+    val names = Seq("aft-nloglik", "interval-regression-accuracy")
+    val tr = new GBTTrainer(TrainParams(objective = "survival:aft", aftDistribution = "logistic",
+      aftScale = 1.2, numRounds = 3, maxDepth = 2, evalMetrics = names, seed = 15))
+    val model = tr.fitSurvival(sc.parallelize(aft, 3))
+    val scored = aft.map { case (x, lo, hi, _) =>
+      (model.margin(x)(0), lo, if (hi.isNaN) None else Some(hi)) }.toDF("p", "lo", "hi")
+    val watched = tr.evalHistoryFull.last._2
+    names.foreach { n =>
+      sameValue(n, watched(n), Metrics.evaluate(n, scored, col("p"), col("lo"), lit(1.0),
+        upper = Some(col("hi")), aftDistribution = "logistic", aftScale = 1.2))
+    }
+
+    val cox = (0 until 800).map { i =>
+      val x = Array(rng.nextGaussian(), rng.nextGaussian())
+      val t = math.exp(-0.6 * x(0) + 0.3 * rng.nextGaussian())
+      (x, if (i % 4 == 0) -t else t, 1.0)
+    }
+    val trCox = new GBTTrainer(TrainParams(objective = "survival:cox", numRounds = 3,
+      maxDepth = 2, evalMetric = Some("cox-nloglik"), seed = 16))
+    val coxModel = trCox.fit(sc.parallelize(cox, 3))
+    val coxScored = cox.map { case (x, y, _) => (coxModel.margin(x)(0), y) }.toDF("p", "y")
+    sameValue("cox-nloglik", trCox.evalHistory.last._2,
+      Metrics.evaluate("cox-nloglik", coxScored, col("p"), col("y"), lit(1.0)))
+  }
+
+  test("watch equals evaluate: metric parameters, bare names, expectile and sweeps") {
+    val rng = new scala.util.Random(61)
+    val xs = (0 until 700).map(_ => Array(rng.nextGaussian(), rng.nextGaussian()))
+    // (params, label of x, watch names, evaluate's metric parameters)
+    val cases = Seq(
+      (TrainParams(objective = "reg:pseudohubererror", pseudoHuberSlope = 2.5),
+        (x: Array[Double]) => 3.0 * x(0) + rng.nextGaussian(), Seq("mphe")),
+      (TrainParams(quantileAlpha = 0.7),
+        (x: Array[Double]) => x(0) + rng.nextGaussian(), Seq("quantile", "expectile@0.3")),
+      (TrainParams(objective = "reg:tweedie", tweedieVariancePower = 1.3),
+        (x: Array[Double]) => math.rint(math.exp(0.5 * x(0)) * rng.nextDouble() * 3),
+        Seq("tweedie-nloglik")),
+      (TrainParams(objective = "binary:logistic"),
+        (x: Array[Double]) => if (x(0) + rng.nextGaussian() > 0) 1.0 else 0.0,
+        Seq("auc", "aucpr", "logloss")))
+    cases.foreach { case (p0, label, names) =>
+      val p = p0.copy(numRounds = 2, maxDepth = 3, evalMetrics = names, seed = 17)
+      val rows = xs.map(x => (x, label(x), 0.5 + rng.nextDouble()))
+      val tr = new GBTTrainer(p)
+      val model = tr.fit(sc.parallelize(rows, 2))
+      val obj = graft.objective.Objective(p.objective)
+      val scored = rows.map { case (x, y, w) =>
+        val m = model.margin(x)(0); (m, obj.predTransform(m), y, w) }.toDF("m", "p", "y", "w")
+      val watched = tr.evalHistoryFull.last._2
+      names.foreach { n =>
+        sameValue(s"${p.objective} $n", watched(n), Metrics.evaluate(n, scored, col("p"),
+          col("y"), col("w"), margin = Some(col("m")), pseudoHuberSlope = p.pseudoHuberSlope,
+          quantileAlpha = p.quantileAlpha, tweedieVariancePower = p.tweedieVariancePower))
+      }
+    }
+    // the slope reaches the kernel: mphe at 2.5 is not mphe at the default 1
+    val df = Seq((0.0, 4.0, 1.0), (1.0, -3.0, 1.0)).toDF("p", "y", "w")
+    val at = (s: Double) => Metrics.evaluate("mphe", df, col("p"), col("y"), col("w"),
+      pseudoHuberSlope = s)
+    sameValue("mphe slope 2.5", at(2.5),
+      df.agg(Metrics.mphe(col("p"), col("y"), col("w"), 2.5)).head().getDouble(0))
+    assert(at(2.5) != at(1.0))
+  }
+
+  test("evaluate: ranking names without qid score the rows as one group") {
+    val df = Seq((0.9, 1.0), (0.8, 0.0), (0.7, 1.0)).toDF("p", "y")
+    val whole = Metrics.evaluate("map", df, col("p"), col("y"), lit(1.0))
+    val grouped = Metrics.evaluate("map", df.withColumn("q", lit(7L)), col("p"), col("y"),
+      lit(1.0), qid = Some(col("q")))
+    assert(whole == grouped && math.abs(whole - (1.0 + 2.0 / 3.0) / 2.0) < 1e-12, s"map $whole")
+    intercept[IllegalArgumentException] {
+      Metrics.evaluate("rmse", df.withColumn("probs", array(col("p"))), col("p"), col("y"),
+        lit(1.0), probs = Some(col("probs")))
+    }
+  }
 }

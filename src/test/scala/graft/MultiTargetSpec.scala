@@ -174,4 +174,14 @@ class MultiTargetSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("whole-group"))
   }
+
+  test("negative maxDepth or maxLeaves is rejected before the fit, naming the field") {
+    val rows = sc.parallelize(Seq((Array(1.0), Array(1.0, 2.0), 1.0)), 1)
+    Seq(TrainParams(maxDepth = -1) -> "maxDepth", TrainParams(maxLeaves = -1) -> "maxLeaves")
+      .foreach { case (p, field) =>
+        val e = intercept[IllegalArgumentException](
+          new MultiTargetTrainer(p, numTargets = 2).fit(rows))
+        assert(e.getMessage.contains(field), e.getMessage)
+      }
+  }
 }

@@ -183,4 +183,24 @@ class TrainFacadeSpec extends AnyFunSuite {
       XGBoost.cv(cont, TrainParams(numRounds = 2), nfold = 2, stratified = true)
     }
   }
+
+  test("a watch set with no metric is evaluated under the objective's default metric") {
+    val rows = data(24)
+    val tr = new GBTTrainer(TrainParams(numRounds = 3, maxDepth = 3, eta = 0.5))
+    tr.fitWatches(sc.parallelize(rows, 3), Seq("train" -> sc.parallelize(rows, 3)))
+    val log = tr.evalHistoryFull
+    assert(log.map(_._1) == Seq(0, 1, 2) && log.forall(_._2.keySet == Set("train-rmse")),
+      s"log: $log")
+    assert(log.last._2("train-rmse") < log.head._2("train-rmse"))
+    // the facade's evals take the same path
+    val seen = collection.mutable.ArrayBuffer[Map[String, Double]]()
+    XGBoost.train(sc.parallelize(rows, 3), TrainParams(numRounds = 3, maxDepth = 3, eta = 0.5),
+      evals = Seq("train" -> sc.parallelize(rows, 3)),
+      callbacks = Seq(new TrainingCallback {
+        override def afterIteration(iter: Int, l: Map[String, Double]): Boolean = { seen += l; false }
+      }))
+    assert(seen.size == 3 && seen.zip(log).forall { case (a, (_, b)) =>
+      a.keySet == b.keySet && math.abs(a("train-rmse") - b("train-rmse")) < 1e-9
+    }, s"facade log $seen vs trainer log $log")
+  }
 }
