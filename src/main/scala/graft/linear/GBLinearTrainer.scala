@@ -77,27 +77,13 @@ final case class MultiLinearModel(
     }
     out
   }
-  def softprob(x: Array[Double]): Array[Double] = MultiLinearModel.softmax(margin(x))
+  def softprob(x: Array[Double]): Array[Double] = SoftmaxObjective.softmaxInPlace(margin(x))
   def predictClass(x: Array[Double]): Int = {
     val m = margin(x)
     var best = 0
     var k = 1
     while (k < m.length) { if (m(k) > m(best)) best = k; k += 1 }
     best
-  }
-}
-
-object MultiLinearModel {
-  private[linear] def softmax(m: Array[Double]): Array[Double] = {
-    var mx = m(0); var k = 1
-    while (k < m.length) { if (m(k) > mx) mx = m(k); k += 1 }
-    val out = new Array[Double](m.length)
-    var s = 0.0
-    k = 0
-    while (k < m.length) { out(k) = math.exp(m(k) - mx); s += out(k); k += 1 }
-    k = 0
-    while (k < m.length) { out(k) /= s; k += 1 }
-    out
   }
 }
 

@@ -492,7 +492,8 @@ object Metrics {
         "mlogloss, auc, aucpr, ams@r, ndcg[@k], map[@k], pre[@k], cox-nloglik, aft-nloglik, " +
         "interval-regression-accuracy)")
     }
-    val r = out.head()
+    // every kernel aggregates to one row; collect skips the limit a head() plans
+    val r = out.collect()(0)
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 }

@@ -397,6 +397,20 @@ object AFT {
   }
 }
 
+object SoftmaxObjective {
+  /** Overwrites the margins `m` with their softmax (max-shifted) and
+    * returns `m`. */
+  def softmaxInPlace(m: Array[Double]): Array[Double] = {
+    var mx = m(0); var k = 1
+    while (k < m.length) { if (m(k) > mx) mx = m(k); k += 1 }
+    var s = 0.0; k = 0
+    while (k < m.length) { m(k) = math.exp(m(k) - mx); s += m(k); k += 1 }
+    k = 0
+    while (k < m.length) { m(k) /= s; k += 1 }
+    m
+  }
+}
+
 /** multi:softmax / multi:softprob (`src/objective/multiclass_obj.cu:234`):
   * per-class g_k = p_k − 1{y=k}, h_k = 2·p_k·(1−p_k). */
 final class SoftmaxObjective(val numClass: Int, val outputProb: Boolean) extends Serializable {

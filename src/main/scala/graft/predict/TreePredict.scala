@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 import graft.model.BoosterModel
-import graft.objective.Objective
+import graft.objective.{Objective, SoftmaxObjective}
 
 /** Structure-of-arrays ensemble for the prediction hot path — the analog of
   * the reference's array-layout tree walk (`src/predictor/cpu_predictor.cc:175`
@@ -157,16 +157,8 @@ final class FlatModel(
 
   def marginScalar(a: ArrayData): Double = margin(a)(0)
 
-  def softprobData(a: ArrayData): ArrayData = {
-    val m = margin(a)
-    var mx = m(0); var k = 1
-    while (k < m.length) { if (m(k) > mx) mx = m(k); k += 1 }
-    var s = 0.0; k = 0
-    while (k < m.length) { m(k) = math.exp(m(k) - mx); s += m(k); k += 1 }
-    k = 0
-    while (k < m.length) { m(k) /= s; k += 1 }
-    UnsafeArrayData.fromPrimitiveArray(m)
-  }
+  def softprobData(a: ArrayData): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(SoftmaxObjective.softmaxInPlace(margin(a)))
 
   def argmaxOf(a: ArrayData): Double = {
     val m = margin(a)

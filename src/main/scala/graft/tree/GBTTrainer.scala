@@ -540,6 +540,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // stopping or a user metric; callbacks alone see an empty evalLog
     val watching = watchSets.nonEmpty || params.earlyStoppingRounds > 0 ||
       params.evalMetric.isDefined || params.evalMetrics.nonEmpty || customMetric.isDefined
+    lazy val watchSession = Watch.session()
     lastHistory.clear()
     lastFullHistory.clear()
     lastBestIteration = -1
@@ -742,9 +743,10 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           else Seq(params.evalMetric.getOrElse(
             if (isMulti) "mlogloss" else obj.defaultMetric))
         val evals = watchList.flatMap { case (wName, c) =>
-          Watch.evaluate(c, obj, params, metricNames, customMetric).map { case (mName, v, maximize) =>
-            (if (wName.isEmpty) mName else s"$wName-$mName", v, maximize)
-          }
+          Watch.evaluate(watchSession, c, obj, params, metricNames, customMetric)
+            .map { case (mName, v, maximize) =>
+              (if (wName.isEmpty) mName else s"$wName-$mName", v, maximize)
+            }
         }
         val (_, v, maximize) = evals.last
         lastHistory += ((iter, v))

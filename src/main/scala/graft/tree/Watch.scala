@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.metric.Metrics
-import graft.objective.Objective
+import graft.objective.{Objective, SoftmaxObjective}
 
 /** The boosting loop's watch (ref `EvalOneIter`, `src/learner.cc:1164`):
   * one watch set's margin cache is projected to one DataFrame, and every
@@ -27,29 +27,39 @@ private[tree] object Watch {
     StructField("pred", DoubleType, nullable = false),
     StructField("probs", ArrayType(DoubleType, containsNull = false))))
 
+  /** The session a fit's watch queries run in: a child of the running
+    * session (created from the running SparkContext when there is none)
+    * with one shuffle partition per core and no adaptive execution. A
+    * watch query is a few short stages over one watch set, run every
+    * round, so its time is the fixed cost per stage: adaptive execution
+    * submits each stage as a job of its own, and the default 200 shuffle
+    * partitions turn a ranking name's window into 200 tasks. */
+  def session(): SparkSession = {
+    val s = SparkSession.builder().getOrCreate().newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", s.sparkContext.defaultParallelism.toLong)
+    s
+  }
+
   /** One row per cached (row, margins) pair. A single-output model
     * (`obj` set) gives its raw margin and `obj.predTransform` of it; a
     * multiclass one (`obj == null`) gives the softmax of its margin
     * vector. A right-censored (NaN) interval upper bound becomes null. */
-  def frame(c: RDD[(BInst, Array[Double])], obj: Objective): DataFrame =
-    SparkSession.active.createDataFrame(c.map { case (r, m) =>
+  def frame(spark: SparkSession, c: RDD[(BInst, Array[Double])], obj: Objective): DataFrame =
+    spark.createDataFrame(c.map { case (r, m) =>
       val margin = if (obj == null) Double.NaN else m(0)
       Row(r.label, if (r.label2.isNaN) null else r.label2, r.weight, r.qid, r.rowId,
         margin, if (obj == null) Double.NaN else obj.predTransform(margin),
-        if (obj == null) softmax(m) else null)
+        if (obj == null) SoftmaxObjective.softmaxInPlace(m.clone()) else null)
     }, schema)
 
-  private def softmax(m: Array[Double]): Array[Double] = {
-    val mx = m.max
-    val e = m.map(v => math.exp(v - mx))
-    val s = e.sum
-    e.map(_ / s)
-  }
-
   /** (name, value, larger-is-better) of every metric in `names` — or of
-    * the user metric `custom`, which replaces them — on one watch set. */
-  def evaluate(c: RDD[(BInst, Array[Double])], obj: Objective, params: TrainParams,
-      names: Seq[String], custom: Option[CustomEvalMetric]): Seq[(String, Double, Boolean)] =
+    * the user metric `custom`, which replaces them — on one watch set.
+    * Ranking names score each qid group (non-ranking rows share qid −1);
+    * `auc` is the per-group ranking AUC only under a `rank:*` objective. */
+  def evaluate(spark: SparkSession, c: RDD[(BInst, Array[Double])], obj: Objective,
+      params: TrainParams, names: Seq[String],
+      custom: Option[CustomEvalMetric]): Seq[(String, Double, Boolean)] =
     custom match {
       case Some(cm) =>
         val (num, den) = graft.Agg.aggregate(c)((0.0, 0.0))(
@@ -60,10 +70,11 @@ private[tree] object Watch {
           (a, b) => (a._1 + b._1, a._2 + b._2))
         Seq((cm.name, cm.finish(num, den), cm.maximize))
       case None =>
-        val df = frame(c, obj)
+        val df = frame(spark, c, obj)
         names.map { n =>
+          val grouped = n != "auc" || params.objective.startsWith("rank:")
           val v = Metrics.evaluate(n, df, col("pred"), col("label"), col("weight"),
-            qid = if (params.objective.startsWith("rank:")) Some(col("qid")) else None,
+            qid = if (grouped) Some(col("qid")) else None,
             probs = if (obj == null) Some(col("probs")) else None,
             tie = Some(col("rowId")), margin = Some(col("margin")), upper = Some(col("upper")),
             pseudoHuberSlope = params.pseudoHuberSlope, quantileAlpha = params.quantileAlpha,

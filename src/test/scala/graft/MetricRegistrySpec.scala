@@ -389,6 +389,34 @@ class MetricRegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("watch equals evaluate: a custom ranking objective still scores each query") {
+    // params.objective stays reg:squarederror, so only auc falls back to
+    // the global sweep; ndcg, map and pre group by qid as under rank:*
+    val rng = new scala.util.Random(67)
+    val rows = (0 until 30).flatMap { q =>
+      (0 until 12).map { _ =>
+        val x = Array(rng.nextGaussian(), rng.nextGaussian())
+        (x, math.min(3.0, math.max(0.0, math.rint(x(0) + 1 + rng.nextGaussian()))), 1.0, q.toLong)
+      }
+    }
+    val names = Seq("ndcg@5", "map@5", "pre@5")
+    val tr = new GBTTrainer(TrainParams(numRounds = 3, maxDepth = 2, evalMetrics = names,
+      seed = 18, minTrainPartitions = 0))
+      .withCustomObjective(new graft.objective.LambdaRankObjective("ndcg"))
+    val model = tr.fitRanking(sc.parallelize(rows, 1))
+    val scored = rows.zipWithIndex.map { case ((x, y, _, q), i) =>
+      (q, model.margin(x)(0), y, i.toLong) }.toDF("q", "p", "y", "t")
+    val watched = tr.evalHistoryFull.last._2
+    names.foreach { n =>
+      val perQuery = Metrics.evaluate(n, scored, col("p"), col("y"), lit(1.0),
+        qid = Some(col("q")), tie = Some(col("t")))
+      sameValue(n, watched(n), perQuery)
+      val oneGroup = Metrics.evaluate(n, scored, col("p"), col("y"), lit(1.0),
+        tie = Some(col("t")))
+      assert(perQuery != oneGroup, s"$n: the rows as one group score the same")
+    }
+  }
+
   test("watch equals evaluate: aft-nloglik, interval accuracy and cox-nloglik") {
     val rng = new scala.util.Random(59)
     val aft = (0 until 900).map { i =>

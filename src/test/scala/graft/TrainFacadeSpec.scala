@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.XGBoost
@@ -202,5 +203,23 @@ class TrainFacadeSpec extends AnyFunSuite {
     assert(seen.size == 3 && seen.zip(log).forall { case (a, (_, b)) =>
       a.keySet == b.keySet && math.abs(a("train-rmse") - b("train-rmse")) < 1e-9
     }, s"facade log $seen vs trainer log $log")
+  }
+
+  test("a watched fit needs no active session, only the running SparkContext") {
+    val rows = sc.parallelize(data(25, 600), 3)
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val log =
+      try {
+        val tr = new GBTTrainer(TrainParams(numRounds = 2, maxDepth = 2, evalMetric = Some("mae")))
+        tr.fitWatches(rows, Seq("train" -> rows))
+        tr.evalHistoryFull
+      } finally {
+        active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+        default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+      }
+    assert(log.size == 2 && log.forall(_._2.keySet == Set("train-mae")), s"log: $log")
   }
 }

@@ -5,9 +5,11 @@
                        [--seed0 N] [--seconds 6] [--trace 0] [--out runs.jsonl]
     tools/perfpairs.py --summarize runs.jsonl
 
-The first form copies the parent revision (`git archive REV`; the default,
-HEAD, fits a change not yet committed) and the working tree (tracked and
-untracked files that are not ignored) into DIR/parent and DIR/change. DIR
+The first form copies the parent revision (`git archive REV`) and the
+working tree (tracked and untracked files that are not ignored) into
+DIR/parent and DIR/change. REV defaults to HEAD while the working tree has
+changes (a change not yet committed) and to HEAD~1 when it is clean (a
+committed change); the output starts with the two resolved revisions. DIR
 must lie outside the repository. Each copy builds the benchmark into
 DIR/parent-build or DIR/change-build, reused while its sources are
 unchanged. Then pair i of the k-th workload runs both sides on seed
@@ -114,6 +116,21 @@ def copy_tree(dst, base):
     return {"P": parent, "C": change}
 
 
+def git(*args):
+    return subprocess.run(["git", "-C", ROOT] + list(args), check=True,
+                          stdout=subprocess.PIPE, text=True).stdout.strip()
+
+
+def revisions(base):
+    """(parent revision, its commit, a description of the change side)."""
+    dirty = git("status", "--porcelain") != ""
+    if base is None:
+        base = "HEAD" if dirty else "HEAD~1"
+    head = git("rev-parse", "--short", "HEAD")
+    change = head + (" + working tree" if dirty else "")
+    return base, git("rev-parse", "--short", base), change
+
+
 def env_for(copy):
     """The build goes next to the copy, so a fresh copy of the same sources
     reuses it."""
@@ -137,7 +154,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--summarize", metavar="RUNS_JSONL")
     ap.add_argument("--scratch", help="directory outside the repo for the two copies")
-    ap.add_argument("--base", default="HEAD", help="parent revision (default HEAD)")
+    ap.add_argument("--base", default=None,
+                    help="parent revision (default HEAD with uncommitted changes, else HEAD~1)")
     ap.add_argument("--pairs", default="train_wide=10,crawl_gate=5")
     ap.add_argument("--seed0", type=int, default=9001)
     ap.add_argument("--seconds", type=int, default=6)
@@ -148,6 +166,10 @@ def main():
 
     if args.summarize:
         runs = [json.loads(l) for l in open(args.summarize) if l.strip()]
+        for side, name in (("P", "parent"), ("C", "change")):
+            revs = sorted({r["rev"] for r in runs if r["side"] == side and "rev" in r})
+            if revs:
+                print("%s: %s" % (name, ", ".join(revs)))
         print(tables(runs, spec))
         return
     if not args.scratch:
@@ -155,7 +177,9 @@ def main():
     scratch = os.path.abspath(args.scratch)
     if os.path.commonpath([scratch, ROOT]) == ROOT:
         ap.error("--scratch must lie outside the repository")
-    copies = copy_tree(scratch, args.base)
+    base, parent_rev, change_rev = revisions(args.base)
+    print("parent: %s (%s)\nchange: %s" % (parent_rev, base, change_rev), flush=True)
+    copies = copy_tree(scratch, base)
     for side in "PC":
         subprocess.run([sys.executable, "perfbench/build.py"], cwd=copies[side],
                        env=env_for(copies[side]), check=True)
@@ -167,6 +191,7 @@ def main():
             seed = args.seed0 + 100 * k + i
             for side in ("PC" if i % 2 == 0 else "CP"):
                 r = {"workload": workload, "seed": seed, "side": side,
+                     "rev": parent_rev if side == "P" else change_rev,
                      "result": run_one(copies[side], workload, seed, args.seconds, args.trace)}
                 runs.append(r)
                 with open(out, "a") as fh:
