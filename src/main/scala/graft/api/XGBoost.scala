@@ -39,10 +39,13 @@ object XGBoost {
   }
 
   /** Multi-output training (vector-leaf trees, ref `multi_strategy =
-    * multi_output_tree`): labels are K-vectors (vector squared error or
-    * softmax with a class index), or — for `reg:quantileerror` with
-    * `quantileAlphas` set — a scalar label trained to one output lane per
-    * alpha (ref `quantile_obj.cu` vector `quantile_alpha`). */
+    * multi_output_tree`): labels are K-vectors (any elementwise objective
+    * lifted per lane, or softmax with a class index), or — for
+    * `reg:quantileerror` with `quantileAlphas` set — a scalar label trained
+    * to one output lane per alpha (ref `quantile_obj.cu` vector
+    * `quantile_alpha`). The trees grow in the scalar trainer's loop with K
+    * gradient lanes per row; see [[graft.tree.MultiTargetTrainer]] for the
+    * settings it rejects. */
   def trainMulti(
       data: RDD[(Array[Double], Array[Double], Double)],
       params: TrainParams,

@@ -327,6 +327,8 @@ class XGBoostRegressor(override val uid: String)
       require($(objective) == "reg:quantileerror",
         "quantileAlphas requires objective=reg:quantileerror")
       require($(baseMarginCol).isEmpty, "quantileAlphas does not compose with baseMarginCol")
+      require($(validationIndicatorCol).isEmpty,
+        "quantileAlphas does not compose with validationIndicatorCol")
       val booster = XGBoost.trainQuantiles(extractRdd(ds), baseTrainParams($(objective)),
         $(quantileAlphas))
       return copyValues(new XGBoostRegressionModel(uid, withFeatureMeta(booster))).setParent(this)

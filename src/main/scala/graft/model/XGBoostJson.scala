@@ -52,8 +52,9 @@ object XGBoostJson {
     val numTarget = lmpStr("num_target", "1").toInt
     require(numTarget <= 1 || numClass <= 1,
       s"num_target=$numTarget with num_class=$numClass is not a valid layout")
-    // multi-target (multi_strategy=multi_output_tree): vector-leaf trees,
-    // one output lane per target — our MultiTargetTrainer layout
+    // multi-target (multi_strategy=multi_output_tree): vector-leaf trees of
+    // group 0, one leaf lane per target — the layout GBTTrainer grows for
+    // MultiTargetTrainer
     val numGroups = math.max(math.max(numClass, numTarget), 1)
 
     val objName = (learner \ "objective" \ "name") match {

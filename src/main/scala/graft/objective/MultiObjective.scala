@@ -19,6 +19,10 @@ trait MultiObjective extends Serializable {
   def baseScore(laneMeans: Array[Double]): Array[Double]
   /** true ⇒ ys(0) feeds every lane's mean (class index / shared scalar). */
   def scalarLabel: Boolean = false
+  /** Label-vector validity: one label per lane (one for [[scalarLabel]]
+    * objectives), none NaN. */
+  def validLabel(ys: Array[Double]): Boolean =
+    ys != null && ys.length == (if (scalarLabel) 1 else numTargets) && !ys.exists(_.isNaN)
   def name: String
 }
 
@@ -49,6 +53,8 @@ final class ElementwiseMultiObjective(val inner: Objective, val numTargets: Int)
     }
   }
   def baseScore(laneMeans: Array[Double]): Array[Double] = laneMeans.map(inner.baseScore)
+  override def validLabel(ys: Array[Double]): Boolean =
+    super.validLabel(ys) && ys.forall(inner.validLabel)
 }
 
 /** Softmax over K class lanes; rows carry the class index in ys(0)
@@ -56,6 +62,8 @@ final class ElementwiseMultiObjective(val inner: Objective, val numTargets: Int)
 final class SoftmaxMultiObjective(val numTargets: Int) extends MultiObjective {
   val name = "multi:softprob"
   override def scalarLabel: Boolean = true
+  override def validLabel(ys: Array[Double]): Boolean =
+    super.validLabel(ys) && ys(0) >= 0 && ys(0) < numTargets && ys(0) == math.floor(ys(0))
   def gradient(ys: Array[Double], m: Array[Double], w: Double, out: Array[Double]): Unit = {
     val K = numTargets
     var mx = m(0); var k = 1

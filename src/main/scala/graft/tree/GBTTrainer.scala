@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 
 import graft.data.{Binning, HistogramCuts}
 import graft.model.{BoosterModel, Node, Tree}
-import graft.objective.{CoxGradients, LambdaRankGradients, LambdaRankObjective, Objective, SoftmaxObjective}
+import graft.objective.{CoxGradients, LambdaRankGradients, LambdaRankObjective, MultiObjective, Objective, SoftmaxObjective}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -123,7 +123,9 @@ final case class TreeShape(
   * per-iteration subsampling, ref `seed_per_iteration`
   * `src/learner.cc:1119-1123`). `label2` is the censoring upper bound for
   * interval objectives (survival:aft; NaN elsewhere). `qid` is the ranking
-  * query group (rank:* objectives; −1 elsewhere).
+  * query group (rank:* objectives; −1 elsewhere). `labels` is the label
+  * vector of a multi-target row, read by its [[MultiObjective]] (null
+  * elsewhere).
   *
   * Sparse rows (ref CSR adapter `src/data/adapter.h:216-308`): `idx` holds
   * the SORTED present feature ids and `bins` is parallel to `idx` (length
@@ -133,7 +135,8 @@ final case class TreeShape(
 /** rowId is a UNIQUE id (zipWithUniqueId — no extra partition-count job),
   * not a contiguous index: it only seeds the per-row subsample hash. */
 final case class BInst(bins: Array[Int], label: Double, weight: Double, rowId: Long,
-    label2: Double = Double.NaN, qid: Long = -1L, idx: Array[Int] = null) {
+    label2: Double = Double.NaN, qid: Long = -1L, idx: Array[Int] = null,
+    labels: Array[Double] = null) {
   /** bin of feature f (−1 = missing), for either representation. */
   @inline def binOf(f: Int): Int =
     if (idx == null) bins(f)
@@ -144,7 +147,7 @@ final case class BInst(bins: Array[Int], label: Double, weight: Double, rowId: L
 }
 
 private final class BuildNode(
-    var g: Double, var h: Double, // totals INCLUDING missing mass
+    val gh: Array[Double], // per-lane (g, h) totals INCLUDING missing mass
     var depth: Int,
     var lowerBound: Double = Double.NegativeInfinity, // monotone-constraint weight bounds
     var upperBound: Double = Double.PositiveInfinity,
@@ -157,14 +160,17 @@ private final class BuildNode(
   var right: Int = -1
   var gain: Double = 0.0
   var catRight: Array[Int] = null
-  var weight: Double = 0.0 // leaf weight (pre-eta)
-  var childG: (Double, Double) = null // (GL, GR) set when split chosen
-  var childH: (Double, Double) = null
+  var weight: Array[Double] = null // per-lane leaf weight (pre-eta)
+  /** hessian summed over the lanes */
+  def h: Double = { var s = 0.0; var k = 1; while (k < gh.length) { s += gh(k); k += 2 }; s }
 }
 
+/** A node's best split: `left`/`right` are the children's per-lane (g, h)
+  * totals, laid out as the node's; `wl`/`wr` the one-lane child weights
+  * that monotone constraints bound. */
 private[tree] final case class SplitCandidate(
     feature: Int, splitBin: Int, defaultLeft: Boolean, gain: Double,
-    gl: Double, hl: Double, gr: Double, hr: Double, wl: Double, wr: Double,
+    left: Array[Double], right: Array[Double], wl: Double, wr: Double,
     catRight: Array[Int])
 
 /** Distributed gradient-boosted-tree trainer: the reference's learner loop
@@ -180,6 +186,11 @@ private[tree] final case class SplitCandidate(
   * are defined in [[RoundPasses]], not here: Spark's `ClosureCleaner` reads
   * the whole bytecode of a closure's defining class on every job, and this
   * class is large.
+  *
+  * One loop grows every hist tree: one scalar tree per output group per
+  * round, or — for [[MultiTargetTrainer]] — one vector-leaf tree whose
+  * rows carry K gradient lanes (the reference's `multi_output_tree`, one
+  * driver for both, `src/tree/driver.h`).
   *
   * Every entry point is a thin call into [[TrainingInput.prepare]]: it
   * states its `require`s and its row → [[BInst]] mapping, and the prepare
@@ -197,11 +208,16 @@ private[tree] final case class SplitCandidate(
   * lineage. Nothing driver-side scales with rows — only with
   * nodes × features × bins.
   */
-final class GBTTrainer(params: TrainParams) extends Serializable {
+final class GBTTrainer private[tree] (params: TrainParams, vectorObj: Option[MultiObjective])
+    extends Serializable {
+  def this(params: TrainParams) = this(params, None)
   TrainingInput.requireTreeLimits(params)
 
-  private val isMulti = params.numClass > 1
-  private val numGroups = math.max(params.numClass, 1)
+  // softmax with one tree per class; a vector objective instead grows one
+  // tree per round whose leaves hold every output lane
+  private val isMulti = vectorObj.isEmpty && params.numClass > 1
+  private val numGroups = vectorObj.fold(math.max(params.numClass, 1))(_.numTargets)
+  private val treeGroups = if (vectorObj.isDefined) 1 else numGroups
 
   // ---- driver-side training hooks (ref callback.py:51-640, custom
   // objective `objective.py` / custom feval `training.py:53`) ----
@@ -343,8 +359,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       val (cache0, base, numFeatures) =
         TrainingInput.withRereadable(TrainingInput.atFloor(data, params)) { rows =>
           val stats = TrainingInput.validate(rows, params.objective)(
-            r => obj.validLabel(r._2), _._2, _._3, _._1.length)
-          val labelMean = if (stats.sumW > 0) stats.sumWy / stats.sumW else 0.0
+            r => obj.validLabel(r._2), (r, _) => r._2, _._3, _._1.length)
+          val labelMean = if (stats.sumW > 0) stats.sumWy(0) / stats.sumW else 0.0
           val base = Array(params.baseScore.map(obj.probToMargin).getOrElse(obj.baseScore(labelMean)))
           // margins packed with the RAW rows (re-binned every iteration, so
           // the persistent pair carries features, not bins); the
@@ -459,8 +475,9 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       baseOverride: Option[Array[Double]], owned: Owned): BoosterModel = {
     val sc = binnedIn.sparkContext
     val softmax = if (isMulti) new SoftmaxObjective(params.numClass, params.objective == "multi:softprob") else null
+    val mobj = vectorObj.orNull
     val obj: Objective =
-      if (isMulti) null
+      if (isMulti || mobj != null) null
       else customObj.getOrElse(Objective(params.objective,
         maxDeltaStep = if (params.maxDeltaStep > 0) params.maxDeltaStep else 0.7,
         alpha = params.quantileAlpha, rho = params.tweedieVariancePower,
@@ -472,7 +489,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         rankNormalization = params.lambdarankNormalization,
         rankScoreNormalization = params.lambdarankScoreNormalization,
         scalePosWeight = params.scalePosWeight))
-    val needsGlobalGrads = !isMulti && obj.needsGlobalGradients
+    val scalar = obj != null
+    val needsGlobalGrads = scalar && obj.needsGlobalGradients
     if (needsGlobalGrads && params.booster == "dart")
       throw new IllegalArgumentException(
         s"${params.objective} does not compose with dart dropout (risk-set gradients need the full-ensemble margin)")
@@ -480,13 +498,16 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // fail-fast label/weight validation fused with the base-score stats
     val kMulti = params.numClass
     val multi = isMulti
-    val intervalLabels = !isMulti && obj.usesIntervalLabels
-    val stats = TrainingInput.validate(binnedIn, params.objective)(
+    val intervalLabels = scalar && obj.usesIntervalLabels
+    val laneLabel = mobj != null && !mobj.scalarLabel
+    val stats = TrainingInput.validate(binnedIn, params.objective, vectorObj.fold(1)(_.numTargets))(
       r =>
-        if (multi) r.label >= 0 && r.label < kMulti && r.label == math.floor(r.label)
+        if (mobj != null) mobj.validLabel(r.labels)
+        else if (multi) r.label >= 0 && r.label < kMulti && r.label == math.floor(r.label)
         else if (intervalLabels) obj.validInterval(r.label, r.label2)
         else obj.validLabel(r.label),
-      _.label, _.weight, _ => 0)
+      (r, k) => if (mobj == null) r.label else r.labels(if (laneLabel) k else 0),
+      _.weight, _ => 0)
 
     // survival:cox needs |label|-sorted data for its risk-set scans; the
     // order is fixed across iterations, so sort ONCE per fit (range
@@ -505,9 +526,12 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     require(initMargins.isEmpty || !needsCoxSort,
       "per-row initial margins do not compose with risk-set objectives (binned rows are re-sorted)")
     val base: Array[Double] = baseOverride.getOrElse {
-      val labelMean = if (stats.sumW > 0) stats.sumWy / stats.sumW else 0.0
-      if (isMulti) Array.fill(numGroups)(0.0)
-      else Array(params.baseScore.map(obj.probToMargin).getOrElse(obj.baseScore(labelMean)))
+      if (mobj != null) mobj.baseScore(stats.sumWy.map(_ / math.max(stats.sumW, 1e-16)))
+      else if (isMulti) Array.fill(numGroups)(0.0)
+      else {
+        val labelMean = if (stats.sumW > 0) stats.sumWy(0) / stats.sumW else 0.0
+        Array(params.baseScore.map(obj.probToMargin).getOrElse(obj.baseScore(labelMean)))
+      }
     }
 
     // The prediction cache is PACKED into the row: one RDD[(BInst,
@@ -559,10 +583,10 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // the cached margins mid-loop: DART (its dropout owns the list), the
     // watch, the per-round scale stats; else every `marginFlushInterval`
     // trees. Tree contributions are added in the same order either way,
-    // so the model is bit-identical; the caches are never read after the
-    // loop, so the last partial batch is never flushed.
+    // so the model is bit-identical; only the watch reads the caches after
+    // the last round's trees, so an unwatched fit never flushes there.
     val flushTrees =
-      if (params.booster == "dart" || watching || (!isMulti && obj.needsScale)) 1
+      if (params.booster == "dart" || watching || (scalar && obj.needsScale)) 1
       else math.max(1, params.marginFlushInterval)
     val pending = new ArrayBuffer[(TreeShape, Double, Int)]
     var flushCount = 0
@@ -615,7 +639,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     while (iter < params.numRounds && !stop) {
       callbacks.foreach(_.beforeIteration(iter))
       // per-iteration objective scale stats (absoluteerror / quantile)
-      if (!isMulti && obj.needsScale) {
+      if (scalar && obj.needsScale) {
         val (s1, s2) = graft.Agg.aggregate(cache)((0.0, 0.0))(
           { case ((a1, a2), (r, m)) =>
             val res = math.abs(r.label - m(0))
@@ -679,7 +703,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // sampler.cc:39-77); the aggregations then sample ∝ u/ū with 1/p
       // rescaling
       if (gradBased) {
-        require(!isMulti, "sampling_method=gradient_based supports single-output objectives")
+        require(scalar, "sampling_method=gradient_based supports single-output objectives")
         val (uSum, n) = RoundPasses.magnitudeSum(cache, globalGrads,
           rowGrad(obj, softmax, 0, iter, droppedShapes))
         gbMeanU = if (n > 0) uSum / n else 1.0
@@ -691,10 +715,10 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // at weight/K so the complete layer uses the full weight — a bagged
       // forest layer (gbtree.cc:539).
       val kPar = math.max(params.numParallelTree, 1)
-      val newShapes = new Array[TreeShape](numGroups * kPar)
-      val newGroups = new Array[Int](numGroups * kPar)
+      val newShapes = new Array[TreeShape](treeGroups * kPar)
+      val newGroups = new Array[Int](treeGroups * kPar)
       var k = 0
-      while (k < numGroups * kPar) {
+      while (k < treeGroups * kPar) {
         val grp = k / kPar
         val saltIter = if (kPar == 1) iter else iter * kPar + (k % kPar)
         newShapes(k) = growTree(cache, globalGrads, cuts, numFeatures, obj, softmax, grp, saltIter, colSampler, droppedShapes)
@@ -722,7 +746,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // the new trees at newW, then the DART weight deltas of the dropped trees
       pending ++= newShapes.indices.map(p => (newShapes(p), newW, newGroups(p)))
       pending ++= weightDeltas.map { case (i, d) => (shapes(i), d, treeGroupBuf(i)) }
-      if (pending.length >= flushTrees) flushPending()
+      if (pending.length >= flushTrees && (watching || iter + 1 < params.numRounds)) flushPending()
       globalGrads.foreach(owned.unpersist)
 
       // ---- watch metrics + early stopping (learner.cc:1164 EvalOneIter,
@@ -778,8 +802,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     unbiasedLR.foreach(_ => lastPositionBias = Some((tPlus.clone(), tMinus.clone())))
 
     // early stop ⇒ truncate to the best iteration
-    // (numGroups × num_parallel_tree trees per round = one layer)
-    val layer = numGroups * math.max(params.numParallelTree, 1)
+    // (treeGroups × num_parallel_tree trees per round = one layer)
+    val layer = treeGroups * math.max(params.numParallelTree, 1)
     val keep =
       if (stop && !stopFromCallback && lastBestIteration >= 0) (lastBestIteration + 1) * layer
       else shapes.length
@@ -829,12 +853,13 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     else (finalDropped, eta / (k + eta), k.toDouble / (k + eta))
   }
 
-  /** Grow one tree for output group `grp` (ref `src/tree/driver.h:1-126`,
-    * `grow_policy` `src/tree/param.h:38,99-106`). One driver serves both
-    * expand policies. It keeps a queue of the nodes whose best split
-    * gains; each pass expands either the single best of them (lossguide,
-    * by `(gain, -nid)`) or every queued node — all at the current depth —
-    * in nid order, up to `maxLeaves` (depthwise, ref UpdateTree
+  /** Grow one tree for output group `grp`, or the round's vector-leaf tree
+    * (ref `src/tree/driver.h:1-126`, `grow_policy`
+    * `src/tree/param.h:38,99-106`). One driver serves both expand policies
+    * and any number of gradient lanes. It keeps a queue of the nodes whose
+    * best split gains; each pass expands either the single best of them
+    * (lossguide, by `(gain, -nid)`) or every queued node — all at the
+    * current depth — in nid order, up to `maxLeaves` (depthwise, ref UpdateTree
     * `updater_quantile_hist.cc:96-180`). The pass then builds the smaller
     * child of every expanded node in ONE histogram aggregation and derives
     * each sibling by subtraction from its parent (ref BuildHistLeftRight,
@@ -859,8 +884,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     val maxLeaves = if (params.maxLeaves > 0) params.maxLeaves else Int.MaxValue
     val rg = rowGrad(obj, softmax, grp, iter, droppedShapes)
     val treeCols = colSampler.sampleTree(iter, params.colsampleBytree)
-    val (rootG, rootH) = RoundPasses.totals(cache, globalGrads, rg)
-    val nodes = ArrayBuffer(new BuildNode(rootG, rootH, 0))
+    val nodes = ArrayBuffer(new BuildNode(RoundPasses.totals(cache, globalGrads, rg), 0))
     if (params.interactionConstraints.nonEmpty)
       nodes(0).allowed = Some((0 until numFeatures).toSet)
 
@@ -873,7 +897,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         colSampler.sampleLevel(treeCols, iter, n.depth, params.colsampleBylevel),
         iter, n.depth, nid, params.colsampleBynode)
       val cols = n.allowed.fold(sampled)(a => sampled.filter(a.contains))
-      SplitEnumerator.bestSplit(hists(nid), cuts, cols, n.g, n.h, params,
+      SplitEnumerator.bestSplit(hists(nid), cuts, cols, n.gh, params,
         n.lowerBound, n.upperBound) match {
         case Some(c) if c.gain > 0 => queue += ((nid, c))
         case _ => hists.remove(nid)
@@ -916,7 +940,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // every node (internal too) gets its would-be leaf weight so the
     // prune updater can collapse splits exactly (ref CollapseToLeaf)
     nodes.foreach { n =>
-      n.weight = SplitEnumerator.calcWeight(n.g, n.h, params, n.lowerBound, n.upperBound)
+      n.weight = Array.tabulate(n.gh.length / 2)(k =>
+        SplitEnumerator.calcWeight(n.gh(2 * k), n.gh(2 * k + 1), params, n.lowerBound, n.upperBound))
     }
     nodesShape(nodes)
   }
@@ -924,14 +949,14 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   /** The per-row gradient of one tree, shipped with its passes. */
   private def rowGrad(obj: Objective, softmax: SoftmaxObjective, grp: Int, iter: Int,
       dropped: Array[(TreeShape, Double, Int)]): RowGrad =
-    new RowGrad(params, obj, softmax, grp, iter, dropped, gbMeanU)
+    new RowGrad(params, obj, softmax, vectorObj.orNull, grp, iter, dropped, gbMeanU)
 
   private def applySplit(nodes: ArrayBuffer[BuildNode], nid: Int, c: SplitCandidate): Unit = {
     val n = nodes(nid)
     n.feature = c.feature; n.splitBin = c.splitBin; n.defaultLeft = c.defaultLeft
     n.gain = c.gain; n.catRight = c.catRight
-    val l = new BuildNode(c.gl, c.hl, n.depth + 1, n.lowerBound, n.upperBound)
-    val r = new BuildNode(c.gr, c.hr, n.depth + 1, n.lowerBound, n.upperBound)
+    val l = new BuildNode(c.left, n.depth + 1, n.lowerBound, n.upperBound)
+    val r = new BuildNode(c.right, n.depth + 1, n.lowerBound, n.upperBound)
     // monotone constraints (ref split_evaluator.h:71-440): tighten bounds
     val mono = if (params.monotoneConstraints.isEmpty) 0 else params.monotoneConstraints(c.feature)
     if (mono != 0) {
@@ -961,7 +986,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       Array.tabulate(n)(i => nodes(i).left),
       Array.tabulate(n)(i => nodes(i).right),
       Array.tabulate(n)(i => nodes(i).catRight),
-      Array.tabulate(n)(i => Array(nodes(i).weight)),
+      Array.tabulate(n)(i => nodes(i).weight),
       Array.tabulate(n)(i => nodes(i).h),
       Array.tabulate(n)(i => nodes(i).gain))
   }

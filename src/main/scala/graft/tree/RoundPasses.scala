@@ -5,21 +5,25 @@ import org.apache.spark.rdd.RDD
 
 import graft.Agg
 import graft.data.HistogramCuts
-import graft.objective.{Objective, SoftmaxObjective}
+import graft.objective.{MultiObjective, Objective, SoftmaxObjective}
 
-/** The gradient pair of one row for one tree: the objective's (g, h) for
-  * output group `grp` at the cached margin less the `dropped` trees (DART
-  * dropout; pending trees of the deferred margin cache ride along with
-  * negated weights), and the round's deterministic row sampling. Built on
-  * the driver once per tree and shipped with each task of [[RoundPasses]];
-  * `meanU` is the round's mean regularized gradient magnitude for
-  * gradient-based sampling. */
+/** The gradient lanes of one row for one tree: the objective's (g, h) for
+  * output group `grp` — or, with a [[MultiObjective]], the (g, h) of every
+  * lane of a vector-leaf tree — at the cached margins less the `dropped`
+  * trees (DART dropout; pending trees of the deferred margin cache ride
+  * along with negated weights), and the round's deterministic row
+  * sampling. Built on the driver once per tree and shipped with each task
+  * of [[RoundPasses]]; `meanU` is the round's mean regularized gradient
+  * magnitude for gradient-based sampling. */
 private[tree] final class RowGrad(
-    params: TrainParams, obj: Objective, softmax: SoftmaxObjective,
+    params: TrainParams, obj: Objective, softmax: SoftmaxObjective, mobj: MultiObjective,
     grp: Int, iter: Int, dropped: Array[(TreeShape, Double, Int)],
     meanU: Double) extends Serializable {
 
-  val numGroups: Int = math.max(params.numClass, 1)
+  /** margins per row */
+  val numGroups: Int = if (mobj != null) mobj.numTargets else math.max(params.numClass, 1)
+  /** gradient lanes of the tree: one (g, h) pair per lane */
+  val lanes: Int = if (mobj != null) mobj.numTargets else 1
   val gradBased: Boolean = RowGrad.gradBased(params)
 
   /** Deterministic per-(row, iteration) uniform in [0,1). */
@@ -35,6 +39,10 @@ private[tree] final class RowGrad(
     * (ref `src/tree/hist/sampler.cc:204`; seeded per iteration). */
   @inline def sampled(rowId: Long): Boolean =
     params.subsample >= 1.0 || rand01(rowId) < params.subsample
+
+  /** The row can enter this tree: gradient-based sampling decides in
+    * [[sampledGradOf]], uniform sampling here. */
+  @inline def kept(rowId: Long): Boolean = gradBased || sampled(rowId)
 
   /** Gradient-based sampling (ref `CalcSamplingInfo`/`GradientBasedSampling`,
     * `src/tree/hist/sampler.cc:39-120`): keep probability
@@ -53,43 +61,56 @@ private[tree] final class RowGrad(
   @inline def magnitude(g: Double, h: Double): Double =
     math.sqrt(g * g + params.lambda * h * h)
 
-  /** Adjusted margin for group g under DART dropout: cached full-ensemble
-    * margin minus dropped trees' contributions (ref DropTrees,
-    * `src/gbm/gbtree.h:369`). */
-  @inline private def adjustedMargin(m: Array[Double], r: BInst, g: Int): Double = {
-    var out = m(g)
-    var i = 0
-    while (i < dropped.length) {
-      val (sh, w, tg) = dropped(i)
-      if (tg == g) out -= w * sh.predictLeaf(r)(0)
-      i += 1
+  /** The cached margins less the dropped trees' contributions, each leaf
+    * lane of a tree landing on its group onward (ref DropTrees,
+    * `src/gbm/gbtree.h:369`); `m` itself when nothing is dropped. */
+  @inline private def adjusted(m: Array[Double], r: BInst): Array[Double] =
+    if (dropped.isEmpty) m
+    else {
+      val out = m.clone()
+      var i = 0
+      while (i < dropped.length) {
+        val (sh, w, tg) = dropped(i)
+        val leaf = sh.predictLeaf(r)
+        var j = 0
+        while (j < leaf.length) { out(tg + j) -= w * leaf(j); j += 1 }
+        i += 1
+      }
+      out
     }
-    out
-  }
 
-  /** Writes the row's weighted (g, h) into `out(0)`, `out(1)`. `pre` holds
-    * precomputed risk-set gradients (already weighted), or null. */
+  /** Writes the row's weighted (g, h) of lane k into `out(2k)`, `out(2k+1)`.
+    * `pre` holds precomputed risk-set gradients (already weighted), or
+    * null. */
   def gradOf(r: BInst, m: Array[Double], pre: Array[Double], out: Array[Double],
       scratch: Array[Double]): Unit = {
     if (pre != null) {
       out(0) = pre(0); out(1) = pre(1)
+    } else if (mobj != null) {
+      mobj.gradient(r.labels, adjusted(m, r), r.weight, out)
     } else if (softmax != null) {
-      // softmax needs all group margins (dropout adjustment per group)
-      if (dropped.isEmpty) softmax.gradient(m, r.label, scratch)
-      else {
-        val adj = new Array[Double](numGroups)
-        var g = 0
-        while (g < numGroups) { adj(g) = adjustedMargin(m, r, g); g += 1 }
-        softmax.gradient(adj, r.label, scratch)
-      }
+      // softmax needs all group margins
+      softmax.gradient(adjusted(m, r), r.label, scratch)
       out(0) = scratch(2 * grp) * r.weight
       out(1) = scratch(2 * grp + 1) * r.weight
     } else {
-      val margin = if (dropped.isEmpty) m(0) else adjustedMargin(m, r, 0)
+      val margin = adjusted(m, r)(0)
       if (obj.usesIntervalLabels) obj.gradientInterval(margin, r.label, r.label2, out)
       else obj.gradient(margin, r.label, out)
       out(0) *= r.weight
       out(1) *= r.weight
+    }
+  }
+
+  /** [[gradOf]] for a row [[kept]] admits, rescaled by its gradient-based
+    * sample weight; false when that sampling drops the row. */
+  def sampledGradOf(r: BInst, m: Array[Double], pre: Array[Double], out: Array[Double],
+      scratch: Array[Double]): Boolean = {
+    gradOf(r, m, pre, out, scratch)
+    !gradBased || {
+      val s = sampleScale(r.rowId, out(0), out(1))
+      out(0) *= s; out(1) *= s
+      s > 0
     }
   }
 }
@@ -127,30 +148,31 @@ private[tree] object RoundPasses {
       case None => cache.map { case (r, m) => (r, m, null) }
     }
 
-  /** Root (G, H) of one tree. */
-  def totals(cache: Margins, grads: Option[RDD[Array[Double]]], rg: RowGrad): (Double, Double) =
+  /** Root per-lane (g, h) totals of one tree, laid out as [[RowGrad.gradOf]]
+    * writes them. */
+  def totals(cache: Margins, grads: Option[RDD[Array[Double]]], rg: RowGrad): Array[Double] =
     Agg.reducePartitions(withGrads(cache, grads)) { it =>
-      val out = new Array[Double](2)
+      val out = new Array[Double](2 * rg.lanes)
       val scratch = new Array[Double](2 * rg.numGroups)
-      var g = 0.0; var h = 0.0
+      val sum = new Array[Double](out.length)
       it.foreach { case (r, m, pre) =>
-        if (rg.gradBased) {
-          rg.gradOf(r, m, pre, out, scratch)
-          val s = rg.sampleScale(r.rowId, out(0), out(1))
-          if (s > 0) { g += s * out(0); h += s * out(1) }
-        } else if (rg.sampled(r.rowId)) {
-          rg.gradOf(r, m, pre, out, scratch)
-          g += out(0); h += out(1)
-        }
+        if (rg.kept(r.rowId) && rg.sampledGradOf(r, m, pre, out, scratch)) addInto(sum, out)
       }
-      (g, h)
-    }((a, b) => (a._1 + b._1, a._2 + b._2))
+      sum
+    }(addInto)
+
+  /** `a += b` elementwise; returns `a`. */
+  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
 
   /** (Σ regularized gradient magnitude, rows): the mean ū of gradient-based
     * sampling (ref CalcSamplingInfo, sampler.cc:39-77). */
   def magnitudeSum(cache: Margins, grads: Option[RDD[Array[Double]]], rg: RowGrad): (Double, Long) =
     Agg.reducePartitions(withGrads(cache, grads)) { it =>
-      val out = new Array[Double](2)
+      val out = new Array[Double](2 * rg.lanes)
       val scratch = new Array[Double](2 * rg.numGroups)
       var s = 0.0; var c = 0L
       it.foreach { case (r, m, pre) =>
@@ -165,12 +187,15 @@ private[tree] object RoundPasses {
     * of `HistogramBuilder::BuildHist` + allreduce (`histogram.h:44-202`):
     * per-partition dense accumulation (allocation-free inner loop), then
     * the partials merge at the driver — the reference's histogram
-    * allreduce. Hist layout per node: g at 2·bin, h at 2·bin+1 in global
-    * bin space. */
+    * allreduce. Hist layout per node, in global bin space: lane k's g at
+    * 2·lanes·bin + 2k and its h at 2·lanes·bin + 2k + 1 (the reference's
+    * `[bin][target][g|h]` multi-target layout, `histogram.h:315-425`; one
+    * lane is the plain (g, h) pair). */
   def histograms(cache: Margins, grads: Option[RDD[Array[Double]]], rg: RowGrad,
       cuts: HistogramCuts, buildSet: Array[Int], shape: TreeShape): Array[Array[Double]] = {
     val bShape = cache.sparkContext.broadcast(shape)
-    val histLen = 2 * cuts.totalBins
+    val width = 2 * rg.lanes
+    val histLen = width * cuts.totalBins
     val nBuild = buildSet.length
     val offsets = cuts.featureOffset
     val numFeatures = cuts.numFeatures
@@ -181,47 +206,30 @@ private[tree] object RoundPasses {
 
     val result = Agg.reducePartitions(withGrads(cache, grads)) { it =>
       val hists = new Array[Array[Double]](nBuild)
-      val out = new Array[Double](2)
+      val out = new Array[Double](width)
       val scratch = new Array[Double](2 * rg.numGroups)
       val sh = bShape.value
       it.foreach { case (r, m, pre) =>
-        if (rg.gradBased || rg.sampled(r.rowId)) {
+        if (rg.kept(r.rowId)) {
           val pos = sh.position(r)
           val slot = if (pos <= maxNid) slotOf(pos) else -1
-          if (slot >= 0) {
+          if (slot >= 0 && rg.sampledGradOf(r, m, pre, out, scratch)) {
             var hist = hists(slot)
             if (hist == null) { hist = new Array[Double](histLen); hists(slot) = hist }
-            rg.gradOf(r, m, pre, out, scratch)
-            val sampleScale =
-              if (rg.gradBased) rg.sampleScale(r.rowId, out(0), out(1)) else 1.0
-            val g = sampleScale * out(0); val h = sampleScale * out(1)
-            if (sampleScale > 0) {
-            if (r.idx == null) {
-              var f = 0
-              while (f < numFeatures) {
-                val b = r.bins(f)
-                if (b >= 0) {
-                  val gb = 2 * (offsets(f) + b)
-                  hist(gb) += g
-                  hist(gb + 1) += h
-                }
-                f += 1
+            // a sparse row holds its present features only: absent mass
+            // reaches the split search as (total − Σ bins), i.e. the same
+            // missing-direction machinery as NaN
+            val dense = r.idx == null
+            val n = if (dense) numFeatures else r.idx.length
+            var k = 0
+            while (k < n) {
+              val b = r.bins(k)
+              if (b >= 0) {
+                val at = width * (offsets(if (dense) k else r.idx(k)) + b)
+                var j = 0
+                while (j < width) { hist(at + j) += out(j); j += 1 }
               }
-            } else {
-              // sparse row: O(nnz) accumulation over present features only;
-              // absent mass reaches the split search as (total − Σ bins),
-              // i.e. the same missing-direction machinery as NaN
-              var k = 0
-              while (k < r.idx.length) {
-                val b = r.bins(k)
-                if (b >= 0) {
-                  val gb = 2 * (offsets(r.idx(k)) + b)
-                  hist(gb) += g
-                  hist(gb + 1) += h
-                }
-                k += 1
-              }
-            }
+              k += 1
             }
           }
         }
@@ -231,11 +239,7 @@ private[tree] object RoundPasses {
       var s = 0
       while (s < nBuild) {
         if (a(s) == null) a(s) = b(s)
-        else if (b(s) != null) {
-          val x = a(s); val y = b(s)
-          var i = 0
-          while (i < histLen) { x(i) += y(i); i += 1 }
-        }
+        else if (b(s) != null) addInto(a(s), b(s))
         s += 1
       }
       a
@@ -245,8 +249,9 @@ private[tree] object RoundPasses {
   }
 
   /** The margin cache with `trees` = (shape, weight, group) added in order
-    * (`m(group) += weight · leaf`), persisted by `owned` and computed; `c`
-    * is released. `checkpoint` truncates the lineage. */
+    * (`m(group + k) += weight · leaf(k)` for each leaf lane k), persisted by
+    * `owned` and computed; `c` is released. `checkpoint` truncates the
+    * lineage. */
   def advance(c: Margins, trees: Broadcast[Array[(TreeShape, Double, Int)]],
       checkpoint: Boolean, owned: Owned): Margins = {
     val next = owned.persist(c.map { case (r, m) =>
@@ -255,7 +260,9 @@ private[tree] object RoundPasses {
       var i = 0
       while (i < p.length) {
         val (sh, w, g) = p(i)
-        out(g) += w * sh.predictLeaf(r)(0)
+        val leaf = sh.predictLeaf(r)
+        var k = 0
+        while (k < leaf.length) { out(g + k) += w * leaf(k); k += 1 }
         i += 1
       }
       (r, out)

@@ -39,6 +39,13 @@ object SplitEnumerator {
       lo: Double = Double.NegativeInfinity, hi: Double = Double.PositiveInfinity): Double =
     gainGivenWeight(g, h, calcWeight(g, h, p, lo, hi), p)
 
+  /** Best split for a node whose per-lane (g, h) totals are `gh`: the
+    * scalar scan below for one lane, the summed-gain scan for more. */
+  def bestSplit(hist: Array[Double], cuts: HistogramCuts, features: Array[Int],
+      gh: Array[Double], p: TrainParams, lo: Double, hi: Double): Option[SplitCandidate] =
+    if (gh.length == 2) bestSplit(hist, cuts, features, gh(0), gh(1), p, lo, hi)
+    else bestLanesSplit(hist, cuts, features, gh, p)
+
   /** Best split for one node. `hist`: (g,h) interleaved in global bin space;
     * `g`/`h`: node totals including missing mass; `lo`/`hi`: monotone weight
     * bounds inherited from ancestors. */
@@ -61,7 +68,8 @@ object SplitEnumerator {
           val gain = gainGivenWeight(gl, hl, wl, p) + gainGivenWeight(gr, hr, wr, p) -
             parentGain - p.gamma
           if (gain > 1e-10 && (best == null || gain > best.gain))
-            best = SplitCandidate(f, splitBin, defaultLeft, gain, gl, hl, gr, hr, wl, wr, catRight)
+            best = SplitCandidate(f, splitBin, defaultLeft, gain, Array(gl, hl), Array(gr, hr),
+              wl, wr, catRight)
         }
       }
     }
@@ -95,6 +103,79 @@ object SplitEnumerator {
       fi += 1
     }
     Option(best)
+  }
+
+  /** Best split for a node of K > 1 gradient lanes (ref
+    * `HistMultiEvaluator::EvaluateSplits`, `evaluate_splits.h:609`): one
+    * split point shared by every lane, scored by the SUM of the per-lane
+    * gains; min_child_weight applies to the summed hessian. `hist` holds
+    * lane k's (g, h) of global bin b at 2K·b + 2k and 2K·b + 2k + 1, and
+    * `gh` the node's per-lane totals in the same layout. Numeric splits
+    * only, without monotone bounds; forward and backward scans score
+    * missing-right and missing-left as in [[bestSplit]]. The candidate's
+    * gain is net of `gamma`. */
+  private def bestLanesSplit(hist: Array[Double], cuts: HistogramCuts, features: Array[Int],
+      gh: Array[Double], p: TrainParams): Option[SplitCandidate] = {
+    val width = gh.length
+    var parentGain = 0.0
+    var k = 0
+    while (k < width) { parentGain += calcGain(gh(k), gh(k + 1), p); k += 2 }
+    var best: SplitCandidate = null
+    var bestGain = 0.0
+
+    // `left` = the left child's per-lane totals; the right child gets the rest
+    def consider(f: Int, splitBin: Int, defaultLeft: Boolean, left: Array[Double]): Unit = {
+      var hl = 0.0; var hr = 0.0
+      var k = 1
+      while (k < width) { hl += left(k); hr += gh(k) - left(k); k += 2 }
+      if (hl >= p.minChildWeight && hr >= p.minChildWeight) {
+        var gain = -parentGain
+        k = 0
+        while (k < width) {
+          gain += calcGain(left(k), left(k + 1), p) +
+            calcGain(gh(k) - left(k), gh(k + 1) - left(k + 1), p)
+          k += 2
+        }
+        if (best == null || gain > bestGain) {
+          bestGain = gain
+          best = SplitCandidate(f, splitBin, defaultLeft, 0.0, left.clone(),
+            Array.tabulate(width)(j => gh(j) - left(j)), 0.0, 0.0, null)
+        }
+      }
+    }
+
+    val acc = new Array[Double](width)
+    val left = new Array[Double](width)
+    var fi = 0
+    while (fi < features.length) {
+      val f = features(fi)
+      val off = width * cuts.featureOffset(f)
+      val nb = cuts.numBins(f)
+      // forward scan: left = prefix of bins, missing → right
+      java.util.Arrays.fill(acc, 0.0)
+      var b = 0
+      while (b < nb - 1) {
+        var j = 0
+        while (j < width) { acc(j) += hist(off + width * b + j); j += 1 }
+        consider(f, b, defaultLeft = false, acc)
+        b += 1
+      }
+      // backward scan: left = parent − suffix of bins, missing → left
+      java.util.Arrays.fill(acc, 0.0)
+      b = nb - 1
+      while (b >= 1) {
+        var j = 0
+        while (j < width) {
+          acc(j) += hist(off + width * b + j)
+          left(j) = gh(j) - acc(j)
+          j += 1
+        }
+        consider(f, b - 1, defaultLeft = true, left)
+        b -= 1
+      }
+      fi += 1
+    }
+    Option(best).map(_.copy(gain = bestGain - p.gamma))
   }
 
   /** Categorical enumeration: one-hot for few categories

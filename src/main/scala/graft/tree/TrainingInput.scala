@@ -51,7 +51,7 @@ private[tree] final case class Prepared[T, B](
   * `DMatrix::Create` → `GHistIndexMatrix` (sketch → cuts → bin,
   * `src/common/hist_util.cc:53`). Every [[GBTTrainer]] entry point and
   * [[MultiTargetTrainer]] goes through [[prepare]], supplying only its
-  * row → binned-row mapping. It
+  * row → [[BInst]] mapping, and boosts in [[GBTTrainer.fitBinned]]. It
   *  1. lays the rows out: lifted to the `minTrainPartitions` floor, or
   *     co-partitioned by query id for ranking;
   *  2. computes the cuts over the laid-out rows;
@@ -177,31 +177,55 @@ private[graft] object TrainingInput {
     require(params.maxLeaves >= 0, s"maxLeaves must be >= 0, got ${params.maxLeaves}")
   }
 
-  /** The weighted label sums the base score needs, and the widest row. */
-  final case class InputStats(sumWy: Double, sumW: Double, width: Int)
+  /** The weighted label sums the base score needs, one per label lane, and
+    * the widest row. */
+  final case class InputStats(sumWy: Array[Double], sumW: Double, width: Int)
+
+  /** One partition's running counts of [[validate]]. */
+  private final class Tally(lanes: Int) extends Serializable {
+    var n, badLabels, badWeights = 0L
+    val sumWy = new Array[Double](lanes)
+    var sumW = 0.0
+    var width = 0
+    def merge(o: Tally): Tally = {
+      n += o.n; badLabels += o.badLabels; badWeights += o.badWeights
+      var k = 0
+      while (k < lanes) { sumWy(k) += o.sumWy(k); k += 1 }
+      sumW += o.sumW
+      width = math.max(width, o.width)
+      this
+    }
+  }
 
   /** The fail-fast input check (ref `CheckLabel` per objective plus
     * `MetaInfo::Validate`, `include/xgboost/data.h:127`) fused with the
     * base-score statistics in one pass; the error carries the violation
-    * count like the reference's CHECK messages. */
-  def validate[T](rows: RDD[T], objective: String)(labelOk: T => Boolean,
-      label: T => Double, weight: T => Double, width: T => Int): InputStats = {
-    val (n, badLabels, badWeights, sumWy, sumW, maxWidth) =
-      Agg.aggregate(rows)((0L, 0L, 0L, 0.0, 0.0, 0))(
-        { case ((n, bl, bw, wy, sw, nf), r) =>
-          val w = weight(r)
-          (n + 1, if (labelOk(r)) bl else bl + 1, if (w >= 0 && !w.isNaN) bw else bw + 1,
-            wy + w * label(r), sw + w, math.max(nf, width(r)))
-        },
-        { case ((a0, a1, a2, a3, a4, a5), (b0, b1, b2, b3, b4, b5)) =>
-          (a0 + b0, a1 + b1, a2 + b2, a3 + b3, a4 + b4, math.max(a5, b5)) })
-    if (n == 0)
+    * count like the reference's CHECK messages. `label(r, k)` is the label
+    * of lane k of `lanes`, read only for rows `labelOk` accepts. */
+  def validate[T](rows: RDD[T], objective: String, lanes: Int = 1)(labelOk: T => Boolean,
+      label: (T, Int) => Double, weight: T => Double, width: T => Int): InputStats = {
+    val t = Agg.aggregate(rows)(new Tally(lanes))(
+      (t, r) => {
+        val w = weight(r)
+        t.n += 1
+        if (!(w >= 0 && !w.isNaN)) t.badWeights += 1
+        if (!labelOk(r)) t.badLabels += 1
+        else {
+          var k = 0
+          while (k < lanes) { t.sumWy(k) += w * label(r, k); k += 1 }
+        }
+        t.sumW += w
+        t.width = math.max(t.width, width(r))
+        t
+      },
+      _.merge(_))
+    if (t.n == 0)
       throw new IllegalArgumentException("cannot train on an empty dataset (0 rows)")
-    if (badLabels > 0)
+    if (t.badLabels > 0)
       throw new IllegalArgumentException(
-        s"$badLabels label(s) violate the $objective label constraints")
-    if (badWeights > 0)
-      throw new IllegalArgumentException(s"$badWeights instance weight(s) are negative or NaN")
-    InputStats(sumWy, sumW, maxWidth)
+        s"${t.badLabels} label(s) violate the $objective label constraints")
+    if (t.badWeights > 0)
+      throw new IllegalArgumentException(s"${t.badWeights} instance weight(s) are negative or NaN")
+    InputStats(t.sumWy, t.sumW, t.width)
   }
 }

@@ -149,6 +149,17 @@ class EstimatorSpec extends AnyFunSuite {
     assert(medianErr < 0.5, s"median lane mean abs err $medianErr")
   }
 
+  test("multi-quantile regressor rejects validationIndicatorCol instead of training on validation rows") {
+    val df = (0 until 200).map(i => (Seq(i.toDouble), i.toDouble, i % 5 == 0))
+      .toDF("features", "label", "isVal")
+    val e = intercept[IllegalArgumentException] {
+      new XGBoostRegressor().setObjective("reg:quantileerror")
+        .setQuantileAlphas(Array(0.1, 0.9)).setNumRound(2)
+        .setValidationIndicatorCol("isVal").fit(df)
+    }
+    assert(e.getMessage.contains("validationIndicatorCol"), e.getMessage)
+  }
+
   test("validationIndicatorCol drives early stopping through the estimator") {
     import spark.implicits._
     val rng = new scala.util.Random(23)
